@@ -155,8 +155,8 @@ object LinkGraph {
     // past ~4e5 nodes a checkpointed ranks frame still compresses
     // under the 10 MB threshold, so the round join re-broadcasts an
     // ~n-entry hashed relation EVERY iteration (build + serialize +
-    // GC per round). Measured on the 1e6-node soak graph
-    // (PageRankProbe): plain pageRank 23.5 -> 12.6 s median with the
+    // GC per round). Measured on the 1e6-node soak graph: plain
+    // pageRank 23.5 -> 12.6 s median with the
     // broadcast off; the dangling variant dodged the pathology only
     // because its extra flag column pushed the stats over threshold —
     // the r15/r16 "plain slower than dangling" soak inversion was
@@ -917,11 +917,7 @@ object LinkGraph {
     comp
   }
 
-  /** [[stronglyConnectedComponents]] plus the outer-round count it
-    * took — exposed for the adversarial-depth spec (a k-SCC chain
-    * must peel in o(k) outer rounds, which only the count can prove).
-    */
-  /** Probe hook (ScaleSoak / GraphAqeProbe): install a buffer and
+  /** Soak hook (ScaleSoak): install a buffer and
     * [[sccWithRounds]] appends one (outerRound, activeCount, pinned)
     * entry at each outer-round start — the broadcast-vs-shuffle
     * decision trail, so a soak outlier self-attributes (was the 4e5
@@ -931,6 +927,10 @@ object LinkGraph {
   private[graft] val sccPinTrail =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[(Int, Long, Boolean)]]
 
+  /** [[stronglyConnectedComponents]] plus the outer-round count it
+    * took — exposed for the adversarial-depth spec (a k-SCC chain
+    * must peel in o(k) outer rounds, which only the count can prove).
+    */
   private[graft] def sccWithRounds(edges: DataFrame, srcCol: String = "src",
                                    dstCol: String = "dst",
                                    maxIter: Int = 100,
@@ -974,8 +974,8 @@ object LinkGraph {
           org.apache.spark.sql.Row(nodeArr(i), nodeArr(comp(i)))): _*)
       return (sp.createDataFrame(rows, schema), 0)
     }
-    // The pageRank AQE trap, measured WORSE here (GraphAqeProbe,
-    // 1e6 nodes): node-shaped round frames (color/inc/mark/cand)
+    // The pageRank AQE trap, measured WORSE here (1e6 nodes):
+    // node-shaped round frames (color/inc/mark/cand)
     // compress under AQE's 10 MB runtime-broadcast threshold, so
     // EVERY inner coloring/marking round rebuilt and re-broadcast an
     // ~n-entry hashed relation — default conf read 54→209 s across
@@ -1154,7 +1154,7 @@ object LinkGraph {
       localMax).localCheckpoint()
     val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = eAll.filter(col("src") =!= col("dst")).distinct().persist()
-    // the SCC/pageRank AQE pin (GraphAqeProbe): the per-hop visited
+    // the SCC/pageRank AQE pin: the per-hop visited
     // set and the final tag frames are node-shaped and compress under
     // the runtime broadcast threshold at soak sizes
     val nNodes = scc.count()

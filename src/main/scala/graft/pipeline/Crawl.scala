@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.UrlOps
+import graft.streaming.{IncrementalStream, SnapshotStore}
 import graft.text.HtmlExtract
 
 /** The assembled crawl front door: WARC records → URL gate → HTML
@@ -136,17 +137,16 @@ object Crawl {
     * (url, html, fetchCol) pages, then merge into the SnapshotStore
     * target keeping the LATEST fetch per canonical url — a continuous
     * crawl converges to the same corpus a one-shot [[curate]] +
-    * [[UrlOps.dedupByUrl]] over all raw fetches produces. Exposed for
-    * direct replay testing; at-least-once safe (committed batch ids
-    * skip, the store swaps snapshots atomically) — the
-    * [[graft.streaming.IncrementalStream.mergeUpsertBatch]] contract
-    * on the crawl front.
+    * [[UrlOps.dedupByUrl]] over all raw fetches produces. At-least-once
+    * safe: it is [[IncrementalStream.mergeUpsertBatch]] over the
+    * curated pages (committed batch ids skip, the store swaps
+    * snapshots atomically). Run it as
+    * `IncrementalStream.sink(df, ckpt)(crawlBatch(_, _, targetDir, blocked))`
+    * and read the corpus back with [[IncrementalStream.readUpsertTarget]].
     */
   def crawlBatch(batch: DataFrame, batchId: Long, targetDir: String,
                  blockedDomains: DataFrame,
                  fetchCol: String = "fetched_at"): Unit = {
-    val store = new graft.streaming.SnapshotStore(batch.sparkSession, targetDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
     val gated = UrlOps.urlFilter(
       batch.select(col("url"), col("html"), col(fetchCol)), blockedDomains)
     val extracted = HtmlExtract.extract(gated, htmlCol = "html", idCol = "url")
@@ -157,29 +157,9 @@ object Crawl {
       when(col("text") === "", lit(0L))
         .otherwise(size(split(col("text"), "\\s+")).cast("long")).as("n_tokens"),
       col(fetchCol))
-    val merged = store.read() match {
-      case Some(t) => graft.sync.SyncOps.applyIncremental(
-        t, curated.select(t.columns.map(col): _*), Seq("url"), fetchCol,
-        tieBreak = "text")
-      case None => graft.sync.SyncOps.upsertKeepLatest(
-        curated, Seq("url"), fetchCol, tieBreak = "text")
-    }
-    store.commit(merged, batchId)
+    IncrementalStream.mergeUpsertBatch(curated, batchId, targetDir,
+      Seq("url"), fetchCol, tieBreak = "text")
   }
-
-  /** Streaming crawl-ingest sink (foreachBatch over [[crawlBatch]]):
-    * raw (url, html, fetched_at) pages stream in, the curated
-    * latest-fetch-per-canonical-url corpus accumulates in `targetDir`.
-    */
-  def sinkCrawl(df: DataFrame, targetDir: String, checkpointDir: String,
-                blockedDomains: DataFrame,
-                fetchCol: String = "fetched_at"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        crawlBatch(batch, batchId, targetDir, blockedDomains, fetchCol)
-      }
 
   /** One WARC-layer ingest micro-batch: `files` is a bounded frame of
     * `.warc(.gz)` file paths (one micro-batch of arrivals); each file
@@ -188,8 +168,9 @@ object Crawl {
     * `warc_date` (ISO-8601 UTC — string order is fetch order), and
     * the result merges into the SnapshotStore keeping the LATEST
     * capture per canonical url. At-least-once safe: committed batch
-    * ids replay as no-ops. The collect is of PATHS only — bounded by
-    * files-per-trigger, never corpus-shaped.
+    * ids replay as no-ops, before any file is listed. The collect is
+    * of PATHS only — bounded by files-per-trigger, never
+    * corpus-shaped.
     *
     * Oversized archives fan out: a file larger than
     * `targetSplitBytes` routes through
@@ -207,55 +188,52 @@ object Crawl {
                      blockedDomains: DataFrame,
                      targetSplitBytes: Long = 128L << 20): Unit = {
     val spark = files.sparkSession
-    val store = new graft.streaming.SnapshotStore(spark, targetDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
-    val hasLen = files.columns.contains("length")
-    val pathCols: Seq[org.apache.spark.sql.Column] =
-      if (hasLen) Seq(col("path"), col("length")) else Seq(col("path"))
-    val listed = files.select(pathCols: _*).distinct().collect()
-    if (listed.isEmpty) return
-    val sized: Array[(String, Long)] =
-      if (targetSplitBytes <= 0) listed.map(r => (r.getString(0), 0L))
-      else if (hasLen) listed.map(r => (r.getString(0), r.getLong(1)))
-      else {
-        val conf = spark.sparkContext.hadoopConfiguration
-        listed.map { r =>
-          val p = new org.apache.hadoop.fs.Path(r.getString(0))
-          (r.getString(0), p.getFileSystem(conf).getFileStatus(p).getLen)
+    SnapshotStore.merge(files, batchId, targetDir) { prev =>
+      val hasLen = files.columns.contains("length")
+      val pathCols: Seq[org.apache.spark.sql.Column] =
+        if (hasLen) Seq(col("path"), col("length")) else Seq(col("path"))
+      val listed = files.select(pathCols: _*).distinct().collect()
+      val sized: Array[(String, Long)] =
+        if (targetSplitBytes <= 0) listed.map(r => (r.getString(0), 0L))
+        else if (hasLen) listed.map(r => (r.getString(0), r.getLong(1)))
+        else {
+          val conf = spark.sparkContext.hadoopConfiguration
+          listed.map { r =>
+            val p = new org.apache.hadoop.fs.Path(r.getString(0))
+            (r.getString(0), p.getFileSystem(conf).getFileStatus(p).getLen)
+          }
         }
-      }
-    val (big, small) = sized.partition(
-      f => targetSplitBytes > 0 && f._2 > targetSplitBytes)
-    val parts = Seq(
-      if (small.isEmpty) None
-      else Some(graft.sources.Warc.read(
-        spark, small.map(_._1).mkString(","))),
-      if (big.isEmpty) None
-      else Some(graft.sources.Warc.readSplit(
-          spark, big.map(_._1).mkString(","),
-          targetSplitBytes = targetSplitBytes)
-        .drop("split_start"))).flatten
-    val records = parts.reduce(_.unionByName(_))
-    val curated = curate(records, blockedDomains,
-        passthrough = Seq("warc_date"))
-      .select("url", "domain", "text", "n_tokens", "warc_date")
-    val merged = store.read() match {
-      case Some(t) => graft.sync.SyncOps.applyIncremental(
-        t, curated.select(t.columns.map(col): _*), Seq("url"), "warc_date",
+      val (big, small) = sized.partition(
+        f => targetSplitBytes > 0 && f._2 > targetSplitBytes)
+      val parts = Seq(
+        if (small.isEmpty) None
+        else Some(graft.sources.Warc.read(
+          spark, small.map(_._1).mkString(","))),
+        if (big.isEmpty) None
+        else Some(graft.sources.Warc.readSplit(
+            spark, big.map(_._1).mkString(","),
+            targetSplitBytes = targetSplitBytes)
+          .drop("split_start"))).flatten
+      // no files: no records (the columns curate reads, no rows)
+      val records = parts.reduceOption(_.unionByName(_)).getOrElse(
+        files.limit(0).select(lit("").as("warc_type"), lit("").as("target_uri"),
+          lit(Array.emptyByteArray).as("payload"), lit("").as("warc_date")))
+      val curated = curate(records, blockedDomains,
+          passthrough = Seq("warc_date"))
+        .select("url", "domain", "text", "n_tokens", "warc_date")
+      IncrementalStream.keepLatest(prev, curated, Seq("url"), "warc_date",
         tieBreak = "text")
-      case None => graft.sync.SyncOps.upsertKeepLatest(
-        curated, Seq("url"), "warc_date", tieBreak = "text")
     }
-    store.commit(merged, batchId)
   }
 
   /** Streaming crawl ingest at the ARRIVAL format: tail a directory
     * of `.warc(.gz)` files (the file-arrival stream a fetcher fleet
     * produces) and accumulate the curated latest-capture-per-url
-    * corpus in `targetDir`. The file listing rides Structured
-    * Streaming's file source (checkpointed, exactly-once file
-    * discovery); only PATHS (+ sizes) flow through the stream — the
-    * bytes stream through [[graft.sources.Warc.read]] inside each
+    * corpus in `targetDir` (read it back with
+    * [[IncrementalStream.readUpsertTarget]]). The file listing rides
+    * Structured Streaming's file source (checkpointed, exactly-once
+    * file discovery); only PATHS (+ sizes) flow through the stream —
+    * the bytes stream through [[graft.sources.Warc.read]] inside each
     * batch, so a multi-GiB member never materializes as a row.
     * Archives larger than `targetSplitBytes` fan out across tasks via
     * [[graft.sources.Warc.readSplit]] (see [[crawlWarcBatch]]); the
@@ -267,7 +245,7 @@ object Crawl {
                     checkpointDir: String, blockedDomains: DataFrame,
                     maxFilesPerTrigger: Int = 16,
                     targetSplitBytes: Long = 128L << 20): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream.format("binaryFile")
+    IncrementalStream.sink(spark.readStream.format("binaryFile")
       // the binaryFile source's FIXED schema (streaming sources
       // require it stated up front); only `path` is selected below,
       // so column pruning keeps file bytes out of the stream
@@ -279,19 +257,8 @@ object Crawl {
       .option("pathGlobFilter", "*.warc*")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(warcDir)
-      .select(col("path"), col("length"))
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        crawlWarcBatch(batch, batchId, targetDir, blockedDomains,
-          targetSplitBytes)
-      }
-
-  /** The committed crawl corpus (None until the first batch commits). */
-  def readCrawlTarget(spark: org.apache.spark.sql.SparkSession,
-                      targetDir: String): Option[DataFrame] =
-    new graft.streaming.SnapshotStore(spark, targetDir).read()
+      .select(col("path"), col("length")), checkpointDir)(
+      crawlWarcBatch(_, _, targetDir, blockedDomains, targetSplitBytes))
 
   /** Frontier discovery — the step that closes the crawl loop:
     * extracted out-links that are NOT yet in the fetched corpus, with

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Clusters, Dedup}
 import graft.ops.Sampling
+import graft.streaming.StoreMaintenance
 import graft.text.TextAnalysis
 
 /** End-to-end training-data curation: the operators of this library
@@ -107,8 +108,10 @@ object Curation {
   /** Incremental curation: curate ONE arriving batch against the
     * persistent ingest stores, without re-reading history — the
     * streaming form of [[curate]], composed from the same pieces the
-    * sinks use ([[graft.streaming.IncrementalStream.dedupBatch]]'s
-    * seen-hash store shape, [[graft.dedup.Dedup.minhashNearDupsDelta]]).
+    * streaming bodies use ([[graft.streaming.IncrementalStream.dedupBatch]]'s
+    * seen-hash store shape, [[graft.dedup.Dedup.minhashNearDupsDelta]]);
+    * [[graft.streaming.IncrementalStream.curateBatch]] is its
+    * foreachBatch body.
     *
     * Per batch: (1) exact dedup — first-seen within the batch (min id
     * per content hash) and against the seen-hash store; (2) near-dup —
@@ -130,11 +133,11 @@ object Curation {
     * retract — the spec pins both the invariant and the equality on
     * connector-free corpora).
     *
-    * Maintenance: `seenDir`/`indexDir` accumulate one `batch=<id>`
-    * dir per micro-batch — consolidate them periodically with
-    * [[graft.streaming.StoreMaintenance.compactStore]] (answers are
-    * row-identical before and after) and bound the dedup horizon with
-    * [[graft.streaming.StoreMaintenance.dropBatchesBelow]].
+    * Maintenance: `seenDir`/`indexDir` are batch-partitioned
+    * [[StoreMaintenance]] stores — consolidate them periodically with
+    * [[StoreMaintenance.compactStore]] (answers are row-identical
+    * before and after) and bound the dedup horizon with
+    * [[StoreMaintenance.dropBatchesBelow]].
     */
   def curateDelta(batch: DataFrame, batchId: Long,
                   seenDir: String, indexDir: String,
@@ -147,9 +150,6 @@ object Curation {
                   minClassifierProb: Double = 0.5,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(seenDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(d))
 
     // 1. exact: min id per hash within the batch, then anti-join the
     // seen store (replay-safe: own batch partition excluded)
@@ -158,13 +158,9 @@ object Curation {
       .partitionBy(col("__h")).orderBy(col(idCol).asc)
     val firsts = hashed.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val exactSurvivors = (
-      if (!exists(seenDir)) firsts
-      else {
-        val seen = spark.read.parquet(seenDir)
-          .filter(col("batch") =!= batchId).select("__h")
-        firsts.join(seen, Seq("__h"), "left_anti")
-      }).persist()
+    val seen = StoreMaintenance.history(spark, seenDir, batchId,
+      firsts.select("__h").limit(0))
+    val exactSurvivors = firsts.join(seen, Seq("__h"), "left_anti").persist()
 
     try {
       if (exactSurvivors.isEmpty) return exactSurvivors
@@ -173,13 +169,8 @@ object Curation {
         .withColumn("quality", lit(null).cast("double"))
 
       // 2. near-dup vs index + batch-scoped components over the pairs
-      val index =
-        if (!exists(indexDir))
-          graft.dedup.Dedup.minhashIndex(
-            exactSurvivors.limit(0), shingleK, numPerm, textCol, idCol)
-        else spark.read.parquet(indexDir)
-          .filter(col("batch") =!= batchId)
-          .select(col(idCol), col("hs"), col("sig"))
+      val index = StoreMaintenance.history(spark, indexDir, batchId,
+        Dedup.minhashIndex(exactSurvivors.limit(0), shingleK, numPerm, textCol, idCol))
       val (pairs, newIdx) = graft.dedup.Dedup.minhashNearDupsDelta(
         index, exactSurvivors, shingleK, numPerm, bands, jaccardThreshold,
         textCol, idCol)
@@ -204,9 +195,8 @@ object Curation {
       // that is SAFE against a crash between commit and consumption:
       // a replay with the same batchId excludes its own store
       // partitions, so it recomputes the identical output
-      exactSurvivors.select("__h").write.mode("overwrite")
-        .parquet(s"$seenDir/batch=$batchId")
-      newIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+      StoreMaintenance.writeBatch(exactSurvivors.select("__h"), seenDir, batchId)
+      StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
       sampled
         .select(col(idCol), col(textCol), col("pred_lang"), col("quality"))
         .orderBy(idCol)

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** The reference's scheduler loop (scheduler/sync_worker.py: poll →
@@ -166,98 +166,106 @@ object IncrementalStream {
         expr(s"$leftKey = $rightKey AND " +
           s"$rightTime BETWEEN $leftTime - INTERVAL $interval AND $leftTime"))
 
-  /** One upsert micro-batch against the snapshot-store target —
-    * exposed so the replay/crash semantics are directly testable.
-    * Keep-latest-per-key is idempotent, so a replayed batch would be
-    * harmless anyway; the batch-id skip still avoids the wasted merge
-    * job, and the [[SnapshotStore]] commit makes the target rewrite
-    * atomic (no window where concurrent readers see no data).
+  /** The one foreachBatch sink: every micro-batch of `df` runs
+    * `body(batch, batchId)` under the checkpoint at `checkpointDir` —
+    * the reference's poll → incremental sync → upsert loop
+    * (sync_worker.py, duckdb_source.py:74 INSERT OR REPLACE) as a
+    * foreachBatch sink. foreachBatch is at-least-once, so every body
+    * owns a replay contract: the snapshot-backed `merge*Batch` bodies
+    * skip committed ids ([[SnapshotStore.merge]]), the
+    * batch-partitioned ones overwrite their own partition and read
+    * history without it ([[StoreMaintenance.history]]).
+    *
+    * `compactEvery = n` folds the committed batch dirs of each of
+    * `compactDirs` after every n-th batch
+    * ([[StoreMaintenance.compactStore]] — answer-preserving, and safe
+    * under replay: the just-written batch id is the store's max, which
+    * compaction always retains individually).
     */
-  def mergeUpsertBatch(batch: DataFrame, batchId: Long, targetDir: String,
-                       keys: Seq[String], timeCol: String,
-                       tieBreak: String): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, targetDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
-    val merged = store.read() match {
-      case Some(t) => graft.sync.SyncOps
-        .applyIncremental(t, batch.select(t.columns.map(col): _*),
-          keys, timeCol, tieBreak)
-      case None => graft.sync.SyncOps
-        .upsertKeepLatest(batch, keys, timeCol, tieBreak)
-    }
-    store.commit(merged, batchId)
-  }
+  def sink(df: DataFrame, checkpointDir: String,
+           compactDirs: Seq[String] = Nil, compactEvery: Int = 0)
+          (body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          compactDirs.foreach(StoreMaintenance.compactStore(batch.sparkSession, _))
+      }
 
-  /** Streaming upsert sink (foreachBatch): every micro-batch merges
-    * into a parquet target keeping the latest row per key — the
-    * reference's INSERT OR REPLACE loop (duckdb_source.py:74) as a
-    * streaming sink. The target is a [[SnapshotStore]]: fresh snapshot
-    * directory per batch + atomic pointer swap, read back with
-    * [[readUpsertTarget]].
+  /** Streaming upsert sink: [[sink]] over [[mergeUpsertBatch]]. Read
+    * the target back with [[readUpsertTarget]].
     */
   def sinkUpsert(df: DataFrame, targetDir: String, checkpointDir: String,
                  keys: Seq[String], timeCol: String,
-                 tieBreak: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeUpsertBatch(batch, batchId, targetDir, keys, timeCol, tieBreak)
-      }
+                 tieBreak: String): DataStreamWriter[Row] =
+    sink(df, checkpointDir)(mergeUpsertBatch(_, _, targetDir, keys, timeCol, tieBreak))
 
-  /** The committed upsert target (None until the first batch commits). */
+  /** Keep-latest per key of `batch` merged into `prev` (None before the
+    * first commit) — the merge of [[mergeUpsertBatch]] and the crawl
+    * bodies.
+    */
+  private[graft] def keepLatest(prev: Option[DataFrame], batch: DataFrame,
+                                keys: Seq[String], timeCol: String,
+                                tieBreak: String): DataFrame = prev match {
+    case Some(t) => graft.sync.SyncOps.applyIncremental(
+      t, batch.select(t.columns.map(col): _*), keys, timeCol, tieBreak)
+    case None => graft.sync.SyncOps.upsertKeepLatest(batch, keys, timeCol, tieBreak)
+  }
+
+  /** One upsert micro-batch against the snapshot-store target: every
+    * micro-batch merges into a parquet target keeping the latest row
+    * per key. Keep-latest-per-key is idempotent, so a replayed batch
+    * would be harmless anyway; the batch-id skip still avoids the
+    * wasted merge job, and the [[SnapshotStore]] commit makes the
+    * target rewrite atomic (no window where concurrent readers see no
+    * data).
+    */
+  def mergeUpsertBatch(batch: DataFrame, batchId: Long, targetDir: String,
+                       keys: Seq[String], timeCol: String,
+                       tieBreak: String): Unit =
+    SnapshotStore.merge(batch, batchId, targetDir)(
+      keepLatest(_, batch, keys, timeCol, tieBreak))
+
+  /** The committed snapshot of any [[SnapshotStore]]-backed body —
+    * upsert, SCD2 and CDC targets, agg/hist/distinct state, the crawl
+    * corpus (None until the first batch commits).
+    */
   def readUpsertTarget(spark: SparkSession, targetDir: String): Option[DataFrame] =
     new SnapshotStore(spark, targetDir).read()
 
   /** One SCD2 history micro-batch merge — the streaming form of
-    * [[graft.sync.SyncOps.scd2Delta]], exposed for replay testing.
+    * [[graft.sync.SyncOps.scd2Delta]]: instead of overwriting each
+    * key's row, every change opens/extends validity intervals.
     * An SCD2 merge is NOT idempotent (re-merging a batch would
     * violate the strictly-later contract against its own effects), so
     * the batch-id skip is load-bearing, not an optimization: replay
     * of a committed batch is a no-op, and `scd2Delta`'s delta ==
     * one-shot property makes the maintained history row-identical to
     * running [[graft.sync.SyncOps.scd2]] over everything at once, for
-    * any micro-batching.
+    * any micro-batching. Caller contract (inherited from scd2Delta):
+    * batches arrive in event-time order per key — true of a real
+    * change feed; a file-backed test source must write its waves
+    * time-sliced.
     */
   def mergeScd2Batch(batch: DataFrame, batchId: Long, historyDir: String,
                      keys: Seq[String], attrCols: Seq[String],
-                     timeCol: String, tieBreak: String): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, historyDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
-    val merged = store.read() match {
+                     timeCol: String, tieBreak: String): Unit =
+    SnapshotStore.merge(batch, batchId, historyDir) {
       case Some(h) => graft.sync.SyncOps
         .scd2Delta(h, batch, keys, attrCols, timeCol, tieBreak)
       case None => graft.sync.SyncOps
         .scd2(batch, keys, attrCols, timeCol, tieBreak)
     }
-    store.commit(merged, batchId)
-  }
-
-  /** Streaming SCD2 sink (foreachBatch): the dimension-history twin
-    * of [[sinkUpsert]] — instead of overwriting each key's row, every
-    * change opens/extends validity intervals. Read back with
-    * [[readUpsertTarget]] over `historyDir`. Caller contract
-    * (inherited from scd2Delta): batches arrive in event-time order
-    * per key — true of a real change feed; a file-backed test source
-    * must write its waves time-sliced.
-    */
-  def sinkScd2(df: DataFrame, historyDir: String, checkpointDir: String,
-               keys: Seq[String], attrCols: Seq[String], timeCol: String,
-               tieBreak: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeScd2Batch(batch, batchId, historyDir, keys, attrCols,
-          timeCol, tieBreak)
-      }
 
   /** One CDC-changelog micro-batch merge — the streaming form of
-    * [[graft.sync.SyncOps.applyChangeLog]], exposed for replay
-    * testing. The standing snapshot's layout is the batch minus the
-    * op column (the order column stays — it is the row's version);
-    * the first committed batch freezes it. The batch-id skip makes a
-    * replayed committed batch a no-op (the sinkScd2 contract), and
+    * [[graft.sync.SyncOps.applyChangeLog]]: insert/update/delete
+    * envelopes merge into a parquet snapshot, per key the LAST
+    * envelope wins, a final delete removes the key, untouched keys
+    * pass through. The standing snapshot's layout is the batch minus
+    * the op column (the order column stays — it is the row's
+    * version); the first committed batch freezes it. The batch-id
+    * skip makes a replayed committed batch a no-op, and
     * applyChangeLog's last-wins algebra makes the maintained snapshot
     * row-identical to one applyChangeLog over the concatenated log —
     * for any micro-batching, provided batches arrive in (orderCol,
@@ -266,85 +274,65 @@ object IncrementalStream {
     */
   def mergeCdcBatch(batch: DataFrame, batchId: Long, targetDir: String,
                     keys: Seq[String], opCol: String, orderCol: String,
-                    tieBreak: String): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, targetDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
-    val target = store.read().getOrElse(batch.drop(opCol).limit(0))
-    val merged = graft.sync.SyncOps.applyChangeLog(
-      target, batch, keys, opCol, orderCol, tieBreak)
-    store.commit(merged, batchId)
-  }
+                    tieBreak: String): Unit =
+    SnapshotStore.merge(batch, batchId, targetDir) { prev =>
+      graft.sync.SyncOps.applyChangeLog(prev.getOrElse(batch.drop(opCol).limit(0)),
+        batch, keys, opCol, orderCol, tieBreak)
+    }
 
-  /** Streaming CDC sink (foreachBatch): every micro-batch of
-    * insert/update/delete envelopes merges into a parquet snapshot —
-    * the Debezium-stream story the reference's incremental sync
-    * gestures at (reference: oracle_source.py:239 incremental
-    * fetch), closed as a streaming sink: per key the LAST envelope
-    * wins, a final delete removes the key, untouched keys pass
-    * through. The target is a [[SnapshotStore]] (fresh snapshot dir
-    * per batch + atomic pointer swap); read back with
-    * [[readUpsertTarget]] over `targetDir`.
-    */
-  def sinkCdc(df: DataFrame, targetDir: String, checkpointDir: String,
-              keys: Seq[String], opCol: String, orderCol: String,
-              tieBreak: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeCdcBatch(batch, batchId, targetDir, keys, opCol, orderCol,
-          tieBreak)
-      }
-
-  /** One aggregate-state micro-batch merge — exposed for direct replay
-    * testing. foreachBatch is at-least-once and a state MERGE is NOT
-    * idempotent: after a failure between the state write and the
-    * streaming checkpoint commit, the replayed batch would be merged a
-    * second time and permanently double-count sums/counts. The
-    * [[SnapshotStore]] records the last committed batch id with the
-    * state, so a replayed `batchId <= lastCommitted` is skipped — the
-    * sink is effectively-once end to end.
+  /** One aggregate-state micro-batch merge: the batch's rows aggregate
+    * into mergeable bucket state (count / decimal sum / min / max)
+    * merged into the stored state — the streaming form of
+    * CachedAggService's refresh. foreachBatch is at-least-once and a
+    * state MERGE is NOT idempotent: after a failure between the state
+    * write and the streaming checkpoint commit, the replayed batch
+    * would be merged a second time and permanently double-count
+    * sums/counts, so the batch-id skip is load-bearing. Because the
+    * state algebra is associative and the sums run through DECIMAL,
+    * the maintained state is bit-identical to aggregating all batches
+    * at once, regardless of how the stream was micro-batched.
     */
   def mergeAggBatch(batch: DataFrame, batchId: Long, stateDir: String,
                     timeCol: String, interval: String,
-                    valueCol: String): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, stateDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay: already merged
-    val fresh = graft.ops.IncrementalAgg
-      .bucketState(batch, timeCol, interval, valueCol)
-    val merged = store.read() match {
-      case Some(prev) => graft.ops.IncrementalAgg.mergeStates(prev, fresh)
-      case None => fresh
+                    valueCol: String): Unit =
+    SnapshotStore.merge(batch, batchId, stateDir) { prev =>
+      val fresh = graft.ops.IncrementalAgg
+        .bucketState(batch, timeCol, interval, valueCol)
+      prev.fold(fresh)(graft.ops.IncrementalAgg.mergeStates(_, fresh))
     }
-    store.commit(merged, batchId)
-  }
 
-  /** Streaming CACHED-AGGREGATE sink: every micro-batch aggregates its
-    * rows into mergeable bucket state (count / decimal sum / min /
-    * max) and merges it into the snapshot-store-backed state — the
-    * streaming form of CachedAggService's refresh, and the full
-    * replacement for the reference's "scheduler re-aggregates the
-    * dashboard query" loop. Because the state algebra is associative
-    * and the sums run through DECIMAL, the maintained state is
-    * bit-identical to aggregating all batches at once (same argument
-    * as IncrementalAgg) regardless of how the stream was
-    * micro-batched; the batch-id skip in [[mergeAggBatch]] extends
-    * that to at-least-once replays, and the snapshot commit makes
-    * every state transition atomic. Read back with [[readAggState]].
+  /** Histogram-state form of [[mergeAggBatch]]: micro-batches maintain
+    * the mergeable QUANTILE state (IncrementalAgg.histState) under the
+    * same atomic-commit + replay-skip contract. Exact integer bin
+    * counts make the maintained state bit-identical to histogramming
+    * all batches at once, under any micro-batching. Read quantiles
+    * back with `IncrementalAgg.quantilesFromState(readUpsertTarget(...), ...)`.
     */
-  def sinkAggState(df: DataFrame, stateDir: String, checkpointDir: String,
-                   timeCol: String, interval: String,
-                   valueCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeAggBatch(batch, batchId, stateDir, timeCol, interval, valueCol)
-      }
+  def mergeHistBatch(batch: DataFrame, batchId: Long, stateDir: String,
+                     timeCol: String, interval: String, valueCol: String,
+                     lo: Double, hi: Double, nBins: Int): Unit =
+    SnapshotStore.merge(batch, batchId, stateDir) { prev =>
+      val fresh = graft.ops.IncrementalAgg
+        .histState(batch, timeCol, interval, valueCol, lo, hi, nBins)
+      prev.fold(fresh)(graft.ops.IncrementalAgg.mergeHistStates(_, fresh))
+    }
 
-  /** The committed aggregate state (None until the first batch commits). */
-  def readAggState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    new SnapshotStore(spark, stateDir).read()
+  /** HLL form of [[mergeAggBatch]]: micro-batches maintain the
+    * mergeable DISTINCT-count state (IncrementalAgg.distinctState)
+    * under the same atomic-commit + replay-skip contract. Union
+    * registers equal direct-build registers, so the maintained state
+    * estimates identically to sketching all batches at once, under
+    * any micro-batching. Read estimates back with
+    * `IncrementalAgg.distinctFromState(readUpsertTarget(...))`.
+    */
+  def mergeDistinctBatch(batch: DataFrame, batchId: Long, stateDir: String,
+                         timeCol: String, interval: String, keyCol: String,
+                         lgK: Int = 12): Unit =
+    SnapshotStore.merge(batch, batchId, stateDir) { prev =>
+      val fresh = graft.ops.IncrementalAgg
+        .distinctState(batch, timeCol, interval, keyCol, lgK)
+      prev.fold(fresh)(graft.ops.IncrementalAgg.mergeDistinctStates(_, fresh))
+    }
 
   /** One exact-dedup micro-batch against an APPEND-ONLY seen-hash
     * store — streaming ingest dedup with an UNBOUNDED horizon: every
@@ -354,15 +342,14 @@ object IncrementalStream {
     * by the watermark — corpus ingest needs "never ingest this text
     * again", which is store-backed state, not stream state.)
     *
-    * Store layout is per-batch partition dirs (`batch=<id>`), so a
-    * batch commit APPENDS O(batch) hash rows — never a rewrite of the
-    * O(history) store (the SnapshotStore pattern would rewrite the
-    * whole seen set every batch). Idempotent under foreachBatch's
+    * The store is batch-partitioned ([[StoreMaintenance.writeBatch]]),
+    * so a batch commit APPENDS O(batch) hash rows — never a rewrite
+    * of the O(history) store (the SnapshotStore pattern would rewrite
+    * the whole seen set every batch). Idempotent under foreachBatch's
     * at-least-once replay: both writes target the replayed batch's own
-    * partition dir with overwrite, and the seen-set read EXCLUDES the
-    * current batch id — a replay after a complete-but-uncommitted
-    * batch recomputes the same survivors instead of seeing its own
-    * hashes and emitting an empty (data-losing) overwrite.
+    * partition, and the seen-set read ([[StoreMaintenance.history]])
+    * excludes it. Read the deduped corpus back with
+    * [[StoreMaintenance.read]] over `outDir`.
     *
     * 100 TB accounting: per batch, the BATCH side builds the bloom
     * (two O(batch) jobs over the persisted batch dedup) and the
@@ -373,11 +360,12 @@ object IncrementalStream {
     * history, prefix-bucket the store dirs and prune scans by the
     * batch's hash prefixes.
     *
-    * Maintenance: the per-batch partition dirs accumulate — run
-    * [[StoreMaintenance.compactStore]] periodically to consolidate
-    * committed batches (store answers are row-identical before and
-    * after), and [[StoreMaintenance.dropBatchesBelow]] to bound the
-    * dedup horizon deliberately.
+    * Maintenance: the per-batch partition dirs accumulate — pass the
+    * store to [[sink]]'s `compactDirs` or run
+    * [[StoreMaintenance.compactStore]] periodically (store answers are
+    * row-identical before and after), and
+    * [[StoreMaintenance.dropBatchesBelow]] to bound the dedup horizon
+    * deliberately.
     */
   def dedupBatch(batch: DataFrame, batchId: Long, storeDir: String,
                  outDir: String, textCol: String = "text",
@@ -388,20 +376,15 @@ object IncrementalStream {
       .partitionBy(col("__h")).orderBy(col(idCol).asc)
     val firsts = hashed.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     firsts.persist()
     try {
       val nBatch = firsts.count()
-      // an empty batch must not write: a part-file-less partition dir
-      // would poison later schema inference on the store/output roots
-      if (nBatch == 0) return
+      if (nBatch == 0) return // an empty batch writes nothing
+      val shape = firsts.select("__h").limit(0)
+      val seen = StoreMaintenance.history(spark, storeDir, batchId, shape)
       val survivors =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(storeDir))) firsts
+        if (seen eq shape) firsts // no history yet: nothing to prune
         else {
-          val seen = spark.read.parquet(storeDir)
-            .filter(col("batch") =!= batchId) // replay: own hashes are not "seen"
-            .select("__h")
           // batch-side bloom prunes the history scan: store hashes that
           // can't be in this batch (the vast majority) never reach the
           // join; within-batch hashes are distinct, so nBatch sizes the
@@ -413,44 +396,11 @@ object IncrementalStream {
       survivors.persist()
       try {
         if (survivors.count() > 0) {
-          survivors.drop("__h").write.mode("overwrite")
-            .parquet(s"$outDir/batch=$batchId")
-          survivors.select("__h").write.mode("overwrite")
-            .parquet(s"$storeDir/batch=$batchId")
+          StoreMaintenance.writeBatch(survivors.drop("__h"), outDir, batchId)
+          StoreMaintenance.writeBatch(survivors.select("__h"), storeDir, batchId)
         }
       } finally survivors.unpersist(blocking = true)
     } finally firsts.unpersist(blocking = true)
-  }
-
-  /** Streaming exact-dedup sink (foreachBatch over [[dedupBatch]]).
-    * Read the deduped corpus back with [[readDeduped]].
-    *
-    * `compactEvery = n` folds the store's committed batch dirs into a
-    * consolidated partition after every n-th batch
-    * ([[StoreMaintenance.compactStore]] — answer-preserving, and safe
-    * under replay: the just-written batch id is the store's max, which
-    * compaction always retains individually).
-    */
-  def sinkDedup(df: DataFrame, storeDir: String, outDir: String,
-                checkpointDir: String, textCol: String = "text",
-                idCol: String = "doc_id",
-                compactEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, storeDir, outDir, textCol, idCol)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          StoreMaintenance.compactStore(batch.sparkSession, storeDir): Unit
-      }
-
-  /** The deduped corpus across all committed batches (None before the
-    * first commit). The `batch` partition column records arrival.
-    */
-  def readDeduped(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(outDir)) else None
   }
 
   /** Streaming NEAR-dup ingest: per micro-batch, detect every
@@ -479,46 +429,17 @@ object IncrementalStream {
                    pairsDir: String, k: Int = 3, numPerm: Int = 32,
                    bands: Int = 8, threshold: Double = 0.8,
                    textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return // a part-file-less dir poisons later reads
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (!fs.exists(idxPath))
-        // empty index with the exact stored shape (id, hs, sig)
-        graft.dedup.Dedup.minhashIndex(batch.limit(0), k, numPerm, textCol, idCol)
-      else spark.read.parquet(indexDir)
-        .filter(col("batch") =!= batchId) // replay: own signatures are not history
-        .select(col(idCol), col("hs"), col("sig"))
+    if (batch.isEmpty) return // an empty batch writes nothing
+    val index = StoreMaintenance.history(batch.sparkSession, indexDir, batchId,
+      graft.dedup.Dedup.minhashIndex(batch.limit(0), k, numPerm, textCol, idCol))
     val (pairs, newIdx) = graft.dedup.Dedup.minhashNearDupsDelta(
       index, batch, k, numPerm, bands, threshold, textCol, idCol)
     pairs.persist()
     try {
-      if (pairs.count() > 0)
-        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-      newIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+      if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
+      StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
     } finally pairs.unpersist(blocking = true)
   }
-
-  /** Streaming near-dup sink (foreachBatch over [[nearDupBatch]]).
-    * Read accumulated pairs with [[readDeduped]] over `pairsDir`
-    * (None/absent before the first pair-producing batch).
-    */
-  def sinkNearDup(df: DataFrame, indexDir: String, pairsDir: String,
-                  checkpointDir: String, k: Int = 3, numPerm: Int = 32,
-                  bands: Int = 8, threshold: Double = 0.8,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupBatch(batch, batchId, indexDir, pairsDir,
-          k, numPerm, bands, threshold, textCol, idCol)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          StoreMaintenance.compactStore(batch.sparkSession, indexDir): Unit
-      }
 
   /** Streaming CONTAINMENT ingest: per micro-batch, detect every
     * verified excerpt/quote pair (Broder's asymmetric containment,
@@ -545,44 +466,14 @@ object IncrementalStream {
                        threshold: Double = 0.8, maxShingleDf: Int = 100,
                        textCol: String = "text",
                        idCol: String = "doc_id"): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return // a part-file-less dir poisons later reads
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (!fs.exists(idxPath))
-        // empty index with the exact stored shape (id, h, __n)
-        graft.dedup.Dedup.containmentIndex(batch.limit(0), k, textCol, idCol)
-      else spark.read.parquet(indexDir)
-        .filter(col("batch") =!= batchId) // replay: own shingles are not history
-        .select(col(idCol), col("h"), col("__n"))
+    if (batch.isEmpty) return // an empty batch writes nothing
+    val index = StoreMaintenance.history(batch.sparkSession, indexDir, batchId,
+      graft.dedup.Dedup.containmentIndex(batch.limit(0), k, textCol, idCol))
     val (pairs, newIdx) = graft.dedup.Dedup.containmentDelta(
       index, batch, k, threshold, maxShingleDf, textCol, idCol)
-    if (pairs.count() > 0)
-      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-    newIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
+    StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
   }
-
-  /** Streaming containment sink (foreachBatch over
-    * [[containmentBatch]]). Read accumulated pairs with
-    * [[readDeduped]] over `pairsDir` (None/absent before the first
-    * pair-producing batch).
-    */
-  def sinkContainment(df: DataFrame, indexDir: String, pairsDir: String,
-                      checkpointDir: String, k: Int = 8,
-                      threshold: Double = 0.8, maxShingleDf: Int = 100,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        containmentBatch(batch, batchId, indexDir, pairsDir,
-          k, threshold, maxShingleDf, textCol, idCol)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          StoreMaintenance.compactStore(batch.sparkSession, indexDir): Unit
-      }
 
   /** One IMAGE-dedup ingest micro-batch — [[nearDupBatch]]'s shape
     * applied to the perceptual-hash index
@@ -600,37 +491,14 @@ object IncrementalStream {
     if (batch.isEmpty) return
     val newHashes = graft.mm.Multimodal.dhash(
       batch.as[graft.mm.Multimodal.MediaRow]).toDF()
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (!fs.exists(idxPath)) newHashes.limit(0)
-      else spark.read.parquet(indexDir)
-        .filter(col("batch") =!= batchId) // replay: own hashes are not history
-        .select(newHashes.columns.map(col): _*)
+    val index = StoreMaintenance.history(spark, indexDir, batchId, newHashes.limit(0))
     val pairs = graft.mm.Multimodal.dhashPairsDelta(index, newHashes, maxHamming)
     pairs.persist()
     try {
-      if (pairs.count() > 0)
-        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-      newHashes.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+      if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
+      StoreMaintenance.writeBatch(newHashes, indexDir, batchId)
     } finally pairs.unpersist(blocking = true)
   }
-
-  /** Streaming image-dedup sink (foreachBatch over [[imageDedupBatch]])
-    * — completes multimodal parity with the text near-dup sink: image
-    * batches arrive as MediaRow-shaped frames, the dhash index
-    * accumulates per batch, pairs land under `pairsDir` (read with
-    * [[readDeduped]]).
-    */
-  def sinkImageDedup(df: DataFrame, indexDir: String, pairsDir: String,
-                     checkpointDir: String, maxHamming: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageDedupBatch(batch, batchId, indexDir, pairsDir, maxHamming)
-      }
 
   /** One micro-batch of incremental AUDIO near-dup ingest — the
     * [[imageDedupBatch]] contract over [[graft.mm.Multimodal.audioFingerprint]]
@@ -647,37 +515,14 @@ object IncrementalStream {
     if (batch.isEmpty) return
     val newFps = graft.mm.Multimodal.audioFingerprint(
       batch.as[graft.mm.Multimodal.MediaRow]).toDF()
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (!fs.exists(idxPath)) newFps.limit(0)
-      else spark.read.parquet(indexDir)
-        .filter(col("batch") =!= batchId) // replay: own hashes are not history
-        .select(newFps.columns.map(col): _*)
+    val index = StoreMaintenance.history(spark, indexDir, batchId, newFps.limit(0))
     val pairs = graft.mm.Multimodal.audioNearDupsDelta(index, newFps, maxHamming)
     pairs.persist()
     try {
-      if (pairs.count() > 0)
-        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-      newFps.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+      if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
+      StoreMaintenance.writeBatch(newFps, indexDir, batchId)
     } finally pairs.unpersist(blocking = true)
   }
-
-  /** Streaming audio-dedup sink (foreachBatch over [[audioDedupBatch]])
-    * — closes the multimodal streaming-dedup matrix (text/image/AUDIO):
-    * audio batches arrive as MediaRow-shaped frames, the fingerprint
-    * index accumulates per batch, pairs land under `pairsDir` (read
-    * with [[readDeduped]]).
-    */
-  def sinkAudioDedup(df: DataFrame, indexDir: String, pairsDir: String,
-                     checkpointDir: String, maxHamming: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        audioDedupBatch(batch, batchId, indexDir, pairsDir, maxHamming)
-      }
 
   /** One ANN-INDEX ingest micro-batch: PQ-encode the batch's vectors
     * (coarse routing + residual PQ codes —
@@ -685,55 +530,32 @@ object IncrementalStream {
     * searchable artifact GROWS with the stream while each commit
     * costs O(batch): vectors are read once, at arrival; search scans
     * only the accumulated 8-byte codes. Replay-idempotent by the
-    * per-batch-partition overwrite (the [[nearDupBatch]] convention)
-    * — a re-delivered batch rewrites its own partition bit-identically
-    * (encode is deterministic under a fixed coarse/codebook) and
-    * touches nothing else.
+    * per-batch-partition overwrite — a re-delivered batch rewrites
+    * its own partition bit-identically (encode is deterministic under
+    * a fixed coarse/codebook) and touches nothing else. The coarse
+    * centroids and codebooks must therefore stay FROZEN for the life
+    * of the stream (the FAISS contract: retraining quantizers
+    * invalidates every stored code — retrain offline, re-encode, swap
+    * directories). Query the accumulated index with [[readAnnIndex]] +
+    * [[graft.sim.Pq.searchPq]].
     */
   def annIndexBatch(batch: DataFrame, batchId: Long, indexDir: String,
                     coarse: Array[Array[Double]],
                     codebook: Array[Array[Array[Double]]],
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     byResidual: Boolean = true): Unit = {
-    if (batch.isEmpty) return // a part-file-less dir poisons later reads
-    graft.sim.Pq.encodeIndex(batch, coarse, codebook, idCol, vecCol, byResidual)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    if (batch.isEmpty) return // an empty batch writes nothing
+    StoreMaintenance.writeBatch(graft.sim.Pq.encodeIndex(
+      batch, coarse, codebook, idCol, vecCol, byResidual), indexDir, batchId)
   }
-
-  /** Streaming ANN-index sink (foreachBatch over [[annIndexBatch]]) —
-    * the vector-index twin of the dedup-store sinks: a growing corpus
-    * of embeddings maintains a searchable IVF-PQ index incrementally
-    * instead of re-encoding from scratch. The coarse centroids and
-    * codebooks are FROZEN at sink-construction time (the FAISS
-    * contract: retraining quantizers invalidates every stored code —
-    * retrain offline, re-encode, swap directories). Query the
-    * accumulated index with [[readAnnIndex]] +
-    * [[graft.sim.Pq.searchPq]].
-    */
-  def sinkAnnIndex(df: DataFrame, indexDir: String, checkpointDir: String,
-                   coarse: Array[Array[Double]],
-                   codebook: Array[Array[Array[Double]]],
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   byResidual: Boolean = true,
-                   compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annIndexBatch(batch, batchId, indexDir, coarse, codebook,
-          idCol, vecCol, byResidual)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          StoreMaintenance.compactStore(batch.sparkSession, indexDir): Unit
-      }
 
   /** The accumulated (neighbor_id, cid, code) ANN index across all
     * committed batches (None before the first commit) — feed to
     * [[graft.sim.Pq.searchPq]] with the SAME coarse/codebook/
-    * byResidual the sink was built with.
+    * byResidual the batches were encoded with.
     */
   def readAnnIndex(spark: SparkSession, indexDir: String): Option[DataFrame] =
-    readDeduped(spark, indexDir)
+    StoreMaintenance.read(spark, indexDir)
       .map(_.select("neighbor_id", "cid", "code"))
 
   /** One BM25-INDEX ingest micro-batch: tokenize the batch ONCE into
@@ -744,36 +566,19 @@ object IncrementalStream {
     * inverted index incrementally, query batches never re-read or
     * re-tokenize old text, and df/N/avgdl stay GLOBAL (aggregates of
     * the store), so [[graft.text.Bm25.searchIndex]] over the
-    * accumulated store scores bit-identically to a one-shot
-    * [[graft.text.Bm25.search]]. Replay-idempotent by per-batch
-    * partition overwrite (tokenization is deterministic).
+    * accumulated store ([[readBm25Index]]) scores bit-identically to a
+    * one-shot [[graft.text.Bm25.search]]. Replay-idempotent by
+    * per-batch partition overwrite (tokenization is deterministic).
     */
   def bm25IndexBatch(batch: DataFrame, batchId: Long, postingsDir: String,
                      statsDir: String, textCol: String = "text",
                      idCol: String = "doc_id"): Unit = {
-    if (batch.isEmpty) return // a part-file-less dir poisons later reads
-    graft.text.Bm25.index(batch, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$postingsDir/batch=$batchId")
-    graft.text.Bm25.indexStats(batch, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$statsDir/batch=$batchId")
+    if (batch.isEmpty) return // an empty batch writes nothing
+    StoreMaintenance.writeBatch(
+      graft.text.Bm25.index(batch, textCol, idCol), postingsDir, batchId)
+    StoreMaintenance.writeBatch(
+      graft.text.Bm25.indexStats(batch, textCol, idCol), statsDir, batchId)
   }
-
-  /** Streaming BM25-index sink (foreachBatch over [[bm25IndexBatch]]).
-    * Query the accumulated store with [[readBm25Index]] +
-    * [[graft.text.Bm25.searchIndex]].
-    */
-  def sinkBm25Index(df: DataFrame, postingsDir: String, statsDir: String,
-                    checkpointDir: String, textCol: String = "text",
-                    idCol: String = "doc_id", compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bm25IndexBatch(batch, batchId, postingsDir, statsDir, textCol, idCol)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          StoreMaintenance.compactStore(batch.sparkSession, postingsDir): Unit
-      }
 
   /** The accumulated (postings, stats) BM25 store across committed
     * batches (None before the first commit) — feed both frames to
@@ -783,52 +588,40 @@ object IncrementalStream {
                     statsDir: String, idCol: String = "doc_id")
       : Option[(DataFrame, DataFrame)] =
     for {
-      p <- readDeduped(spark, postingsDir)
-      s <- readDeduped(spark, statsDir)
+      p <- StoreMaintenance.read(spark, postingsDir)
+      s <- StoreMaintenance.read(spark, statsDir)
     } yield (p.select(col(idCol), col("len"), col("term"), col("tf")),
       s.select(col("n_docs"), col("total_len")))
 
-  /** Streaming CURATION sink: foreachBatch over
-    * [[graft.pipeline.Curation.curateDelta]] — each micro-batch is
-    * exact-deduped against the seen-hash store, near-dup-pruned
-    * against the MinHash index, gated, sampled, and its survivors
-    * land under `outDir/batch=<id>`. Store commits are O(batch);
-    * replay recomputes identically (curateDelta excludes a batch's
-    * own store partitions). Read the curated corpus back with
-    * [[readDeduped]] over `outDir`.
+  /** One CURATION micro-batch: [[graft.pipeline.Curation.curateDelta]]
+    * exact-dedups the batch against the seen-hash store, near-dup
+    * prunes it against the MinHash index, gates and samples it, and
+    * its survivors land under `outDir/batch=<id>`. Store commits are
+    * O(batch); replay recomputes identically (curateDelta excludes a
+    * batch's own store partitions). Pass `Seq(seenDir, indexDir)` as
+    * [[sink]]'s `compactDirs`; read the curated corpus back with
+    * [[StoreMaintenance.read]] over `outDir`.
     */
-  def sinkCurate(df: DataFrame, seenDir: String, indexDir: String,
-                 outDir: String, checkpointDir: String,
-                 minQuality: Double = 0.3,
-                 keepLangs: Seq[String] = Seq("en"),
-                 sampleFraction: Double = 1.0,
-                 classifier: Option[graft.pipeline.TextClassifier.Model] = None,
-                 minClassifierProb: Double = 0.5,
-                 textCol: String = "text", idCol: String = "doc_id",
-                 compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.pipeline.Curation.curateDelta(
-          batch, batchId, seenDir, indexDir,
-          minQuality = minQuality, keepLangs = keepLangs,
-          sampleFraction = sampleFraction,
-          classifier = classifier, minClassifierProb = minClassifierProb,
-          idCol = idCol, textCol = textCol)
-        // materialize once; empty batches write nothing (a
-        // part-file-less dir poisons later reads — dedupBatch rule)
-        out.persist()
-        try {
-          if (out.count() > 0)
-            out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        } finally out.unpersist(blocking = true)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-          StoreMaintenance.compactStore(batch.sparkSession, seenDir)
-          StoreMaintenance.compactStore(batch.sparkSession, indexDir): Unit
-        }
-      }
+  def curateBatch(batch: DataFrame, batchId: Long, seenDir: String,
+                  indexDir: String, outDir: String,
+                  minQuality: Double = 0.3,
+                  keepLangs: Seq[String] = Seq("en"),
+                  sampleFraction: Double = 1.0,
+                  classifier: Option[graft.pipeline.TextClassifier.Model] = None,
+                  minClassifierProb: Double = 0.5,
+                  textCol: String = "text", idCol: String = "doc_id"): Unit = {
+    val out = graft.pipeline.Curation.curateDelta(
+      batch, batchId, seenDir, indexDir,
+      minQuality = minQuality, keepLangs = keepLangs,
+      sampleFraction = sampleFraction,
+      classifier = classifier, minClassifierProb = minClassifierProb,
+      idCol = idCol, textCol = textCol)
+    // materialize once; an empty batch writes nothing
+    out.persist()
+    try {
+      if (out.count() > 0) StoreMaintenance.writeBatch(out, outDir, batchId)
+    } finally out.unpersist(blocking = true)
+  }
 
   /** Sessionization via the NATIVE `session_window` operator — the
     * high-throughput alternative to [[sessionizeStream]] when only
@@ -854,86 +647,4 @@ object IncrementalStream {
       .select(col(keyCol), col("session_start"), col("session_end"),
         col("n_events"))
   }
-
-  /** Histogram-state form of [[mergeAggBatch]]: micro-batches maintain
-    * the mergeable QUANTILE state (IncrementalAgg.histState) under the
-    * same atomic-commit + replay-skip contract. Exact integer bin
-    * counts make the maintained state bit-identical to histogramming
-    * all batches at once, under any micro-batching.
-    */
-  def mergeHistBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                     timeCol: String, interval: String, valueCol: String,
-                     lo: Double, hi: Double, nBins: Int): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, stateDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay: already merged
-    val fresh = graft.ops.IncrementalAgg
-      .histState(batch, timeCol, interval, valueCol, lo, hi, nBins)
-    val merged = store.read() match {
-      case Some(prev) => graft.ops.IncrementalAgg.mergeHistStates(prev, fresh)
-      case None => fresh
-    }
-    store.commit(merged, batchId)
-  }
-
-  /** Streaming quantile-state sink — [[sinkAggState]] for the
-    * histogram state; read quantiles back with
-    * `IncrementalAgg.quantilesFromState(readAggState(...), ...)`.
-    */
-  def sinkHistState(df: DataFrame, stateDir: String, checkpointDir: String,
-                    timeCol: String, interval: String, valueCol: String,
-                    lo: Double, hi: Double, nBins: Int): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeHistBatch(batch, batchId, stateDir, timeCol, interval, valueCol,
-          lo, hi, nBins)
-      }
-
-  /** HLL form of [[mergeAggBatch]]: micro-batches maintain the
-    * mergeable DISTINCT-count state (IncrementalAgg.distinctState)
-    * under the same atomic-commit + replay-skip contract. Union
-    * registers equal direct-build registers, so the maintained state
-    * estimates identically to sketching all batches at once, under
-    * any micro-batching.
-    */
-  def mergeDistinctBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                         timeCol: String, interval: String, keyCol: String,
-                         lgK: Int = 12): Unit = {
-    val store = new SnapshotStore(batch.sparkSession, stateDir)
-    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay: already merged
-    val fresh = graft.ops.IncrementalAgg
-      .distinctState(batch, timeCol, interval, keyCol, lgK)
-    val merged = store.read() match {
-      case Some(prev) => graft.ops.IncrementalAgg.mergeDistinctStates(prev, fresh)
-      case None => fresh
-    }
-    store.commit(merged, batchId)
-  }
-
-  /** Streaming distinct-count sink — [[sinkAggState]] for the HLL
-    * state; read estimates back with
-    * `IncrementalAgg.distinctFromState(readAggState(...))`.
-    */
-  def sinkDistinctState(df: DataFrame, stateDir: String, checkpointDir: String,
-                        timeCol: String, interval: String, keyCol: String,
-                        lgK: Int = 12): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeDistinctBatch(batch, batchId, stateDir, timeCol, interval, keyCol, lgK)
-      }
-
-  /** Write an incremental stream to a parquet sink with checkpointed
-    * state — the full sync-pipeline shape.
-    */
-  def sinkParquet(df: DataFrame, outDir: String,
-                  checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
 }

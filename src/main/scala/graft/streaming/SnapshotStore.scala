@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned parquet snapshot store with an atomic pointer and a
   * durable last-committed-batch id — the sink target behind the
-  * foreachBatch sinks ([[IncrementalStream.sinkUpsert]] /
-  * [[IncrementalStream.sinkAggState]]).
+  * foreachBatch merge bodies ([[IncrementalStream.mergeUpsertBatch]],
+  * [[IncrementalStream.mergeAggBatch]] and their siblings), all of
+  * which run through [[SnapshotStore.merge]].
   *
   * foreachBatch is at-least-once: after a failure between the sink's
   * write and the streaming checkpoint commit, the SAME batch id is
@@ -146,5 +147,21 @@ class SnapshotStore(spark: SparkSession, dir: String) {
       }
     }
     removed
+  }
+}
+
+object SnapshotStore {
+
+  /** One replay-safe merge step of a foreachBatch body over the store
+    * at `dir`: a replayed `batchId` (at or below the last committed
+    * one) is skipped; otherwise `f` maps the committed snapshot (None
+    * before the first commit) to the new state, which commits
+    * atomically as `batchId`.
+    */
+  def merge(batch: DataFrame, batchId: Long, dir: String)
+           (f: Option[DataFrame] => DataFrame): Unit = {
+    val store = new SnapshotStore(batch.sparkSession, dir)
+    if (store.lastCommittedBatch.exists(batchId <= _)) return // replay
+    store.commit(f(store.read()), batchId)
   }
 }

@@ -1,15 +1,18 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Retention + small-file compaction for the streaming ingest STORES —
+/** The batch-partitioned store behind the streaming ingest bodies —
   * the seen-hash store ([[IncrementalStream.dedupBatch]]), the MinHash
   * signature index ([[IncrementalStream.nearDupBatch]],
-  * [[graft.pipeline.Curation.curateDelta]]) and the per-batch output
-  * dirs, all of which share one layout: an append-only parquet table
-  * of `batch=<id>` partition dirs, one per micro-batch.
+  * [[graft.pipeline.Curation.curateDelta]]), the other dedup and
+  * search indexes and the per-batch output dirs — plus its retention
+  * and small-file compaction. All share one layout, known only here:
+  * an append-only parquet table of `batch=<id>` partition dirs, one
+  * per micro-batch, read with [[read]] / [[history]] and written with
+  * [[writeBatch]].
   *
   * Why this exists: a batch commit is deliberately O(batch) — one new
   * partition dir, never a rewrite of the O(history) store. The cost of
@@ -73,6 +76,33 @@ object StoreMaintenance {
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every committed row, the `batch` partition column included (None
+    * before the first commit).
+    */
+  def read(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (fsOf(spark, dir).exists(new Path(dir))) Some(spark.read.parquet(dir))
+    else None
+
+  /** The store as batch `batchId` sees its history, projected to
+    * `shape`'s columns — or `shape` itself (the stored shape, no rows)
+    * before the first commit. The batch's own partition is excluded:
+    * a replay after a complete-but-uncommitted batch recomputes from
+    * the same history instead of meeting its own rows (and, for a
+    * seen-set, emitting an empty, data-losing overwrite).
+    */
+  def history(spark: SparkSession, dir: String, batchId: Long,
+              shape: DataFrame): DataFrame =
+    read(spark, dir).fold(shape)(_.filter(col("batch") =!= batchId)
+      .select(shape.columns.map(col): _*))
+
+  /** Commit `df` as batch `batchId`'s partition. An overwrite, so a
+    * replayed batch replaces its own rows and touches nothing else.
+    * Callers skip empty frames: a part-file-less dir poisons later
+    * schema inference on the store root.
+    */
+  def writeBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
 
   /** (batchValue, path) for every `batch=<long>` partition dir. */
   private def batchDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =

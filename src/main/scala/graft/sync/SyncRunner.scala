@@ -37,19 +37,42 @@ class SyncRunner(spark: SparkSession,
   private def fs = new Path(targetDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def targetExists(cfg: TableConfig): Boolean =
-    fs.exists(new Path(targetPath(cfg)))
+  /** Where [[writeTarget]] parks the live target during its swap. */
+  private def asidePath(cfg: TableConfig) =
+    new Path(targetDir, s".${cfg.targetTable}.parquet.old")
+
+  private def rename(from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename $from -> $to failed")
+
+  /** Whether a live target exists — after putting back one that a
+    * swap interrupted between its two renames left parked aside, so
+    * the cycle stays incremental instead of silently re-pulling.
+    */
+  private def targetExists(cfg: TableConfig): Boolean = {
+    val p = new Path(targetPath(cfg))
+    if (!fs.exists(p) && fs.exists(asidePath(cfg))) rename(asidePath(cfg), p)
+    fs.exists(p)
+  }
 
   /** Read the current synced target (after at least one sync). */
   def target(cfg: TableConfig): DataFrame = spark.read.parquet(targetPath(cfg))
 
   private def writeTarget(cfg: TableConfig, df: DataFrame): Unit = {
-    // temp + swap: an incremental merge plan reads the live target
+    // temp + swap: an incremental merge plan reads the live target.
+    // The live target is renamed aside, not deleted, and dropped only
+    // once the new one is in place: at every crash point a complete
+    // target sits at the live path or at the aside path
     val tmp = new Path(targetDir, s".${cfg.targetTable}.parquet.tmp")
     df.write.mode("overwrite").parquet(tmp.toString)
     val p = new Path(targetPath(cfg))
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.rename(tmp, p)
+    val aside = asidePath(cfg)
+    if (fs.exists(p)) {
+      fs.delete(aside, true) // a finished swap's leftover
+      rename(p, aside)
+    }
+    rename(tmp, p)
+    fs.delete(aside, true)
   }
 
   /** One sync cycle for one table. Full on first run (or without a

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.Crawl
+import graft.streaming.IncrementalStream
 
 class CrawlSpec extends SparkSpec {
   import spark.implicits._
@@ -52,10 +53,11 @@ class CrawlSpec extends SparkSpec {
 
     val stream = spark.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = Crawl.sinkCrawl(stream, target, ckpt, block).start()
+    val q = IncrementalStream.sink(stream, ckpt)(
+      Crawl.crawlBatch(_, _, target, block)).start()
     try q.processAllAvailable() finally q.stop()
 
-    val got = Crawl.readCrawlTarget(spark, target).get
+    val got = IncrementalStream.readUpsertTarget(spark, target).get
       .select("url", "text", "n_tokens", "domain")
       .as[(String, String, Long, String)].collect().toSet
     assert(got == Set(
@@ -64,7 +66,7 @@ class CrawlSpec extends SparkSpec {
 
     // direct replay of an already-committed batch id changes nothing
     Crawl.crawlBatch(raw.limit(2), batchId = 0L, target, block)
-    val again = Crawl.readCrawlTarget(spark, target).get
+    val again = IncrementalStream.readUpsertTarget(spark, target).get
       .select("url", "text").as[(String, String)].collect().toSet
     assert(again == got.map(r => (r._1, r._2)))
 
@@ -236,7 +238,7 @@ class CrawlSpec extends SparkSpec {
       maxFilesPerTrigger = 1).start()
     try q.processAllAvailable() finally q.stop()
 
-    val got = Crawl.readCrawlTarget(spark, target).get
+    val got = IncrementalStream.readUpsertTarget(spark, target).get
       .select("url", "text", "n_tokens", "domain", "warc_date")
       .as[(String, String, Long, String, String)].collect().toSet
     assert(got == Set(
@@ -248,9 +250,13 @@ class CrawlSpec extends SparkSpec {
     // replay of an already-committed batch id is a no-op
     Crawl.crawlWarcBatch(
       Seq(s"$in/wave00.warc.gz").toDF("path"), batchId = 0L, target, block)
-    val again = Crawl.readCrawlTarget(spark, target).get
+    val again = IncrementalStream.readUpsertTarget(spark, target).get
       .select("url", "text").as[(String, String)].collect().toSet
     assert(again == got.map(r => (r._1, r._2)))
+    // a batch with no files leaves the corpus as it was
+    Crawl.crawlWarcBatch(Seq.empty[String].toDF("path"), batchId = 9L, target, block)
+    assert(IncrementalStream.readUpsertTarget(spark, target).get
+      .select("url", "text").as[(String, String)].collect().toSet == again)
 
     // one-shot reference over ALL files at once: Warc.read -> curate
     // (warc_date riding through) -> keep-latest per canonical url
@@ -295,7 +301,7 @@ class CrawlSpec extends SparkSpec {
     assert(graft.sources.Warc.memberSplits(spark, bigPath.toString,
       targetSplitBytes = split).count() > 1)
 
-    def corpus(target: String) = Crawl.readCrawlTarget(spark, target).get
+    def corpus(target: String) = IncrementalStream.readUpsertTarget(spark, target).get
       .select("url", "domain", "text", "n_tokens", "warc_date")
       .as[(String, String, String, Long, String)].collect().toSet
     // routed via the stream's length column

@@ -128,10 +128,10 @@ class StoreMaintenanceSpec extends SparkSpec {
       val ckpt = tempDir(s"graft_sm_sink_ck$compactEvery")
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.IncrementalStream
-        .sinkDedup(stream, store, out, ckpt, compactEvery = compactEvery).start()
+      val q = IncrementalStream.sink(stream, ckpt, Seq(store), compactEvery)(
+        IncrementalStream.dedupBatch(_, _, store, out)).start()
       try q.processAllAvailable() finally q.stop()
-      (graft.streaming.IncrementalStream.readDeduped(spark, out).get
+      (StoreMaintenance.read(spark, out).get
         .select("doc_id").as[Long].collect().toSet, batchDirCount(store))
     }
     val (plain, plainDirs) = run(0)

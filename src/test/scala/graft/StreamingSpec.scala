@@ -3,7 +3,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{IncrementalStream, SnapshotStore}
+import graft.streaming.{IncrementalStream, SnapshotStore, StoreMaintenance}
 import graft.sync.StateStore
 
 class StreamingSpec extends SparkSpec {
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
     // replay of wave 1: must not pair wave-1 docs against their own
     // leftover hashes or duplicate anything
     IncrementalStream.imageDedupBatch(w1.toDF(), 0L, idx, pairs, maxHamming = 3)
-    val got = IncrementalStream.readDeduped(spark, pairs).get
+    val got = StoreMaintenance.read(spark, pairs).get
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val oneShot = Multimodal.dhashPairs(
       Multimodal.dhash((w1 ++ w2).toDS()).toDF(), 3)
@@ -284,7 +284,7 @@ class StreamingSpec extends SparkSpec {
     IncrementalStream.audioDedupBatch(w2.toDF(), 1L, idx, pairs, maxHamming = 3)
     // replay of wave 1: own leftover fingerprints are not history
     IncrementalStream.audioDedupBatch(w1.toDF(), 0L, idx, pairs, maxHamming = 3)
-    val got = IncrementalStream.readDeduped(spark, pairs).get
+    val got = StoreMaintenance.read(spark, pairs).get
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val oneShot = Multimodal.audioNearDups((w1 ++ w2).toDS(), maxHamming = 3)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
@@ -302,12 +302,12 @@ class StreamingSpec extends SparkSpec {
     // small trigger size so the state is built through MANY merges
     val stream = IncrementalStream.readEvents(spark, in, batch.schema,
       maxFilesPerTrigger = 1)
-    val q = IncrementalStream.sinkAggState(stream, stateDir, ckpt,
-      "ts", "15 minutes", "value").start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.mergeAggBatch(
+      _, _, stateDir, "ts", "15 minutes", "value")).start()
     try {
       q.processAllAvailable()
       val got = graft.ops.IncrementalAgg.readState(
-        IncrementalStream.readAggState(spark, stateDir).get)
+        IncrementalStream.readUpsertTarget(spark, stateDir).get)
         .collect().map(_.toSeq).toSeq
       val want = graft.ops.IncrementalAgg.readState(
         graft.ops.IncrementalAgg.bucketState(batch, "ts", "15 minutes", "value"))
@@ -327,7 +327,7 @@ class StreamingSpec extends SparkSpec {
     IncrementalStream.dedupBatch(b1, 0L, store, out)
     IncrementalStream.dedupBatch(b2, 1L, store, out)
     IncrementalStream.dedupBatch(b3, 2L, store, out)
-    def surviving = IncrementalStream.readDeduped(spark, out).get
+    def surviving = StoreMaintenance.read(spark, out).get
       .select("doc_id").as[Long].collect().toSet
     // first-SEEN wins (arrival order), not global min id: "aaa" kept
     // as id 10 from batch 1 even though id 5 arrived later
@@ -340,7 +340,7 @@ class StreamingSpec extends SparkSpec {
     IncrementalStream.dedupBatch(b3, 3L, store, out)
     assert(surviving == Set(10L, 12L, 6L))
     // one doc per distinct text across all arrivals
-    assert(IncrementalStream.readDeduped(spark, out).get.count() == 3)
+    assert(StoreMaintenance.read(spark, out).get.count() == 3)
   }
 
   test("sinkDedup stream == batch first-seen dedup on the same corpus") {
@@ -353,9 +353,10 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_dedup_ck")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkDedup(stream, store, out, ckpt).start()
+    val q = IncrementalStream.sink(stream, ckpt)(
+      IncrementalStream.dedupBatch(_, _, store, out)).start()
     try q.processAllAvailable() finally q.stop()
-    val got = IncrementalStream.readDeduped(spark, out).get
+    val got = StoreMaintenance.read(spark, out).get
     // one survivor per distinct text, and every survivor's text distinct
     assert(got.count() == docs.select("text").distinct().count())
     assert(got.select("text").distinct().count() == got.count())
@@ -381,11 +382,11 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_ndup_ck")
     val stream = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkNearDup(stream, idx, out, ckpt,
-      k = 3, numPerm = 32, bands = 8, threshold = 0.5).start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.nearDupBatch(
+      _, _, idx, out, k = 3, numPerm = 32, bands = 8, threshold = 0.5)).start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamed = IncrementalStream.readDeduped(spark, out).get
+    val streamed = StoreMaintenance.read(spark, out).get
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     val oneShot = graft.dedup.Dedup.minhashNearDups(all, 3, 32, 8, 0.5)
@@ -404,7 +405,7 @@ class StreamingSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSeq: _*))
     IncrementalStream.nearDupBatch(replay, lastBatch, idx, out,
       k = 3, numPerm = 32, bands = 8, threshold = 0.5)
-    val afterReplay = IncrementalStream.readDeduped(spark, out).get
+    val afterReplay = StoreMaintenance.read(spark, out).get
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     assert(afterReplay == oneShot)
@@ -426,11 +427,11 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_cont_ck")
     val stream = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkContainment(stream, idx, out, ckpt,
-      k = 3, threshold = 0.9).start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.containmentBatch(
+      _, _, idx, out, k = 3, threshold = 0.9)).start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamed = IncrementalStream.readDeduped(spark, out).get
+    val streamed = StoreMaintenance.read(spark, out).get
       .select("doc_a", "doc_b", "c_a_in_b", "c_b_in_a")
       .as[(Long, Long, Double, Double)].collect().toSet
     val oneShot = graft.dedup.Dedup.containmentPairs(all, 3, 0.9)
@@ -455,7 +456,7 @@ class StreamingSpec extends SparkSpec {
     // file-status cache (a fresh session needs nothing)
     spark.catalog.refreshByPath(idx)
     spark.catalog.refreshByPath(out)
-    val afterReplay = IncrementalStream.readDeduped(spark, out).get
+    val afterReplay = StoreMaintenance.read(spark, out).get
       .select("doc_a", "doc_b", "c_a_in_b", "c_b_in_a")
       .as[(Long, Long, Double, Double)].collect().toSet
     assert(afterReplay == oneShot)
@@ -476,7 +477,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_bm25_ck")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkBm25Index(stream, post, stats, ckpt).start()
+    val q = IncrementalStream.sink(stream, ckpt)(
+      IncrementalStream.bm25IndexBatch(_, _, post, stats)).start()
     try q.processAllAvailable() finally q.stop()
 
     val (p, s) = IncrementalStream.readBm25Index(spark, post, stats).get
@@ -513,7 +515,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_annfs_ck")
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkAnnIndex(stream, idx, ckpt, coarse, cb).start()
+    val q = IncrementalStream.sink(stream, ckpt)(
+      IncrementalStream.annIndexBatch(_, _, idx, coarse, cb)).start()
     try q.processAllAvailable() finally q.stop()
     assert(spark.read.parquet(idx).select("batch").distinct().count() > 1)
 
@@ -543,7 +546,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_annix_ck")
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkAnnIndex(stream, idx, ckpt, coarse, cb).start()
+    val q = IncrementalStream.sink(stream, ckpt)(
+      IncrementalStream.annIndexBatch(_, _, idx, coarse, cb)).start()
     try q.processAllAvailable() finally q.stop()
 
     val streamed = IncrementalStream.readAnnIndex(spark, idx).get
@@ -614,11 +618,12 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tempDir("graft_cur_ck")
     val stream = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 2).parquet(in)
-    val q = IncrementalStream.sinkCurate(stream, seen, idx, out, ckpt,
-      minQuality = 0.2, keepLangs = langs, sampleFraction = 0.9).start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.curateBatch(
+      _, _, seen, idx, out, minQuality = 0.2, keepLangs = langs,
+      sampleFraction = 0.9)).start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamed = IncrementalStream.readDeduped(spark, out).get
+    val streamed = StoreMaintenance.read(spark, out).get
     val ids = streamed.select("doc_id").as[Long].collect().toSet
     val oneShot = graft.pipeline.Curation.curate(all,
         jaccardThreshold = 0.8, minQuality = 0.2, keepLangs = langs,
@@ -666,11 +671,11 @@ class StreamingSpec extends SparkSpec {
     batch.write.mode("overwrite").parquet(in)
     val stream = IncrementalStream.readEvents(spark, in, batch.schema,
       maxFilesPerTrigger = 1)
-    val q = IncrementalStream.sinkHistState(stream, stateDir, ckpt,
-      "ts", "1 day", "value", 0.0, 1000.0, 100).start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.mergeHistBatch(
+      _, _, stateDir, "ts", "1 day", "value", 0.0, 1000.0, 100)).start()
     try {
       q.processAllAvailable()
-      val got = IncrementalStream.readAggState(spark, stateDir).get
+      val got = IncrementalStream.readUpsertTarget(spark, stateDir).get
         .orderBy("bucket_ts").collect().map(_.toSeq).toSeq
       val want = graft.ops.IncrementalAgg.histState(
         batch, "ts", "1 day", "value", 0.0, 1000.0, 100)
@@ -688,12 +693,12 @@ class StreamingSpec extends SparkSpec {
     batch.write.mode("overwrite").parquet(in)
     val stream = IncrementalStream.readEvents(spark, in, batch.schema,
       maxFilesPerTrigger = 1)
-    val q = IncrementalStream.sinkDistinctState(stream, stateDir, ckpt,
-      "ts", "1 day", "user_id").start()
+    val q = IncrementalStream.sink(stream, ckpt)(IncrementalStream.mergeDistinctBatch(
+      _, _, stateDir, "ts", "1 day", "user_id")).start()
     try {
       q.processAllAvailable()
       val got = graft.ops.IncrementalAgg.distinctFromState(
-        IncrementalStream.readAggState(spark, stateDir).get)
+        IncrementalStream.readUpsertTarget(spark, stateDir).get)
         .as[(java.sql.Timestamp, Long)].collect().toMap
       val want = graft.ops.IncrementalAgg.distinctFromState(
         graft.ops.IncrementalAgg.distinctState(batch, "ts", "1 day", "user_id"))
@@ -701,30 +706,6 @@ class StreamingSpec extends SparkSpec {
       assert(got == want) // union registers == direct-build registers
       assert(got.nonEmpty)
     } finally q.stop()
-  }
-
-  test("agg-state sink skips replayed batch ids (at-least-once foreachBatch)") {
-    val events = graft.core.Tables.events(spark, sfDir).limit(2000)
-      .localCheckpoint()
-    val stateDir = tempDir("graft_aggreplay") + "/s"
-    val half = events.filter(col("event_id") % 2 === 0)
-    val rest = events.filter(col("event_id") % 2 =!= 0)
-    IncrementalStream.mergeAggBatch(half, 0L, stateDir, "ts", "15 minutes", "value")
-    val afterFirst = graft.ops.IncrementalAgg.readState(
-      IncrementalStream.readAggState(spark, stateDir).get).collect().map(_.toSeq).toSeq
-    // replay of batch 0 (failure between sink commit and checkpoint
-    // commit): the merge must be skipped, not double-counted
-    IncrementalStream.mergeAggBatch(half, 0L, stateDir, "ts", "15 minutes", "value")
-    val afterReplay = graft.ops.IncrementalAgg.readState(
-      IncrementalStream.readAggState(spark, stateDir).get).collect().map(_.toSeq).toSeq
-    assert(afterReplay == afterFirst)
-    IncrementalStream.mergeAggBatch(rest, 1L, stateDir, "ts", "15 minutes", "value")
-    val got = graft.ops.IncrementalAgg.readState(
-      IncrementalStream.readAggState(spark, stateDir).get).collect().map(_.toSeq).toSeq
-    val want = graft.ops.IncrementalAgg.readState(
-      graft.ops.IncrementalAgg.bucketState(events, "ts", "15 minutes", "value"))
-      .collect().map(_.toSeq).toSeq
-    assert(got == want)
   }
 
   test("snapshot store: atomic commit, pointer recovery, batch-id tracking") {
