@@ -75,9 +75,16 @@ object DecimalKernels {
   }
 
   /** The exact Catalyst `Round(x, 9)` (double branch). */
-  def round9Slow(x: Double): Double =
+  def round9Slow(x: Double): Double = roundHalfUp(x, 9)
+
+  /** The exact Catalyst `Round(x, 6)` (double branch): the 6-dp emit
+    * of the driver-local kernels.
+    */
+  def round6(x: Double): Double = roundHalfUp(x, 6)
+
+  private def roundHalfUp(x: Double, scale: Int): Double =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else scala.math.BigDecimal(x).setScale(9, HalfUp).toDouble
+    else scala.math.BigDecimal(x).setScale(scale, HalfUp).toDouble
 
   /** round(x, 9).cast(decimal(30,12)), fused. */
   def round9dec(x: Double): Decimal = {

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBD}
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.LocalGate
+import graft.functions.DecimalKernels
+import graft.functions.DecimalKernels.{round6, round9Slow}
 
 /** Link-graph centrality over crawl edges — the Common-Crawl-class
   * quality signal: host/domain PageRank feeds crawl prioritization
@@ -80,8 +87,7 @@ object LinkGraph {
                tol: Double = 0.0,
                seeds: Option[DataFrame] = None,
                seedCol: String = "n",
-               probeEvery: Int = 1,
-               localMax: Int = 50000): DataFrame = {
+               probeEvery: Int = 1): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     require(damping > 0 && damping < 1, s"damping in (0,1): $damping")
     require(tol >= 0.0, s"tol >= 0: $tol")
@@ -94,20 +100,11 @@ object LinkGraph {
     val nodes0 = e.select(col("src").as("n"))
       .unionByName(e.select(col("dst").as("n"))).distinct().persist()
     val n = nodes0.count().toDouble // one node-shaped action, reused below
-    // small-graph fast path (the sccWithRounds gate): the decimal
-    // contract was designed to be engine-portable — per-edge
-    // contributions round to 9dp and sum as exact decimals, so a
-    // driver kernel mirroring the same rounding/cast sequence is
-    // BIT-IDENTICAL to the distributed loop (and to the SQL oracle
-    // that unrolls it). Below the bounded-collect gate the iterative
-    // job latency dominates wall time; the kernel answers in
-    // milliseconds. localMax <= 0 forces the distributed path (the
-    // spec's knob; the soak's 1e6 graphs never gate).
     // (tol > 0 with probeEvery > 1 changes WHERE the distributed loop
     // stops — see the probeEvery scaladoc; the kernel mirrors the
     // probeEvery = 1 canonical, so that combination stays distributed)
-    if (n <= localMax && n > 0 && (probeEvery == 1 || tol == 0.0) &&
-        e.count() <= math.max(4L * localMax, 2000000L)) {
+    if ((probeEvery == 1 || tol == 0.0) &&
+        LocalGate.admitsGraph(n.toLong, e.count())) {
       val out = pageRankLocal(nodes0, e, iters, damping,
         redistributeDangling, tol, seeds.map(_.select(col(seedCol).as("n"))))
       nodes0.unpersist(blocking = false)
@@ -146,26 +143,17 @@ object LinkGraph {
     // current dangling mass (exact decimal sum of 9dp ranks); driver
     // scalar so the iteration formula takes it as a literal — one
     // init job in redistribute mode, then it rides the fused action
-    var dang: java.math.BigDecimal =
-      if (!redistributeDangling) java.math.BigDecimal.ZERO
+    var dang: JBD =
+      if (!redistributeDangling) JBD.ZERO
       else ranks.agg(coalesce(
           sum(graft.functions.DecimalOps.dec12(when(!col("__out"), col("r")))),
           lit(0).cast("decimal(30,12)"))).first().getDecimal(0)
-    // AQE's runtime broadcast decision reads COMPRESSED shuffle sizes:
-    // past ~4e5 nodes a checkpointed ranks frame still compresses
-    // under the 10 MB threshold, so the round join re-broadcasts an
-    // ~n-entry hashed relation EVERY iteration (build + serialize +
-    // GC per round). Measured on the 1e6-node soak graph: plain
-    // pageRank 23.5 -> 12.6 s median with the
-    // broadcast off; the dangling variant dodged the pathology only
-    // because its extra flag column pushed the stats over threshold —
-    // the r15/r16 "plain slower than dangling" soak inversion was
-    // exactly this. Node-shaped round frames pin the shuffle-hash
-    // strategy once the graph outgrows the broadcast win zone; small
-    // (bench-sized) graphs keep AQE's broadcast, which wins there.
-    val pinShuffle = n >= 400000
-    def nodeSide(df: DataFrame): DataFrame =
-      if (pinShuffle) df.hint("shuffle_hash") else df
+    // the LocalGate.ShuffleHashNodes pin: on the 1e6-node soak graph
+    // plain pageRank went 23.5 -> 12.6 s median with the per-round
+    // re-broadcast off (the dangling variant's extra flag column had
+    // pushed its stats over the threshold — the r15/r16 "plain slower
+    // than dangling" soak inversion)
+    def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, n.toLong)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
@@ -228,75 +216,47 @@ object LinkGraph {
     out
   }
 
-  /** Driver-side pageRank kernel — [[pageRank]]'s bounded-collect
-    * path. Every float boundary mirrors the distributed expressions
-    * exactly: round(x, 9) = HALF_UP over the double's shortest
-    * decimal representation (Spark's Round on DoubleType), the
-    * decimal(30,12) cast = setScale(12, HALF_UP) of the same
-    * representation, contributions sum as exact decimals, and the
-    * per-round update is round9(tele + damping · (sc + dang)) in the
-    * identical IEEE order — so the kernel is bit-identical to the
-    * distributed loop AND to the SQL oracle that unrolls it
-    * (spec- and oracle-pinned). The convergence delta is an exact
-    * decimal sum in BOTH paths (per-node |r − prev| dec12-cast), so
-    * the tol > 0 early-stop round matches too — not just the tol = 0
-    * default.
+  /** Driver-side pageRank kernel — [[pageRank]]'s [[LocalGate]]
+    * path. Every float boundary is the distributed expression's
+    * [[DecimalKernels]] mirror, contributions sum as exact decimals,
+    * and the per-round update is round9(tele + damping · (sc + dang))
+    * in the identical IEEE order — so the kernel is bit-identical to
+    * the distributed loop AND to the SQL oracle that unrolls it. The
+    * convergence delta is an exact decimal sum in BOTH paths (per-node
+    * |r − prev| dec12-cast), so the tol > 0 early-stop round matches
+    * too — not just the tol = 0 default.
     */
   private def pageRankLocal(nodes0: DataFrame, e: DataFrame, iters: Int,
                             damping: Double, redistributeDangling: Boolean,
                             tol: Double,
                             seeds: Option[DataFrame]): DataFrame = {
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    val sp = nodes0.sparkSession
-    def rnd(x: Double, s: Int): Double =
-      new JBD(java.lang.Double.toString(x))
-        .setScale(s, RoundingMode.HALF_UP).doubleValue
-    def dec12(x: Double): JBD =
-      new JBD(java.lang.Double.toString(x))
-        .setScale(12, RoundingMode.HALF_UP)
-    val nodeArr: Array[Any] = nodes0.orderBy("n").collect().map(_.get(0))
-    val n = nodeArr.length
-    val idx = new java.util.HashMap[Any, Integer](n * 2)
-    nodeArr.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    val es = e.collect().map(r =>
-      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
+    val g = new Collected(nodes0.orderBy("n"), e)
+    val n = g.n
     val deg = new Array[Int](n)
-    es.foreach(p => deg(p._1) += 1)
-    val seedFlag: Array[Boolean] = seeds match {
-      case Some(sd) =>
-        val f = new Array[Boolean](n)
-        sd.distinct().collect().foreach { r =>
-          val i = idx.get(r.get(0))
-          if (i != null) f(i.intValue) = true
-        }
-        f
-      case None => null
-    }
+    g.edges.foreach(p => deg(p._1) += 1)
+    val seedFlag: Array[Boolean] = seeds.map { sd =>
+      val f = new Array[Boolean](n)
+      sd.distinct().collect().foreach(r =>
+        Option(g.indexOf(r.get(0))).foreach(i => f(i.intValue) = true))
+      f
+    }.orNull
     val seeded = seedFlag != null
     val nD = n.toDouble
     val s = if (seeded) seedFlag.count(identity).toDouble else nD
     require(!seeded || s >= 1, "no seed is present in the graph")
     var r = Array.tabulate(n)(i =>
-      if (seeded) { if (seedFlag(i)) rnd(1.0 / s, 9) else 0.0 }
-      else rnd(1.0 / nD, 9))
-    def dangMass(rr: Array[Double]): JBD = {
-      var acc = JBD.ZERO.setScale(12)
-      var i = 0
-      while (i < n) { if (deg(i) == 0) acc = acc.add(dec12(rr(i))); i += 1 }
-      acc
-    }
+      if (seeded) { if (seedFlag(i)) round9Slow(1.0 / s) else 0.0 }
+      else round9Slow(1.0 / nD))
+    def dangMass(rr: Array[Double]): JBD =
+      decSum(n)(i => if (deg(i) == 0) rr(i) else 0.0)
     var dang: JBD = if (redistributeDangling) dangMass(r) else JBD.ZERO
     var it = 0
     var converged = false
     while (it < iters && !converged) {
       val sc = new Array[JBD](n)
-      var k = 0
-      while (k < es.length) {
-        val u = es(k)._1
-        val v = es(k)._2
-        val c = dec12(rnd(r(u) / deg(u).toDouble, 9))
+      g.edges.foreach { case (u, v) =>
+        val c = d9(r(u) / deg(u).toDouble)
         sc(v) = if (sc(v) == null) c else sc(v).add(c)
-        k += 1
       }
       val dangD = dang.doubleValue
       val next = Array.tabulate(n) { i =>
@@ -308,29 +268,17 @@ object LinkGraph {
           else if (seeded) { if (seedFlag(i)) dangD / s else 0.0 }
           else dangD / nD
         val scD = if (sc(i) == null) 0.0 else sc(i).doubleValue
-        rnd(tele + damping * (scD + dt), 9)
+        round9Slow(tele + damping * (scD + dt))
       }
       // exact decimal delta — mirrors the distributed probe's
       // dec12-cast sum, so the stop round matches for any tol
-      var delta = JBD.ZERO.setScale(12)
-      var i = 0
-      while (i < n) {
-        delta = delta.add(dec12(math.abs(next(i) - r(i)))); i += 1
-      }
+      val delta = decSum(n)(i => math.abs(next(i) - r(i))).doubleValue
       if (redistributeDangling) dang = dangMass(next)
       r = next
-      converged = delta.doubleValue <= tol
+      converged = delta <= tol
       it += 1
     }
-    val dt0 = nodes0.schema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n", dt0),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(nodeArr.indices.map(i =>
-        org.apache.spark.sql.Row(nodeArr(i), rnd(r(i), 6))): _*)
-    sp.createDataFrame(rows, schema)
+    g.frame(StructField("rank", DoubleType))(i => Seq(round6(r(i))))
   }
 
   /** Harmonic centrality — the signal Common Crawl actually ranks its
@@ -362,27 +310,18 @@ object LinkGraph {
     */
   def harmonicCentrality(edges: DataFrame, srcCol: String = "src",
                          dstCol: String = "dst", maxDist: Int = 6,
-                         exact: Boolean = true, lgK: Int = 12,
-                         localMax: Int = 50000): DataFrame = {
+                         exact: Boolean = true, lgK: Int = 12): DataFrame = {
     require(maxDist >= 1, s"maxDist >= 1: $maxDist")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct().persist()
     val nodes = e.select(col("src").as("n"))
       .unionByName(e.select(col("dst").as("n"))).distinct()
-    // small-graph fast path (the pageRank localMax gate): exact mode's
-    // ball algebra and decimal accumulation replay bit-identically on
-    // the driver, and below the bounded-collect gate the per-round job
-    // latency (maxDist checkpoint+probe cycles) dominates wall time.
     // Sketch mode stays distributed: hll_union's binary sketch state
     // is the engine's own, not worth reimplementing for a fast path.
-    if (exact && localMax > 0) {
-      val nCount = nodes.count()
-      if (nCount > 0 && nCount <= localMax &&
-          e.count() <= math.max(4L * localMax, 2000000L)) {
-        val out = harmonicLocal(nodes, e, maxDist)
-        e.unpersist(blocking = false)
-        return out
-      }
+    if (exact && LocalGate.admitsGraph(nodes.count(), e.count())) {
+      val out = harmonicLocal(nodes, e, maxDist)
+      e.unpersist(blocking = false)
+      return out
     }
     var state =
       if (exact)
@@ -451,35 +390,21 @@ object LinkGraph {
     out
   }
 
-  /** Driver kernel for exact-mode [[harmonicCentrality]] under the
-    * localMax gate — the distributed ball expansion replayed on
+  /** Driver kernel for exact-mode [[harmonicCentrality]] behind the
+    * [[LocalGate]] — the distributed ball expansion replayed on
     * collected rows, BIT-IDENTICAL by construction: balls are sets
     * (the union is monotone, so cardinality equality ⟺ ball equality
     * — the same convergence the distributed loop probes), each
     * round's term is the identical round(1/t, 9)-as-decimal(30,12),
     * and h accumulates exact decimal term×delta products in the same
-    * scale. LinkGraphSpec pins local == forced-distributed
-    * (localMax = 0).
+    * scale.
     */
   private def harmonicLocal(nodes: DataFrame, e: DataFrame,
                             maxDist: Int): DataFrame = {
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    val sp = nodes.sparkSession
-    def rnd(x: Double, s: Int): Double =
-      new JBD(java.lang.Double.toString(x))
-        .setScale(s, RoundingMode.HALF_UP).doubleValue
-    val nodeArr: Array[Any] = nodes.orderBy("n").collect().map(_.get(0))
-    val n = nodeArr.length
-    val idx = new java.util.HashMap[Any, Integer](n * 2)
-    nodeArr.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    val es = e.collect().map(r =>
-      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
+    val g = new Collected(nodes.orderBy("n"), e)
+    val n = g.n
     // in-neighbor adjacency: B_t(v) merges the balls of every (w, v)
-    val inDeg = new Array[Int](n)
-    es.foreach(p => inDeg(p._2) += 1)
-    val inAdj = Array.tabulate(n)(i => new Array[Int](inDeg(i)))
-    val fill = new Array[Int](n)
-    es.foreach { case (u, v) => inAdj(v)(fill(v)) = u; fill(v) += 1 }
+    val (off, from) = g.csr(reverse = true)
     var balls = Array.tabulate(n) { i =>
       val b = new java.util.BitSet(n); b.set(i); b
     }
@@ -487,44 +412,29 @@ object LinkGraph {
     var t = 1
     var converged = false
     while (t <= maxDist && !converged) {
-      val term = new JBD(java.lang.Double.toString(rnd(1.0 / t, 9)))
-        .setScale(12)
+      val term = d9(1.0 / t)
       var changed = false
       val next = new Array[java.util.BitSet](n)
       var v = 0
       while (v < n) {
-        val nb = inAdj(v)
-        if (nb.length == 0) next(v) = balls(v)
-        else {
-          val b = balls(v).clone().asInstanceOf[java.util.BitSet]
-          var j = 0
-          while (j < nb.length) { b.or(balls(nb(j))); j += 1 }
-          val delta = b.cardinality() - balls(v).cardinality()
-          if (delta > 0) {
-            h(v) = h(v).add(term.multiply(JBD.valueOf(delta.toLong)))
-            changed = true
-            next(v) = b
-          } else next(v) = balls(v)
-        }
+        val b = balls(v).clone().asInstanceOf[java.util.BitSet]
+        var j = off(v)
+        while (j < off(v + 1)) { b.or(balls(from(j))); j += 1 }
+        val delta = b.cardinality() - balls(v).cardinality()
+        if (delta > 0) {
+          h(v) = h(v).add(term.multiply(JBD.valueOf(delta.toLong)))
+          changed = true
+          next(v) = b
+        } else next(v) = balls(v)
         v += 1
       }
       balls = next
       converged = !changed
       t += 1
     }
-    val dt0 = nodes.schema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n", dt0),
-      org.apache.spark.sql.types.StructField("n_reachable",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("harmonic",
-        org.apache.spark.sql.types.DoubleType)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(nodeArr.indices.map(i =>
-        org.apache.spark.sql.Row(nodeArr(i),
-          (balls(i).cardinality() - 1).toLong,
-          rnd(h(i).doubleValue, 6))): _*)
-    sp.createDataFrame(rows, schema)
+    g.frame(StructField("n_reachable", LongType),
+        StructField("harmonic", DoubleType))(i =>
+      Seq[Any]((balls(i).cardinality() - 1).toLong, round6(h(i).doubleValue)))
   }
 
   /** HITS hubs and authorities (Kleinberg 1999) — the third
@@ -549,20 +459,14 @@ object LinkGraph {
     */
   def hits(edges: DataFrame, srcCol: String = "src",
            dstCol: String = "dst", iters: Int = 3,
-           tol: Double = 0.0, localMax: Int = 50000): DataFrame = {
+           tol: Double = 0.0): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     require(tol >= 0.0, s"tol >= 0: $tol")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct().persist()
     val nodes = e.select(col("src").as("n"))
       .unionByName(e.select(col("dst").as("n"))).distinct().persist()
-    // small-graph fast path (the pageRank kernel rationale): the L1
-    // normalization is a decimal sum cast to double — order-free — so
-    // the driver mirror is bit-identical (spec-pinned); below the gate
-    // the 4-jobs-per-iteration latency dominates
-    val nCount = nodes.count()
-    if (nCount <= localMax &&
-        e.count() <= math.max(4L * localMax, 2000000L)) {
+    if (LocalGate.admitsGraph(nodes.count(), e.count())) {
       val out = hitsLocal(nodes, e, iters, tol)
       e.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -616,7 +520,7 @@ object LinkGraph {
     out
   }
 
-  /** Driver-side HITS kernel — [[hits]]'s bounded-collect path. The
+  /** Driver-side HITS kernel — [[hits]]'s [[LocalGate]] path. The
     * same float-boundary mirror as the pageRank kernel: phase sums are
     * decimals of 9dp-rounded scores, the L1 total is the decimal sum
     * cast to double (order-free), each normalized score rounds to 9dp,
@@ -626,48 +530,21 @@ object LinkGraph {
     */
   private def hitsLocal(nodes: DataFrame, e: DataFrame, iters: Int,
                         tol: Double): DataFrame = {
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    val sp = nodes.sparkSession
-    def rnd(x: Double, s: Int): Double =
-      new JBD(java.lang.Double.toString(x))
-        .setScale(s, RoundingMode.HALF_UP).doubleValue
-    def dec12(x: Double): JBD =
-      new JBD(java.lang.Double.toString(x))
-        .setScale(12, RoundingMode.HALF_UP)
-    val nodeArr: Array[Any] = nodes.orderBy("n").collect().map(_.get(0))
-    val n = nodeArr.length
-    val dt0 = nodes.schema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n", dt0),
-      org.apache.spark.sql.types.StructField("hub",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("authority",
-        org.apache.spark.sql.types.DoubleType)))
-    if (n == 0)
-      return sp.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    val idx = new java.util.HashMap[Any, Integer](n * 2)
-    nodeArr.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    val es = e.collect().map(r =>
-      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
+    val g = new Collected(nodes.orderBy("n"), e)
+    val n = g.n
     // one phase: raw(v) = Σ_incident dec12(round9(x(other))), then
     // x'(v) = round9(coalesce(raw)/Σraw) — the normalize() mirror
     def phase(x: Array[Double], bySrc: Boolean): Array[Double] = {
       val raw = new Array[JBD](n)
-      var k = 0
-      while (k < es.length) {
-        val (u, v) = es(k)
+      g.edges.foreach { case (u, v) =>
         val (from, to) = if (bySrc) (u, v) else (v, u)
-        val c = dec12(rnd(x(from), 9))
+        val c = d9(x(from))
         raw(to) = if (raw(to) == null) c else raw(to).add(c)
-        k += 1
       }
-      var tot = JBD.ZERO.setScale(12)
-      var i = 0
-      while (i < n) { if (raw(i) != null) tot = tot.add(raw(i)); i += 1 }
-      val totD = tot.doubleValue
+      val totD = raw.filter(_ != null).foldLeft(JBD.ZERO.setScale(12))(_ add _)
+        .doubleValue
       Array.tabulate(n)(i =>
-        rnd((if (raw(i) == null) 0.0 else raw(i).doubleValue) / totD, 9))
+        round9Slow((if (raw(i) == null) 0.0 else raw(i).doubleValue) / totD))
     }
     var h = Array.fill(n)(1.0)
     var a = h
@@ -677,19 +554,13 @@ object LinkGraph {
       a = phase(h, bySrc = true) // authority: sum hub scores of in-links
       val hNext = phase(a, bySrc = false) // hub: sum authority of out-links
       // exact decimal delta — the distributed probe's dec12 mirror
-      var delta = JBD.ZERO.setScale(12)
-      var i = 0
-      while (i < n) {
-        delta = delta.add(dec12(math.abs(hNext(i) - h(i)))); i += 1
-      }
+      val delta = decSum(n)(i => math.abs(hNext(i) - h(i))).doubleValue
       h = hNext
-      converged = delta.doubleValue <= tol
+      converged = delta <= tol
       it += 1
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(nodeArr.indices.map(i =>
-        org.apache.spark.sql.Row(nodeArr(i), rnd(h(i), 6), rnd(a(i), 6))): _*)
-    sp.createDataFrame(rows, schema)
+    g.frame(StructField("hub", DoubleType), StructField("authority", DoubleType))(
+      i => Seq(round6(h(i)), round6(a(i))))
   }
 
   /** One-row structural summary of a link graph — the sanity panel a
@@ -834,26 +705,16 @@ object LinkGraph {
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String = "src",
                                   dstCol: String = "dst",
-                                  maxIter: Int = 100,
-                                  localMax: Int = 50000): DataFrame =
-    sccWithRounds(edges, srcCol, dstCol, maxIter, localMax)._1
+                                  maxIter: Int = 100): DataFrame =
+    sccWithRounds(edges, srcCol, dstCol, maxIter)._1
 
-  /** Driver-side iterative Tarjan over an int-indexed edge list —
-    * the small-graph kernel behind [[sccWithRounds]]'s bounded-collect
-    * gate. Returns per node the MIN member index of its SCC (callers
-    * index nodes in label order, so min index == min member).
+  /** Driver-side iterative Tarjan over a forward CSR adjacency — the
+    * small-graph kernel behind [[sccWithRounds]]. Returns per node the
+    * MIN member index of its SCC (callers index nodes in label order,
+    * so min index == min member).
     */
-  private[graft] def sccLocal(n: Int, edges: Array[(Int, Int)]): Array[Int] = {
-    val deg = new Array[Int](n)
-    edges.foreach { case (s, d) => if (s != d) deg(s) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val tgt = new Array[Int](off(n))
-    val fill = java.util.Arrays.copyOf(off, n)
-    edges.foreach { case (s, d) =>
-      if (s != d) { tgt(fill(s)) = d; fill(s) += 1 }
-    }
+  private def sccLocal(off: Array[Int], tgt: Array[Int]): Array[Int] = {
+    val n = off.length - 1
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStk = new Array[Boolean](n)
@@ -920,9 +781,9 @@ object LinkGraph {
   /** Soak hook (ScaleSoak): install a buffer and
     * [[sccWithRounds]] appends one (outerRound, activeCount, pinned)
     * entry at each outer-round start — the broadcast-vs-shuffle
-    * decision trail, so a soak outlier self-attributes (was the 4e5
-    * shuffle-hash gate on or off when the round ran?) instead of
-    * needing a re-run under instrumentation.
+    * decision trail ([[LocalGate.pinsShuffle]]), so a soak outlier
+    * self-attributes (was the pin on or off when the round ran?)
+    * instead of needing a re-run under instrumentation.
     */
   private[graft] val sccPinTrail =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[(Int, Long, Boolean)]]
@@ -933,8 +794,7 @@ object LinkGraph {
     */
   private[graft] def sccWithRounds(edges: DataFrame, srcCol: String = "src",
                                    dstCol: String = "dst",
-                                   maxIter: Int = 100,
-                                   localMax: Int = 50000): (DataFrame, Int) = {
+                                   maxIter: Int = 100): (DataFrame, Int) = {
     require(maxIter >= 1, s"maxIter >= 1: $maxIter")
     val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // self-loops never change membership ({v} is an SCC with or
@@ -946,52 +806,28 @@ object LinkGraph {
     var active = all.localCheckpoint(false)
     var aEdges = e0.localCheckpoint(false)
     var activeCount = active.count() // materializes both checkpoints below
-    // small-graph fast path (the Clusters.scala union-find precedent):
-    // the distributed peel costs DOZENS of tiny jobs whose scheduling
-    // latency dominates below ~1e4 nodes (a 21-node domain graph paid
-    // ~2.5 s for ~50 jobs); under the bounded-collect gate a driver
-    // Tarjan answers in milliseconds with the IDENTICAL contract
-    // (label = smallest member — nodes sort through Spark's own
-    // ordering, so string/long label semantics carry verbatim; spec
-    // pins local == distributed on every fixture). localMax <= 0
-    // forces the distributed path (the adversarial-depth spec's knob).
-    if (activeCount <= localMax &&
-        aEdges.count() <= math.max(4L * localMax, 2000000L)) {
-      val sp = edges.sparkSession
-      val nodeArr: Array[Any] =
-        active.orderBy("n").collect().map(_.get(0))
-      val idx = new java.util.HashMap[Any, Integer](nodeArr.length * 2)
-      nodeArr.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-      val es = aEdges.collect().map(r =>
-        (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
-      val comp = sccLocal(nodeArr.length, es)
-      val dt = active.schema.head.dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n", dt),
-        org.apache.spark.sql.types.StructField("scc", dt)))
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(nodeArr.indices.map(i =>
-          org.apache.spark.sql.Row(nodeArr(i), nodeArr(comp(i)))): _*)
-      return (sp.createDataFrame(rows, schema), 0)
+    // the driver Tarjan keeps the IDENTICAL contract: label = smallest
+    // member, and nodes sort through Spark's own ordering, so
+    // string/long label semantics carry verbatim
+    if (LocalGate.admitsGraph(activeCount, aEdges.count())) {
+      val g = new Collected(active.orderBy("n"), aEdges)
+      val (off, tgt) = g.csr(reverse = false)
+      val comp = sccLocal(off, tgt)
+      return (g.frame(StructField("scc", g.nodeType))(i => Seq(g.nodes(comp(i)))), 0)
     }
-    // The pageRank AQE trap, measured WORSE here (1e6 nodes):
-    // node-shaped round frames (color/inc/mark/cand)
-    // compress under AQE's 10 MB runtime-broadcast threshold, so
-    // EVERY inner coloring/marking round rebuilt and re-broadcast an
-    // ~n-entry hashed relation — default conf read 54→209 s across
-    // runs (cpu to 2531 s, gc to 35 s — broadcast build churn) vs a
-    // stable ~42 s with the broadcast off. Same gated fix: pin
-    // shuffle_hash on node-shaped join sides while the ACTIVE set is
-    // large; the gate re-reads activeCount, so once peeling shrinks
-    // the graph below the threshold small-frame rounds get AQE's
-    // broadcast back (which wins there — bench-sized graphs never pin).
-    def nodeSide(df: DataFrame): DataFrame =
-      if (activeCount >= 400000) df.hint("shuffle_hash") else df
+    // The LocalGate.ShuffleHashNodes pin, measured WORSE here without
+    // it (1e6 nodes): every inner coloring/marking round re-broadcast
+    // a node-shaped frame — 54→209 s across runs (cpu to 2531 s, gc to
+    // 35 s) vs a stable ~42 s pinned. The pin re-reads activeCount, so
+    // once peeling shrinks the graph below the threshold small-frame
+    // rounds get AQE's broadcast back.
+    def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, activeCount)
     val done = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var outer = 0
     while (activeCount > 0 && outer < maxIter) {
       val trail = sccPinTrail.get()
-      if (trail != null) trail += ((outer, activeCount, activeCount >= 400000))
+      if (trail != null)
+        trail += ((outer, activeCount, LocalGate.pinsShuffle(activeCount)))
       // ---- 1. trim: no-in or no-out nodes are singleton SCCs; each
       // pass strictly shrinks the node set, so the loop terminates
       var trimming = true
@@ -1148,29 +984,20 @@ object LinkGraph {
     * SCC round internals.
     */
   def bowTie(edges: DataFrame, srcCol: String = "src",
-             dstCol: String = "dst", maxIter: Int = 100,
-             localMax: Int = 50000): DataFrame = {
-    val scc = stronglyConnectedComponents(edges, srcCol, dstCol, maxIter,
-      localMax).localCheckpoint()
+             dstCol: String = "dst", maxIter: Int = 100): DataFrame = {
+    val scc = stronglyConnectedComponents(edges, srcCol, dstCol, maxIter)
+      .localCheckpoint()
     val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = eAll.filter(col("src") =!= col("dst")).distinct().persist()
-    // the SCC/pageRank AQE pin: the per-hop visited
-    // set and the final tag frames are node-shaped and compress under
-    // the runtime broadcast threshold at soak sizes
+    // one node count for the gate and the shuffle-hash pin (the per-hop
+    // visited set and the final tag frames are node-shaped)
     val nNodes = scc.count()
-    // small-graph fast path (the sccWithRounds gate): each BFS reach
-    // costs a job per hop and the classification five node joins —
-    // under the bounded-collect gate the whole Broder decomposition
-    // runs driver-side over the collected edge list with identical
-    // semantics (spec pins local == distributed == brute force)
-    if (nNodes <= localMax &&
-        e.count() <= math.max(4L * localMax, 2000000L)) {
+    if (LocalGate.admitsGraph(nNodes, e.count())) {
       val out = bowTieLocal(scc, e)
       e.unpersist(blocking = false)
       return out
     }
-    def nodeSide(df: DataFrame): DataFrame =
-      if (nNodes >= 400000) df.hint("shuffle_hash") else df
+    def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, nNodes)
     val out = {
       // the giant SCC: size desc, label asc — a 1-row broadcast
       val coreLabel = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
@@ -1231,53 +1058,21 @@ object LinkGraph {
   }
 
   /** Driver-side Broder classification over a collected small graph —
-    * [[bowTie]]'s bounded-collect path. `scc` carries (n, scc) for
+    * [[bowTie]]'s [[LocalGate]] path. `scc` carries (n, scc) for
     * every node; the giant-core tiebreak (size desc, label asc) runs
     * through the same tiny DataFrame as the distributed path so label
     * ordering semantics are engine-identical.
     */
   private def bowTieLocal(scc: DataFrame, e: DataFrame): DataFrame = {
-    val sp = scc.sparkSession
-    val nodeRows = scc.collect()
-    val n = nodeRows.length
-    // zero-node graph: no giant core exists — the distributed path
-    // returns an empty (n, cls) frame, so the fast path must too
-    // (the hitsLocal n == 0 convention)
-    if (n == 0) {
-      val dt0 = scc.schema.head.dataType
-      val schema0 = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n", dt0),
-        org.apache.spark.sql.types.StructField("cls",
-          org.apache.spark.sql.types.StringType, nullable = false)))
-      return sp.createDataFrame(
-        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema0)
-    }
+    val g = new Collected(scc, e)
+    val n = g.n
     val coreL = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
       .orderBy(desc("__sz"), asc("scc")).limit(1)
       .collect()(0).get(0)
-    val idx = new java.util.HashMap[Any, Integer](n * 2)
-    nodeRows.zipWithIndex.foreach { case (r, i) => idx.put(r.get(0), i) }
-    val es = e.collect().map(r =>
-      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
-    def csr(rev: Boolean): (Array[Int], Array[Int]) = {
-      val deg = new Array[Int](n)
-      es.foreach { case (s, d) => deg(if (rev) d else s) += 1 }
-      val off = new Array[Int](n + 1)
-      var i = 0
-      while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val tgt = new Array[Int](off(n))
-      val fill = java.util.Arrays.copyOf(off, n)
-      es.foreach { case (s, d) =>
-        val (a, b) = if (rev) (d, s) else (s, d)
-        tgt(fill(a)) = b
-        fill(a) += 1
-      }
-      (off, tgt)
-    }
-    val (fOff, fTgt) = csr(rev = false)
-    val (bOff, bTgt) = csr(rev = true)
+    val fwd = g.csr(reverse = false)
+    val bwd = g.csr(reverse = true)
     def reach(seed: Array[Boolean], forward: Boolean): Array[Boolean] = {
-      val (off, tgt) = if (forward) (fOff, fTgt) else (bOff, bTgt)
+      val (off, tgt) = if (forward) fwd else bwd
       val vis = seed.clone()
       val queue = new Array[Int](n)
       var qh = 0
@@ -1295,30 +1090,83 @@ object LinkGraph {
       }
       vis
     }
-    val core = Array.tabulate(n)(i => nodeRows(i).get(1) == coreL)
+    val core = Array.tabulate(n)(i => g.rows(i).get(1) == coreL)
     val fwdCore = reach(core, forward = true)
     val bwdCore = reach(core, forward = false)
     val inSet = Array.tabulate(n)(i => bwdCore(i) && !core(i))
     val outSet = Array.tabulate(n)(i => fwdCore(i) && !core(i))
     val inFwd = reach(inSet, forward = true)
     val outBwd = reach(outSet, forward = false)
-    val cls = Array.tabulate(n) { i =>
-      if (core(i)) "core"
-      else if (inSet(i)) "in"
-      else if (outSet(i)) "out"
-      else if (inFwd(i) && outBwd(i)) "tube"
-      else if (inFwd(i) || outBwd(i)) "tendril"
-      else "disconnected"
+    g.frame(StructField("cls", StringType, nullable = false)) { i =>
+      Seq(
+        if (core(i)) "core"
+        else if (inSet(i)) "in"
+        else if (outSet(i)) "out"
+        else if (inFwd(i) && outBwd(i)) "tube"
+        else if (inFwd(i) || outBwd(i)) "tendril"
+        else "disconnected")
     }
-    val dt = scc.schema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n", dt),
-      org.apache.spark.sql.types.StructField("cls",
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(nodeRows.indices.map(i =>
-        org.apache.spark.sql.Row(nodeRows(i).get(0), cls(i))): _*)
-    sp.createDataFrame(rows, schema)
+  }
+
+  /** A small graph collected to the driver — the one working form of
+    * the driver-local kernels. `rows` are `nodeFrame`'s rows in its
+    * own order, with the node in column 0 (kernels that label by min
+    * member sort it through Spark's ordering first, so index order ==
+    * label order); `edges` are (src, dst) index pairs of `edgeFrame`.
+    */
+  private final class Collected(nodeFrame: DataFrame, edgeFrame: DataFrame) {
+    val rows: Array[Row] = nodeFrame.collect()
+    val n: Int = rows.length
+    val nodes: Array[Any] = rows.map(_.get(0))
+    val nodeType: DataType = nodeFrame.schema.head.dataType
+    private val idx = new java.util.HashMap[Any, Integer](n * 2)
+    nodes.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
+    def indexOf(v: Any): Integer = idx.get(v)
+    val edges: Array[(Int, Int)] = edgeFrame.collect().map(r =>
+      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
+
+    /** CSR adjacency (off, tgt): node v's out-neighbors (in-neighbors
+      * when `reverse`) are tgt(off(v) until off(v + 1)), in edge order.
+      */
+    def csr(reverse: Boolean): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](n + 1)
+      edges.foreach { case (s, d) => off((if (reverse) d else s) + 1) += 1 }
+      var i = 0
+      while (i < n) { off(i + 1) += off(i); i += 1 }
+      val tgt = new Array[Int](off(n))
+      val fill = java.util.Arrays.copyOf(off, n)
+      edges.foreach { case (s, d) =>
+        val (a, b) = if (reverse) (d, s) else (s, d)
+        tgt(fill(a)) = b
+        fill(a) += 1
+      }
+      (off, tgt)
+    }
+
+    /** The kernel's output frame: `n` (the node type), then `cols`,
+      * one row per node from `row(i)`.
+      */
+    def frame(cols: StructField*)(row: Int => Seq[Any]): DataFrame =
+      nodeFrame.sparkSession.createDataFrame(
+        java.util.Arrays.asList(
+          Array.tabulate(n)(i => Row.fromSeq(nodes(i) +: row(i))): _*),
+        StructType(StructField("n", nodeType) +: cols))
+  }
+
+  /** The distributed plans' per-element decimal casts, on the driver:
+    * `round(x, 9).cast(decimal(30,12))` and `x.cast(decimal(30,12))`.
+    */
+  private def d9(x: Double): JBD = DecimalKernels.round9dec(x).toJavaBigDecimal
+  private def d12(x: Double): JBD = DecimalKernels.dec12(x).toJavaBigDecimal
+
+  /** Σ_{i < n} dec12(f(i)) as an exact decimal — the distributed
+    * probes' order-free sums (convergence delta, dangling mass).
+    */
+  private def decSum(n: Int)(f: Int => Double): JBD = {
+    var acc = JBD.ZERO.setScale(12)
+    var i = 0
+    while (i < n) { acc = acc.add(d12(f(i))); i += 1 }
+    acc
   }
 
   /** Anchor-text aggregation per link target — the classic off-page

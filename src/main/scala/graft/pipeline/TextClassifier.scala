@@ -134,8 +134,8 @@ object TextClassifier {
     graft.functions.DecimalKernels.round9dec(x).toJavaBigDecimal
 
   /** Collected (label, [(feat, tf)…]) per doc — the local iteration
-    * kernels' working set. Bounded by the `localRowMax` gate before
-    * collection.
+    * kernels' working set, collected once [[graft.core.LocalGate]]
+    * admits the feature rows.
     */
   private def collectLocalDocs(feats: DataFrame, idCol: String)
       : Array[(Double, Array[(Int, Double)])] = {
@@ -158,25 +158,24 @@ object TextClassifier {
     * row would fan out that doc's feature rows and double its weight
     * in the batch gradient.
     *
-    * Small-sample fast path (the LinkGraph.pageRank localMax
-    * precedent): the first iteration always runs distributed — its
-    * gradient collect yields the doc count for free — and when the
-    * persisted feature stream holds at most `localRowMax` rows, the
-    * REMAINING iterations run as a driver kernel over the collected
-    * rows. The kernel is BIT-IDENTICAL by construction: every
-    * cross-row sum in the distributed loop is an exact 9-dp decimal
-    * (order-free), every per-row double op is replayed in the same
-    * IEEE order, and the per-element rounding is the spec-pinned
-    * round9dec. ClassifierSpec pins local == forced-distributed
-    * (localRowMax = 0) exactly. Each distributed iteration of a tiny
-    * sample otherwise costs ~6 scheduled stages — iterative job
-    * latency, the pageRankLocal rationale.
+    * Small-sample fast path: the first iteration always runs
+    * distributed — its gradient collect yields the doc count for free
+    * — and when [[graft.core.LocalGate]] admits the persisted feature
+    * stream's row count, the REMAINING iterations run as a driver
+    * kernel over the collected rows. The kernel is BIT-IDENTICAL by
+    * construction: every cross-row sum in the distributed loop is an
+    * exact 9-dp decimal (order-free), every per-row double op is
+    * replayed in the same IEEE order, and the per-element rounding is
+    * the spec-pinned round9dec. ClassifierSpec pins local ==
+    * forced-distributed (`LocalGate.distributed`) exactly. Each
+    * distributed iteration of a tiny sample otherwise costs ~6
+    * scheduled stages.
     */
   def train(docs: DataFrame, labels: DataFrame, dim: Int, iters: Int = 8,
             lr: Double = 2.0, l2: Double = 0.0, textCol: String = "text",
             idCol: String = "doc_id", l1Normalize: Boolean = true,
             stopTol: Double = 0.0, biasInit: Double = 0.0,
-            sampleMax: Int = 100000, localRowMax: Int = 2000000): Model = {
+            sampleMax: Int = 100000): Model = {
     require(iters > 0, s"iters must be > 0: $iters")
     require(stopTol >= 0.0, s"stopTol must be >= 0: $stopTol")
     val spark = docs.sparkSession
@@ -311,8 +310,8 @@ object TextClassifier {
         // switch the remaining iterations to the driver kernel when
         // the persisted stream is provably driver-small (the count is
         // a cached-metadata job after this iteration materialized it)
-        if (it == 1 && it < iters && !plateaued && localRowMax > 0 &&
-            feats.count() <= localRowMax)
+        if (it == 1 && it < iters && !plateaued &&
+            graft.core.LocalGate.admitsRows(feats.count()))
           localDocs = collectLocalDocs(feats, idCol)
         }
       }
@@ -385,8 +384,7 @@ object TextClassifier {
                    idCol: String = "doc_id",
                    l1Normalize: Boolean = true,
                    sampleMax: Int = 100000,
-                   stopTol: Double = 0.0,
-                   localRowMax: Int = 2000000): SoftmaxModel = {
+                   stopTol: Double = 0.0): SoftmaxModel = {
     require(iters > 0, s"iters must be > 0: $iters")
     require(nClasses >= 2, s"nClasses must be >= 2: $nClasses")
     require(stopTol >= 0.0, s"stopTol must be >= 0: $stopTol")
@@ -538,8 +536,8 @@ object TextClassifier {
           plateaued = true
         prevLoss = loss
         // the [[train]] driver-kernel switch, softmax flavor
-        if (it == 1 && it < iters && !plateaued && localRowMax > 0 &&
-            feats.count() <= localRowMax)
+        if (it == 1 && it < iters && !plateaued &&
+            graft.core.LocalGate.admitsRows(feats.count()))
           localDocs = collectLocalDocs(feats, idCol)
         }
       }

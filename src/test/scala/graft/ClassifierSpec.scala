@@ -305,7 +305,7 @@ class ClassifierSpec extends SparkSpec {
   test("local iteration kernel == forced-distributed training, bit-exact") {
     // 40 docs, overlapping vocab, 6 iterations: iteration 1 runs
     // distributed in both, iterations 2-6 take the driver kernel on
-    // the left and stay distributed on the right (localRowMax = 0) —
+    // the left and stay distributed on the right (LocalGate.distributed) —
     // every weight, the bias, and every loss must be EXACTLY equal
     val docs = (0 until 40).map { i =>
       val words = Seq("alpha", "beta", "gamma", "delta", "eps")
@@ -314,9 +314,9 @@ class ClassifierSpec extends SparkSpec {
     }.toDF("doc_id", "text", "label")
     val loc = TextClassifier.train(docs, docs.select("doc_id", "label"),
       dim = 1 << 12, iters = 6, lr = 1.5, l2 = 0.01, biasInit = 0.2)
-    val dist = TextClassifier.train(docs, docs.select("doc_id", "label"),
-      dim = 1 << 12, iters = 6, lr = 1.5, l2 = 0.01, biasInit = 0.2,
-      localRowMax = 0)
+    val dist = graft.core.LocalGate.distributed(TextClassifier.train(docs,
+      docs.select("doc_id", "label"),
+      dim = 1 << 12, iters = 6, lr = 1.5, l2 = 0.01, biasInit = 0.2))
     assert(loc.bias == dist.bias)
     assert(loc.losses == dist.losses)
     assert(loc.weights == dist.weights)
@@ -329,9 +329,9 @@ class ClassifierSpec extends SparkSpec {
     }.toDF("doc_id", "text", "label")
     val loc = TextClassifier.trainSoftmax(docs, docs.select("doc_id", "label"),
       dim = 1 << 12, nClasses = 3, iters = 6, lr = 1.5, l2 = 0.01)
-    val dist = TextClassifier.trainSoftmax(docs, docs.select("doc_id", "label"),
-      dim = 1 << 12, nClasses = 3, iters = 6, lr = 1.5, l2 = 0.01,
-      localRowMax = 0)
+    val dist = graft.core.LocalGate.distributed(TextClassifier.trainSoftmax(docs,
+      docs.select("doc_id", "label"),
+      dim = 1 << 12, nClasses = 3, iters = 6, lr = 1.5, l2 = 0.01))
     assert(loc.biases == dist.biases)
     assert(loc.losses == dist.losses)
     assert(loc.weights == dist.weights)

@@ -78,6 +78,23 @@ class DecimalOpsSpec extends AnyFunSuite with SparkSpec {
       s"dec12 mismatches: ${mismatch.take(5).mkString(", ")}")
   }
 
+  test("round9Slow / round6 == round(x, 9) / round(x, 6) through codegen") {
+    // the driver-local kernels' double rounding, bit for bit
+    val xs = fuzzValues(200000, 11L)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(xs.map(Tuple1(_)), 8)
+    ).toDF("x")
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    val mismatch = df.select(col("x"), round(col("x"), 9), round(col("x"), 6))
+      .collect().filter { r =>
+        val x = r.getDouble(0)
+        bits(DecimalKernels.round9Slow(x)) != bits(r.getDouble(1)) ||
+          bits(DecimalKernels.round6(x)) != bits(r.getDouble(2))
+      }
+    assert(mismatch.isEmpty,
+      s"round9Slow/round6 mismatches: ${mismatch.take(5).mkString(", ")}")
+  }
+
   test("kernel fast path == kernel slow path (pure JVM, high volume)") {
     val rnd = new java.util.Random(1L)
     var i = 0

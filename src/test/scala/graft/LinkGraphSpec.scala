@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalGate
 import graft.ops.LinkGraph
 import graft.text.HtmlExtract
 
@@ -153,9 +154,9 @@ class LinkGraphSpec extends SparkSpec {
     for (maxDist <- Seq(2, 5)) {
       val loc = graft.ops.LinkGraph.harmonicCentrality(edges, maxDist = maxDist)
         .collect().map(_.toSeq).toSet
-      val dist = graft.ops.LinkGraph.harmonicCentrality(edges,
-          maxDist = maxDist, localMax = 0)
-        .collect().map(_.toSeq).toSet
+      val dist = LocalGate.distributed(graft.ops.LinkGraph
+        .harmonicCentrality(edges, maxDist = maxDist)
+        .collect().map(_.toSeq).toSet)
       assert(loc == dist)
     }
   }
@@ -207,17 +208,17 @@ class LinkGraphSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(a == b)
     // driver kernel == distributed loop bit-for-bit (the pageRank
-    // kernel contract; localMax = 0 forces the distributed plan)
-    val dist = graft.ops.LinkGraph.hits(
-      edges.toDF("src", "dst"), iters = 3, localMax = 0)
-      .collect().map(_.toSeq).toSet
+    // kernel contract; LocalGate.distributed forces the distributed plan)
+    val dist = LocalGate.distributed(graft.ops.LinkGraph.hits(
+      edges.toDF("src", "dst"), iters = 3)
+      .collect().map(_.toSeq).toSet)
     assert(a == dist)
     // tol early-stop agrees across paths on a fixpoint graph
     val bip = for (s <- Seq("u1", "u2"); t <- Seq("v1", "v2")) yield (s, t)
     val el = graft.ops.LinkGraph.hits(bip.toDF("src", "dst"), iters = 40)
       .collect().map(_.toSeq).toSet
-    val ed = graft.ops.LinkGraph.hits(bip.toDF("src", "dst"), iters = 40,
-      localMax = 0).collect().map(_.toSeq).toSet
+    val ed = LocalGate.distributed(graft.ops.LinkGraph.hits(
+      bip.toDF("src", "dst"), iters = 40).collect().map(_.toSeq).toSet)
     assert(el == ed)
   }
 
@@ -387,13 +388,13 @@ class LinkGraphSpec extends SparkSpec {
     // K ragged against iters (the forced last-round probe)
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"),
       ("d", "a"), ("d", "b"), ("e", "d"))
-    // localMax = 0: round chaining is a DISTRIBUTED-plan property —
-    // the driver kernel must not absorb the comparison
+    // LocalGate.distributed: round chaining is a DISTRIBUTED-plan
+    // property — the driver kernel must not absorb the comparison
     def run(iters: Int, k: Int, seeded: Boolean = false) = {
       val seeds = if (seeded) Some(Seq("a", "e").toDF("n")) else None
-      LinkGraph.pageRank(edges.toDF("src", "dst"), iters = iters,
-          probeEvery = k, seeds = seeds, localMax = 0)
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+      LocalGate.distributed(LinkGraph.pageRank(edges.toDF("src", "dst"),
+          iters = iters, probeEvery = k, seeds = seeds)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toMap)
     }
     for (iters <- Seq(1, 4, 5); k <- Seq(2, 3, 5, 7)) {
       assert(run(iters, k) == run(iters, 1), s"iters=$iters probeEvery=$k")
@@ -403,12 +404,12 @@ class LinkGraphSpec extends SparkSpec {
     // tol early-stop still fires on probe rounds: the 20-ring hits its
     // fixpoint at round 1, so a 60-round budget with K=4 stays cheap
     val ring = (0 until 20).map(i => (s"n$i", s"n${(i + 1) % 20}"))
-    val r4 = LinkGraph.pageRank(ring.toDF("src", "dst"), iters = 60,
-      probeEvery = 4, localMax = 0)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-    val r1 = LinkGraph.pageRank(ring.toDF("src", "dst"), iters = 2,
-      localMax = 0)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+    val (r4, r1) = LocalGate.distributed {
+      (LinkGraph.pageRank(ring.toDF("src", "dst"), iters = 60, probeEvery = 4)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toMap,
+       LinkGraph.pageRank(ring.toDF("src", "dst"), iters = 2)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toMap)
+    }
     assert(r4 == r1)
     // redistribute mode needs per-round dangling mass on the driver
     intercept[IllegalArgumentException] {
@@ -425,11 +426,10 @@ class LinkGraphSpec extends SparkSpec {
       ("d", "a"), ("d", "b"), ("e", "d"), ("f", "f"), ("c", "g"))
     def both(redistribute: Boolean, seeded: Boolean): Unit = {
       val seeds = if (seeded) Some(Seq("a", "e").toDF("n")) else None
-      def run(lm: Int) = LinkGraph.pageRank(edges.toDF("src", "dst"),
-          iters = 5, redistributeDangling = redistribute, seeds = seeds,
-          localMax = lm)
+      def run() = LinkGraph.pageRank(edges.toDF("src", "dst"),
+          iters = 5, redistributeDangling = redistribute, seeds = seeds)
         .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-      assert(run(50000) == run(0),
+      assert(run() == LocalGate.distributed(run()),
         s"redistribute=$redistribute seeded=$seeded")
     }
     both(redistribute = false, seeded = false)
@@ -440,17 +440,22 @@ class LinkGraphSpec extends SparkSpec {
 
   test("empty edge frame: centralities return empty, not NPE") {
     val none = Seq.empty[(String, String)].toDF("src", "dst")
-    assert(LinkGraph.pageRank(none).collect().isEmpty)
-    assert(LinkGraph.pageRank(none, redistributeDangling = true)
-      .collect().isEmpty)
-    assert(LinkGraph.hits(none).collect().isEmpty)
-    assert(LinkGraph.harmonicCentrality(none).collect().isEmpty)
-    assert(LinkGraph.harmonicCentrality(none, exact = false).collect().isEmpty)
-    assert(LinkGraph.stronglyConnectedComponents(none).collect().isEmpty)
-    // bowTie: the local fast path's giant-core lookup must not index
-    // into an empty groupBy result (regression: AIOOBE on zero nodes)
-    assert(LinkGraph.bowTie(none).collect().isEmpty)
-    assert(LinkGraph.bowTie(none, localMax = 0).collect().isEmpty)
+    // all five gated ops, under the default gate (which admits only
+    // non-empty graphs) and under the forced-distributed seam
+    def allEmpty(): Unit = {
+      assert(LinkGraph.pageRank(none).collect().isEmpty)
+      assert(LinkGraph.pageRank(none, redistributeDangling = true)
+        .collect().isEmpty)
+      assert(LinkGraph.hits(none).collect().isEmpty)
+      assert(LinkGraph.harmonicCentrality(none).collect().isEmpty)
+      assert(LinkGraph.harmonicCentrality(none, exact = false).collect().isEmpty)
+      assert(LinkGraph.stronglyConnectedComponents(none).collect().isEmpty)
+      // bowTie: the giant-core lookup must not index into an empty
+      // groupBy result (regression: AIOOBE on zero nodes)
+      assert(LinkGraph.bowTie(none).collect().isEmpty)
+    }
+    allEmpty()
+    LocalGate.distributed(allEmpty())
   }
 
   test("tol > 0: local kernel stop round == distributed (decimal delta)") {
@@ -460,15 +465,15 @@ class LinkGraphSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"),
       ("d", "a"), ("e", "d"), ("f", "f"), ("c", "g"))
     for (tol <- Seq(1e-3, 1e-2, 5e-2)) {
-      def pr(lm: Int) = LinkGraph.pageRank(edges.toDF("src", "dst"),
-          iters = 40, tol = tol, localMax = lm)
+      def pr() = LinkGraph.pageRank(edges.toDF("src", "dst"),
+          iters = 40, tol = tol)
         .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-      assert(pr(50000) == pr(0), s"pageRank tol=$tol")
-      def ht(lm: Int) = LinkGraph.hits(edges.toDF("src", "dst"),
-          iters = 40, tol = tol, localMax = lm)
+      assert(pr() == LocalGate.distributed(pr()), s"pageRank tol=$tol")
+      def ht() = LinkGraph.hits(edges.toDF("src", "dst"),
+          iters = 40, tol = tol)
         .collect().map(r => (r.getString(0), (r.getDouble(1), r.getDouble(2))))
         .toMap
-      assert(ht(50000) == ht(0), s"hits tol=$tol")
+      assert(ht() == LocalGate.distributed(ht()), s"hits tol=$tol")
     }
   }
 
@@ -491,14 +496,14 @@ class LinkGraphSpec extends SparkSpec {
       nodes.map(n => n -> nodes.filter(m => r(n)(m) && r(m)(n)).min).toMap
     }
     // run BOTH paths: the small-graph driver Tarjan (default gate) and
-    // the distributed peel (localMax = 0 forces it) must agree with
+    // the distributed peel (LocalGate.distributed forces it) must agree with
     // brute force — and therefore with each other — on every fixture
     def run(edges: Seq[(String, String)]) = {
       val local = LinkGraph.stronglyConnectedComponents(edges.toDF("src", "dst"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val dist = LinkGraph.stronglyConnectedComponents(
-          edges.toDF("src", "dst"), localMax = 0)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val dist = LocalGate.distributed(LinkGraph.stronglyConnectedComponents(
+          edges.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
       assert(local == dist, "local Tarjan != distributed peel")
       local
     }
@@ -521,9 +526,9 @@ class LinkGraphSpec extends SparkSpec {
     val rg = Seq.fill(60)((s"n${rnd.nextInt(18)}", s"n${rnd.nextInt(18)}"))
     assert(run(rg) == brute(rg))
     // partition-invariant (distributed path — the local path collects)
-    val a = LinkGraph.stronglyConnectedComponents(
-      rg.toDF("src", "dst").repartition(13), localMax = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val a = LocalGate.distributed(LinkGraph.stronglyConnectedComponents(
+      rg.toDF("src", "dst").repartition(13))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
     assert(a == brute(rg))
   }
 
@@ -542,10 +547,10 @@ class LinkGraphSpec extends SparkSpec {
         if (i < k - 1) Seq((a, f"c${i + 1}%03da")) else Seq.empty
       Seq((a, b), (b, a)) ++ chain
     }
-    // localMax = 0: the adversarial-depth contract is about the
+    // LocalGate.distributed: the adversarial-depth contract is about the
     // DISTRIBUTED peel's round count — the driver path must not absorb it
-    val (df, rounds) = LinkGraph.sccWithRounds(edges.toDF("src", "dst"),
-      localMax = 0)
+    val (df, rounds) =
+      LocalGate.distributed(LinkGraph.sccWithRounds(edges.toDF("src", "dst")))
     val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val want = (0 until k).flatMap { i =>
       val a = f"c$i%03da"; val b = f"c$i%03db"
@@ -599,8 +604,8 @@ class LinkGraphSpec extends SparkSpec {
     def run(edges: Seq[(String, String)]) = {
       val local = LinkGraph.bowTie(edges.toDF("src", "dst"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val dist = LinkGraph.bowTie(edges.toDF("src", "dst"), localMax = 0)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val dist = LocalGate.distributed(LinkGraph.bowTie(edges.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
       assert(local == dist, "local bow-tie != distributed bow-tie")
       local
     }
