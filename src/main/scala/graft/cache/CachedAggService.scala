@@ -21,10 +21,14 @@ import graft.ops.IncrementalAgg
   * the merge shuffles state rows, never history.
   *
   * Watermark contract (same as CachedQueryService): refresh reads rows
-  * STRICTLY past the stored watermark. The bit-identical guarantee
-  * holds for append-in-time-order sources; late arrivals that EQUAL
-  * the watermark are out-of-order data — handle those with the
-  * streaming path (event-time watermarks) or clearCache + rebuild.
+  * STRICTLY past the stored watermark, bounded above by the new
+  * watermark its one tail action probes (`count` + `max` together), so
+  * the recorded count, the new watermark and the merged rows describe
+  * the same rows — a sync landing mid-refresh waits for the next one.
+  * The bit-identical guarantee holds for append-in-time-order sources;
+  * late arrivals that EQUAL the watermark are out-of-order data —
+  * handle those with the streaming path (event-time watermarks) or
+  * clearCache + rebuild.
   */
 class CachedAggService(spark: SparkSession, dir: String,
                        cache: QueryCacheManager,
@@ -33,8 +37,40 @@ class CachedAggService(spark: SparkSession, dir: String,
   private def aggKey(timeCol: String, interval: String, valueCol: String) =
     Some(s"agg_${timeCol}_${interval.replace(' ', '_')}_$valueCol")
 
-  private def maxTsString(df: DataFrame, tc: String): Option[String] =
-    Option(df.agg(max(col(tc)).cast("string")).head().getString(0))
+  /** The one refresh flow behind every cached state: on a miss, state
+    * over the whole table; on a hit, `merge(cached, build(tail))`. One
+    * action probes the tail's row count and new watermark, and the tail
+    * built is bounded by that watermark (rows with a null time stay in
+    * an initial build, as a full recompute counts them).
+    */
+  private def refresh(table: String, key: Option[String], timeCol: String,
+                      build: DataFrame => DataFrame,
+                      merge: (DataFrame, DataFrame) => DataFrame,
+                      read: DataFrame => DataFrame): CachedQueryResult = {
+    val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
+    val base = Tables.loadNormalized(spark, dir, table)
+    val tsType = base.schema(timeCol).dataType
+    val wm = meta.flatMap(_.lastTimestamp)
+    val fresh = wm.fold(base)(w => base.filter(col(timeCol) > lit(w).cast(tsType)))
+    val probe = fresh.agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
+    val freshCount = probe.getLong(0)
+    val cached = wm.map(_ => cache.getCachedData(table, key)
+      .getOrElse(sys.error(s"cache metadata present but state missing for '$table' ($key)")))
+    val prevCount = if (cached.isDefined) meta.get.rowCount else 0L
+    cached match {
+      case Some(state) if freshCount == 0 =>
+        CachedQueryResult(read(state), isIncremental = true, prevCount, 0)
+      case _ =>
+        val newWm = Option(probe.getString(1))
+        val tail = build(fresh.filter(
+          coalesce(col(timeCol) <= lit(newWm.orNull).cast(tsType), lit(true))))
+        val state = cached.fold(tail)(merge(_, tail))
+        val n = prevCount + freshCount
+        cache.setCachedData(table, state, CachedQueryMetadata(newWm, n, nowMillis()), key)
+        val back = cache.getCachedData(table, key).getOrElse(state)
+        CachedQueryResult(read(back), isIncremental = cached.isDefined, n, freshCount)
+    }
+  }
 
   /** The bucketed aggregate of `table`, served from cached state —
     * initial full aggregation on first call, merge-only refresh after.
@@ -42,41 +78,10 @@ class CachedAggService(spark: SparkSession, dir: String,
     * point_count, value_avg, value_min, value_max).
     */
   def aggregateWithCaching(table: String, timeCol: String, interval: String,
-                           valueCol: String): CachedQueryResult = {
-    val key = aggKey(timeCol, interval, valueCol)
-    val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
-    val base = Tables.loadNormalized(spark, dir, table)
-    meta.flatMap(_.lastTimestamp) match {
-      case Some(wm) =>
-        val fresh = base.filter(
-          col(timeCol) > lit(wm).cast(base.schema(timeCol).dataType))
-        val freshCount = fresh.count()
-        val state = cache.getCachedData(table, key)
-          .getOrElse(sys.error(s"agg cache metadata present but state missing for '$table'"))
-        if (freshCount == 0)
-          CachedQueryResult(IncrementalAgg.readState(state),
-            isIncremental = true, meta.get.rowCount, 0)
-        else {
-          val merged = IncrementalAgg.mergeStates(state,
-            IncrementalAgg.bucketState(fresh, timeCol, interval, valueCol))
-          val newWm = maxTsString(fresh, timeCol).orElse(meta.flatMap(_.lastTimestamp))
-          val n = meta.get.rowCount + freshCount
-          cache.setCachedData(table, merged,
-            CachedQueryMetadata(newWm, n, nowMillis()), key)
-          val back = cache.getCachedData(table, key).getOrElse(merged)
-          CachedQueryResult(IncrementalAgg.readState(back),
-            isIncremental = true, n, freshCount)
-        }
-      case None =>
-        val state = IncrementalAgg.bucketState(base, timeCol, interval, valueCol)
-        val n = base.count()
-        val wm = maxTsString(base, timeCol)
-        cache.setCachedData(table, state, CachedQueryMetadata(wm, n, nowMillis()), key)
-        val back = cache.getCachedData(table, key).getOrElse(state)
-        CachedQueryResult(IncrementalAgg.readState(back),
-          isIncremental = false, n, n)
-    }
-  }
+                           valueCol: String): CachedQueryResult =
+    refresh(table, aggKey(timeCol, interval, valueCol), timeCol,
+      IncrementalAgg.bucketState(_, timeCol, interval, valueCol),
+      IncrementalAgg.mergeStates, IncrementalAgg.readState)
 
   def clearCache(table: String, timeCol: String, interval: String,
                  valueCol: String): Unit =
@@ -94,37 +99,8 @@ class CachedAggService(spark: SparkSession, dir: String,
     */
   def quantilesWithCaching(table: String, timeCol: String, interval: String,
                            valueCol: String, lo: Double, hi: Double,
-                           nBins: Int, qs: Seq[Double]): CachedQueryResult = {
-    val key = histKey(timeCol, interval, valueCol, lo, hi, nBins)
-    val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
-    val base = Tables.loadNormalized(spark, dir, table)
-    def read(state: DataFrame) = IncrementalAgg.quantilesFromState(state, lo, hi, qs)
-    meta.flatMap(_.lastTimestamp) match {
-      case Some(wm) =>
-        val fresh = base.filter(
-          col(timeCol) > lit(wm).cast(base.schema(timeCol).dataType))
-        val freshCount = fresh.count()
-        val state = cache.getCachedData(table, key)
-          .getOrElse(sys.error(s"hist cache metadata present but state missing for '$table'"))
-        if (freshCount == 0)
-          CachedQueryResult(read(state), isIncremental = true, meta.get.rowCount, 0)
-        else {
-          val merged = IncrementalAgg.mergeHistStates(state,
-            IncrementalAgg.histState(fresh, timeCol, interval, valueCol, lo, hi, nBins))
-          val newWm = maxTsString(fresh, timeCol).orElse(meta.flatMap(_.lastTimestamp))
-          val n = meta.get.rowCount + freshCount
-          cache.setCachedData(table, merged,
-            CachedQueryMetadata(newWm, n, nowMillis()), key)
-          val back = cache.getCachedData(table, key).getOrElse(merged)
-          CachedQueryResult(read(back), isIncremental = true, n, freshCount)
-        }
-      case None =>
-        val state = IncrementalAgg.histState(base, timeCol, interval, valueCol, lo, hi, nBins)
-        val n = base.count()
-        val wm = maxTsString(base, timeCol)
-        cache.setCachedData(table, state, CachedQueryMetadata(wm, n, nowMillis()), key)
-        val back = cache.getCachedData(table, key).getOrElse(state)
-        CachedQueryResult(read(back), isIncremental = false, n, n)
-    }
-  }
+                           nBins: Int, qs: Seq[Double]): CachedQueryResult =
+    refresh(table, histKey(timeCol, interval, valueCol, lo, hi, nBins), timeCol,
+      IncrementalAgg.histState(_, timeCol, interval, valueCol, lo, hi, nBins),
+      IncrementalAgg.mergeHistStates, IncrementalAgg.quantilesFromState(_, lo, hi, qs))
 }

@@ -37,7 +37,11 @@ case class CachedQueryResult(
   * re-inferred.
   *
   * Watermark contract: refresh fetches rows with time STRICTLY past
-  * the stored watermark (the reference's `> last_timestamp`). Late
+  * the stored watermark (the reference's `> last_timestamp`) and at or
+  * before the new watermark, which the same single tail action that
+  * counts the tail probes — so the appended slice, the recorded count
+  * and the new watermark describe the same rows, and a sync landing
+  * mid-refresh is picked up by the next refresh, once. Late
   * arrivals that EQUAL the watermark are out-of-order data and are not
   * picked up — handle genuinely out-of-order sources with the
   * streaming path (event-time watermarks) or a full reload.
@@ -120,29 +124,33 @@ class CachedQueryService(spark: SparkSession, dir: String,
   private def incrementalLoad(table: String, tc: String, meta: CachedQueryMetadata,
                               sel: Option[Map[String, String]]): CachedQueryResult = {
     val base = Tables.loadNormalized(spark, dir, table)
+    val tsType = base.schema(tc).dataType
     val wm = meta.lastTimestamp.get
-    // pushed predicate: only the tail past the watermark leaves the scan
-    val fresh = base.filter(col(tc) > lit(wm).cast(base.schema(tc).dataType))
-    // reapply EXACTLY the conversions recorded at initial load (or the
-    // caller's override) — never re-infer on the tail slice
-    val conversions = sel.getOrElse(meta.selectedConversions)
-    val freshConv = TypeInference.applyConversions(fresh, conversions, force = true)
-    val freshCount = freshConv.count()
+    // pushed predicate: only the tail past the watermark leaves the
+    // scan; one action counts it and probes the new watermark
+    val fresh = base.filter(col(tc) > lit(wm).cast(tsType))
+    val probe = fresh.agg(count(lit(1)), max(col(tc)).cast("string")).head()
+    val freshCount = probe.getLong(0)
     val cached = cache.getCachedData(table)
       .getOrElse(sys.error(s"cache metadata present but data missing for '$table'"))
     if (freshCount == 0)
       CachedQueryResult(ordered(cached, Some(tc)), isIncremental = true, meta.rowCount, 0)
     else {
+      val newWm = probe.getString(1) // non-null: the tail has rows past wm
+      // reapply EXACTLY the conversions recorded at initial load (or the
+      // caller's override) — never re-infer on the tail slice
+      val conversions = sel.getOrElse(meta.selectedConversions)
+      val freshConv = TypeInference.applyConversions(
+        fresh.filter(col(tc) <= lit(newWm).cast(tsType)), conversions, force = true)
       // O(tail) commit: only the fresh slice is written — the provider
       // manifests it alongside the already-cached slices, so refresh
       // cost tracks the tail, not the (possibly 100 TB) cached total.
       // select() pins the slice to the cached column order (and errors
       // on a missing column) so every slice shares one schema.
       val aligned = freshConv.select(cached.columns.map(col).toIndexedSeq: _*)
-      val newWm = maxTsString(freshConv, tc).orElse(meta.lastTimestamp)
       val n = meta.rowCount + freshCount
       cache.appendCachedData(table, aligned,
-        CachedQueryMetadata(newWm, n, nowMillis(), conversions))
+        CachedQueryMetadata(Some(newWm), n, nowMillis(), conversions))
       val back = cache.getCachedData(table).getOrElse(cached.unionByName(freshConv))
       CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, freshCount)
     }

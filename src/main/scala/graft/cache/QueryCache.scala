@@ -6,6 +6,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Query-result cache: storage providers + the manager that keys data
   * and metadata by (table, cache_key).
@@ -21,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    Hadoop filesystem. Durable, shared across sessions/executors,
   *    sized for 100 TB results (a cache hit is a parquet scan that
   *    prunes/pushes down like any other table).
-  *  - [[MemoryCacheProvider]]: `persist()`-backed DataFrames for
+  *  - [[MemoryCacheProvider]]: locally checkpointed DataFrames for
   *    single-application dashboard latency; metadata in-process.
   * Metadata rides next to the data as a small JSON document; data and
   * metadata COMMIT TOGETHER (versioned entry + atomic pointer swap in
@@ -58,9 +60,10 @@ trait CacheProvider {
   *
   * Layout: `dir/<key>/slice-<m>/` (immutable parquet slices, shared
   * across versions) + `dir/<key>/v-<n>/manifest` (newline-separated
-  * slice names this version reads) + `dir/<key>/v-<n>/meta.json` +
-  * `dir/<key>/CURRENT` (one line naming the committed version).
-  * Commit: (1) write the new slice fully; (2) write manifest + meta;
+  * slice names this version reads) + `dir/<key>/v-<n>/schema.json` +
+  * `dir/<key>/v-<n>/meta.json` + `dir/<key>/CURRENT` (one line naming
+  * the committed version). Commit: (1) write the new slice fully;
+  * (2) write manifest + schema + meta;
   * (3) swap CURRENT via temp + delete + rename; (4) delete version
   * dirs and slices the new manifest no longer references. Readers
   * resolve CURRENT and fall back to the highest COMPLETE version
@@ -80,6 +83,13 @@ trait CacheProvider {
   * rewrite per `compactThreshold` O(tail) appends). (Legacy
   * `v-<n>/data` entries without a manifest remain readable; the first
   * append migrates them.)
+  *
+  * Why a recorded schema: `spark.read.parquet` without one runs a
+  * schema-inference job on every read, and a refresh reads its entry
+  * twice. The schema is written before `meta.json`, so every complete
+  * version written this way has one; `appendEntry` carries it forward
+  * (slices share the entry's schema). Versions without one — written
+  * before schemas were recorded — read through inference.
   */
 class ParquetCacheProvider(spark: SparkSession, dir: String,
                            compactThreshold: Int = 32) extends CacheProvider {
@@ -97,6 +107,11 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   private def parseSlice(name: String): Option[Long] =
     if (name.startsWith("slice-")) name.stripPrefix("slice-").toLongOption else None
   private def manifestPath(vdir: Path) = new Path(vdir, "manifest")
+  private def schemaPath(vdir: Path) = new Path(vdir, "schema.json")
+
+  private def schemaOf(vdir: Path): Option[StructType] =
+    Some(schemaPath(vdir)).filter(fs.exists)
+      .map(p => DataType.fromJson(readSmall(p)).asInstanceOf[StructType])
 
   /** The parquet dirs a version reads: its manifest's slices, or the
     * legacy in-version `data` dir when no manifest exists.
@@ -162,9 +177,10 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     * disk until the new pointer is live.
     */
   private def commitVersion(key: String, next: Long, slices: Seq[String],
-                            metaJson: String): Unit = {
+                            schema: Option[StructType], metaJson: String): Unit = {
     val vdir = new Path(keyDir(key), versionName(next))
     writeSmall(manifestPath(vdir), slices.mkString("\n"))
+    schema.foreach(st => writeSmall(schemaPath(vdir), st.json))
     writeSmall(new Path(vdir, "meta.json"), metaJson)
     val tmp = new Path(keyDir(key), "CURRENT.tmp")
     writeSmall(tmp, versionName(next))
@@ -187,7 +203,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     // fresh) — the new slice is fully materialized before any slice
     // the old version references is dropped
     df.write.mode("overwrite").parquet(new Path(keyDir(key), slice).toString)
-    commitVersion(key, next, Seq(slice), metaJson)
+    commitVersion(key, next, Seq(slice), Some(df.schema), metaJson)
   }
 
   override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
@@ -203,7 +219,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
         else {
           val slice = sliceName(nextSliceNum(key))
           tail.write.mode("overwrite").parquet(new Path(keyDir(key), slice).toString)
-          commitVersion(key, cur + 1, prevSlices :+ slice, metaJson)
+          commitVersion(key, cur + 1, prevSlices :+ slice, schemaOf(vdir), metaJson)
         }
     }
 
@@ -221,7 +237,8 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
 
   override def getData(key: String): Option[DataFrame] =
     resolve(key).map { case (_, p) =>
-      spark.read.parquet(slicesOf(key, p).map(_.toString): _*)
+      val reader = schemaOf(p).fold(spark.read)(spark.read.schema)
+      reader.parquet(slicesOf(key, p).map(_.toString): _*)
     }
 
   override def getMeta(key: String): Option[String] =
@@ -301,64 +318,51 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   }
 }
 
-/** In-process provider: `persist()`ed plans keyed in a concurrent map.
-  * `putEntry` swaps the (data, meta) pair under the entry's lock, so
-  * in-process readers never observe data paired with stale metadata.
+/** In-process provider: locally checkpointed plans keyed in a
+  * concurrent map. Every stored entry is a leaf: an eager
+  * `localCheckpoint` materializes it into this application's block
+  * manager, so a hit never re-runs — or re-reads the files of — the
+  * plan it came from (a sync that rewrites a source partition cannot
+  * break a later refresh), and an append's `cached ∪ tail` never
+  * deepens the plan. `putEntry` swaps the (data, meta) pair under the
+  * entry's lock, so in-process readers never observe data paired with
+  * stale metadata; a replaced entry's blocks are freed right away, so
+  * a frame `getData` returned is valid until its entry is replaced or
+  * deleted.
   */
-class MemoryCacheProvider(compactThreshold: Int = 32) extends CacheProvider {
-  require(compactThreshold >= 1, s"compactThreshold must be >= 1, got $compactThreshold")
+class MemoryCacheProvider extends CacheProvider {
   private val entries = TrieMap.empty[String, (DataFrame, String)]
-  private val appendDepth = TrieMap.empty[String, Int]
 
   override def putEntry(key: String, df: DataFrame, metaJson: String): Unit = {
-    // a full rewrite restarts the union chain at a leaf — zero the
-    // depth counter so the localCheckpoint cadence tracks real chain
-    // depth instead of drifting across rewrites
-    appendDepth.remove(key)
-    store(key, df, metaJson)
+    val cp = df.localCheckpoint(eager = true)
+    // only then drop the previous entry — the new plan may READ it
+    entries.put(key, (cp, metaJson)).foreach(e => release(e._1))
   }
 
-  private def store(key: String, df: DataFrame, metaJson: String): Unit = {
-    val cached = df.persist()
-    cached.count() // materialize: a cache hit must not re-run the source plan
-    // only then drop the previous entry — the new plan may READ it
-    entries.put(key, (cached, metaJson)).foreach(_._1.unpersist())
-  }
-  /** In-memory append re-persists cached ∪ tail — the union reads the
-    * previous entry's persisted blocks, not the source, so the churn is
-    * memory-to-memory. O(tail) durable appends are the parquet
-    * provider's job. persist() truncates EXECUTION, not the logical
-    * plan: without compaction a long-lived dashboard refreshing every
-    * minute builds an ever-deeper union tree whose re-analysis cost
-    * grows per refresh — every `compactThreshold` appends the plan is
-    * cut back to a leaf with `localCheckpoint` (in-process blocks; fine
-    * for a provider that is by definition single-application).
+  /** Frees a checkpointed entry's blocks (`unpersist()` is a no-op on a
+    * checkpointed frame; its data lives in the checkpointed RDD).
     */
-  override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit = {
-    val depth = appendDepth.updateWith(key)(d => Some(d.getOrElse(0) + 1)).get
-    val merged = getData(key).map(_.unionByName(tail)).getOrElse(tail)
-    if (depth % compactThreshold == 0) {
-      // the eager checkpoint already materializes blocks — store it
-      // directly; routing through putEntry's persist()+count() would
-      // hold a SECOND full copy of the entry
-      val cp = merged.localCheckpoint(eager = true)
-      entries.put(key, (cp, metaJson)).foreach(_._1.unpersist())
-      appendDepth.put(key, 0) // chain is a leaf again
-    } else store(key, merged, metaJson)
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
   }
+
+  /** In-memory append re-checkpoints cached ∪ tail — the union reads
+    * the previous entry's blocks, not the source, so the churn is
+    * memory-to-memory. O(tail) durable appends are the parquet
+    * provider's job.
+    */
+  override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
+    putEntry(key, getData(key).map(_.unionByName(tail)).getOrElse(tail), metaJson)
 
   override def putMeta(key: String, json: String): Unit =
     entries.updateWith(key)(_.map { case (df, _) => (df, json) })
   override def getData(key: String): Option[DataFrame] = entries.get(key).map(_._1)
   override def getMeta(key: String): Option[String] = entries.get(key).map(_._2)
   override def hasEntry(key: String): Boolean = entries.contains(key)
-  override def delete(key: String): Unit = {
-    appendDepth.remove(key)
-    entries.remove(key).foreach(_._1.unpersist())
-  }
+  override def delete(key: String): Unit = entries.remove(key).foreach(e => release(e._1))
   override def clear(): Unit = {
-    appendDepth.clear()
-    entries.values.foreach(_._1.unpersist())
+    entries.values.foreach(e => release(e._1))
     entries.clear()
   }
 }

@@ -4,24 +4,29 @@ import org.apache.spark.sql.DataFrame
 
 /** The one size gate in front of every driver-local kernel.
   *
-  * Several iterative operators (LinkGraph's pageRank, harmonic
+  * Eight operators have a driver-local twin that replays the
+  * distributed plan on collected rows: LinkGraph's pageRank, harmonic
   * centrality, HITS, SCC and bow-tie; TextClassifier's two training
-  * loops) have a driver-local twin that replays the distributed loop
-  * on collected rows. On small inputs the distributed loop's cost is
-  * job-scheduling latency — dozens of tiny jobs per call — and the
-  * kernel answers in milliseconds. Each kernel is BIT-IDENTICAL to its
-  * distributed twin: cross-row float sums are exact decimals
-  * (order-free), per-row double ops run in the same IEEE order, and
-  * every rounding goes through [[graft.functions.DecimalKernels]], the
-  * spec-fuzzed mirror of the Catalyst expressions the distributed
-  * plans execute. So the gate decides cost, never the answer.
+  * loops; and `Lttb.downsample`. On small inputs the distributed
+  * plan's cost is job-scheduling latency — dozens of tiny jobs per
+  * call — and the kernel answers in milliseconds. Each kernel is
+  * BIT-IDENTICAL to its distributed twin. In the seven iterative
+  * kernels, cross-row float sums are exact decimals (order-free),
+  * per-row double ops run in the same IEEE order, and every rounding
+  * goes through [[graft.functions.DecimalKernels]], the spec-fuzzed
+  * mirror of the Catalyst expressions the distributed plans execute.
+  * LTTB's bucket centroids are plain double `avg`s, so order matters
+  * there: the distributed plan sums each bucket in `__i` order whenever
+  * its stage reads back as one partition, and the kernel sums in that
+  * same order. So the gate decides cost, never the answer.
   *
   * The rule: the input is non-empty (an empty input takes the
   * distributed path, which is total on it), a graph holds at most
   * [[MaxNodes]] nodes, and at most [[MaxRows]] rows are collected
-  * (edges, or classifier feature rows). Callers add only their own
-  * eligibility conditions (a mode the kernel does not mirror). Sizes
-  * are by-name, so a closed gate starts no size-probe job.
+  * (edges, classifier feature rows, or LTTB input rows). Callers add
+  * only their own eligibility conditions (a mode the kernel does not
+  * mirror). Sizes are by-name, so a closed gate starts no size-probe
+  * job.
   */
 object LocalGate {
 

@@ -1,8 +1,14 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.core.LocalGate
 
 /** Largest-Triangle-Three-Buckets downsampling, distributed.
   *
@@ -28,7 +34,10 @@ import org.apache.spark.sql.functions._
   *
   * Two global-index strategies:
   *  - `downsample`: single-partition window row_number — fine up to
-  *    ~10M points per series (viz inputs), simplest plan.
+  *    ~10M points per series (viz inputs), simplest plan. Inputs the
+  *    [[graft.core.LocalGate]] admits are collected once and selected
+  *    on the driver (`local`, bit-identical to the staged plan); larger
+  *    ones stage to parquet.
   *  - `downsampleRangePartitioned`: range-partition on x, sort within
   *    partitions, then a DataFrame-native contiguous index:
   *    `monotonically_increasing_id` stamps (pid, local ordinal) as rows
@@ -130,9 +139,10 @@ object Lttb {
       .withColumn("__y", col(yCol).cast("double"))
       .withColumn("__i", row_number().over(
         Window.orderBy(col("__x") +: tieBreak.map(col): _*)) - 1)
+    if (LocalGate.admitsRows(n)) return local(indexed, n, df.schema, threshold)
     // stage once — see the staging note on stage()
     val (st, _, cleanup) = stage(indexed)
-    try core(st, n, df.columns, threshold)
+    try core(st, n, df.schema, threshold)
     finally cleanup()
   }
 
@@ -253,7 +263,7 @@ object Lttb {
         .join(broadcast(offDf), "__pid")
         .withColumn("__i", col("__off") + col("__mid").bitwiseAND(lit((1L << 33) - 1)))
         .drop("__pid", "__off", "__mid")
-      core(indexed, n, df.columns, threshold)
+      core(indexed, n, df.schema, threshold)
     } finally cleanup()
   }
 
@@ -283,9 +293,9 @@ object Lttb {
     * row, so the shuffle carries ≤ threshold×partitions rows instead of
     * every interior row sorted per bucket.
     */
-  private def core(indexed: DataFrame, n: Long, cols: Array[String],
+  private def core(indexed: DataFrame, n: Long, schema: StructType,
                    threshold: Int): DataFrame = {
-    val sp = indexed.sparkSession
+    val cols = schema.fieldNames
     val bs = (n - 2).toDouble / (threshold - 2)
     val lastBucket = threshold - 3
 
@@ -324,16 +334,76 @@ object Lttb {
         (col("__px") - col("__x")) * (col("__ny") - col("__py"))), lit(0.0)))
       .groupBy(col("__b"))
       .agg(max_by(
-        struct(struct(cols.map(col): _*).as("r"), col("__i").cast("long").as("__i")),
+        struct(struct(cols.map(col).toIndexedSeq: _*).as("r"), col("__i").cast("long").as("__i")),
         struct(col("__area"), (-col("__i").cast("long")).as("__negi"))).as("s"))
       .select(col("s.r").as("r"), col("s.__i").as("__i"))
       .collect()
 
-    val outSchema = org.apache.spark.sql.types.StructType(
-      cols.map(c => indexed.schema(c)))
     val ordered = selectedRows.map(r => (r.getStruct(0), r.getLong(1)))
       .sortBy(_._2)
       .map { case (r, _) => Row.fromSeq(r.toSeq) }
-    sp.createDataFrame(sp.sparkContext.parallelize(ordered.toIndexedSeq, 1), outSchema)
+    localRelation(indexed, ordered.toIndexedSeq, schema)
   }
+
+  /** Driver-local twin of [[core]] behind [[LocalGate]]: one collect of
+    * the indexed frame (input columns + `__x`, `__y`, `__i`), then the
+    * same selection on the driver — no stage write, groupBy, broadcast
+    * join or `max_by` job. Bit-identical to `core()` step by step:
+    *  - buckets: the same `when`/`floor`/`least` arithmetic on `__i`,
+    *    so rows of a bucket are one contiguous `__i` run;
+    *  - centroids: Spark `avg` — non-null doubles summed in `__i` order
+    *    from 0.0, divided by the non-null count, null when none (the
+    *    order `core()` sums in whenever its stage reads back as one
+    *    partition, as a stage written in one parquet row group does);
+    *  - anchors: the previous and next PRESENT bucket's centroid, as
+    *    lag/lead over the centroid table;
+    *  - area: the same expression in the same operation order, null
+    *    (any null operand) coalesced to 0.0;
+    *  - argmax: Spark's double ordering (NaN greatest), ties to the
+    *    smallest `__i`, as `max_by` over `(area, -__i)`.
+    */
+  private def local(indexed: DataFrame, n: Long, schema: StructType,
+                    threshold: Int): DataFrame = {
+    val k = schema.length
+    val (xi, yi, ii) = (k, k + 1, k + 2)
+    val rows = indexed
+      .select((schema.fieldNames :+ "__x" :+ "__y" :+ "__i").map(col).toIndexedSeq: _*)
+      .collect().sortBy(_.getInt(ii))
+    val bs = (n - 2).toDouble / (threshold - 2)
+    val lastBucket = threshold - 3
+    def bucket(i: Int): Int =
+      if (i == 0) -1
+      else if (i == n - 1) lastBucket + 1
+      else math.min(math.floor((i - 1) / bs).toLong.toInt, lastBucket)
+    def num(r: Row, c: Int): Option[Double] = if (r.isNullAt(c)) None else Some(r.getDouble(c))
+    def avg(run: Range, c: Int): Option[Double] = {
+      var (s, m) = (0.0, 0L)
+      run.foreach(j => num(rows(j), c).foreach { v => s += v; m += 1 })
+      if (m == 0) None else Some(s / m)
+    }
+    // bucket() is monotone in __i: each bucket is one contiguous run
+    val bk = rows.map(r => bucket(r.getInt(ii)))
+    val starts = rows.indices.filter(j => j == 0 || bk(j) != bk(j - 1))
+    val runs = starts.zip(starts.tail :+ rows.length).map { case (a, z) => a until z }
+    val centroids = runs.map(r => (avg(r, xi), avg(r, yi)))
+    val picked = runs.indices.map { b =>
+      val (px, py) = if (b > 0) centroids(b - 1) else (None, None)
+      val (nx, ny) = if (b < runs.size - 1) centroids(b + 1) else (None, None)
+      def area(r: Row): Double = (for {
+        px <- px; py <- py; nx <- nx; ny <- ny; x <- num(r, xi); y <- num(r, yi)
+      } yield math.abs((px - nx) * (y - py) - (px - x) * (ny - py))).getOrElse(0.0)
+      // strictly greater keeps the first (smallest __i) of tied areas
+      val (_, best) = runs(b).map(j => (area(rows(j)), j)).reduceLeft { (a, c) =>
+        if (SQLOrderingUtil.compareDoubles(c._1, a._1) > 0) c else a
+      }
+      Row.fromSeq(rows(best).toSeq.take(k))
+    }
+    localRelation(indexed, picked, schema)
+  }
+
+  /** At most `threshold` selected rows as a local relation: collecting
+    * it starts no job.
+    */
+  private def localRelation(like: DataFrame, rows: Seq[Row], schema: StructType): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava, schema)
 }

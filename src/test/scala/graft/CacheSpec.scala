@@ -18,6 +18,39 @@ class CacheSpec extends SparkSpec {
     (i.toLong, Timestamp.valueOf(f"2024-01-01 00:00:$i%02d"), s"v$i", i.toString))
     .toDF("id", "ts", "name", "v_str")
 
+  // ts monotone in id so appended rows are past the watermark
+  private def tsRows(from: Int, to: Int) = (from to to).map(i =>
+    (i.toLong, Timestamp.valueOf(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"),
+      i * 1.7 - 3))
+    .toDF("id", "ts", "v")
+  private def tsRows(n: Int): org.apache.spark.sql.DataFrame = tsRows(1, n)
+
+  private def fullAgg(srcDir: String) = graft.ops.IncrementalAgg.readState(
+    graft.ops.IncrementalAgg.bucketState(
+      spark.read.parquet(s"$srcDir/t.parquet"), "ts", "1 hour", "v"))
+    .collect().map(_.toSeq).toSeq
+
+  /** Lands a sync on the source table on the first commit it sees —
+    * after the refresh's tail probe, before its data is written — then
+    * delegates every call to `inner`.
+    */
+  private class SyncMidCommit(inner: CacheProvider, sync: () => Unit) extends CacheProvider {
+    private var landed = false
+    private def land(): Unit = if (!landed) { landed = true; sync() }
+    def putEntry(key: String, df: org.apache.spark.sql.DataFrame, metaJson: String): Unit = {
+      land(); inner.putEntry(key, df, metaJson)
+    }
+    def appendEntry(key: String, tail: org.apache.spark.sql.DataFrame, metaJson: String): Unit = {
+      land(); inner.appendEntry(key, tail, metaJson)
+    }
+    def putMeta(key: String, json: String): Unit = inner.putMeta(key, json)
+    def getData(key: String) = inner.getData(key)
+    def getMeta(key: String) = inner.getMeta(key)
+    def hasEntry(key: String) = inner.hasEntry(key)
+    def delete(key: String): Unit = inner.delete(key)
+    def clear(): Unit = inner.clear()
+  }
+
   test("metadata JSON round-trips, including null watermark and conversions") {
     val full = CachedQueryMetadata(Some("2024-01-01 00:00:10"), 42L, 1700000000000L,
       Map("v_str" -> "numeric", "d\"quoted" -> "datetime"))
@@ -132,7 +165,7 @@ class CacheSpec extends SparkSpec {
   }
 
   test("memory provider: append compaction bounds the union-plan depth") {
-    val prov = new MemoryCacheProvider(compactThreshold = 2)
+    val prov = new MemoryCacheProvider
     prov.putEntry("t", eventsDf(2), "{}")
     (1 to 5).foreach(i =>
       prov.appendEntry("t", eventsDf(2 + i).filter(col("id") > 1 + i), s"""{"i":$i}"""))
@@ -233,11 +266,7 @@ class CacheSpec extends SparkSpec {
     val cacheDir = tempDir("graft-cache-aggstore")
     val mgr = new QueryCacheManager(new ParquetCacheProvider(spark, cacheDir))
     val svc = new CachedAggService(spark, srcDir, mgr)
-    // ts monotone in id so appended rows are past the watermark
-    def rows(n: Int) = (1 to n).map(i =>
-      (i.toLong, Timestamp.valueOf(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"),
-        i * 1.7 - 3))
-      .toDF("id", "ts", "v")
+    def rows(n: Int) = tsRows(n)
 
     rows(200).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
     val r1 = svc.aggregateWithCaching("t", "ts", "1 hour", "v")
@@ -267,10 +296,7 @@ class CacheSpec extends SparkSpec {
     val cacheDir = tempDir("graft-cache-histstore")
     val mgr = new QueryCacheManager(new ParquetCacheProvider(spark, cacheDir))
     val svc = new CachedAggService(spark, srcDir, mgr)
-    def rows(n: Int) = (1 to n).map(i =>
-      (i.toLong, Timestamp.valueOf(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"),
-        i * 1.7 - 3))
-      .toDF("id", "ts", "v")
+    def rows(n: Int) = tsRows(n)
 
     rows(200).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
     val r1 = svc.quantilesWithCaching("t", "ts", "1 hour", "v",
@@ -349,5 +375,114 @@ class CacheSpec extends SparkSpec {
     val (r, suggestions) = svc.queryWithConversionOptions("t", timeCol = Some("ts"))
     assert(r.df.schema("v_str").dataType.typeName == "string") // untouched
     assert(suggestions == Map("v_str" -> "numeric"))
+  }
+
+  test("memory provider: aggregate refresh survives a sync rewriting the source") {
+    val srcDir = tempDir("graft-cache-memsrc")
+    val svc = new CachedAggService(spark, srcDir, new QueryCacheManager(new MemoryCacheProvider))
+    tsRows(200).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    assert(svc.aggregateWithCaching("t", "ts", "1 hour", "v").rowCount == 200)
+    // the sync replaces the files the cached state was computed from
+    tsRows(300).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val r2 = svc.aggregateWithCaching("t", "ts", "1 hour", "v")
+    assert(r2.isIncremental && r2.rowCount == 300 && r2.newRows == 100)
+    assert(r2.df.collect().map(_.toSeq).toSeq == fullAgg(srcDir))
+  }
+
+  test("memory provider: a replaced or deleted entry releases its blocks") {
+    val prov = new MemoryCacheProvider
+    def rddId(key: String): Int = prov.getData(key).get.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case p => fail(s"entry is not a checkpointed leaf: $p")
+    }
+    def held(id: Int) = spark.sparkContext.getPersistentRDDs.contains(id)
+    prov.putEntry("t", eventsDf(3), "{}")
+    val first = rddId("t")
+    assert(held(first))
+    prov.appendEntry("t", eventsDf(5).filter(col("id") > 3), "{}")
+    val second = rddId("t")
+    assert(!held(first) && held(second))
+    assert(prov.getData("t").exists(_.count() == 5))
+    prov.putEntry("t", eventsDf(2), "{}")
+    val third = rddId("t")
+    assert(!held(second) && held(third))
+    prov.delete("t")
+    assert(!held(third) && !prov.hasEntry("t"))
+    prov.putEntry("u", eventsDf(1), "{}")
+    val fourth = rddId("u")
+    prov.clear()
+    assert(!held(fourth))
+  }
+
+  test("parquet provider: the schema is recorded at commit; a version without one still reads") {
+    val cacheDir = tempDir("graft-cache-schema")
+    val prov = new ParquetCacheProvider(spark, cacheDir)
+    prov.putEntry("t", eventsDf(4), """{"m":1}""")
+    val keyDir = new java.io.File(cacheDir, "t")
+    def schemaFile = new java.io.File(
+      keyDir.listFiles().filter(_.getName.startsWith("v-")).head, "schema.json")
+    def slices = keyDir.listFiles().filter(_.getName.startsWith("slice-")).map(_.getPath)
+    assert(schemaFile.isFile)
+    // the pinned read sees what schema inference would
+    val inferred = spark.read.parquet(slices.toIndexedSeq: _*).schema
+    assert(prov.getData("t").get.schema == inferred)
+    // an append carries the recorded schema forward
+    prov.appendEntry("t", eventsDf(6).filter(col("id") > 4), """{"m":2}""")
+    assert(schemaFile.isFile)
+    assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
+      eventsDf(6).collect().toSeq)
+    // an entry written before schemas were recorded: inference, also
+    // through an append onto it
+    assert(schemaFile.delete())
+    assert(prov.getData("t").get.schema == inferred)
+    assert(prov.getData("t").exists(_.count() == 6))
+    prov.appendEntry("t", eventsDf(7).filter(col("id") > 6), """{"m":3}""")
+    assert(!schemaFile.exists())
+    assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
+      eventsDf(7).collect().toSeq)
+  }
+
+  test("a sync landing mid-refresh is neither lost nor counted twice") {
+    val srcDir = tempDir("graft-cache-midsrc")
+    val src = s"$srcDir/t.parquet"
+    // rows later than any ts in the table, appended as a new file
+    def syncing(from: Int, to: Int) = () => tsRows(from, to).write.mode("append").parquet(src)
+    tsRows(200).write.mode("overwrite").parquet(src)
+    // the session keeps the source cached, as a dashboard does for its
+    // hot table: every refresh read goes through that cache, and a sync
+    // writing the path re-lists and re-caches it, so a sync landing
+    // after the tail probe is visible to the refresh's later reads
+    val hot = spark.read.parquet(src).cache()
+    try {
+      // cached aggregate: the sync lands inside the initial load, then
+      // inside an incremental refresh
+      val aggCache = tempDir("graft-cache-midagg")
+      def aggSvc(sync: () => Unit) = new CachedAggService(spark, srcDir,
+        new QueryCacheManager(new SyncMidCommit(new ParquetCacheProvider(spark, aggCache), sync)))
+      val a1 = aggSvc(syncing(201, 220)).aggregateWithCaching("t", "ts", "1 hour", "v")
+      assert(!a1.isIncremental && a1.rowCount == 200)
+      tsRows(221, 300).write.mode("append").parquet(src)
+      val a2 = aggSvc(syncing(301, 330)).aggregateWithCaching("t", "ts", "1 hour", "v")
+      assert(a2.isIncremental && a2.rowCount == 300 && a2.newRows == 100)
+      val a3 = aggSvc(() => ()).aggregateWithCaching("t", "ts", "1 hour", "v")
+      assert(a3.rowCount == 330 && a3.newRows == 30)
+      assert(a3.df.collect().map(_.toSeq).toSeq == fullAgg(srcDir))
+
+      // cached rows: the sync lands inside an incremental refresh
+      val rowCache = tempDir("graft-cache-midrows")
+      def rowSvc(sync: () => Unit) = new CachedQueryService(spark, srcDir,
+        new QueryCacheManager(new SyncMidCommit(new ParquetCacheProvider(spark, rowCache), sync)))
+      val q1 = rowSvc(() => ()).queryWithCaching("t", limit = 100000, timeCol = Some("ts"),
+        selectedConversions = Some(Map.empty))
+      assert(q1.rowCount == 330)
+      tsRows(331, 360).write.mode("append").parquet(src)
+      val q2 = rowSvc(syncing(361, 380)).queryWithCaching("t", timeCol = Some("ts"))
+      assert(q2.isIncremental && q2.rowCount == 360 && q2.newRows == 30)
+      assert(q2.df.count() == 360)
+      val q3 = rowSvc(() => ()).queryWithCaching("t", timeCol = Some("ts"))
+      assert(q3.rowCount == 380 && q3.newRows == 20)
+      val ids = q3.df.select("id").as[Long].collect().toSeq
+      assert(ids.sorted == (1L to 380L))
+    } finally hot.unpersist()
   }
 }

@@ -5,11 +5,11 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
 import graft.core.LocalGate
-import graft.ops.LinkGraph
+import graft.ops.{LinkGraph, Lttb}
 
-/** The driver-local kernel gate: its size rule, and one property that
-  * every gated LinkGraph op returns the same rows under the default
-  * gate as under the forced-distributed seam.
+/** The driver-local kernel gate: its size rule, and properties that
+  * every gated LinkGraph op and LTTB return the same rows under the
+  * default gate as under the forced-distributed seam.
   */
 class LocalGateSpec extends SparkSpec {
   import spark.implicits._
@@ -147,5 +147,72 @@ class LocalGateSpec extends SparkSpec {
       full.exists(_.redistribute) && full.exists(!_.redistribute) &&
       full.exists(_.seeded) && full.exists(!_.seeded) &&
       full.exists(_.prTol > 0) && full.exists(_.hitsTol > 0)
+  }
+
+  /** One generated series for `Lttb.downsample`: per row an optional
+    * x (few distinct values, so ties are common; the row id breaks
+    * them), an optional y (NaN allowed), plus the threshold and the
+    * input's partition count.
+    */
+  private case class Series(points: Seq[(Option[Double], Option[Double])],
+                            threshold: Int, parts: Int)
+
+  private val pointGen: Gen[(Option[Double], Option[Double])] = for {
+    x <- Gen.frequency(1 -> Gen.const(None), 9 -> Gen.choose(-20, 20).map(v => Some(v * 0.5)))
+    y <- Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN)),
+      10 -> Gen.choose(-1e3, 1e3).map(Some(_)))
+  } yield (x, y)
+
+  private val seriesGen: Gen[Series] = for {
+    n <- Gen.choose(5, 150)
+    points <- Gen.listOfN(n, pointGen)
+    // near 2, in between (buckets of a few rows, so a NaN area can
+    // follow a finite one inside a bucket with NaN-free anchors), near n
+    threshold <- Gen.oneOf(Gen.choose(3, 4), Gen.choose(5, n / 4 + 5), Gen.choose(n - 2, n - 1))
+    parts <- Gen.choose(1, 5)
+  } yield Series(points, threshold, parts)
+
+  private val LttbDraws = 10
+  private val LttbSeed = 7L
+
+  test("property: default gate == forced-distributed for Lttb.downsample") {
+    // a staging dir under a regular file cannot be created: a default-
+    // gate run that staged instead of taking the local kernel throws
+    val blocked = java.io.File.createTempFile("graft-lttb-nostage", "")
+    blocked.deleteOnExit()
+    def run(c: Series, stagingDir: Option[String]): Seq[String] = {
+      val df = c.points.zipWithIndex
+        .map { case ((x, y), id) => (id.toLong, x, y) }.toDF("id", "x", "y")
+        .repartition(c.parts)
+      stagingDir.foreach(spark.conf.set("graft.lttb.stagingDir", _))
+      try Lttb.downsample(df, "x", "y", c.threshold, Seq("id"))
+        .collect().map(_.toString).toSeq
+      finally spark.conf.unset("graft.lttb.stagingDir")
+    }
+    val noStage = Some(s"${blocked.getPath}/stage")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Series]
+    val prop = Prop.forAllNoShrink(seriesGen) { c =>
+      seen += c
+      val got = run(c, noStage)
+      val want = LocalGate.distributed(run(c, None))
+      Prop(got == want) :| s"downsample differs on $c"
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(LttbDraws)
+        .withInitialSeed(Seed(LttbSeed)),
+      prop)
+    assert(res.passed, res.status.toString)
+    // the blocked staging dir does bite on the distributed path
+    val staged = seen.find(c => c.threshold < c.points.size).get
+    assert(scala.util.Try(LocalGate.distributed(run(staged, noStage))).isFailure)
+    // the seed's draws reach every input class the generator names
+    def has(p: ((Option[Double], Option[Double])) => Boolean) =
+      seen.exists(_.points.exists(p))
+    assert(has(_._1.isEmpty) && has(_._2.isEmpty) && has(_._2.exists(_.isNaN)) &&
+      seen.exists(c => c.points.flatMap(_._1).distinct.size < c.points.count(_._1.isDefined)) &&
+      seen.exists(_.parts == 1) && seen.exists(_.parts == 5) &&
+      seen.exists(_.threshold <= 4) && seen.exists(c => c.threshold >= c.points.size - 2) &&
+      seen.exists(c => c.threshold > 4 && c.threshold < c.points.size - 2),
+      seen.mkString("draws:\n", "\n", ""))
   }
 }

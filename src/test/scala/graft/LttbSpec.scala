@@ -2,10 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalGate
 import graft.ops.Lttb
 
 class LttbSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` under the default gate (the driver-local kernel at
+    * these sizes) and again with the distributed path forced.
+    */
+  private def onBothPaths(body: => Unit): Unit = {
+    body
+    LocalGate.distributed(body)
+  }
 
   /** Sequential implementation of the SAME bucket-average-anchor
     * variant, to pin the distributed plan's exact semantics.
@@ -34,16 +43,20 @@ class LttbSpec extends SparkSpec {
     val xs = (0 until 200).map(_.toDouble).toArray
     val ys = xs.map(x => math.sin(x / 7) * 100 + (if (x.toInt % 37 == 0) 500 else 0))
     val df = xs.zip(ys).toSeq.toDF("x", "y")
-    val got = Lttb.downsample(df, "x", "y", 20).select("x").as[Double].collect()
-    val want = lttbSeq(xs, ys, 20).map(xs)
-    assert(got.toSeq == want)
+    onBothPaths {
+      val got = Lttb.downsample(df, "x", "y", 20).select("x").as[Double].collect()
+      val want = lttbSeq(xs, ys, 20).map(xs)
+      assert(got.toSeq == want)
+    }
   }
 
   test("keeps first and last, output size == threshold") {
     val df = (0 until 1000).map(i => (i.toDouble, math.cos(i / 11.0))).toDF("x", "y")
-    val got = Lttb.downsample(df, "x", "y", 50).select("x").as[Double].collect()
-    assert(got.length == 50)
-    assert(got.head == 0.0 && got.last == 999.0)
+    onBothPaths {
+      val got = Lttb.downsample(df, "x", "y", 50).select("x").as[Double].collect()
+      assert(got.length == 50)
+      assert(got.head == 0.0 && got.last == 999.0)
+    }
   }
 
   test("range-partitioned index path == single-window path") {
@@ -68,7 +81,7 @@ class LttbSpec extends SparkSpec {
   test("staging dirs are cleaned up, including on the threshold>=n early return") {
     val stagingBase = tempDir("graft_lttb_stage")
     spark.conf.set("graft.lttb.stagingDir", stagingBase)
-    try {
+    try onBothPaths {
       val df = (0 until 500).map(i => (i.toDouble, math.sin(i / 7.0))).toDF("x", "y")
       Lttb.downsample(df, "x", "y", 50).collect()
       Lttb.downsampleRangePartitioned(df, "x", "y", 50).collect()
