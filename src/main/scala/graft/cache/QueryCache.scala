@@ -1,13 +1,13 @@
 package graft.cache
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.core.DocFiles
 
 /** Query-result cache: storage providers + the manager that keys data
   * and metadata by (table, cache_key).
@@ -62,9 +62,10 @@ trait CacheProvider {
   * across versions) + `dir/<key>/v-<n>/manifest` (newline-separated
   * slice names this version reads) + `dir/<key>/v-<n>/schema.json` +
   * `dir/<key>/v-<n>/meta.json` + `dir/<key>/CURRENT` (one line naming
-  * the committed version). Commit: (1) write the new slice fully;
-  * (2) write manifest + schema + meta;
-  * (3) swap CURRENT via temp + delete + rename; (4) delete version
+  * the committed version). Every small file is a [[DocFiles]]
+  * document. Commit: (1) write the new slice fully; (2) write
+  * manifest + schema + meta; (3) swap CURRENT (the old pointer is
+  * parked aside until the new one is in); (4) delete version
   * dirs and slices the new manifest no longer references. Readers
   * resolve CURRENT and fall back to the highest COMPLETE version
   * (manifest slices all `_SUCCESS` + meta.json present), so a crash
@@ -109,38 +110,24 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   private def manifestPath(vdir: Path) = new Path(vdir, "manifest")
   private def schemaPath(vdir: Path) = new Path(vdir, "schema.json")
 
+  private def metaPath(vdir: Path) = new Path(vdir, "meta.json")
+
   private def schemaOf(vdir: Path): Option[StructType] =
-    Some(schemaPath(vdir)).filter(fs.exists)
-      .map(p => DataType.fromJson(readSmall(p)).asInstanceOf[StructType])
+    DocFiles.read(fs, schemaPath(vdir)).map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The parquet dirs a version reads: its manifest's slices, or the
     * legacy in-version `data` dir when no manifest exists.
     */
-  private def slicesOf(key: String, vdir: Path): Seq[Path] = {
-    val mp = manifestPath(vdir)
-    if (fs.exists(mp))
-      readSmall(mp).split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-        .map(new Path(keyDir(key), _))
-    else Seq(new Path(vdir, "data"))
-  }
+  private def slicesOf(key: String, vdir: Path): Seq[Path] =
+    DocFiles.read(fs, manifestPath(vdir)) match {
+      case Some(m) =>
+        m.split('\n').map(_.trim).filter(_.nonEmpty).toSeq.map(new Path(keyDir(key), _))
+      case None => Seq(new Path(vdir, "data"))
+    }
 
   private def isComplete(key: String, vdir: Path): Boolean =
-    fs.exists(new Path(vdir, "meta.json")) &&
+    DocFiles.exists(fs, metaPath(vdir)) &&
       slicesOf(key, vdir).forall(s => fs.exists(new Path(s, "_SUCCESS")))
-
-  private def writeSmall(p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readSmall(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
 
   /** The committed version dir: pointer first, highest complete
     * version as crash recovery for an interrupted swap.
@@ -148,12 +135,9 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   private def resolve(key: String): Option[(Long, Path)] = {
     val kd = keyDir(key)
     if (!fs.exists(kd)) return None
-    val fromPtr =
-      if (fs.exists(currentPtr(key))) {
-        val name = readSmall(currentPtr(key)).trim
-        parseVersion(name).map(n => (n, new Path(kd, name)))
-          .filter { case (_, p) => isComplete(key, p) }
-      } else None
+    val fromPtr = DocFiles.read(fs, currentPtr(key)).map(_.trim)
+      .flatMap(name => parseVersion(name).map(n => (n, new Path(kd, name))))
+      .filter { case (_, p) => isComplete(key, p) }
     fromPtr.orElse {
       fs.listStatus(kd).toSeq
         .flatMap(s => parseVersion(s.getPath.getName).map(_ -> s.getPath))
@@ -179,13 +163,10 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   private def commitVersion(key: String, next: Long, slices: Seq[String],
                             schema: Option[StructType], metaJson: String): Unit = {
     val vdir = new Path(keyDir(key), versionName(next))
-    writeSmall(manifestPath(vdir), slices.mkString("\n"))
-    schema.foreach(st => writeSmall(schemaPath(vdir), st.json))
-    writeSmall(new Path(vdir, "meta.json"), metaJson)
-    val tmp = new Path(keyDir(key), "CURRENT.tmp")
-    writeSmall(tmp, versionName(next))
-    if (fs.exists(currentPtr(key))) fs.delete(currentPtr(key), false)
-    fs.rename(tmp, currentPtr(key))
+    DocFiles.write(fs, manifestPath(vdir), slices.mkString("\n"))
+    schema.foreach(st => DocFiles.write(fs, schemaPath(vdir), st.json))
+    DocFiles.write(fs, metaPath(vdir), metaJson)
+    DocFiles.write(fs, currentPtr(key), versionName(next))
     val keep = slices.toSet
     fs.listStatus(keyDir(key)).foreach { s =>
       val name = s.getPath.getName
@@ -209,7 +190,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
   override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
     resolve(key) match {
       case None => putEntry(key, tail, metaJson)
-      case Some((_, vdir)) if !fs.exists(manifestPath(vdir)) =>
+      case Some((_, vdir)) if !DocFiles.exists(fs, manifestPath(vdir)) =>
         // legacy full-dir entry: one-time O(total) migration rewrite
         putEntry(key, getData(key).get.unionByName(tail), metaJson)
       case Some((cur, vdir)) =>
@@ -224,16 +205,9 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     }
 
   override def putMeta(key: String, json: String): Unit =
-    resolve(key).foreach { case (_, vdir) =>
-      // metadata-only update: in-place temp + rename inside the
-      // committed version (data unchanged; a crash mid-swap degrades
-      // the entry to incomplete = cache miss, never to a wrong pairing)
-      val p = new Path(vdir, "meta.json")
-      val tmp = new Path(vdir, "meta.json.tmp")
-      writeSmall(tmp, json)
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
-    }
+    // metadata-only update inside the committed version (data
+    // unchanged): a crash mid-swap leaves the old meta or the new one
+    resolve(key).foreach { case (_, vdir) => DocFiles.write(fs, metaPath(vdir), json) }
 
   override def getData(key: String): Option[DataFrame] =
     resolve(key).map { case (_, p) =>
@@ -242,7 +216,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     }
 
   override def getMeta(key: String): Option[String] =
-    resolve(key).map { case (_, p) => readSmall(new Path(p, "meta.json")) }
+    resolve(key).flatMap { case (_, p) => DocFiles.read(fs, metaPath(p)) }
 
   override def hasEntry(key: String): Boolean = resolve(key).isDefined
 
@@ -261,7 +235,8 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     * its pointer swap strands a `v-*`; one interrupted during GC
     * strands older complete versions), slice dirs the committed
     * manifest does not reference (an `appendEntry` interrupted after
-    * its tail write), leftover `CURRENT.tmp` files, and key dirs with
+    * its tail write), pointer temp and aside copies an interrupted swap
+    * left ([[DocFiles.isDebris]]), and key dirs with
     * no complete version at all. Idempotent; committed entries and
     * pointers are never touched, so concurrent readers are unaffected.
     *
@@ -301,7 +276,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
               case Some(v) => v != keepV
               case None => parseSlice(name) match {
                 case Some(_) => !keepSlices.contains(name)
-                case None => name == "CURRENT.tmp"
+                case None => DocFiles.isDebris(fs, s.getPath)
               }
             }
             if (stray && oldEnough(s)) { fs.delete(s.getPath, true); removed += 1 }
@@ -377,38 +352,20 @@ case class CachedQueryMetadata(
     selectedConversions: Map[String, String] = Map.empty)
 
 object CachedQueryMetadata {
-  private def esc(s: String) =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+  def toJson(m: CachedQueryMetadata): String = DocFiles.obj(
+    "last_timestamp" -> m.lastTimestamp, "row_count" -> m.rowCount,
+    "cached_at" -> m.cachedAtMillis, "selected_conversions" -> m.selectedConversions)
 
-  def toJson(m: CachedQueryMetadata): String = {
-    val ts = m.lastTimestamp.map(v => s""""${esc(v)}"""").getOrElse("null")
-    val conv = m.selectedConversions.toSeq.sorted
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ", ", "}")
-    s"""{"last_timestamp": $ts, "row_count": ${m.rowCount}, """ +
-      s""""cached_at": ${m.cachedAtMillis}, "selected_conversions": $conv}"""
-  }
-
-  def fromJson(json: String): Option[CachedQueryMetadata] = {
-    val tsRe = """"last_timestamp":\s*(?:null|"((?:[^"\\]|\\.)*)")""".r
-    val rcRe = """"row_count":\s*(-?\d+)""".r
-    val caRe = """"cached_at":\s*(-?\d+)""".r
-    val convBlockRe = """"selected_conversions":\s*\{([^}]*)\}""".r
-    val pairRe = """"((?:[^"\\]|\\.)*)":\s*"((?:[^"\\]|\\.)*)"""".r
+  def fromJson(json: String): Option[CachedQueryMetadata] =
     for {
-      rc <- rcRe.findFirstMatchIn(json).map(_.group(1).toLong)
-      ca <- caRe.findFirstMatchIn(json).map(_.group(1).toLong)
+      rc <- DocFiles.num(json, "row_count")
+      ca <- DocFiles.num(json, "cached_at")
     } yield CachedQueryMetadata(
-      lastTimestamp = tsRe.findFirstMatchIn(json)
-        .flatMap(m => Option(m.group(1))).map(unesc),
+      lastTimestamp = DocFiles.str(json, "last_timestamp"),
       rowCount = rc,
       cachedAtMillis = ca,
-      selectedConversions = convBlockRe.findFirstMatchIn(json)
-        .map(m => pairRe.findAllMatchIn(m.group(1))
-          .map(p => unesc(p.group(1)) -> unesc(p.group(2))).toMap)
-        .getOrElse(Map.empty))
-  }
+      selectedConversions = DocFiles.strs(json, "selected_conversions")
+        .grouped(2).collect { case Seq(k, v) => k -> v }.toMap)
 }
 
 /** Cache manager: (table, optional cache_key) → data + metadata, with

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.DocFiles
 
 /** Versioned parquet snapshot store with an atomic pointer and a
   * durable last-committed-batch id — the sink target behind the
@@ -23,15 +23,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * line text file naming the committed snapshot.
   *
   * Commit protocol: (1) write `snap-<id>` fully (a failed earlier
-  * attempt of the same id is overwritten); (2) swap `CURRENT` via
-  * temp-file + delete + rename; (3) delete older snapshots. Readers
-  * resolve `CURRENT` first and fall back to the highest snapshot with
-  * a `_SUCCESS` marker, so every crash window is covered: before (2)
-  * the old snapshot is still current (and, with no old snapshot, the
-  * new COMPLETE one is found by the fallback scan — the batch is then
-  * correctly treated as committed when its id replays); mid-swap the
-  * fallback scan resolves the newest complete snapshot; after (2) the
-  * new snapshot is current and survivors of (3) are ignored.
+  * attempt of the same id is overwritten); (2) swap `CURRENT` with
+  * [[DocFiles.write]] (the old pointer is parked aside until the new
+  * one is in); (3) delete older snapshots. Readers resolve `CURRENT`
+  * (or its parked copy) first and fall back to the highest snapshot
+  * with a `_SUCCESS` marker, so every crash window is covered: before
+  * (2) the old snapshot is still current (and, with no old snapshot,
+  * the new COMPLETE one is found by the fallback scan — the batch is
+  * then correctly treated as committed when its id replays); mid-swap
+  * the parked pointer still names the old snapshot; after (2) the new
+  * snapshot is current and survivors of (3) are ignored.
   *
   * Genuine IO errors propagate — a missing directory is "no state
   * yet", but a read failure is never silently treated as such (an
@@ -54,27 +55,15 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     if (name.startsWith("snap-")) name.stripPrefix("snap-").toLongOption
     else None
 
-  private def readSmall(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
   /** The committed snapshot: the pointer when it resolves, else the
     * highest COMPLETE (`_SUCCESS`-marked) snapshot — crash recovery
     * for a swap that was interrupted mid-protocol.
     */
   private def resolve(): Option[(Long, Path)] = {
     if (!fs.exists(root)) return None
-    val fromPtr =
-      if (fs.exists(currentPtr)) {
-        val name = readSmall(currentPtr).trim
-        parseId(name).map(id => (id, new Path(root, name)))
-          .filter { case (_, p) => fs.exists(p) }
-      } else None
+    val fromPtr = DocFiles.read(fs, currentPtr).map(_.trim)
+      .flatMap(name => parseId(name).map(id => (id, new Path(root, name))))
+      .filter { case (_, p) => fs.exists(p) }
     fromPtr.orElse {
       fs.listStatus(root).toSeq
         .flatMap(s => parseId(s.getPath.getName).map(_ -> s.getPath))
@@ -101,12 +90,7 @@ class SnapshotStore(spark: SparkSession, dir: String) {
   def commit(df: DataFrame, batchId: Long): Unit = {
     val snap = new Path(root, snapName(batchId))
     df.write.mode("overwrite").parquet(snap.toString)
-    val tmp = new Path(root, "CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(snapName(batchId).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(currentPtr)) fs.delete(currentPtr, false)
-    fs.rename(tmp, currentPtr)
+    DocFiles.write(fs, currentPtr, snapName(batchId))
     fs.listStatus(root).foreach { s =>
       if (parseId(s.getPath.getName).exists(_ != batchId))
         fs.delete(s.getPath, true)
@@ -116,7 +100,8 @@ class SnapshotStore(spark: SparkSession, dir: String) {
   /** Garbage-collect crash debris: snapshots OTHER than the committed
     * one (a commit interrupted between write and pointer swap strands
     * its half-written `snap-*`; step (3) of a crashed commit strands
-    * older complete ones) plus a leftover `CURRENT.tmp`. Idempotent;
+    * older complete ones) plus pointer temp and aside copies an
+    * interrupted swap left ([[DocFiles.isDebris]]). Idempotent;
     * never touches the committed snapshot or the pointer, so readers
     * are unaffected. `graceMillis` (default 1 h) spares debris young
     * enough to be an IN-FLIGHT commit that has not swapped its pointer
@@ -140,7 +125,7 @@ class SnapshotStore(spark: SparkSession, dir: String) {
       val name = s.getPath.getName
       val stray = parseId(name) match {
         case Some(id) => !keep.contains(id)
-        case None => name == "CURRENT.tmp"
+        case None => DocFiles.isDebris(fs, s.getPath)
       }
       if (stray && newestMtime(s.getPath) <= cutoff) {
         fs.delete(s.getPath, true); removed += 1

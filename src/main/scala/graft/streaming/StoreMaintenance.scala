@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.DocFiles
+
 /** The batch-partitioned store behind the streaming ingest bodies —
   * the seen-hash store ([[IncrementalStream.dedupBatch]]), the MinHash
   * signature index ([[IncrementalStream.nearDupBatch]],
@@ -120,28 +122,18 @@ object StoreMaintenance {
 
   /** Manifest of a consolidated partition: the source dir names it
     * replaced (for crash recovery) and the largest real batch id it
-    * covers (for retention). Hand-rolled JSON, SyncLogRepo-style.
+    * covers (for retention). A [[DocFiles]] document.
     */
   private[streaming] case class Manifest(sources: Seq[String], maxSourceId: Long)
 
-  private def writeManifest(fs: FileSystem, dir: Path, m: Manifest): Unit = {
-    val json = s"""{"sources": [${m.sources.map(s => "\"" + s + "\"").mkString(", ")}], "maxSourceId": ${m.maxSourceId}}"""
-    val out = fs.create(new Path(dir, ManifestName), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeManifest(fs: FileSystem, dir: Path, m: Manifest): Unit =
+    DocFiles.write(fs, new Path(dir, ManifestName),
+      DocFiles.obj("sources" -> m.sources, "maxSourceId" -> m.maxSourceId))
 
-  private[streaming] def readManifest(fs: FileSystem, dir: Path): Option[Manifest] = {
-    val p = new Path(dir, ManifestName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val json = try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes); new String(bytes, "UTF-8")
-    } finally in.close()
-    val sources = "\"(batch=[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-    val maxId = "\"maxSourceId\": (-?\\d+)".r.findFirstMatchIn(json).map(_.group(1).toLong)
-    maxId.map(Manifest(sources, _))
-  }
+  private[streaming] def readManifest(fs: FileSystem, dir: Path): Option[Manifest] =
+    DocFiles.read(fs, new Path(dir, ManifestName)).flatMap { json =>
+      DocFiles.num(json, "maxSourceId").map(Manifest(DocFiles.strs(json, "sources"), _))
+    }
 
   /** Finish any crashed compaction: a consolidated partition's
     * manifest lists the source dirs it replaced; any still present

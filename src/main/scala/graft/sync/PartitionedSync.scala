@@ -29,9 +29,14 @@ import org.apache.spark.sql.functions._
   * Crash semantics: dynamic overwrite commits per partition, so a
   * crash mid-write can leave some affected partitions new and others
   * old — unlike the whole-table swap this is not atomic across
-  * partitions. The sync contract absorbs it: the watermark advances
-  * only AFTER a successful merge, so a replay re-merges the same tail
-  * and keep-latest-per-key is idempotent.
+  * partitions. The watermark advances only AFTER a successful merge,
+  * so a replay re-merges the same tail, and keep-latest-per-key is
+  * idempotent. That covers a crash between partitions, not one inside
+  * a partition's commit: Spark's `HadoopMapReduceCommitProtocol`
+  * commits each partition by deleting the live dir, then renaming the
+  * staged one in. A crash between the two loses that partition's rows
+  * that are not in the fresh tail, and a replay cannot bring them
+  * back (open: ROADMAP item 4).
   *
   * Bucket values must render as path-safe strings (digits, letters,
   * `.`/`_`/`-`, e.g. `date_format(ts, 'yyyy-MM')`) — they become

@@ -1,9 +1,9 @@
 package graft.sync
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.DocFiles
 
 /** Watermark / checkpoint state for batch incremental sync.
   *
@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * partial progress) — a JSON state file keyed by table.
   *
   * Implemented over the Hadoop FileSystem API so the same code works
-  * on local FS, HDFS, or an object store; writes go through a temp
-  * file + atomic rename (the cluster-safe equivalent of the
-  * reference's overwrite).
+  * on local FS, HDFS, or an object store; every document is written
+  * and read through [[DocFiles]] (staged write + checked atomic
+  * replace), so a crash mid-save leaves the old value or the new one.
   */
 class StateStore(spark: SparkSession, storePath: String) {
 
@@ -23,38 +23,13 @@ class StateStore(spark: SparkSession, storePath: String) {
 
   private def path(table: String) = new Path(storePath, s"$table.state.json")
 
-  private def esc(s: String) =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
   /** Save the last-synced watermark value for a table. */
-  def saveWatermark(table: String, value: String): Unit = {
-    val p = path(table)
-    val tmp = new Path(storePath, s".${table}.state.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"table": "${esc(table)}", "last_value": "${esc(value)}"}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+  def saveWatermark(table: String, value: String): Unit =
+    DocFiles.write(fs, path(table), DocFiles.obj("table" -> table, "last_value" -> value))
 
   /** Load the last-synced watermark, or None on first sync. */
-  def loadWatermark(table: String): Option[String] = {
-    val p = path(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, StandardCharsets.UTF_8)
-      } finally in.close()
-      """"last_value":\s*"((?:[^"\\]|\\.)*)"""".r
-        .findFirstMatchIn(body)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    }
-  }
+  def loadWatermark(table: String): Option[String] =
+    DocFiles.read(fs, path(table)).flatMap(DocFiles.str(_, "last_value"))
 
   // ---- schema mapping versions (sync_engine.py:589 save_schema_mapping /
   // load_schema_mapping): one file per (table, version) + a latest
@@ -65,47 +40,25 @@ class StateStore(spark: SparkSession, storePath: String) {
   private def latestPath(table: String) =
     new Path(storePath, s"$table.schema.LATEST")
 
-  private def writeFile(p: Path, body: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
-
-  private def readFile(p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-
   /** Save a table's schema (e.g. `df.schema.json`) under a version and
     * move the latest pointer.
     */
   def saveSchema(table: String, schemaJson: String, version: String): Unit = {
-    writeFile(schemaPath(table, version), schemaJson)
-    writeFile(latestPath(table), version)
+    DocFiles.write(fs, schemaPath(table, version), schemaJson)
+    DocFiles.write(fs, latestPath(table), version)
   }
 
   /** Load a schema by version (default: latest). */
   def loadSchema(table: String, version: Option[String] = None): Option[String] =
-    version.orElse(readFile(latestPath(table)))
-      .flatMap(v => readFile(schemaPath(table, v)))
+    version.orElse(DocFiles.read(fs, latestPath(table)))
+      .flatMap(v => DocFiles.read(fs, schemaPath(table, v)))
 
   /** All saved versions for a table, sorted. */
-  def schemaVersions(table: String): Seq[String] = {
-    val dir = new Path(storePath)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+  def schemaVersions(table: String): Seq[String] =
+    DocFiles.names(fs, new Path(storePath))
       .filter(n => n.startsWith(s"$table.schema.") && n.endsWith(".json"))
       .map(_.stripPrefix(s"$table.schema.").stripSuffix(".json"))
       .sorted
-  }
 
   /** True iff `schemaJson` differs from the latest saved version —
     * the sync engine's drift check before an incremental run.
@@ -126,39 +79,29 @@ class StateStore(spark: SparkSession, storePath: String) {
     */
   def savePartialProgress(table: String, rowsProcessed: Long,
                           lastRowId: Long): Unit =
-    writeFile(progressPath(table),
-      s"""{"table": "${esc(table)}", "rows_processed": $rowsProcessed, """ +
-        s""""last_row_id": $lastRowId}""")
+    DocFiles.write(fs, progressPath(table), DocFiles.obj("table" -> table,
+      "rows_processed" -> rowsProcessed, "last_row_id" -> lastRowId))
 
   /** (rowsProcessed, lastRowId) of an interrupted sync, or None. */
-  def loadPartialProgress(table: String): Option[(Long, Long)] = {
-    val rp = """"rows_processed":\s*(-?\d+)""".r
-    val lr = """"last_row_id":\s*(-?\d+)""".r
-    readFile(progressPath(table)).flatMap { body =>
+  def loadPartialProgress(table: String): Option[(Long, Long)] =
+    DocFiles.read(fs, progressPath(table)).flatMap { body =>
       for {
-        r <- rp.findFirstMatchIn(body).map(_.group(1).toLong)
-        l <- lr.findFirstMatchIn(body).map(_.group(1).toLong)
+        r <- DocFiles.num(body, "rows_processed")
+        l <- DocFiles.num(body, "last_row_id")
       } yield (r, l)
     }
-  }
 
   /** Drop the progress record after a sync completes. */
-  def clearPartialProgress(table: String): Unit = {
-    val p = progressPath(table)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
+  def clearPartialProgress(table: String): Unit =
+    DocFiles.delete(fs, progressPath(table))
 
   /** Snapshot all table states (the reference's checkpoint). */
-  def checkpoint(): Map[String, String] = {
-    val dir = new Path(storePath)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
+  def checkpoint(): Map[String, String] =
+    DocFiles.names(fs, new Path(storePath))
       .filter(_.endsWith(".state.json"))
       .map(_.stripSuffix(".state.json"))
       .flatMap(t => loadWatermark(t).map(t -> _))
       .toMap
-  }
 
   /** Restore a previously taken checkpoint (the reference's rollback). */
   def rollback(state: Map[String, String]): Unit =

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.core.DocFiles
+
 /** Cross-process sync mutex: a lease file with owner, pid, and a
   * heartbeat, so two sync drivers pointed at the same state/target
   * directory cannot interleave a parquet overwrite with a watermark
@@ -55,16 +57,12 @@ class SyncLease(spark: SparkSession, storePath: String, val owner: String,
 
   private def pid: Long = ProcessHandle.current().pid()
 
-  private def esc(s: String) =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
   private def writeLease(acquiredMs: Long): Unit = {
     // exclusive create: overwrite = false throws if the file appeared
     // between our check and now — the loser of an acquire race fails here
     val out = fs.create(leasePath, false)
-    try out.write(
-      (s"""{"owner": "${esc(owner)}", "pid": $pid, """ +
-        s""""acquired_ms": $acquiredMs}""").getBytes(StandardCharsets.UTF_8))
+    try out.write(DocFiles.obj("owner" -> owner, "pid" -> pid, "acquired_ms" -> acquiredMs)
+      .getBytes(StandardCharsets.UTF_8))
     finally out.close()
     // heartbeat = mtime, under the injectable clock (tests included)
     fs.setTimes(leasePath, nowMillis(), -1)
@@ -72,26 +70,17 @@ class SyncLease(spark: SparkSession, storePath: String, val owner: String,
 
   /** (owner, pid, heartbeatMs) of the current lease file, if any.
     * The heartbeat is the lease file's modification time. The file can
-    * vanish BETWEEN the exists/stat/open steps (a fenced takeover's
-    * rename, a release) — that is simply "no lease", never a crash.
+    * vanish BETWEEN the stat and the read (a fenced takeover's rename, a
+    * release) — that is simply "no lease", never a crash.
     */
   def holder: Option[(String, Long, Long)] =
     try {
-      if (!fs.exists(leasePath)) None
-      else {
-        val status = fs.getFileStatus(leasePath)
-        val in = fs.open(leasePath)
-        val body = try {
-          val bytes = new Array[Byte](status.getLen.toInt)
-          in.readFully(bytes)
-          new String(bytes, StandardCharsets.UTF_8)
-        } finally in.close()
-        for {
-          o <- """"owner":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(body)
-            .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-          p <- """"pid":\s*(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-        } yield (o, p, status.getModificationTime)
-      }
+      val heartbeat = fs.getFileStatus(leasePath).getModificationTime
+      for {
+        body <- DocFiles.read(fs, leasePath)
+        o <- DocFiles.str(body, "owner")
+        p <- DocFiles.num(body, "pid")
+      } yield (o, p, heartbeat)
     } catch { case _: java.io.FileNotFoundException => None }
 
   /** True iff this owner holds the lease after the call. Re-acquiring

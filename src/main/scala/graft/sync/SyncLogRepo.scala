@@ -1,10 +1,11 @@
 package graft.sync
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.DocFiles
 
 /** One sync run's audit record (models/sync_log.py `SyncLog`). */
 case class SyncLogEntry(
@@ -29,14 +30,15 @@ case class SyncLogStats(
   * listing, per-table statistics, and retention cleanup.
   *
   * Spark shape: an append-only directory of tiny JSON records on the
-  * Hadoop filesystem (the StateStore pattern — works on local FS,
-  * HDFS, object stores; no database dependency, no coordination).
-  * Each state transition WRITES A NEW IMMUTABLE FILE
-  * `<syncId>.<seq>.json` via temp + atomic rename; the highest seq per
-  * sync id is that run's current state, so "update" never rewrites in
-  * place and concurrent writers on different runs never conflict. The
-  * log is metadata (one record per sync run, not per row) — listing it
-  * driver-side is bounded; `toDF` exposes it for SQL.
+  * Hadoop filesystem, written and read through [[DocFiles]] — works on
+  * local FS, HDFS, object stores; no database dependency, no
+  * coordination. Each state transition WRITES A NEW IMMUTABLE FILE
+  * `<syncId>.<seq>.json` via a staged write and a checked atomic
+  * replace; the highest seq per sync id is that run's current state,
+  * so "update" never rewrites in place and concurrent writers on
+  * different runs never conflict. The log is metadata (one record per
+  * sync run, not per row) — listing it driver-side is bounded; `toDF`
+  * exposes it for SQL.
   */
 class SyncLogRepo(spark: SparkSession, logDir: String,
                   nowMillis: () => Long = () => System.currentTimeMillis()) {
@@ -44,54 +46,29 @@ class SyncLogRepo(spark: SparkSession, logDir: String,
   private def fs: FileSystem =
     new Path(logDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def esc(s: String) =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+  private def toJson(e: SyncLogEntry): String = DocFiles.obj(
+    "sync_id" -> e.syncId, "table_name" -> e.table, "sync_type" -> e.syncType,
+    "status" -> e.status, "start_millis" -> e.startMillis,
+    "end_millis" -> e.endMillis, "total_rows" -> e.totalRows,
+    "error_message" -> e.errorMessage)
 
-  private def toJson(e: SyncLogEntry): String = {
-    val end = e.endMillis.map(_.toString).getOrElse("null")
-    val err = e.errorMessage.map(m => s""""${esc(m)}"""").getOrElse("null")
-    s"""{"sync_id": "${esc(e.syncId)}", "table_name": "${esc(e.table)}", """ +
-      s""""sync_type": "${esc(e.syncType)}", "status": "${esc(e.status)}", """ +
-      s""""start_millis": ${e.startMillis}, "end_millis": $end, """ +
-      s""""total_rows": ${e.totalRows}, "error_message": $err}"""
-  }
-
-  private def strField(json: String, name: String): Option[String] =
-    (s""""$name":\\s*(?:null|"((?:[^"\\\\]|\\\\.)*)")""").r
-      .findFirstMatchIn(json).flatMap(m => Option(m.group(1))).map(unesc)
-  private def longField(json: String, name: String): Option[Long] =
-    (s""""$name":\\s*(-?\\d+)""").r.findFirstMatchIn(json).map(_.group(1).toLong)
-
-  private def fromJson(json: String): Option[SyncLogEntry] =
+  private def fromJson(json: String): Option[SyncLogEntry] = {
+    import DocFiles.{num, str}
     for {
-      id <- strField(json, "sync_id")
-      table <- strField(json, "table_name")
-      tpe <- strField(json, "sync_type")
-      status <- strField(json, "status")
-      start <- longField(json, "start_millis")
-      rows <- longField(json, "total_rows")
+      id <- str(json, "sync_id")
+      table <- str(json, "table_name")
+      tpe <- str(json, "sync_type")
+      status <- str(json, "status")
+      start <- num(json, "start_millis")
+      rows <- num(json, "total_rows")
     } yield SyncLogEntry(id, table, tpe, status, start,
-      longField(json, "end_millis"), rows, strField(json, "error_message"))
-
-  private def write(e: SyncLogEntry, seq: Int): Unit = {
-    val p = new Path(logDir, s"${e.syncId}.$seq.json")
-    val tmp = new Path(logDir, s".${e.syncId}.$seq.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(toJson(e).getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
+      num(json, "end_millis"), rows, str(json, "error_message"))
   }
 
-  private def readFile(p: Path): Option[String] = {
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      Some(new String(bytes, StandardCharsets.UTF_8))
-    } finally in.close()
-  }
+  private def path(syncId: String, seq: Int) = new Path(logDir, s"$syncId.$seq.json")
+
+  private def write(e: SyncLogEntry, seq: Int): Unit =
+    DocFiles.write(fs, path(e.syncId, seq), toJson(e))
 
   /** Record a run starting; returns the "running" entry to pass to
     * [[logComplete]]/[[logFailure]] (reference `create`).
@@ -136,21 +113,17 @@ class SyncLogRepo(spark: SparkSession, logDir: String,
   }
 
   /** Current state of every run: highest seq per sync id wins. */
-  def entries(): Seq[SyncLogEntry] = {
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".json") && !s.getPath.getName.startsWith("."))
-      .flatMap { s =>
-        val parts = s.getPath.getName.stripSuffix(".json").split('.')
-        parts.lastOption.flatMap(_.toIntOption)
-          .flatMap(seq => readFile(s.getPath).flatMap(fromJson).map(seq -> _))
+  def entries(): Seq[SyncLogEntry] =
+    DocFiles.names(fs, new Path(logDir))
+      .filter(_.endsWith(".json"))
+      .flatMap { n =>
+        n.stripSuffix(".json").split('.').lastOption.flatMap(_.toIntOption).flatMap(seq =>
+          DocFiles.read(fs, new Path(logDir, n)).flatMap(fromJson).map(seq -> _))
       }
       .groupBy(_._2.syncId)
       .values.map(_.maxBy(_._1)._2)
       .toSeq
       .sortBy(e => (e.startMillis, e.syncId))
-  }
 
   /** Fetch a run's current state by id (reference `get_by_sync_id`). */
   def getBySyncId(syncId: String): Option[SyncLogEntry] =
@@ -184,12 +157,7 @@ class SyncLogRepo(spark: SparkSession, logDir: String,
     */
   def deleteOldLogs(olderThanMillis: Long): Int = {
     val old = entries().filter(_.startMillis < olderThanMillis)
-    old.foreach { e =>
-      Seq(0, 1).foreach { seq =>
-        val p = new Path(logDir, s"${e.syncId}.$seq.json")
-        if (fs.exists(p)) fs.delete(p, false)
-      }
-    }
+    old.foreach(e => Seq(0, 1).foreach(seq => DocFiles.delete(fs, path(e.syncId, seq))))
     old.size
   }
 

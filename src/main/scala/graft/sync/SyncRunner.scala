@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.DocFiles
+
 /** Engine-side sync orchestration: one cycle per configured table.
   *
   * Reference: src/oracle_duckdb_sync/application/sync_service.py
@@ -37,42 +39,49 @@ class SyncRunner(spark: SparkSession,
   private def fs = new Path(targetDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Where [[writeTarget]] parks the live target during its swap. */
-  private def asidePath(cfg: TableConfig) =
-    new Path(targetDir, s".${cfg.targetTable}.parquet.old")
-
-  private def rename(from: Path, to: Path): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(s"rename $from -> $to failed")
-
-  /** Whether a live target exists — after putting back one that a
-    * swap interrupted between its two renames left parked aside, so
-    * the cycle stays incremental instead of silently re-pulling.
+  /** Whether a live target exists — after putting back one that an
+    * interrupted swap left parked aside, so the cycle stays incremental
+    * instead of silently re-pulling.
     */
-  private def targetExists(cfg: TableConfig): Boolean = {
-    val p = new Path(targetPath(cfg))
-    if (!fs.exists(p) && fs.exists(asidePath(cfg))) rename(asidePath(cfg), p)
-    fs.exists(p)
-  }
+  private def targetExists(cfg: TableConfig): Boolean =
+    DocFiles.restore(fs, new Path(targetPath(cfg)))
 
   /** Read the current synced target (after at least one sync). */
   def target(cfg: TableConfig): DataFrame = spark.read.parquet(targetPath(cfg))
 
-  private def writeTarget(cfg: TableConfig, df: DataFrame): Unit = {
-    // temp + swap: an incremental merge plan reads the live target.
-    // The live target is renamed aside, not deleted, and dropped only
-    // once the new one is in place: at every crash point a complete
-    // target sits at the live path or at the aside path
-    val tmp = new Path(targetDir, s".${cfg.targetTable}.parquet.tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val p = new Path(targetPath(cfg))
-    val aside = asidePath(cfg)
-    if (fs.exists(p)) {
-      fs.delete(aside, true) // a finished swap's leftover
-      rename(p, aside)
+  /** Temp + swap through [[DocFiles.replace]]: an incremental merge
+    * plan reads the live target, which is parked aside, not deleted,
+    * until the new one is in place.
+    */
+  private def writeTarget(cfg: TableConfig, df: DataFrame): Unit =
+    DocFiles.replace(fs, new Path(targetPath(cfg)))(tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString))
+
+  /** The stored watermark when the cycle can be incremental: the
+    * table has a time column, a watermark and a live target.
+    */
+  private def incrementalFrom(cfg: TableConfig): Option[String] =
+    if (!cfg.hasTimeColumn) None
+    else state.loadWatermark(cfg.targetTable).filter(_ => targetExists(cfg))
+
+  /** Source rows past the watermark — a filter only, no order: the
+    * merge's keep-latest window neither needs nor keeps a pre-sort.
+    */
+  private def freshTail(src: DataFrame, tc: String, wm: String): DataFrame =
+    src.filter(col(tc) > lit(wm).cast(src.schema(tc).dataType))
+
+  /** The audit skeleton of every cycle: a "running" record, then
+    * "completed" with the row count `body` returns, or "failed" with
+    * the error, which is re-thrown.
+    */
+  private def audited(cfg: TableConfig, kind: String)(body: => Long): SyncLogEntry = {
+    val entry = log.logStart(cfg.targetTable, kind)
+    try log.logComplete(entry, body)
+    catch {
+      case e: Throwable =>
+        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
+        throw e
     }
-    rename(tmp, p)
-    fs.delete(aside, true)
   }
 
   /** One sync cycle for one table. Full on first run (or without a
@@ -81,17 +90,13 @@ class SyncRunner(spark: SparkSession,
     * re-thrown.
     */
   def syncTable(cfg: TableConfig): SyncLogEntry = {
-    val incremental = cfg.hasTimeColumn &&
-      state.loadWatermark(cfg.targetTable).isDefined && targetExists(cfg)
-    val entry = log.logStart(cfg.targetTable,
-      if (incremental) "incremental" else "full")
-    try {
+    val wm = incrementalFrom(cfg)
+    audited(cfg, if (wm.isDefined) "incremental" else "full") {
       val src = source(cfg)
-      val rows =
-        if (incremental) {
+      wm match {
+        case Some(w) =>
           val tc = cfg.timeColumn.get
-          val wm = state.loadWatermark(cfg.targetTable).get
-          val fresh = SyncOps.incremental(src, tc, wm)
+          val fresh = freshTail(src, tc, w)
           val nFresh = fresh.count()
           if (nFresh > 0) {
             val merged = SyncOps.applyIncremental(
@@ -100,16 +105,11 @@ class SyncRunner(spark: SparkSession,
             advanceWatermark(cfg)
           }
           nFresh
-        } else {
+        case None =>
           writeTarget(cfg, src)
           if (cfg.hasTimeColumn) advanceWatermark(cfg)
           target(cfg).count()
-        }
-      log.logComplete(entry, rows)
-    } catch {
-      case e: Throwable =>
-        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
-        throw e
+      }
     }
   }
 
@@ -121,26 +121,20 @@ class SyncRunner(spark: SparkSession,
     * Requires a time column (the bucket derives from it). Read the
     * result via [[PartitionedSync.read]] (the partition column is an
     * implementation detail). Watermark advances only after a
-    * successful merge; a crash mid-overwrite replays idempotently.
+    * successful merge (see [[PartitionedSync]] for what a crash inside
+    * the merge's partition commit can still lose).
     */
   def syncTablePartitioned(cfg: TableConfig, bucket: Column): SyncLogEntry = {
     require(cfg.hasTimeColumn,
       s"partitioned sync needs a time column on ${cfg.targetTable}")
     val tc = cfg.timeColumn.get
-    val incremental = state.loadWatermark(cfg.targetTable).isDefined && targetExists(cfg)
-    val entry = log.logStart(cfg.targetTable,
-      if (incremental) "incremental" else "full")
-    try {
+    val wm = incrementalFrom(cfg)
+    audited(cfg, if (wm.isDefined) "incremental" else "full") {
       val src = source(cfg)
-      val rows =
-        if (incremental) {
-          val wm = state.loadWatermark(cfg.targetTable).get
-          // filter only — no order; the merge's keep-latest window
-          // neither needs nor keeps a pre-sort
-          val fresh = src.filter(
-            col(tc) > lit(wm).cast(src.schema(tc).dataType))
+      wm match {
+        case Some(w) =>
           val stats = PartitionedSync.mergeIncremental(spark,
-            targetPath(cfg), fresh, Seq(cfg.primaryKey), tc,
+            targetPath(cfg), freshTail(src, tc, w), Seq(cfg.primaryKey), tc,
             cfg.primaryKey, bucket)
           // watermark from the stats' max over the MERGED rows — not a
           // full-target scan (defeats the O(affected) point) and not a
@@ -148,16 +142,11 @@ class SyncRunner(spark: SparkSession,
           // source and could advance past rows the merge never saw)
           stats.maxTime.foreach(state.saveWatermark(cfg.targetTable, _))
           stats.freshRows
-        } else {
+        case None =>
           PartitionedSync.writeFull(src, bucket, targetPath(cfg))
           advanceWatermark(cfg)
           target(cfg).count()
-        }
-      log.logComplete(entry, rows)
-    } catch {
-      case e: Throwable =>
-        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
-        throw e
+      }
     }
   }
 
@@ -180,14 +169,9 @@ class SyncRunner(spark: SparkSession,
     */
   def testSync(cfg: TableConfig, rowLimit: Int = 100000): SyncLogEntry = {
     require(rowLimit > 0, s"rowLimit must be positive, got $rowLimit")
-    val entry = log.logStart(cfg.targetTable, "test")
-    try {
+    audited(cfg, "test") {
       writeTarget(cfg, source(cfg).limit(rowLimit))
-      log.logComplete(entry, target(cfg).count())
-    } catch {
-      case e: Throwable =>
-        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
-        throw e
+      target(cfg).count()
     }
   }
 
@@ -238,28 +222,29 @@ class SyncRunner(spark: SparkSession,
     */
   def syncAllExclusive(configs: TableConfigRepo, lease: SyncLease): Seq[SyncLogEntry] =
     if (!lease.tryAcquire()) {
-      val who = lease.holder.map { case (o, p, _) => s"$o (pid $p)" }.getOrElse("unknown")
-      configs.syncTargets.map(cfg =>
-        log.logTerminal(cfg.targetTable, "full", "skipped", 0L,
-          s"sync lease held by $who"))
+      val who = heldBy(lease)
+      configs.syncTargets.map(skipped(_, who))
     } else try {
       var lost = false
       configs.syncTargets.map { cfg =>
         if (!lost && !lease.renew()) lost = true
-        if (lost)
-          log.logTerminal(cfg.targetTable, "full", "skipped", 0L,
-            "sync lease lost mid-pass (deposed by a stale takeover)")
+        if (lost) skipped(cfg, "sync lease lost mid-pass (deposed by a stale takeover)")
         else syncOne(cfg)
       }
     } finally lease.release()
 
   /** Single-table exclusive sync — see [[syncAllExclusive]]. */
   def syncTableExclusive(cfg: TableConfig, lease: SyncLease): SyncLogEntry =
-    if (!lease.tryAcquire()) {
-      val who = lease.holder.map { case (o, p, _) => s"$o (pid $p)" }.getOrElse("unknown")
-      log.logTerminal(cfg.targetTable, "full", "skipped", 0L,
-        s"sync lease held by $who")
-    } else try syncTable(cfg) finally lease.release()
+    if (!lease.tryAcquire()) skipped(cfg, heldBy(lease))
+    else try syncTable(cfg) finally lease.release()
+
+  private def heldBy(lease: SyncLease): String =
+    "sync lease held by " +
+      lease.holder.map { case (o, p, _) => s"$o (pid $p)" }.getOrElse("unknown")
+
+  /** The terminal record of a table the lease kept from syncing. */
+  private def skipped(cfg: TableConfig, reason: String): SyncLogEntry =
+    log.logTerminal(cfg.targetTable, "full", "skipped", 0L, reason)
 
   /** Current status per target — last run + totals (GetSyncStatusTool). */
   def status(table: Option[String] = None): Seq[(SyncLogEntry, SyncLogStats)] =

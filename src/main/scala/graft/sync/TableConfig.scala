@@ -1,9 +1,9 @@
 package graft.sync
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.DocFiles
 
 /** Per-table sync configuration — which tables sync, how.
   *
@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * batch-size + `validate`) and table_config/service.py (create/
   * update/delete/toggle/get_sync_targets). The reference keeps these
   * rows in a DuckDB table; here they are small JSON documents on the
-  * Hadoop filesystem (one per target table, atomic rename), the same
-  * pattern as StateStore — no database dependency, works on object
-  * stores, readable by every executor.
+  * Hadoop filesystem, one per target table, written and read through
+  * [[DocFiles]] — no database dependency, works on object stores,
+  * readable by every executor.
   */
 case class TableConfig(
     sourceSchema: String,
@@ -45,26 +45,14 @@ case class TableConfig(
 }
 
 object TableConfig {
-  private def esc(s: String) =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+  private[sync] def toJson(c: TableConfig): String = DocFiles.obj(
+    "source_schema" -> c.sourceSchema, "source_table" -> c.sourceTable,
+    "target_table" -> c.targetTable, "primary_key" -> c.primaryKey,
+    "time_column" -> c.timeColumn, "sync_enabled" -> c.syncEnabled,
+    "batch_size" -> c.batchSize, "description" -> c.description)
 
-  private[sync] def toJson(c: TableConfig): String = {
-    val tc = c.timeColumn.map(v => s""""${esc(v)}"""").getOrElse("null")
-    val desc = c.description.map(v => s""""${esc(v)}"""").getOrElse("null")
-    s"""{"source_schema": "${esc(c.sourceSchema)}", """ +
-      s""""source_table": "${esc(c.sourceTable)}", """ +
-      s""""target_table": "${esc(c.targetTable)}", """ +
-      s""""primary_key": "${esc(c.primaryKey)}", """ +
-      s""""time_column": $tc, "sync_enabled": ${c.syncEnabled}, """ +
-      s""""batch_size": ${c.batchSize}, "description": $desc}"""
-  }
-
-  private def str(json: String, name: String): Option[String] =
-    (s""""$name":\\s*(?:null|"((?:[^"\\\\]|\\\\.)*)")""").r
-      .findFirstMatchIn(json).flatMap(m => Option(m.group(1))).map(unesc)
-
-  private[sync] def fromJson(json: String): Option[TableConfig] =
+  private[sync] def fromJson(json: String): Option[TableConfig] = {
+    import DocFiles.{bool, num, str}
     for {
       ss <- str(json, "source_schema")
       st <- str(json, "source_table")
@@ -72,11 +60,10 @@ object TableConfig {
       pk <- str(json, "primary_key")
     } yield TableConfig(ss, st, tt, pk,
       timeColumn = str(json, "time_column").filter(_.nonEmpty),
-      syncEnabled = """"sync_enabled":\s*(true|false)""".r
-        .findFirstMatchIn(json).forall(_.group(1) == "true"),
-      batchSize = """"batch_size":\s*(\d+)""".r
-        .findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(10000),
+      syncEnabled = bool(json, "sync_enabled").getOrElse(true),
+      batchSize = num(json, "batch_size").map(_.toInt).getOrElse(10000),
       description = str(json, "description"))
+  }
 }
 
 /** CRUD over the config directory (table_config/repository+service).
@@ -93,39 +80,19 @@ class TableConfigRepo(spark: SparkSession, dir: String) {
     */
   def upsert(cfg: TableConfig): Either[String, TableConfig] =
     cfg.validate.map { c =>
-      val p = path(c.targetTable)
-      val tmp = new Path(dir, s".${c.targetTable}.config.json.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(TableConfig.toJson(c).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
+      DocFiles.write(fs, path(c.targetTable), TableConfig.toJson(c))
       c
     }
 
-  def get(targetTable: String): Option[TableConfig] = {
-    val p = path(targetTable)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, StandardCharsets.UTF_8)
-      } finally in.close()
-      TableConfig.fromJson(body)
-    }
-  }
+  def get(targetTable: String): Option[TableConfig] =
+    DocFiles.read(fs, path(targetTable)).flatMap(TableConfig.fromJson)
 
-  def all(enabledOnly: Boolean = false): Seq[TableConfig] = {
-    val d = new Path(dir)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".config.json") && !n.startsWith("."))
+  def all(enabledOnly: Boolean = false): Seq[TableConfig] =
+    DocFiles.names(fs, new Path(dir))
+      .filter(_.endsWith(".config.json"))
       .flatMap(n => get(n.stripSuffix(".config.json")))
       .filter(c => !enabledOnly || c.syncEnabled)
       .sortBy(_.targetTable)
-  }
 
   /** Enabled configs — what a sync cycle runs (get_sync_targets). */
   def syncTargets: Seq[TableConfig] = all(enabledOnly = true)
@@ -137,8 +104,5 @@ class TableConfigRepo(spark: SparkSession, dir: String) {
       case None => false
     }
 
-  def delete(targetTable: String): Boolean = {
-    val p = path(targetTable)
-    fs.exists(p) && fs.delete(p, false)
-  }
+  def delete(targetTable: String): Boolean = DocFiles.delete(fs, path(targetTable))
 }

@@ -1,0 +1,102 @@
+package graft
+
+import java.io.{IOException, OutputStream}
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+
+/** The local filesystem under the `crashfs` scheme, with one injected
+  * fault. Every store derives its filesystem from the path it is given,
+  * so pointing a store at `crashfs:///<dir>` puts its writes through
+  * this class, and a plain `<dir>` reads what they left.
+  *
+  * Only mutating calls (`create`, `rename`, `delete`) made on the
+  * thread that armed the fault are counted: the driver-side steps of a
+  * write. Spark task threads writing part files are not counted, nor
+  * are the steps of Spark's own job commit (paths under `_temporary`,
+  * the `_SUCCESS` marker): graft writes a parquet dataset to a path no
+  * reader follows until a later, counted step points at it.
+  */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: URI = CrashFs.Uri
+  override def getScheme: String = CrashFs.Scheme
+
+  override protected def createOutputStreamWithMode(
+      f: Path, append: Boolean, permission: FsPermission): OutputStream = {
+    CrashFs.step(f, isRename = false)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    CrashFs.step(src, isRename = true) && super.rename(src, dst)
+
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CrashFs.step(p, isRename = false)
+    super.delete(p, recursive)
+  }
+}
+
+object CrashFs {
+  val Scheme = "crashfs"
+  val Uri: URI = URI.create(s"$Scheme:///")
+
+  sealed trait Fault
+  /** The k-th mutating call throws, and so does every later one: the
+    * process died there.
+    */
+  case object Crash extends Fault
+  /** The k-th rename returns false without renaming; later calls work. */
+  case object FalseRename extends Fault
+
+  def register(conf: Configuration): Unit = {
+    conf.set(s"fs.$Scheme.impl", classOf[CrashFs].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+  }
+
+  /** `dir` (an absolute local path) under the `crashfs` scheme. */
+  def path(dir: String): String = s"$Scheme://$dir"
+
+  private final class Armed(val fault: Fault, val k: Int) {
+    var calls = 0
+    var fired = false
+  }
+  private val armed = new ThreadLocal[Armed]
+
+  /** Runs `body` with `fault` armed at call `k` on this thread. Returns
+    * (fired, threw): whether the fault was injected, and whether `body`
+    * then threw. An exception with no fault injected is re-thrown.
+    */
+  def inject(fault: Fault, k: Int)(body: => Unit): (Boolean, Boolean) = {
+    val a = new Armed(fault, k)
+    armed.set(a)
+    val threw =
+      try { body; false }
+      catch { case _: Exception if a.fired => true }
+      finally armed.remove()
+    (a.fired, threw)
+  }
+
+  private def sparkCommit(p: Path): Boolean =
+    p.getName == "_SUCCESS" || p.toUri.getPath.contains("/_temporary")
+
+  private def step(p: Path, isRename: Boolean): Boolean = armed.get match {
+    case null => true
+    case _ if sparkCommit(p) => true
+    case a => a.fault match {
+      case Crash =>
+        a.calls += 1
+        if (a.calls >= a.k) {
+          a.fired = true
+          throw new IOException(s"injected crash at mutating call ${a.k}")
+        }
+        true
+      case FalseRename =>
+        if (isRename) a.calls += 1
+        val fail = isRename && a.calls == a.k
+        if (fail) a.fired = true
+        !fail
+    }
+  }
+}

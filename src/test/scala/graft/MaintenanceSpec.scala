@@ -90,15 +90,19 @@ class MaintenanceSpec extends SparkSpec {
     store.commit(Seq((1, "a"), (2, "b")).toDF("id", "v"), batchId = 7L)
 
     // simulate crashes: a half-written later snapshot (no pointer swap),
-    // an older stranded complete snapshot, and a leftover CURRENT.tmp
+    // an older stranded complete snapshot, a leftover CURRENT.tmp (the
+    // earlier temp name) and .CURRENT.tmp, and a parked .CURRENT.old
+    // whose live pointer is back in place
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq((3, "x")).toDF("id", "v").write.parquet(s"$dir/snap-${"%019d".format(8)}")
     Seq((0, "old")).toDF("id", "v").write.parquet(s"$dir/snap-${"%019d".format(3)}")
-    val tmp = fs.create(new org.apache.hadoop.fs.Path(root, "CURRENT.tmp"), true)
-    tmp.write("snap-junk".getBytes); tmp.close()
+    Seq("CURRENT.tmp", ".CURRENT.tmp", ".CURRENT.old").foreach { name =>
+      val tmp = fs.create(new org.apache.hadoop.fs.Path(root, name), true)
+      tmp.write("snap-junk".getBytes); tmp.close()
+    }
 
-    assert(store.vacuum(graceMillis = 0) == 3)
+    assert(store.vacuum(graceMillis = 0) == 5)
     assert(store.lastCommittedBatch.contains(7L)) // committed entry untouched
     assert(store.read().get.count() == 2)
     assert(store.vacuum(graceMillis = 0) == 0) // idempotent

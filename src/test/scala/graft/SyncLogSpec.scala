@@ -39,10 +39,10 @@ class SyncLogSpec extends SparkSpec {
     var now = 1000L
     val repo = new SyncLogRepo(spark, dir, () => { now += 10; now })
     repo.logComplete(repo.logStart("a", "full", "s1"), 100)
-    repo.logFailure(repo.logStart("a", "incremental", "s2"), "boom: \"quoted\"")
+    repo.logFailure(repo.logStart("a", "incremental", "s2"), "boom:\n\t\"quoted\"")
     val running = repo.logStart("b", "full", "s3")
 
-    assert(repo.getBySyncId("s2").exists(_.errorMessage.contains("boom: \"quoted\"")))
+    assert(repo.getBySyncId("s2").exists(_.errorMessage.contains("boom:\n\t\"quoted\"")))
     assert(repo.recentLogs(limit = 2).map(_.syncId) == Seq("s3", "s2")) // newest first
     assert(repo.recentLogs(table = Some("a")).map(_.syncId) == Seq("s2", "s1"))
 
