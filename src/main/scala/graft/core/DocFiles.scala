@@ -19,7 +19,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * read that finds the live path missing falls back to the aside
   * copy, so at every crash point a reader sees the old document or the
   * new one, never neither. The same swap replaces a directory
-  * (`SyncRunner`'s whole-table target). Temp and aside names start
+  * (`SyncRunner`'s whole-table target, each partition that
+  * `PartitionedSync.swapIn` commits). Temp and aside names start
   * with `.` and end in `.tmp` / `.old`, so a listing that matches a
   * document suffix skips them.
   *
@@ -65,13 +66,20 @@ object DocFiles {
     * staged one in, drop the aside copy.
     */
   def replace(fs: FileSystem, p: Path)(stage: Path => Unit): Unit = {
-    val aside = asideOf(p)
     stage(tmpOf(p))
+    replace(fs, p, tmpOf(p))
+  }
+
+  /** Replace the file or directory at `p` with the one already staged
+    * at `staged`, by the same checked swap.
+    */
+  def replace(fs: FileSystem, p: Path, staged: Path): Unit = {
+    val aside = asideOf(p)
     if (fs.exists(p)) {
       fs.delete(aside, true) // a finished swap's leftover
       rename(fs, p, aside)
     }
-    rename(fs, tmpOf(p), p)
+    rename(fs, staged, p)
     fs.delete(aside, true)
   }
 

@@ -22,16 +22,17 @@ import org.apache.spark.sql.types.StringType
   * job — one `listStatus` per partition dir, the same metadata a scan
   * would read anyway); the rewrite is ONE job over the selected
   * partitions only (partition-pruned scan → salted repartition →
-  * dynamic partition overwrite). Parallelism inside a big partition is
+  * staged write), committed by the merge's own partition swap
+  * ([[PartitionedSync.swapIn]]). Parallelism inside a big partition is
   * kept by salting to ceil(bytes / targetBytes) writer groups, so a
   * skewed partition neither serializes into one task nor explodes into
   * per-input-task files.
   *
   * Crash semantics: the rewrite carries the SAME rows the partition
-  * already holds, so a crash mid-overwrite leaves affected partitions
-  * either compacted or not — content never changes, and a re-run
-  * converges. (Same per-partition commit contract as the incremental
-  * merge; see PartitionedSync's crash note.)
+  * already holds, and the swap leaves each partition old or new at
+  * every fault point (a partition left parked aside is put back by the
+  * next rewrite's recovery) — so the table's rows never change, and a
+  * re-run converges.
   */
 object Compaction {
 
@@ -77,6 +78,7 @@ object Compaction {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no partitioned table at $path")
+    PartitionedSync.recover(fs, root, partCol)
 
     val stats = census(spark, path, partCol)
     val filesBefore = stats.map(_.files.toLong).sum
@@ -115,9 +117,7 @@ object Compaction {
         pmod(xxhash64(dataCols.map(col): _*), col("__n_out")).cast("int"))
       .repartitionByRange(totalGroups, col(partCol), col("__salt"))
       .drop("__salt", "__n_out")
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(path)
+    PartitionedSync.swapIn(df, path, partCol, pickedVals)
 
     val after = census(spark, path, partCol)
     CompactionStats(pickedVals, filesBefore, after.map(_.files.toLong).sum)

@@ -1,8 +1,10 @@
 package graft.sync
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.DocFiles
 
 /** Partition-pruned sync target — the 100 TB form of the sync
   * engine's merge (reference sync_engine.py:180 fetch-then-upsert).
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   * targets that fit a rewrite budget. At 100 TB it is the sync's
   * dominant cost — so this target partitions the table by a caller-
   * chosen time bucket (month/year of the watermark column) and merges
-  * with DYNAMIC partition overwrite, rewriting ONLY:
+  * by swapping in rewritten partition directories, rewriting ONLY:
   *
   *  1. partitions receiving fresh rows (the watermark tail lands in
   *     recent buckets), and
@@ -26,17 +28,14 @@ import org.apache.spark.sql.functions._
   * driver collects only distinct affected PARTITION VALUES (calendar-
   * bounded — months of history, not rows).
   *
-  * Crash semantics: dynamic overwrite commits per partition, so a
-  * crash mid-write can leave some affected partitions new and others
-  * old — unlike the whole-table swap this is not atomic across
-  * partitions. The watermark advances only AFTER a successful merge,
-  * so a replay re-merges the same tail, and keep-latest-per-key is
-  * idempotent. That covers a crash between partitions, not one inside
-  * a partition's commit: Spark's `HadoopMapReduceCommitProtocol`
-  * commits each partition by deleting the live dir, then renaming the
-  * staged one in. A crash between the two loses that partition's rows
-  * that are not in the fresh tail, and a replay cannot bring them
-  * back (open: ROADMAP item 4).
+  * Crash semantics: [[swapIn]] replaces each partition directory with
+  * the checked aside swap of [[graft.core.DocFiles.replace]], so at
+  * every fault point each partition is old or new, never missing; the
+  * next rewrite's [[recover]] puts back a partition left parked aside.
+  * The swap is not atomic ACROSS partitions: a crash can leave some
+  * affected partitions new and others old. The watermark advances
+  * only AFTER a successful merge, so a replay re-merges the same tail,
+  * and keep-latest-per-key is idempotent.
   *
   * Bucket values must render as path-safe strings (digits, letters,
   * `.`/`_`/`-`, e.g. `date_format(ts, 'yyyy-MM')`) — they become
@@ -99,14 +98,15 @@ object PartitionedSync {
   /** Merge `fresh` into the partitioned target at `path`, keeping the
     * latest (timeCol, tieBreak) row per key, rewriting only affected
     * partitions. Partitions whose every row is superseded by a fresh
-    * row in another bucket are deleted (dynamic overwrite cannot
-    * replace a partition with zero rows).
+    * row in another bucket are deleted.
     */
   def mergeIncremental(spark: SparkSession, path: String, fresh: DataFrame,
                        keys: Seq[String], timeCol: String, tieBreak: String,
                        bucket: Column): MergeStats = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(path)), s"no partitioned target at $path — writeFull first")
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(root), s"no partitioned target at $path — writeFull first")
+    recover(fs, root, PartCol)
 
     val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket))
     freshP.persist()
@@ -117,7 +117,7 @@ object PartitionedSync {
         .agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
       val freshRows = head.getLong(0)
       if (freshRows == 0)
-        return MergeStats(0L, Nil, partitionValues(fs, path).size.toLong, Nil, None)
+        return MergeStats(0L, Nil, partitionValues(fs, root, PartCol).size.toLong, Nil, None)
       val maxTime = Option(head.getString(1))
 
       // explicit schema: partition discovery would otherwise INFER the
@@ -136,54 +136,68 @@ object PartitionedSync {
         .select(PartCol).distinct()
       val affected = partsNew.unionByName(partsStale).distinct()
         .collect().map(_.getString(0)).sorted.toIndexedSeq
-      val before = partitionValues(fs, path)
+      val before = partitionValues(fs, root, PartCol)
 
-      // the merge plan reads the slice it overwrites — materialize it
-      // to break the read-write cycle. localCheckpoint (eager) holds
-      // the merged slice in block storage: the previous tmp-PARQUET
-      // staging paid a full extra write + read-back + listing + delete
-      // of the whole affected slice per merge (measured ~25% of
-      // q_merge_partitioned's wall); the checkpoint is the same
-      // barrier at block-manager cost. Crash semantics are unchanged —
-      // the tmp table was never a recovery point (the watermark replay
-      // absorbs a crash either way). The repartition-on-PartCol (the
-      // writeFull rationale) keeps the final dynamic overwrite
-      // shuffle-free and one-file-per-bucket.
+      // the repartition-on-PartCol (the writeFull rationale) keeps the
+      // staged write one-file-per-bucket
       val slice = target.filter(col(PartCol).isin(affected: _*))
       val merged = SyncOps.upsertKeepLatest(
         slice.unionByName(freshP), keys, timeCol, tieBreak)
         .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
-        .localCheckpoint()
-      val emptied = try {
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(PartCol).parquet(path)
-
-        // a partition every row of which was superseded produces no
-        // output rows, so dynamic overwrite leaves its stale files in
-        // place — detect via the MERGED output's partition values and
-        // delete the leftovers (a crash in between is absorbed by the
-        // idempotent replay, same as the partial-overwrite case). The
-        // merged slice is checkpointed, so the distinct is a bounded
-        // scan of in-memory blocks, not a recompute
-        val outParts = merged.select(PartCol).distinct()
-          .collect().map(_.getString(0)).toSet
-        val gone = affected.filterNot(outParts.contains)
-          .filter(before.contains)
-        gone.foreach(p => fs.delete(new Path(path, s"$PartCol=$p"), true))
-        gone
-      } finally {
-        merged.unpersist(blocking = false); ()
-      }
+      val emptied = swapIn(merged, path, PartCol, affected)
 
       MergeStats(freshRows, affected, before.size.toLong, emptied, maxTime)
     } finally freshP.unpersist(blocking = true)
   }
 
-  private def partitionValues(fs: org.apache.hadoop.fs.FileSystem,
-                              path: String): Set[String] =
-    fs.listStatus(new Path(path)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartCol="))
-      .map(_.getPath.getName.stripPrefix(s"$PartCol="))
+  /** Hidden staging directory of [[swapIn]], under the table root:
+    * Spark's file listing, [[partitionValues]] and `Compaction.census`
+    * all skip names that start with `.`.
+    */
+  private val Staging = ".merge.tmp"
+
+  /** Crash recovery for a partitioned table, run by every rewrite
+    * before it reads the table: puts back each partition an
+    * interrupted [[swapIn]] left parked aside, then deletes the stale
+    * staging directory and aside copies whose live partition is back.
+    */
+  private[sync] def recover(fs: FileSystem, root: Path, partCol: String): Unit = {
+    fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith(s".$partCol="))
+      .foreach { p =>
+        if (p.getName.endsWith(".old"))
+          DocFiles.restore(fs, new Path(root, p.getName.stripPrefix(".").stripSuffix(".old")))
+        if (DocFiles.isDebris(fs, p)) fs.delete(p, true)
+      }
+    fs.delete(new Path(root, Staging), true)
+  }
+
+  /** The one commit step of every partitioned rewrite (the merge and
+    * `Compaction.compact`): writes `df`, which carries `partCol`, into
+    * the staging directory with a plain partitioned write, swaps each
+    * staged partition in with [[graft.core.DocFiles.replace]], deletes
+    * each `affected` partition the write left empty, removes the
+    * staging directory and refreshes cached plans over `path` (a rename
+    * does not re-cache them the way a Spark write to the path does).
+    * Returns the deleted partitions. The caller has run [[recover]].
+    */
+  private[sync] def swapIn(df: DataFrame, path: String, partCol: String,
+                           affected: Seq[String]): Seq[String] = {
+    val root = new Path(path)
+    val staging = new Path(root, Staging)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    def dir(base: Path, v: String) = new Path(base, s"$partCol=$v")
+    df.write.partitionBy(partCol).parquet(staging.toString)
+    val staged = partitionValues(fs, staging, partCol)
+    staged.foreach(v => DocFiles.replace(fs, dir(root, v), dir(staging, v)))
+    val emptied = affected.filterNot(staged.contains).filter(v => DocFiles.delete(fs, dir(root, v)))
+    fs.delete(staging, true)
+    df.sparkSession.catalog.refreshByPath(path)
+    emptied
+  }
+
+  private def partitionValues(fs: FileSystem, dir: Path, partCol: String): Set[String] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath.getName.stripPrefix(s"$partCol="))
       .toSet
 }

@@ -121,8 +121,8 @@ class SyncRunner(spark: SparkSession,
     * Requires a time column (the bucket derives from it). Read the
     * result via [[PartitionedSync.read]] (the partition column is an
     * implementation detail). Watermark advances only after a
-    * successful merge (see [[PartitionedSync]] for what a crash inside
-    * the merge's partition commit can still lose).
+    * successful merge, so the next cycle replays a merge a crash cut
+    * short (see [[PartitionedSync]] for its crash semantics).
     */
   def syncTablePartitioned(cfg: TableConfig, bucket: Column): SyncLogEntry = {
     require(cfg.hasTimeColumn,

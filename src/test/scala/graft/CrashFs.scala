@@ -2,22 +2,28 @@ package graft
 
 import java.io.{IOException, OutputStream}
 import java.net.URI
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.{SparkContext, TaskContext}
 
 /** The local filesystem under the `crashfs` scheme, with one injected
   * fault. Every store derives its filesystem from the path it is given,
   * so pointing a store at `crashfs:///<dir>` puts its writes through
   * this class, and a plain `<dir>` reads what they left.
   *
-  * Only mutating calls (`create`, `rename`, `delete`) made on the
-  * thread that armed the fault are counted: the driver-side steps of a
-  * write. Spark task threads writing part files are not counted, nor
-  * are the steps of Spark's own job commit (paths under `_temporary`,
-  * the `_SUCCESS` marker): graft writes a parquet dataset to a path no
-  * reader follows until a later, counted step points at it.
+  * Only mutating calls (`create`, `rename`, `delete`) made for the
+  * call that armed the fault are counted: the steps of a write outside
+  * Spark tasks, on the arming thread or on a Spark thread it handed
+  * work to (an adaptive query commits a write from its own result-stage
+  * thread, which Spark gives the caller's local properties). Spark
+  * task threads writing part files are not counted, nor are the
+  * output committer's steps (paths under `_temporary`, the `_SUCCESS`
+  * marker): graft writes a parquet dataset to a path no reader follows
+  * until a later, counted step points at it.
   */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
@@ -60,31 +66,41 @@ object CrashFs {
 
   private final class Armed(val fault: Fault, val k: Int) {
     var calls = 0
-    var fired = false
+    @volatile var fired = false
   }
-  private val armed = new ThreadLocal[Armed]
+  /** Armed points by id; the id travels as a SparkContext local property. */
+  private val points = new ConcurrentHashMap[String, Armed]
+  private val PointKey = "graft.crashfs.point"
 
-  /** Runs `body` with `fault` armed at call `k` on this thread. Returns
+  /** Runs `body` with `fault` armed at call `k` for this thread. Returns
     * (fired, threw): whether the fault was injected, and whether `body`
     * then threw. An exception with no fault injected is re-thrown.
     */
   def inject(fault: Fault, k: Int)(body: => Unit): (Boolean, Boolean) = {
     val a = new Armed(fault, k)
-    armed.set(a)
+    val id = UUID.randomUUID().toString
+    val sc = SparkContext.getOrCreate()
+    points.put(id, a)
+    sc.setLocalProperty(PointKey, id)
     val threw =
       try { body; false }
       catch { case _: Exception if a.fired => true }
-      finally armed.remove()
+      finally { sc.setLocalProperty(PointKey, null); points.remove(id) }
     (a.fired, threw)
   }
 
-  private def sparkCommit(p: Path): Boolean =
+  private def armedHere: Option[Armed] =
+    if (TaskContext.get() != null) None
+    else Option(SparkContext.getOrCreate().getLocalProperty(PointKey))
+      .flatMap(id => Option(points.get(id)))
+
+  private def committerStep(p: Path): Boolean =
     p.getName == "_SUCCESS" || p.toUri.getPath.contains("/_temporary")
 
-  private def step(p: Path, isRename: Boolean): Boolean = armed.get match {
-    case null => true
-    case _ if sparkCommit(p) => true
-    case a => a.fault match {
+  private def step(p: Path, isRename: Boolean): Boolean = armedHere match {
+    case None => true
+    case Some(_) if committerStep(p) => true
+    case Some(a) => a.synchronized(a.fault match {
       case Crash =>
         a.calls += 1
         if (a.calls >= a.k) {
@@ -97,6 +113,6 @@ object CrashFs {
         val fail = isRename && a.calls == a.k
         if (fail) a.fired = true
         !fail
-    }
+    })
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, date_format}
 
 import graft.cache.{CachedQueryMetadata, ParquetCacheProvider}
 import graft.streaming.{SnapshotStore, StoreMaintenance}
@@ -15,7 +17,9 @@ import graft.sync._
   * documents in the on-disk format written before it existed read back
   * unchanged, and every document write leaves the old document or the
   * new one readable when a crash or a failed rename hits it at any of
-  * its filesystem steps ([[CrashFs]]).
+  * its filesystem steps ([[CrashFs]]). The same faults hit the sync
+  * cycles and the partition swap that the sync merge and compaction
+  * share: the next run recovers and converges.
   */
 class DocFilesSpec extends SparkSpec {
   import spark.implicits._
@@ -242,11 +246,8 @@ class DocFilesSpec extends SparkSpec {
 
     val template = tempDir("graft-crash-sync")
     assert(runner(CrashFs.path(template), "v1").syncTable(cfg).syncType == "full")
-    // a few rows per cycle: one shuffle partition keeps each cycle's tasks few
-    val prevPartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try bothFaults(copyTree(template, _))(r => runner(CrashFs.path(r), "v2").syncTable(cfg): Unit) {
-      (root, threw) =>
+    oneShufflePartition(bothFaults(copyTree(template, _))(
+      r => runner(CrashFs.path(r), "v2").syncTable(cfg): Unit) { (root, threw) =>
         oldOrNew(new StateStore(spark, s"$root/state").loadWatermark("t"),
           Some(wm1), Some(wm2), threw)
         // the next cycle stays incremental and leaves the target converged
@@ -255,6 +256,77 @@ class DocFilesSpec extends SparkSpec {
         assert(rows(runner(root, "v2").target(cfg)) == expected)
         assert(new StateStore(spark, s"$root/state").loadWatermark("t").contains(wm2))
         assert(new SyncLogRepo(spark, s"$root/log").entries().count(_.syncType == "full") == 1)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPartitions)
+    })
+  }
+
+  /** A few rows per cycle: one shuffle partition keeps each cycle's tasks few. */
+  private def oneShufflePartition(body: => Unit): Unit = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Names under `dir` that start with `.`: staging or aside debris. */
+  private def hidden(dir: String): Seq[String] =
+    Option(new File(dir).list()).toSeq.flatten.filter(_.startsWith("."))
+
+  test("crash injection: a partitioned sync cycle stays incremental and converges") {
+    // three day buckets; the cycle moves key 1 out of day 1 (whose other
+    // rows stay), moves both keys of day 2 to day 3 (day 2 empties) and
+    // adds key 7 to day 3
+    def at(day: Int, s: Int) = Timestamp.valueOf(f"2024-01-0$day 00:00:$s%02d")
+    val v1 = Seq((1L, at(1, 1), "a"), (2L, at(1, 2), "b"), (3L, at(1, 3), "c"),
+      (4L, at(2, 4), "d"), (5L, at(2, 5), "e"), (6L, at(3, 6), "f"))
+    val v2 = v1.filterNot(r => Set(1L, 4L, 5L)(r._1)) ++
+      Seq((1L, at(3, 31), "a'"), (4L, at(3, 34), "d'"), (5L, at(3, 35), "e'"), (7L, at(3, 37), "g"))
+    val sources = Map("v1" -> v1, "v2" -> v2).map { case (k, v) => k -> v.toDF("id", "ts", "v").coalesce(1) }
+    val bucket = date_format(col("ts"), "yyyy-MM-dd")
+    val cfg = TableConfig("S", "T", "t", "id", timeColumn = Some("ts"))
+    def runner(root: String, version: String) = new SyncRunner(spark,
+      _ => sources(version), s"$root/target",
+      new StateStore(spark, s"$root/state"), new SyncLogRepo(spark, s"$root/log"))
+    def table(root: String) = s"$root/target/t.parquet"
+    val expected = rows(sources("v2"))
+    val (wm1, wm2) = ("2024-01-03 00:00:06", "2024-01-03 00:00:37")
+
+    val template = tempDir("graft-crash-psync")
+    assert(runner(CrashFs.path(template), "v1").syncTablePartitioned(cfg, bucket).syncType == "full")
+    oneShufflePartition(bothFaults(copyTree(template, _))(
+      r => runner(CrashFs.path(r), "v2").syncTablePartitioned(cfg, bucket): Unit) { (root, threw) =>
+        oldOrNew(new StateStore(spark, s"$root/state").loadWatermark("t"),
+          Some(wm1), Some(wm2), threw)
+        val next = runner(CrashFs.path(root), "v2").syncTablePartitioned(cfg, bucket)
+        assert(next.syncType == "incremental" && next.status == "completed")
+        assert(rows(PartitionedSync.read(spark, table(root))) == expected)
+        assert(hidden(table(root)).isEmpty)
+        assert(new File(table(root)).list().count(_.startsWith(PartitionedSync.PartCol)) == 2)
+        assert(new StateStore(spark, s"$root/state").loadWatermark("t").contains(wm2))
+    })
+  }
+
+  test("crash injection: Compaction.compact keeps every row and converges") {
+    def part(ids: Range, grp: String) =
+      ids.map(i => (i.toLong, s"v$i", grp)).toDF("id", "v", "grp").coalesce(1)
+    val template = tempDir("graft-crash-compact")
+    val plain = s"$template/t"
+    PartitionedSync.writeFull(part(1 to 4, "a").union(part(5 to 8, "b")), col("grp"),
+      CrashFs.path(plain))
+    // fragment partition a: three more files
+    (1 to 3).foreach { i =>
+      part(10 * i to 10 * i + 1, "a").withColumn(PartitionedSync.PartCol, col("grp"))
+        .write.mode("append").partitionBy(PartitionedSync.PartCol).parquet(CrashFs.path(plain))
+    }
+    assert(Compaction.census(spark, plain).map(s => s.partition -> s.files) == Seq("a" -> 4, "b" -> 1))
+    val want = rows(PartitionedSync.read(spark, plain))
+    def compact(root: String) = Compaction.compact(spark, CrashFs.path(s"$root/t"), 1L << 30)
+
+    bothFaults(copyTree(template, _))(compact(_): Unit) { (root, _) =>
+      // the next run recovers what a fault left, then compacts if needed
+      compact(root)
+      assert(rows(PartitionedSync.read(spark, s"$root/t")) == want)
+      assert(Compaction.census(spark, s"$root/t").map(s => s.partition -> s.files) ==
+        Seq("a" -> 1, "b" -> 1))
+      assert(hidden(s"$root/t").isEmpty)
+    }
   }
 }

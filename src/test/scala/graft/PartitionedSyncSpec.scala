@@ -93,6 +93,21 @@ class PartitionedSyncSpec extends SparkSpec {
       (3L, "2024-03-02", "c")))
   }
 
+  test("a cached read of the target shows the merged rows after mergeIncremental") {
+    val path = tempDir("graft-psync") + "/t"
+    PartitionedSync.writeFull(rows(
+      (1, "2024-01-10", "a"), (2, "2024-02-10", "b")), bucket, path)
+    val cached = PartitionedSync.read(spark, path).cache()
+    try {
+      assert(cached.count() == 2)
+      PartitionedSync.mergeIncremental(spark, path,
+        rows((1, "2024-03-01", "a2"), (3, "2024-03-02", "c")), Seq("id"), "ts", "id", bucket)
+      val got = cached.as[(Long, String, String)].collect().sortBy(_._1).toSeq
+      assert(got == Seq((1L, "2024-03-01", "a2"), (2L, "2024-02-10", "b"),
+        (3L, "2024-03-02", "c")))
+    } finally cached.unpersist()
+  }
+
   test("empty fresh slice is a no-op") {
     val path = tempDir("graft-psync") + "/t"
     PartitionedSync.writeFull(rows((1, "2024-01-10", "a")), bucket, path)
