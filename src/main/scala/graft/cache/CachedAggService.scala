@@ -41,13 +41,16 @@ class CachedAggService(spark: SparkSession, dir: String,
     * over the whole table; on a hit, `merge(cached, build(tail))`. One
     * action probes the tail's row count and new watermark, and the tail
     * built is bounded by that watermark (rows with a null time stay in
-    * an initial build, as a full recompute counts them).
+    * an initial build, as a full recompute counts them). The manager's
+    * statistics count one miss per cold build and one hit per call
+    * served from an existing entry; reading back a commit counts
+    * neither.
     */
   private def refresh(table: String, key: Option[String], timeCol: String,
                       build: DataFrame => DataFrame,
                       merge: (DataFrame, DataFrame) => DataFrame,
                       read: DataFrame => DataFrame): CachedQueryResult = {
-    val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
+    val meta = cache.getMetadata(table, key)
     val base = Tables.loadNormalized(spark, dir, table)
     val tsType = base.schema(timeCol).dataType
     val wm = meta.flatMap(_.lastTimestamp)
@@ -56,6 +59,7 @@ class CachedAggService(spark: SparkSession, dir: String,
     val freshCount = probe.getLong(0)
     val cached = wm.map(_ => cache.getCachedData(table, key)
       .getOrElse(sys.error(s"cache metadata present but state missing for '$table' ($key)")))
+    if (cached.isEmpty) cache.recordMiss()
     val prevCount = if (cached.isDefined) meta.get.rowCount else 0L
     cached match {
       case Some(state) if freshCount == 0 =>
@@ -67,7 +71,7 @@ class CachedAggService(spark: SparkSession, dir: String,
         val state = cached.fold(tail)(merge(_, tail))
         val n = prevCount + freshCount
         cache.setCachedData(table, state, CachedQueryMetadata(newWm, n, nowMillis()), key)
-        val back = cache.getCachedData(table, key).getOrElse(state)
+        val back = cache.readBack(table, key).getOrElse(state)
         CachedQueryResult(read(back), isIncremental = cached.isDefined, n, freshCount)
     }
   }

@@ -50,6 +50,8 @@ case class CachedQueryResult(
   * parquet-backed for durable 100 TB results (a hit is a pruned scan,
   * not a driver-side materialization), memory-backed for dashboard
   * latency. `nowMillis` is injectable for deterministic staleness.
+  * Statistics: an initial load counts one miss, a call served from the
+  * cached entry one hit (as in [[CachedAggService]]).
   */
 class CachedQueryService(spark: SparkSession, dir: String,
                          cache: QueryCacheManager,
@@ -58,7 +60,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
   def queryWithCaching(table: String, limit: Int = 10000,
                        timeCol: Option[String] = None,
                        selectedConversions: Option[Map[String, String]] = None): CachedQueryResult = {
-    val meta = if (cache.hasCache(table)) cache.getMetadata(table) else None
+    val meta = cache.getMetadata(table)
     (timeCol, meta.flatMap(_.lastTimestamp)) match {
       case (Some(tc), Some(_)) =>
         incrementalLoad(table, tc, meta.get, selectedConversions)
@@ -117,7 +119,8 @@ class CachedQueryService(spark: SparkSession, dir: String,
     val wm = timeCol.flatMap(tc => maxTsString(converted, tc))
     cache.setCachedData(table, converted,
       CachedQueryMetadata(wm, n, nowMillis(), conversions))
-    val cached = cache.getCachedData(table).getOrElse(converted)
+    cache.recordMiss()
+    val cached = cache.readBack(table).getOrElse(converted)
     CachedQueryResult(ordered(cached, timeCol), isIncremental = false, n, n)
   }
 
@@ -143,7 +146,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
       val freshConv = TypeInference.applyConversions(
         fresh.filter(col(tc) <= lit(newWm).cast(tsType)), conversions, force = true)
       // O(tail) commit: only the fresh slice is written — the provider
-      // manifests it alongside the already-cached slices, so refresh
+      // lists it alongside the already-cached slices, so refresh
       // cost tracks the tail, not the (possibly 100 TB) cached total.
       // select() pins the slice to the cached column order (and errors
       // on a missing column) so every slice shares one schema.
@@ -151,7 +154,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
       val n = meta.rowCount + freshCount
       cache.appendCachedData(table, aligned,
         CachedQueryMetadata(Some(newWm), n, nowMillis(), conversions))
-      val back = cache.getCachedData(table).getOrElse(cached.unionByName(freshConv))
+      val back = cache.readBack(table).getOrElse(cached.unionByName(freshConv))
       CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, freshCount)
     }
   }

@@ -25,10 +25,10 @@ import graft.core.DocFiles
   *    prunes/pushes down like any other table).
   *  - [[MemoryCacheProvider]]: locally checkpointed DataFrames for
   *    single-application dashboard latency; metadata in-process.
-  * Metadata rides next to the data as a small JSON document; data and
-  * metadata COMMIT TOGETHER (versioned entry + atomic pointer swap in
-  * the parquet provider) so a crash can never pair a dataset with a
-  * stale watermark.
+  * An entry is its data and a small JSON metadata document, and the
+  * two COMMIT TOGETHER (one entry document replaced by a checked swap
+  * in the parquet provider, one map slot in the memory provider) so a
+  * crash can never pair a dataset with a stale watermark.
   */
 trait CacheProvider {
   /** Atomically commit data AND metadata for `key`: readers see the
@@ -56,167 +56,117 @@ trait CacheProvider {
   def clear(): Unit
 }
 
-/** Durable provider: versioned parquet entries with an atomic pointer.
+/** Durable provider: an entry is immutable parquet slices plus one
+  * entry document.
   *
-  * Layout: `dir/<key>/slice-<m>/` (immutable parquet slices, shared
-  * across versions) + `dir/<key>/v-<n>/manifest` (newline-separated
-  * slice names this version reads) + `dir/<key>/v-<n>/schema.json` +
-  * `dir/<key>/v-<n>/meta.json` + `dir/<key>/CURRENT` (one line naming
-  * the committed version). Every small file is a [[DocFiles]]
-  * document. Commit: (1) write the new slice fully; (2) write
-  * manifest + schema + meta; (3) swap CURRENT (the old pointer is
-  * parked aside until the new one is in); (4) delete version
-  * dirs and slices the new manifest no longer references. Readers
-  * resolve CURRENT and fall back to the highest COMPLETE version
-  * (manifest slices all `_SUCCESS` + meta.json present), so a crash
-  * anywhere leaves either the old or the new complete entry readable
-  * — never data paired with the wrong metadata, and never a window
-  * where a concurrent reader sees a half-deleted dataset (a committed
-  * version's slices are untouched until the next pointer is live).
+  * Layout: `dir/<key>/slice-<m>/` (parquet dirs, never rewritten) and
+  * `dir/<key>/entry.json`, a [[DocFiles]] document holding the slices
+  * the entry reads, the schema recorded at commit and the caller's
+  * metadata JSON. Commit: (1) write the new slice fully; (2) replace
+  * the entry document with [[DocFiles.write]]'s checked swap; (3)
+  * delete the slices the document no longer names. At every crash
+  * point a reader sees the old complete entry or the new one (the
+  * document's aside copy serves while a swap is cut short), never data
+  * paired with the wrong metadata, and a slice the old document names
+  * stays on disk until the new document is in. An entry whose slices
+  * are not all `_SUCCESS`-complete, or a key without an entry document
+  * (an earlier on-disk layout), reads as a miss: the cache holds
+  * derived data, so the next request rebuilds it, and [[vacuum]]
+  * removes the files left behind.
   *
-  * Why slices: an incremental refresh appends a tail manifest entry
-  * and writes ONLY the tail (`appendEntry`) — at 100 TB cached + 1%
-  * tail, rewriting the full dataset per refresh would dominate the
-  * sync. `putEntry` is also the compactor: any full rewrite collapses
-  * the entry back to one slice, and `appendEntry` self-compacts once
-  * the manifest reaches `compactThreshold` slices, so read fan-in
-  * stays bounded however many refreshes run (amortized: one O(total)
-  * rewrite per `compactThreshold` O(tail) appends). (Legacy
-  * `v-<n>/data` entries without a manifest remain readable; the first
-  * append migrates them.)
+  * Why slices: an incremental refresh writes ONLY the tail
+  * (`appendEntry`) — at 100 TB cached + 1% tail, rewriting the full
+  * dataset per refresh would dominate the sync. `putEntry` is also the
+  * compactor: any full rewrite collapses the entry back to one slice,
+  * and `appendEntry` self-compacts once the entry holds
+  * [[ParquetCacheProvider.CompactAt]] slices, so read fan-in stays
+  * bounded however many refreshes run (amortized: one O(total) rewrite
+  * per `CompactAt` O(tail) appends).
   *
   * Why a recorded schema: `spark.read.parquet` without one runs a
   * schema-inference job on every read, and a refresh reads its entry
-  * twice. The schema is written before `meta.json`, so every complete
-  * version written this way has one; `appendEntry` carries it forward
-  * (slices share the entry's schema). Versions without one — written
-  * before schemas were recorded — read through inference.
+  * twice. `appendEntry` carries it forward (slices share the entry's
+  * schema).
   */
-class ParquetCacheProvider(spark: SparkSession, dir: String,
-                           compactThreshold: Int = 32) extends CacheProvider {
-  require(compactThreshold >= 1, s"compactThreshold must be >= 1, got $compactThreshold")
+class ParquetCacheProvider(spark: SparkSession, dir: String) extends CacheProvider {
+  import ParquetCacheProvider._
 
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def keyDir(key: String) = new Path(dir, key)
-  private def currentPtr(key: String) = new Path(keyDir(key), "CURRENT")
+  private def entryPath(key: String) = new Path(keyDir(key), EntryDoc)
+  private def slicePath(key: String, slice: String) = new Path(keyDir(key), slice)
 
-  private def versionName(n: Long) = f"v-$n%010d"
-  private def parseVersion(name: String): Option[Long] =
-    if (name.startsWith("v-")) name.stripPrefix("v-").toLongOption else None
   private def sliceName(n: Long) = f"slice-$n%010d"
   private def parseSlice(name: String): Option[Long] =
     if (name.startsWith("slice-")) name.stripPrefix("slice-").toLongOption else None
-  private def manifestPath(vdir: Path) = new Path(vdir, "manifest")
-  private def schemaPath(vdir: Path) = new Path(vdir, "schema.json")
 
-  private def metaPath(vdir: Path) = new Path(vdir, "meta.json")
+  private case class Entry(slices: Seq[String], schema: StructType, meta: String)
 
-  private def schemaOf(vdir: Path): Option[StructType] =
-    DocFiles.read(fs, schemaPath(vdir)).map(DataType.fromJson(_).asInstanceOf[StructType])
-
-  /** The parquet dirs a version reads: its manifest's slices, or the
-    * legacy in-version `data` dir when no manifest exists.
+  /** The committed entry, when its document is there and every slice
+    * it names is complete.
     */
-  private def slicesOf(key: String, vdir: Path): Seq[Path] =
-    DocFiles.read(fs, manifestPath(vdir)) match {
-      case Some(m) =>
-        m.split('\n').map(_.trim).filter(_.nonEmpty).toSeq.map(new Path(keyDir(key), _))
-      case None => Seq(new Path(vdir, "data"))
-    }
+  private def resolve(key: String): Option[Entry] =
+    DocFiles.read(fs, entryPath(key)).flatMap { doc =>
+      for {
+        schema <- DocFiles.str(doc, "schema")
+        meta <- DocFiles.str(doc, "meta")
+      } yield Entry(DocFiles.strs(doc, "slices"),
+        DataType.fromJson(schema).asInstanceOf[StructType], meta)
+    }.filter(_.slices.forall(s => fs.exists(new Path(slicePath(key, s), "_SUCCESS"))))
 
-  private def isComplete(key: String, vdir: Path): Boolean =
-    DocFiles.exists(fs, metaPath(vdir)) &&
-      slicesOf(key, vdir).forall(s => fs.exists(new Path(s, "_SUCCESS")))
+  private def writeEntry(key: String, e: Entry): Unit =
+    DocFiles.write(fs, entryPath(key),
+      DocFiles.obj("slices" -> e.slices, "schema" -> e.schema.json, "meta" -> e.meta))
 
-  /** The committed version dir: pointer first, highest complete
-    * version as crash recovery for an interrupted swap.
-    */
-  private def resolve(key: String): Option[(Long, Path)] = {
+  private def nextSlice(key: String): String = {
     val kd = keyDir(key)
-    if (!fs.exists(kd)) return None
-    val fromPtr = DocFiles.read(fs, currentPtr(key)).map(_.trim)
-      .flatMap(name => parseVersion(name).map(n => (n, new Path(kd, name))))
-      .filter { case (_, p) => isComplete(key, p) }
-    fromPtr.orElse {
-      fs.listStatus(kd).toSeq
-        .flatMap(s => parseVersion(s.getPath.getName).map(_ -> s.getPath))
-        .filter { case (_, p) => isComplete(key, p) }
-        .sortBy(-_._1)
-        .headOption
-    }
+    val used = if (!fs.exists(kd)) Nil
+      else fs.listStatus(kd).toSeq.flatMap(s => parseSlice(s.getPath.getName))
+    sliceName(used.maxOption.map(_ + 1).getOrElse(0L))
   }
 
-  private def nextSliceNum(key: String): Long = {
-    val kd = keyDir(key)
-    if (!fs.exists(kd)) 0L
-    else fs.listStatus(kd).toSeq
-      .flatMap(s => parseSlice(s.getPath.getName))
-      .maxOption.map(_ + 1).getOrElse(0L)
-  }
-
-  /** Commit `slices` + meta as version `next`, swap the pointer, then
-    * GC version dirs other than `next` and slice dirs the new manifest
-    * does not reference. Everything the OLD version reads stays on
-    * disk until the new pointer is live.
+  /** Steps 2 and 3 of a commit: the new document, then the slices it no
+    * longer names.
     */
-  private def commitVersion(key: String, next: Long, slices: Seq[String],
-                            schema: Option[StructType], metaJson: String): Unit = {
-    val vdir = new Path(keyDir(key), versionName(next))
-    DocFiles.write(fs, manifestPath(vdir), slices.mkString("\n"))
-    schema.foreach(st => DocFiles.write(fs, schemaPath(vdir), st.json))
-    DocFiles.write(fs, metaPath(vdir), metaJson)
-    DocFiles.write(fs, currentPtr(key), versionName(next))
-    val keep = slices.toSet
+  private def commit(key: String, e: Entry): Unit = {
+    writeEntry(key, e)
     fs.listStatus(keyDir(key)).foreach { s =>
       val name = s.getPath.getName
-      val stray = parseVersion(name).exists(_ != next) ||
-        (parseSlice(name).isDefined && !keep.contains(name))
-      if (stray) fs.delete(s.getPath, true)
+      if (parseSlice(name).isDefined && !e.slices.contains(name)) fs.delete(s.getPath, true)
     }
   }
 
+  private def read(key: String, e: Entry): DataFrame =
+    spark.read.schema(e.schema).parquet(e.slices.map(slicePath(key, _).toString): _*)
+
   override def putEntry(key: String, df: DataFrame, metaJson: String): Unit = {
-    val prev = resolve(key)
-    val next = prev.map(_._1 + 1).getOrElse(0L)
-    val slice = sliceName(nextSliceNum(key))
-    // a full-rewrite plan may READ the current version (cached ∪
-    // fresh) — the new slice is fully materialized before any slice
-    // the old version references is dropped
-    df.write.mode("overwrite").parquet(new Path(keyDir(key), slice).toString)
-    commitVersion(key, next, Seq(slice), Some(df.schema), metaJson)
+    val slice = nextSlice(key)
+    // a full-rewrite plan may READ the current entry (cached ∪ fresh)
+    // — the new slice is fully materialized before any slice the old
+    // document names is dropped
+    df.write.mode("overwrite").parquet(slicePath(key, slice).toString)
+    commit(key, Entry(Seq(slice), df.schema, metaJson))
   }
 
   override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
     resolve(key) match {
       case None => putEntry(key, tail, metaJson)
-      case Some((_, vdir)) if !DocFiles.exists(fs, manifestPath(vdir)) =>
-        // legacy full-dir entry: one-time O(total) migration rewrite
-        putEntry(key, getData(key).get.unionByName(tail), metaJson)
-      case Some((cur, vdir)) =>
-        val prevSlices = slicesOf(key, vdir).map(_.getName)
-        if (prevSlices.size + 1 > compactThreshold)
-          putEntry(key, getData(key).get.unionByName(tail), metaJson)
-        else {
-          val slice = sliceName(nextSliceNum(key))
-          tail.write.mode("overwrite").parquet(new Path(keyDir(key), slice).toString)
-          commitVersion(key, cur + 1, prevSlices :+ slice, schemaOf(vdir), metaJson)
-        }
+      case Some(e) if e.slices.size >= CompactAt =>
+        putEntry(key, read(key, e).unionByName(tail), metaJson)
+      case Some(e) =>
+        val slice = nextSlice(key)
+        tail.write.mode("overwrite").parquet(slicePath(key, slice).toString)
+        commit(key, e.copy(slices = e.slices :+ slice, meta = metaJson))
     }
 
+  // same slices, new metadata: a crash mid-swap leaves the old or the new
   override def putMeta(key: String, json: String): Unit =
-    // metadata-only update inside the committed version (data
-    // unchanged): a crash mid-swap leaves the old meta or the new one
-    resolve(key).foreach { case (_, vdir) => DocFiles.write(fs, metaPath(vdir), json) }
+    resolve(key).foreach(e => writeEntry(key, e.copy(meta = json)))
 
-  override def getData(key: String): Option[DataFrame] =
-    resolve(key).map { case (_, p) =>
-      val reader = schemaOf(p).fold(spark.read)(spark.read.schema)
-      reader.parquet(slicesOf(key, p).map(_.toString): _*)
-    }
+  override def getData(key: String): Option[DataFrame] = resolve(key).map(read(key, _))
 
-  override def getMeta(key: String): Option[String] =
-    resolve(key).flatMap { case (_, p) => DocFiles.read(fs, metaPath(p)) }
+  override def getMeta(key: String): Option[String] = resolve(key).map(_.meta)
 
   override def hasEntry(key: String): Boolean = resolve(key).isDefined
 
@@ -230,67 +180,46 @@ class ParquetCacheProvider(spark: SparkSession, dir: String,
     if (fs.exists(d)) fs.listStatus(d).foreach(s => fs.delete(s.getPath, true))
   }
 
-  /** Garbage-collect crash debris across ALL keys: version dirs other
-    * than each key's committed version (a commit interrupted before
-    * its pointer swap strands a `v-*`; one interrupted during GC
-    * strands older complete versions), slice dirs the committed
-    * manifest does not reference (an `appendEntry` interrupted after
-    * its tail write), pointer temp and aside copies an interrupted swap
-    * left ([[DocFiles.isDebris]]), and key dirs with
-    * no complete version at all. Idempotent; committed entries and
-    * pointers are never touched, so concurrent readers are unaffected.
+  /** Garbage-collect debris across ALL keys: under a key with a
+    * complete entry, everything but the entry document and the slices
+    * it names (a slice an `appendEntry` cut short after its tail write
+    * left, a temp copy of the document, files of an earlier on-disk
+    * layout); a key dir with no complete entry, whole. Idempotent;
+    * committed entries are never touched, so concurrent readers are
+    * unaffected.
     *
     * Concurrent WRITERS are protected by `graceMillis` (default 1 h):
-    * debris younger than the grace window is left alone, because an
-    * unreferenced slice or version may be an IN-FLIGHT commit that has
-    * not swapped its pointer yet — deleting it would make the commit
-    * land a manifest naming a missing slice. Pass 0 only when no
+    * debris that changed within the grace window is left alone
+    * ([[DocFiles.idle]]), because an unnamed slice or a temp document
+    * may belong to an IN-FLIGHT commit — deleting it would make the
+    * commit land a document naming a missing slice. Pass 0 only when no
     * writer can be active. Returns how many paths were removed.
     */
   def vacuum(graceMillis: Long = 3600000L): Int = {
     val d = new Path(dir)
     if (!fs.exists(d)) return 0
     val cutoff = System.currentTimeMillis() - graceMillis
-    // a directory's own mtime is set at creation and NOT refreshed by
-    // writes landing deeper inside (parquet tasks stream into nested
-    // _temporary attempt dirs) — liveness is the NEWEST mtime anywhere
-    // in the subtree, or a write running longer than the grace window
-    // would still be vacuumed mid-flight
-    def newestMtime(p: Path): Long = {
-      val st = fs.getFileStatus(p)
-      if (!st.isDirectory) st.getModificationTime
-      else (st.getModificationTime +:
-        fs.listStatus(p).toSeq.map(s => newestMtime(s.getPath))).max
-    }
-    def oldEnough(s: org.apache.hadoop.fs.FileStatus) =
-      newestMtime(s.getPath) <= cutoff
-    var removed = 0
-    fs.listStatus(d).filter(_.isDirectory).foreach { kd =>
-      val key = kd.getPath.getName
-      resolve(key) match {
-        case Some((keepV, keepDir)) =>
-          val keepSlices = slicesOf(key, keepDir).map(_.getName).toSet
-          fs.listStatus(kd.getPath).foreach { s =>
-            val name = s.getPath.getName
-            val stray = parseVersion(name) match {
-              case Some(v) => v != keepV
-              case None => parseSlice(name) match {
-                case Some(_) => !keepSlices.contains(name)
-                case None => DocFiles.isDebris(fs, s.getPath)
-              }
-            }
-            if (stray && oldEnough(s)) { fs.delete(s.getPath, true); removed += 1 }
-          }
-        case None =>
-          // no complete version: nothing a reader could resolve — the
-          // whole key dir is debris (unless a first commit is in flight)
-          if (oldEnough(fs.getFileStatus(kd.getPath))) {
-            fs.delete(kd.getPath, true); removed += 1
-          }
+    def remove(p: Path): Int =
+      if (DocFiles.idle(fs, p, cutoff)) { fs.delete(p, true); 1 } else 0
+    fs.listStatus(d).filter(_.isDirectory).map(_.getPath).map { kd =>
+      resolve(kd.getName) match {
+        case Some(e) =>
+          // the aside copy IS the entry while a swap is cut short
+          def kept(p: Path) = p.getName == EntryDoc || e.slices.contains(p.getName) ||
+            (p.getName == s".$EntryDoc.old" && !DocFiles.isDebris(fs, p))
+          fs.listStatus(kd).map(_.getPath).filterNot(kept).map(remove).sum
+        case None => remove(kd)
       }
-    }
-    removed
+    }.sum
   }
+}
+
+object ParquetCacheProvider {
+  /** The entry document's name under each key dir. */
+  private val EntryDoc = "entry.json"
+
+  /** Slices an entry holds before `appendEntry` compacts it to one. */
+  val CompactAt = 32
 }
 
 /** In-process provider: locally checkpointed plans keyed in a
@@ -402,10 +331,19 @@ class QueryCacheManager(provider: CacheProvider,
     custom.fold(esc(table))(k => s"${esc(table)}_${esc(k)}")
 
   def getCachedData(table: String, cacheKey: Option[String] = None): Option[DataFrame] = {
-    val r = provider.getData(entryKey(table, cacheKey))
+    val r = readBack(table, cacheKey)
     if (r.isDefined) hits.incrementAndGet() else misses.incrementAndGet()
     r
   }
+
+  /** The entry's data without counting a hit or a miss: a service
+    * reading back what it has just committed.
+    */
+  private[cache] def readBack(table: String, cacheKey: Option[String] = None): Option[DataFrame] =
+    provider.getData(entryKey(table, cacheKey))
+
+  /** Counts a request that found no usable entry and built one cold. */
+  private[cache] def recordMiss(): Unit = misses.incrementAndGet()
 
   /** Data and metadata commit as ONE atomic entry — see
     * [[CacheProvider.putEntry]] for why the pairing must be atomic.

@@ -9,9 +9,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The one mechanism behind every small metadata document graft keeps
   * on a Hadoop filesystem: watermarks, schema pointers and partial
   * progress ([[graft.sync.StateStore]]), sync-log records, table
-  * configs, the sync lease, the parquet cache's `CURRENT` pointer,
-  * manifest, schema and meta, the snapshot store's `CURRENT` pointer
-  * and the store-compaction manifest.
+  * configs, the sync lease, the parquet cache's entry document, the
+  * snapshot store's `CURRENT` pointer and the store-compaction
+  * manifest.
   *
   * Replace: the new copy is staged at `.<name>.tmp`, the live copy is
   * renamed aside to `.<name>.old`, the staged copy is renamed in, and
@@ -118,6 +118,18 @@ object DocFiles {
     val n = p.getName
     n.endsWith(".tmp") || (n.startsWith(".") && n.endsWith(".old") &&
       fs.exists(new Path(p.getParent, n.drop(1).dropRight(4))))
+  }
+
+  /** The vacuum grace test: nothing anywhere under `p` was modified
+    * after `cutoff` (epoch millis). A directory's own mtime is set at
+    * creation and not refreshed by writes landing deeper inside
+    * (parquet tasks stream into nested `_temporary` attempt dirs), so a
+    * write running longer than the grace window still counts as live.
+    */
+  def idle(fs: FileSystem, p: Path, cutoff: Long): Boolean = {
+    val st = fs.getFileStatus(p)
+    st.getModificationTime <= cutoff &&
+      (!st.isDirectory || fs.listStatus(p).forall(s => idle(fs, s.getPath, cutoff)))
   }
 
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =

@@ -112,14 +112,6 @@ class SnapshotStore(spark: SparkSession, dir: String) {
     if (!fs.exists(root)) return 0
     val keep = resolve().map(_._1)
     val cutoff = System.currentTimeMillis() - graceMillis
-    // liveness = NEWEST mtime in the subtree: a dir's own mtime is set
-    // at creation and not refreshed by writes landing deeper inside
-    def newestMtime(p: Path): Long = {
-      val st = fs.getFileStatus(p)
-      if (!st.isDirectory) st.getModificationTime
-      else (st.getModificationTime +:
-        fs.listStatus(p).toSeq.map(x => newestMtime(x.getPath))).max
-    }
     var removed = 0
     fs.listStatus(root).foreach { s =>
       val name = s.getPath.getName
@@ -127,7 +119,7 @@ class SnapshotStore(spark: SparkSession, dir: String) {
         case Some(id) => !keep.contains(id)
         case None => DocFiles.isDebris(fs, s.getPath)
       }
-      if (stray && newestMtime(s.getPath) <= cutoff) {
+      if (stray && DocFiles.idle(fs, s.getPath, cutoff)) {
         fs.delete(s.getPath, true); removed += 1
       }
     }

@@ -47,11 +47,7 @@ object PartitionedSync {
   val PartCol = "__part"
 
   /** `maxTime` is the watermark candidate: max(timeCol) over the
-    * EXACT fresh rows that were merged (computed while the tail is
-    * persisted). Deriving it afterwards by re-aggregating the fresh
-    * PLAN would re-read the live source — a row committed mid-sync
-    * would raise the watermark without having been merged and be
-    * skipped by every later incremental pull, silently forever.
+    * EXACT fresh rows that were merged ([[SyncOps.withPersistedTail]]).
     */
   case class MergeStats(
       freshRows: Long,
@@ -91,9 +87,24 @@ object PartitionedSync {
       .write.partitionBy(PartCol).mode("overwrite").parquet(path)
   }
 
-  /** The synced table as a caller sees it (partition column dropped). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop(PartCol)
+  /** The synced table as a caller sees it (partition column dropped).
+    * A partition that a cut-short [[swapIn]] left parked aside is read
+    * from there, as [[graft.core.DocFiles.read]] reads a document: the
+    * reader holds no lease, so it restores nothing and leaves that to
+    * the next rewrite's [[recover]]. Without such a partition this is
+    * one parquet read of `path`.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val names = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).map(_.getPath.getName).toSet
+    val parked = names.toSeq.sorted
+      .filter(n => n.startsWith(s".$PartCol=") && n.endsWith(".old"))
+      .filterNot(n => names(n.drop(1).dropRight(4)))
+    val live = if (parked.isEmpty || names.exists(_.startsWith(s"$PartCol="))) Seq(path) else Nil
+    (live ++ parked.map(new Path(root, _).toString))
+      .map(spark.read.parquet(_).drop(PartCol)).reduce(_ unionByName _)
+  }
 
   /** Merge `fresh` into the partitioned target at `path`, keeping the
     * latest (timeCol, tieBreak) row per key, rewriting only affected
@@ -109,45 +120,39 @@ object PartitionedSync {
     recover(fs, root, PartCol)
 
     val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket))
-    freshP.persist()
-    try {
-      // one action materializes the persisted tail AND yields both the
-      // row count and the watermark candidate (see MergeStats doc)
-      val head = freshP
-        .agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
-      val freshRows = head.getLong(0)
+    SyncOps.withPersistedTail(freshP, timeCol) { (freshRows, maxTime) =>
       if (freshRows == 0)
-        return MergeStats(0L, Nil, partitionValues(fs, root, PartCol).size.toLong, Nil, None)
-      val maxTime = Option(head.getString(1))
+        MergeStats(0L, Nil, partitionValues(fs, root, PartCol).size.toLong, Nil, None)
+      else {
+        // explicit schema: partition discovery would otherwise INFER the
+        // partition column's type from its values (a 'yyyy' bucket reads
+        // back as LONG) and the string plumbing below would miscompare —
+        // the user-supplied schema pins __part to string and still
+        // partition-prunes
+        val target = spark.read.schema(freshP.schema).parquet(path)
+        // partitions receiving fresh rows ∪ partitions holding stale
+        // versions of fresh keys (key+partition columns only — column
+        // pruning keeps the payload out of this scan; AQE broadcasts the
+        // fresh key set when small)
+        val partsNew = freshP.select(PartCol).distinct()
+        val partsStale = target
+          .join(freshP.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .select(PartCol).distinct()
+        val affected = partsNew.unionByName(partsStale).distinct()
+          .collect().map(_.getString(0)).sorted.toIndexedSeq
+        val before = partitionValues(fs, root, PartCol)
 
-      // explicit schema: partition discovery would otherwise INFER the
-      // partition column's type from its values (a 'yyyy' bucket reads
-      // back as LONG) and the string plumbing below would miscompare —
-      // the user-supplied schema pins __part to string and still
-      // partition-prunes
-      val target = spark.read.schema(freshP.schema).parquet(path)
-      // partitions receiving fresh rows ∪ partitions holding stale
-      // versions of fresh keys (key+partition columns only — column
-      // pruning keeps the payload out of this scan; AQE broadcasts the
-      // fresh key set when small)
-      val partsNew = freshP.select(PartCol).distinct()
-      val partsStale = target
-        .join(freshP.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(PartCol).distinct()
-      val affected = partsNew.unionByName(partsStale).distinct()
-        .collect().map(_.getString(0)).sorted.toIndexedSeq
-      val before = partitionValues(fs, root, PartCol)
+        // the repartition-on-PartCol (the writeFull rationale) keeps the
+        // staged write one-file-per-bucket
+        val slice = target.filter(col(PartCol).isin(affected: _*))
+        val merged = SyncOps.upsertKeepLatest(
+          slice.unionByName(freshP), keys, timeCol, tieBreak)
+          .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
+        val emptied = swapIn(merged, path, PartCol, affected)
 
-      // the repartition-on-PartCol (the writeFull rationale) keeps the
-      // staged write one-file-per-bucket
-      val slice = target.filter(col(PartCol).isin(affected: _*))
-      val merged = SyncOps.upsertKeepLatest(
-        slice.unionByName(freshP), keys, timeCol, tieBreak)
-        .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
-      val emptied = swapIn(merged, path, PartCol, affected)
-
-      MergeStats(freshRows, affected, before.size.toLong, emptied, maxTime)
-    } finally freshP.unpersist(blocking = true)
+        MergeStats(freshRows, affected, before.size.toLong, emptied, maxTime)
+      }
+    }
   }
 
   /** Hidden staging directory of [[swapIn]], under the table root:

@@ -97,14 +97,16 @@ class SyncRunner(spark: SparkSession,
         case Some(w) =>
           val tc = cfg.timeColumn.get
           val fresh = freshTail(src, tc, w)
-          val nFresh = fresh.count()
-          if (nFresh > 0) {
-            val merged = SyncOps.applyIncremental(
-              target(cfg), fresh, Seq(cfg.primaryKey), tc, cfg.primaryKey)
-            writeTarget(cfg, merged)
-            advanceWatermark(cfg)
+          SyncOps.withPersistedTail(fresh, tc) { (nFresh, maxTime) =>
+            if (nFresh > 0) {
+              writeTarget(cfg, SyncOps.applyIncremental(
+                target(cfg), fresh, Seq(cfg.primaryKey), tc, cfg.primaryKey))
+              // every fresh row is past the target's rows, so the tail's
+              // max is the merged target's: no rescan of the target
+              maxTime.foreach(state.saveWatermark(cfg.targetTable, _))
+            }
+            nFresh
           }
-          nFresh
         case None =>
           writeTarget(cfg, src)
           if (cfg.hasTimeColumn) advanceWatermark(cfg)
@@ -175,10 +177,9 @@ class SyncRunner(spark: SparkSession,
     }
   }
 
-  /** Watermark = max(timeColumn) over the just-written TARGET (full
-    * syncs and full-rewrite merges; the partitioned path gets its
-    * watermark from `MergeStats.maxTime` instead — see there for why
-    * re-aggregating a source plan is wrong).
+  /** Watermark = max(timeColumn) over the just-written TARGET, after a
+    * full sync; incremental merges take the max over the persisted
+    * tail instead ([[SyncOps.withPersistedTail]]).
     */
   private def advanceWatermark(cfg: TableConfig): Unit =
     cfg.timeColumn.foreach { tc =>

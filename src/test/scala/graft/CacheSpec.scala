@@ -2,9 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
 import graft.cache._
+import graft.core.DocFiles
 
 /** Cache layer specs — mirrors the reference's
   * test/application/test_cache_provider.py surfaces: hit/miss +
@@ -24,6 +26,16 @@ class CacheSpec extends SparkSpec {
       i * 1.7 - 3))
     .toDF("id", "ts", "v")
   private def tsRows(n: Int): org.apache.spark.sql.DataFrame = tsRows(1, n)
+
+  private def fsOf(dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Parks a key's entry document aside, as a swap cut short between
+    * its two renames leaves it.
+    */
+  private def parkEntry(keyDir: java.io.File): Unit =
+    assert(fsOf(keyDir.getPath).rename(new Path(keyDir.getPath, "entry.json"),
+      new Path(keyDir.getPath, ".entry.json.old")))
 
   private def fullAgg(srcDir: String) = graft.ops.IncrementalAgg.readState(
     graft.ops.IncrementalAgg.bucketState(
@@ -125,15 +137,15 @@ class CacheSpec extends SparkSpec {
     mgr.setCachedData("t", merged, CachedQueryMetadata(Some("wm2"), 7L, 1L))
     assert(mgr.getCachedData("t").exists(_.count() == 7))
     assert(mgr.getMetadata("t").flatMap(_.lastTimestamp).contains("wm2"))
-    // crash recovery: lose the CURRENT pointer mid-swap — the complete
-    // version still resolves, with data and ITS metadata paired
+    // crash recovery: the live entry document lost mid-swap — its
+    // aside copy still resolves, with data and ITS metadata paired
     val keyDir = new java.io.File(cacheDir).listFiles().filter(_.isDirectory).head
-    assert(new java.io.File(keyDir, "CURRENT").delete())
+    parkEntry(keyDir)
     assert(mgr.hasCache("t"))
     assert(mgr.getCachedData("t").exists(_.count() == 7))
     assert(mgr.getMetadata("t").flatMap(_.lastTimestamp).contains("wm2"))
-    // old versions were garbage-collected after the swap
-    assert(keyDir.listFiles().count(_.getName.startsWith("v-")) == 1)
+    // the slice the previous document named was deleted after the swap
+    assert(keyDir.listFiles().count(_.getName.startsWith("slice-")) == 1)
   }
 
   test("parquet provider: appendEntry writes only the tail slice; putEntry compacts") {
@@ -154,14 +166,18 @@ class CacheSpec extends SparkSpec {
     assert(spark.read.parquet(slices.last.getPath).count() == 5) // tail only
     assert(prov.getData("t").exists(_.count() == 15)) // union reads all slices
     assert(prov.getMeta("t").contains("""{"m":2}"""))
-    // appended entry survives pointer loss like any committed version
-    assert(new java.io.File(keyDir, "CURRENT").delete())
+    // an appended entry survives losing its live document mid-swap
+    // like any committed one
+    parkEntry(keyDir)
     assert(prov.getData("t").exists(_.count() == 15))
 
-    // a full rewrite is the compactor: back to one slice
+    // a full rewrite is the compactor: back to one slice, and the
+    // document is live again
     prov.putEntry("t", prov.getData("t").get.filter(col("id") <= 12), """{"m":3}""")
     assert(slices.length == 1)
     assert(prov.getData("t").exists(_.count() == 12))
+    assert(new java.io.File(keyDir, "entry.json").isFile &&
+      !new java.io.File(keyDir, ".entry.json.old").exists())
   }
 
   test("memory provider: append compaction bounds the union-plan depth") {
@@ -181,18 +197,20 @@ class CacheSpec extends SparkSpec {
 
   test("parquet provider: appendEntry self-compacts at the slice threshold") {
     val cacheDir = tempDir("graft-cache-compact")
-    val prov = new ParquetCacheProvider(spark, cacheDir, compactThreshold = 3)
-    prov.putEntry("t", eventsDf(2), """{"m":1}""")
-    prov.appendEntry("t", eventsDf(4).filter(col("id") > 2), """{"m":2}""")
-    prov.appendEntry("t", eventsDf(6).filter(col("id") > 4), """{"m":3}""")
+    val prov = new ParquetCacheProvider(spark, cacheDir)
+    val n = ParquetCacheProvider.CompactAt
+    // one row per slice: the entry reaches the threshold
+    prov.putEntry("t", eventsDf(1), """{"m":1}""")
+    (2 to n).foreach(i =>
+      prov.appendEntry("t", eventsDf(i).filter(col("id") === i), s"""{"m":$i}"""))
     val keyDir = new java.io.File(cacheDir).listFiles().filter(_.isDirectory).head
     def nSlices = keyDir.listFiles().count(_.getName.startsWith("slice-"))
-    assert(nSlices == 3)
-    // a 4th slice would exceed the threshold → this append compacts
-    prov.appendEntry("t", eventsDf(8).filter(col("id") > 6), """{"m":4}""")
+    assert(nSlices == n)
+    // one more slice would exceed the threshold → this append compacts
+    prov.appendEntry("t", eventsDf(n + 1).filter(col("id") > n), s"""{"m":${n + 1}}""")
     assert(nSlices == 1)
-    assert(prov.getData("t").exists(_.count() == 8))
-    assert(prov.getMeta("t").contains("""{"m":4}"""))
+    assert(prov.getData("t").get.orderBy("id").collect().toSeq == eventsDf(n + 1).collect().toSeq)
+    assert(prov.getMeta("t").contains(s"""{"m":${n + 1}}"""))
   }
 
   test("parquet provider: vacuum removes a stranded append slice, keeps referenced ones") {
@@ -201,7 +219,7 @@ class CacheSpec extends SparkSpec {
     prov.putEntry("t", eventsDf(3), """{"m":1}""")
     prov.appendEntry("t", eventsDf(5).filter(col("id") > 3), """{"m":2}""")
     // an appendEntry interrupted after its tail write strands a slice
-    // no manifest references
+    // the entry document does not name
     eventsDf(1).write.parquet(s"$cacheDir/t/slice-${"%010d".format(9)}")
     assert(prov.vacuum(graceMillis = 0) == 1)
     assert(prov.getData("t").exists(_.count() == 5)) // both committed slices intact
@@ -414,32 +432,87 @@ class CacheSpec extends SparkSpec {
     assert(!held(fourth))
   }
 
-  test("parquet provider: the schema is recorded at commit; a version without one still reads") {
+  test("parquet provider: the schema is recorded at commit; without one, a miss") {
     val cacheDir = tempDir("graft-cache-schema")
     val prov = new ParquetCacheProvider(spark, cacheDir)
     prov.putEntry("t", eventsDf(4), """{"m":1}""")
-    val keyDir = new java.io.File(cacheDir, "t")
-    def schemaFile = new java.io.File(
-      keyDir.listFiles().filter(_.getName.startsWith("v-")).head, "schema.json")
-    def slices = keyDir.listFiles().filter(_.getName.startsWith("slice-")).map(_.getPath)
-    assert(schemaFile.isFile)
+    val doc = new Path(cacheDir, "t/entry.json")
+    val fs = fsOf(cacheDir)
+    def recorded = DocFiles.read(fs, doc).flatMap(DocFiles.str(_, "schema"))
+    def slices = new java.io.File(cacheDir, "t").listFiles()
+      .filter(_.getName.startsWith("slice-")).map(_.getPath)
+    assert(recorded.contains(eventsDf(4).schema.json))
     // the pinned read sees what schema inference would
     val inferred = spark.read.parquet(slices.toIndexedSeq: _*).schema
     assert(prov.getData("t").get.schema == inferred)
     // an append carries the recorded schema forward
     prov.appendEntry("t", eventsDf(6).filter(col("id") > 4), """{"m":2}""")
-    assert(schemaFile.isFile)
+    assert(recorded.contains(eventsDf(4).schema.json))
     assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
       eventsDf(6).collect().toSeq)
-    // an entry written before schemas were recorded: inference, also
-    // through an append onto it
-    assert(schemaFile.delete())
-    assert(prov.getData("t").get.schema == inferred)
-    assert(prov.getData("t").exists(_.count() == 6))
-    prov.appendEntry("t", eventsDf(7).filter(col("id") > 6), """{"m":3}""")
-    assert(!schemaFile.exists())
+    // a document without a schema is not an entry: a miss, and the
+    // next commit replaces it
+    DocFiles.write(fs, doc, DocFiles.obj(
+      "slices" -> slices.map(p => new java.io.File(p).getName).toSeq, "meta" -> """{"m":2}"""))
+    assert(prov.getData("t").isEmpty && prov.getMeta("t").isEmpty && !prov.hasEntry("t"))
+    prov.appendEntry("t", eventsDf(7), """{"m":3}""")
+    assert(recorded.contains(eventsDf(7).schema.json))
     assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
       eventsDf(7).collect().toSeq)
+    assert(slices.length == 1)
+  }
+
+  test("an entry in the earlier CURRENT + version-dir layout is a miss, rebuilt and vacuumed") {
+    val srcDir = tempDir("graft-cache-oldsrc")
+    val cacheDir = tempDir("graft-cache-oldstore")
+    val prov = new ParquetCacheProvider(spark, cacheDir)
+    val svc = new CachedAggService(spark, srcDir, new QueryCacheManager(prov))
+    tsRows(200).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    assert(svc.aggregateWithCaching("t", "ts", "1 hour", "v").rowCount == 200)
+    // rewrite the entry into the earlier layout: the slices stay, the
+    // document becomes a version dir (manifest, schema.json, meta.json)
+    // named by a CURRENT pointer
+    val fs = fsOf(cacheDir)
+    val keyDir = fs.listStatus(new Path(cacheDir)).head.getPath
+    val key = keyDir.getName
+    val doc = DocFiles.read(fs, new Path(keyDir, "entry.json")).get
+    val v0 = new Path(keyDir, "v-0000000000")
+    DocFiles.write(fs, new Path(v0, "manifest"), DocFiles.strs(doc, "slices").mkString("\n"))
+    DocFiles.write(fs, new Path(v0, "schema.json"), DocFiles.str(doc, "schema").get)
+    DocFiles.write(fs, new Path(v0, "meta.json"), DocFiles.str(doc, "meta").get)
+    DocFiles.write(fs, new Path(keyDir, "CURRENT"), "v-0000000000")
+    assert(DocFiles.delete(fs, new Path(keyDir, "entry.json")))
+    assert(!prov.hasEntry(key) && prov.getData(key).isEmpty && prov.getMeta(key).isEmpty)
+
+    // the next refresh rebuilds the entry in full, bit-identical to a
+    // recompute
+    tsRows(300).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val r = svc.aggregateWithCaching("t", "ts", "1 hour", "v")
+    assert(!r.isIncremental && r.rowCount == 300 && r.newRows == 300)
+    assert(r.df.collect().map(_.toSeq).toSeq == fullAgg(srcDir))
+    // the earlier layout's version dir and pointer are vacuum debris
+    assert(prov.vacuum(graceMillis = 0) == 2)
+    assert(fs.listStatus(keyDir).map(_.getPath.getName).sorted.toSeq ==
+      Seq("entry.json", "slice-0000000001"))
+    assert(svc.aggregateWithCaching("t", "ts", "1 hour", "v").df.collect().map(_.toSeq).toSeq ==
+      fullAgg(srcDir))
+  }
+
+  test("service statistics: a cold build is one miss, a refresh one hit") {
+    val srcDir = tempDir("graft-cache-stats")
+    tsRows(200).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val aggMgr = new QueryCacheManager(new ParquetCacheProvider(spark, tempDir("graft-cache-statsagg")))
+    val rowMgr = new QueryCacheManager(new ParquetCacheProvider(spark, tempDir("graft-cache-statsrow")))
+    val aggs = new CachedAggService(spark, srcDir, aggMgr)
+    val rows = new CachedQueryService(spark, srcDir, rowMgr)
+    assert(!aggs.aggregateWithCaching("t", "ts", "1 hour", "v").isIncremental)
+    assert(!rows.queryWithCaching("t", timeCol = Some("ts"), selectedConversions = Some(Map.empty))
+      .isIncremental)
+    tsRows(300).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    assert(aggs.aggregateWithCaching("t", "ts", "1 hour", "v").newRows == 100)
+    assert(rows.queryWithCaching("t", timeCol = Some("ts")).newRows == 100)
+    assert(aggMgr.statistics == ((1L, 1L, 0.5)))
+    assert(rowMgr.statistics == ((1L, 1L, 0.5)))
   }
 
   test("a sync landing mid-refresh is neither lost nor counted twice") {

@@ -90,7 +90,7 @@ class DocFilesSpec extends SparkSpec {
     assert(new SyncLease(spark, s"$dir/lease", "me").holder
       .exists { case (o, p, _) => o == "runner-\"a\"" && p == 4242L })
 
-    // cache: CURRENT, manifest, schema and meta
+    // cache: the entry document (slices, schema and meta in one)
     val metaJson = """{"last_timestamp": "2024-01-01 00:00:10", "row_count": 2, """ +
       """"cached_at": 1700000000000, "selected_conversions": {"d\"quoted": "datetime", "v_str": "numeric"}}"""
     val meta = CachedQueryMetadata(Some("2024-01-01 00:00:10"), 2L, 1700000000000L,
@@ -98,14 +98,17 @@ class DocFilesSpec extends SparkSpec {
     assert(CachedQueryMetadata.fromJson(metaJson).contains(meta))
     assert(CachedQueryMetadata.toJson(meta) == metaJson)
     val data = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    def quoted(json: String) = "\"" + json.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val entryJson = """{"slices": ["slice-0000000000"], "schema": """ + quoted(data.schema.json) +
+      """, "meta": """ + quoted(metaJson) + "}"
     data.write.parquet(s"$dir/cache/k/slice-0000000000")
-    put(dir, "cache/k/v-0000000000/manifest", "slice-0000000000")
-    put(dir, "cache/k/v-0000000000/schema.json", data.schema.json)
-    put(dir, "cache/k/v-0000000000/meta.json", metaJson)
-    put(dir, "cache/k/CURRENT", "v-0000000000")
+    put(dir, "cache/k/entry.json", entryJson)
     val prov = new ParquetCacheProvider(spark, s"$dir/cache")
     assert(prov.getMeta("k").contains(metaJson))
     assert(rows(prov.getData("k").get) == rows(data))
+    // the writer produces that document
+    new ParquetCacheProvider(spark, s"$dir/cache2").putEntry("k", data, metaJson)
+    assert(text(dir, "cache2/k/entry.json") == entryJson)
 
     // snapshot pointer
     data.write.parquet(s"$dir/snap/snap-0000000000000000007")
@@ -204,8 +207,16 @@ class DocFilesSpec extends SparkSpec {
     val old = Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
     val now = Seq((1L, "a2"), (3L, "c")).toDF("id", "v").coalesce(1)
     val template = tempDir("graft-crash-template")
+    def prov(root: String) = new ParquetCacheProvider(spark, CrashFs.path(s"$root/cache"))
     new SnapshotStore(spark, CrashFs.path(s"$template/snap")).commit(old, 1L)
-    new ParquetCacheProvider(spark, CrashFs.path(s"$template/cache")).putEntry("k", old, "m1")
+    prov(template).putEntry("k", old, "m1")
+    // key "c" holds as many slices as an entry takes before an append
+    // compacts it
+    val tails = (1 until ParquetCacheProvider.CompactAt).map(i => Seq((10L + i, s"t$i")).toDF("id", "v"))
+    prov(template).putEntry("c", old, "c1")
+    tails.foreach(prov(template).appendEntry("c", _, "c1"))
+    assert(new File(s"$template/cache/c").list().count(_.startsWith("slice-")) ==
+      ParquetCacheProvider.CompactAt)
     val setup: String => Unit = copyTree(template, _)
 
     bothFaults(setup)(r => new SnapshotStore(spark, CrashFs.path(s"$r/snap")).commit(now, 2L)) {
@@ -214,19 +225,28 @@ class DocFilesSpec extends SparkSpec {
         oldOrNew((s.lastCommittedBatch, s.read().map(rows)),
           (Some(1L), Some(rows(old))), (Some(2L), Some(rows(now))), threw)
     }
-    def cached(root: String) = {
+    def cached(root: String, key: String = "k") = {
       val p = new ParquetCacheProvider(spark, s"$root/cache")
-      (p.getMeta("k"), p.getData("k").map(rows))
+      (p.getMeta(key), p.getData(key).map(rows))
     }
-    bothFaults(setup)(r =>
-      new ParquetCacheProvider(spark, CrashFs.path(s"$r/cache")).putEntry("k", now, "m2")) {
-      (root, threw) =>
-        oldOrNew(cached(root), (Some("m1"), Some(rows(old))), (Some("m2"), Some(rows(now))), threw)
+    bothFaults(setup)(prov(_).putEntry("k", now, "m2")) { (root, threw) =>
+      oldOrNew(cached(root), (Some("m1"), Some(rows(old))), (Some("m2"), Some(rows(now))), threw)
     }
-    bothFaults(setup)(r =>
-      new ParquetCacheProvider(spark, CrashFs.path(s"$r/cache")).putMeta("k", "m2")) {
-      (root, threw) =>
-        oldOrNew(cached(root), (Some("m1"), Some(rows(old))), (Some("m2"), Some(rows(old))), threw)
+    bothFaults(setup)(prov(_).putMeta("k", "m2")) { (root, threw) =>
+      oldOrNew(cached(root), (Some("m1"), Some(rows(old))), (Some("m2"), Some(rows(old))), threw)
+    }
+    // a plain append adds a slice; a compacting one rewrites the entry
+    // as one slice and deletes the slices it held
+    bothFaults(setup)(prov(_).appendEntry("k", now, "m2")) { (root, threw) =>
+      oldOrNew(cached(root), (Some("m1"), Some(rows(old))),
+        (Some("m2"), Some((rows(old) ++ rows(now)).sorted)), threw)
+    }
+    val cOld = (rows(old) ++ tails.flatMap(rows)).sorted
+    bothFaults(setup)(prov(_).appendEntry("c", now, "c2")) { (root, threw) =>
+      oldOrNew(cached(root, "c"), (Some("c1"), Some(cOld)),
+        (Some("c2"), Some((cOld ++ rows(now)).sorted)), threw)
+      if (!threw)
+        assert(new File(s"$root/cache/c").list().count(_.startsWith("slice-")) == 1)
     }
   }
 

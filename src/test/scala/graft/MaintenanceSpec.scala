@@ -115,18 +115,26 @@ class MaintenanceSpec extends SparkSpec {
 
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stranded higher version under k1 (crash before pointer swap):
-    // data written, meta.json never arrived → incomplete
+    def put(path: String, body: String): Unit = {
+      val t = fs.create(new org.apache.hadoop.fs.Path(path), true)
+      t.write(body.getBytes); t.close()
+    }
+    // files the earlier on-disk layout left under k1: a stranded
+    // version dir and its pointer
     Seq((9, "z")).toDF("id", "v").write.parquet(s"$dir/k1/v-${"%010d".format(5)}/data")
-    val t = fs.create(new org.apache.hadoop.fs.Path(s"$dir/k1/CURRENT.tmp"), true)
-    t.write("v-junk".getBytes); t.close()
-    // an orphan key dir with no complete version at all
+    put(s"$dir/k1/CURRENT", "v-0000000005")
+    // an entry-document write cut short before its swap: the temp copy
+    put(s"$dir/k1/.entry.json.tmp", "junk")
+    // an orphan key dir with no entry document at all
     Seq((4, "q")).toDF("id", "v").write.parquet(s"$dir/orphan/v-${"%010d".format(0)}/data")
 
-    assert(prov.vacuum(graceMillis = 0) == 3)
+    assert(prov.vacuum() == 0) // all of it younger than the grace window
+    assert(prov.vacuum(graceMillis = 0) == 4)
     assert(prov.hasEntry("k1"))
     assert(prov.getData("k1").get.count() == 1) // committed entry untouched
     assert(prov.getMeta("k1").contains("""{"m":1}"""))
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/k1")).map(_.getPath.getName).sorted
+      .toSeq == Seq("entry.json", "slice-0000000000"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/orphan")))
     assert(prov.vacuum(graceMillis = 0) == 0) // idempotent
   }

@@ -108,6 +108,23 @@ class PartitionedSyncSpec extends SparkSpec {
     } finally cached.unpersist()
   }
 
+  test("read serves a partition parked aside by a cut-short swap, restoring nothing") {
+    val path = tempDir("graft-psync") + "/t"
+    val all = Seq((1L, "2024-01-10", "a"), (2L, "2024-02-10", "b"), (3L, "2024-02-20", "c"))
+    PartitionedSync.writeFull(all.toDF("id", "ts", "v"), bucket, path)
+    val root = new java.io.File(path)
+    def park(part: String) = assert(new java.io.File(root, s"${PartitionedSync.PartCol}=$part")
+      .renameTo(new java.io.File(root, s".${PartitionedSync.PartCol}=$part.old")))
+    def read() = PartitionedSync.read(spark, path).as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    park("2024-02")
+    val listing = root.list().sorted.toSeq
+    assert(read() == all)
+    assert(root.list().sorted.toSeq == listing)
+    // every partition parked: the parked copies alone
+    park("2024-01")
+    assert(read() == all)
+  }
+
   test("empty fresh slice is a no-op") {
     val path = tempDir("graft-psync") + "/t"
     PartitionedSync.writeFull(rows((1, "2024-01-10", "a")), bucket, path)

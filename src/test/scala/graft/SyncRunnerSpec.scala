@@ -81,6 +81,31 @@ class SyncRunnerSpec extends SparkSpec {
       Seq("incremental", "incremental", "full"))
   }
 
+  test("an incremental cycle pulls each fresh source row once") {
+    val state = new StateStore(spark, tempDir("graft-pull-state"))
+    val cfg = TableConfig("S", "t", "t_pull", "id", timeColumn = Some("updated_at"))
+    val pulled = spark.sparkContext.longAccumulator("fresh rows pulled")
+    var src = srcRows(10)
+    // the source counts each row past the stored watermark it hands over
+    val runner = new SyncRunner(spark, c => {
+      val wm = state.loadWatermark(c.targetTable).map(Timestamp.valueOf)
+      val acc = pulled
+      spark.createDataFrame(src.rdd.map { r =>
+        if (wm.exists(r.getTimestamp(1).after(_))) acc.add(1L)
+        r
+      }, src.schema)
+    }, tempDir("graft-pull-tgt"), state, new SyncLogRepo(spark, tempDir("graft-pull-log")))
+    assert(runner.syncTable(cfg).syncType == "full")
+
+    src = srcRows(15, bump = Map(3L -> 1))
+    pulled.reset()
+    val e = runner.syncTable(cfg)
+    assert(e.syncType == "incremental" && e.totalRows == 6)
+    assert(pulled.value == 6L) // 5 new + 1 updated, each pulled once
+    assert(runner.target(cfg).count() == 15)
+    assert(state.loadWatermark("t_pull").contains("2024-01-01 00:00:18"))
+  }
+
   test("crash mid-swap: the target parked aside is restored, next cycle stays incremental") {
     val srcDir = tempDir("graft-swap-src")
     val tgtDir = tempDir("graft-swap-tgt")
