@@ -55,8 +55,7 @@ class CachedAggService(spark: SparkSession, dir: String,
     val tsType = base.schema(timeCol).dataType
     val wm = meta.flatMap(_.lastTimestamp)
     val fresh = wm.fold(base)(w => base.filter(col(timeCol) > lit(w).cast(tsType)))
-    val probe = fresh.agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
-    val freshCount = probe.getLong(0)
+    val (freshCount, newWm) = Tables.countAndMax(fresh, Some(timeCol))
     val cached = wm.map(_ => cache.getCachedData(table, key)
       .getOrElse(sys.error(s"cache metadata present but state missing for '$table' ($key)")))
     if (cached.isEmpty) cache.recordMiss()
@@ -65,7 +64,6 @@ class CachedAggService(spark: SparkSession, dir: String,
       case Some(state) if freshCount == 0 =>
         CachedQueryResult(read(state), isIncremental = true, prevCount, 0)
       case _ =>
-        val newWm = Option(probe.getString(1))
         val tail = build(fresh.filter(
           coalesce(col(timeCol) <= lit(newWm.orNull).cast(tsType), lit(true))))
         val state = cached.fold(tail)(merge(_, tail))

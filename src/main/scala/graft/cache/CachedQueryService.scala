@@ -92,9 +92,6 @@ class CachedQueryService(spark: SparkSession, dir: String,
                                  sel: Option[Map[String, String]]): Map[String, String] =
     sel.getOrElse(TypeInference.suggestConversions(df))
 
-  private def maxTsString(df: DataFrame, tc: String): Option[String] =
-    Option(df.agg(max(col(tc)).cast("string")).head().getString(0))
-
   private def initialLoad(table: String, limit: Int, timeCol: Option[String],
                           sel: Option[Map[String, String]]): CachedQueryResult = {
     val base = Tables.loadNormalized(spark, dir, table)
@@ -105,7 +102,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
     // them (silent permanent loss).
     val slice = timeCol match {
       case Some(tc) =>
-        maxTsString(base.orderBy(col(tc)).limit(limit), tc) match {
+        Tables.countAndMax(base.orderBy(col(tc)).limit(limit), Some(tc))._2 match {
           case Some(b) => base.filter(col(tc) <= lit(b).cast(base.schema(tc).dataType))
           case None => base.limit(limit) // empty table
         }
@@ -115,8 +112,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
     // force: the resolved map is the authoritative schema decision —
     // both the initial slice and every future tail apply it verbatim
     val converted = TypeInference.applyConversions(slice, conversions, force = true)
-    val n = converted.count()
-    val wm = timeCol.flatMap(tc => maxTsString(converted, tc))
+    val (n, wm) = Tables.countAndMax(converted, timeCol)
     cache.setCachedData(table, converted,
       CachedQueryMetadata(wm, n, nowMillis(), conversions))
     cache.recordMiss()
@@ -132,19 +128,18 @@ class CachedQueryService(spark: SparkSession, dir: String,
     // pushed predicate: only the tail past the watermark leaves the
     // scan; one action counts it and probes the new watermark
     val fresh = base.filter(col(tc) > lit(wm).cast(tsType))
-    val probe = fresh.agg(count(lit(1)), max(col(tc)).cast("string")).head()
-    val freshCount = probe.getLong(0)
+    val (freshCount, newWm) = Tables.countAndMax(fresh, Some(tc))
     val cached = cache.getCachedData(table)
       .getOrElse(sys.error(s"cache metadata present but data missing for '$table'"))
     if (freshCount == 0)
       CachedQueryResult(ordered(cached, Some(tc)), isIncremental = true, meta.rowCount, 0)
     else {
-      val newWm = probe.getString(1) // non-null: the tail has rows past wm
       // reapply EXACTLY the conversions recorded at initial load (or the
       // caller's override) — never re-infer on the tail slice
       val conversions = sel.getOrElse(meta.selectedConversions)
       val freshConv = TypeInference.applyConversions(
-        fresh.filter(col(tc) <= lit(newWm).cast(tsType)), conversions, force = true)
+        // newWm is set: the tail has rows past wm
+        fresh.filter(col(tc) <= lit(newWm.get).cast(tsType)), conversions, force = true)
       // O(tail) commit: only the fresh slice is written — the provider
       // lists it alongside the already-cached slices, so refresh
       // cost tracks the tail, not the (possibly 100 TB) cached total.
@@ -153,7 +148,7 @@ class CachedQueryService(spark: SparkSession, dir: String,
       val aligned = freshConv.select(cached.columns.map(col).toIndexedSeq: _*)
       val n = meta.rowCount + freshCount
       cache.appendCachedData(table, aligned,
-        CachedQueryMetadata(Some(newWm), n, nowMillis(), conversions))
+        CachedQueryMetadata(newWm, n, nowMillis(), conversions))
       val back = cache.readBack(table).getOrElse(cached.unionByName(freshConv))
       CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, freshCount)
     }

@@ -18,9 +18,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * only then is the aside copy dropped. Both renames are checked. A
   * read that finds the live path missing falls back to the aside
   * copy, so at every crash point a reader sees the old document or the
-  * new one, never neither. The same swap replaces a directory
-  * (`SyncRunner`'s whole-table target, each partition that
-  * `PartitionedSync.swapIn` commits). Temp and aside names start
+  * new one, never neither. The same swap commits both writes of the
+  * sync target: `PartitionedSync.writeFull` swaps the whole table
+  * root, and `PartitionedSync.swapIn` swaps each partition a merge or
+  * a compaction rewrote. Temp and aside names start
   * with `.` and end in `.tmp` / `.old`, so a listing that matches a
   * document suffix skips them.
   *
@@ -50,6 +51,13 @@ object DocFiles {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     } catch { case _: FileNotFoundException => None }
+
+  /** Where a reader finds `p`: the live path, or its aside copy while
+    * a swap is interrupted (for readers that cannot fall back
+    * themselves, such as a parquet scan, and restore nothing).
+    */
+  def live(fs: FileSystem, p: Path): Path =
+    if (!fs.exists(p) && fs.exists(asideOf(p))) asideOf(p) else p
 
   /** Whether [[read]] finds a document at `p`. */
   def exists(fs: FileSystem, p: Path): Boolean = fs.exists(p) || fs.exists(asideOf(p))

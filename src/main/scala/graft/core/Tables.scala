@@ -1,5 +1,8 @@
 package graft.core
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,9 +11,8 @@ import org.apache.spark.sql.functions._
   * Mirrors the reference's notion of a synced table catalog
   * (reference: src/oracle_duckdb_sync/data/query_core.py:20
   * `get_available_tables`) — here the catalog is a directory of
-  * parquet tables. At 100 TB each "table" is a partitioned parquet
-  * dataset; `spark.read.parquet` handles both the single-file test
-  * layout and a partitioned directory identically.
+  * parquet tables: a single file in the test layout, a partitioned
+  * directory at scale or as a synced table ([[read]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +20,41 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** Partition column of a synced table's stored layout
+    * (`graft.sync.PartitionedSync`), dropped on read.
+    */
+  val PartCol = "__part"
+
+  /** The parquet table at `path` as a caller sees it, synced tables
+    * included: the partition column is dropped, and a root or partition
+    * that a cut-short swap left parked aside is read from there, as
+    * [[DocFiles.read]] reads a document. The reader holds no lease, so
+    * it restores nothing and leaves that to the next rewrite. Without
+    * such a copy this is one listing and one parquet read of `path`.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DocFiles.live(fs, new Path(path))
+    val names = try fs.listStatus(root).map(_.getPath.getName).toSet
+      catch { case _: FileNotFoundException => Set.empty[String] }
+    val parked = names.toSeq.sorted
+      .filter(n => n.startsWith(s".$PartCol=") && n.endsWith(".old"))
+      .filterNot(n => names(n.drop(1).dropRight(4)))
+    val live = if (parked.isEmpty || names.exists(_.startsWith(s"$PartCol="))) Seq(root) else Nil
+    (live ++ parked.map(new Path(root, _)))
+      .map(p => spark.read.parquet(p.toString).drop(PartCol)).reduce(_ unionByName _)
+  }
+
+  /** Row count of `df` and max(`timeCol`) as a string (None without
+    * rows or without a time column), both from ONE action.
+    */
+  def countAndMax(df: DataFrame, timeCol: Option[String]): (Long, Option[String]) = {
+    val latest = timeCol.fold(lit(null))(tc => max(col(tc)))
+    val head = df.agg(count(lit(1)), latest.cast("string")).head()
+    (head.getLong(0), Option(head.getString(1)))
+  }
 
   private val maxDocIdCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()

@@ -4,36 +4,33 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.DocFiles
+import graft.core.{DocFiles, Tables}
 
-/** Partition-pruned sync target — the 100 TB form of the sync
-  * engine's merge (reference sync_engine.py:180 fetch-then-upsert).
-  *
-  * `SyncRunner.writeTarget` rewrites the whole target per incremental
-  * merge: correct, atomic (temp + rename), and the right call for
-  * targets that fit a rewrite budget. At 100 TB it is the sync's
-  * dominant cost — so this target partitions the table by a caller-
-  * chosen time bucket (month/year of the watermark column) and merges
-  * by swapping in rewritten partition directories, rewriting ONLY:
+/** The sync target: one layout for every synced table (reference
+  * duckdb_source.py:74 keeps one table per source and updates it with
+  * INSERT OR REPLACE). The table is partitioned by a bucket of each row
+  * — a time bucket of the watermark column, or a hash of the primary
+  * key — and an incremental merge swaps in rewritten partition
+  * directories, rewriting ONLY:
   *
   *  1. partitions receiving fresh rows (the watermark tail lands in
   *     recent buckets), and
   *  2. partitions holding a STALE version of a fresh key (an upsert
-  *     whose old row lives in an older bucket must remove it there,
+  *     whose old row lives in another bucket must remove it there,
   *     or the key would be served twice) — located with a key-only
   *     semi-join against the target, a column-pruned scan that reads
   *     two columns, never the payload.
   *
   * Every untouched partition's files are left byte-identical. The
-  * driver collects only distinct affected PARTITION VALUES (calendar-
-  * bounded — months of history, not rows).
+  * driver collects only distinct affected PARTITION VALUES.
   *
-  * Crash semantics: [[swapIn]] replaces each partition directory with
-  * the checked aside swap of [[graft.core.DocFiles.replace]], so at
-  * every fault point each partition is old or new, never missing; the
-  * next rewrite's [[recover]] puts back a partition left parked aside.
-  * The swap is not atomic ACROSS partitions: a crash can leave some
-  * affected partitions new and others old. The watermark advances
+  * Two commits, both the checked aside swap of
+  * [[graft.core.DocFiles.replace]], so at every fault point a reader
+  * sees the old table or the new one: [[writeFull]] swaps the whole
+  * root; [[swapIn]] (the merge and `Compaction.compact`) swaps each
+  * rewritten partition, and the next rewrite's [[recover]] puts back
+  * one left parked aside. That swap is not atomic ACROSS partitions:
+  * a crash can leave some new and others old. The watermark advances
   * only AFTER a successful merge, so a replay re-merges the same tail,
   * and keep-latest-per-key is idempotent.
   *
@@ -44,15 +41,14 @@ import graft.core.DocFiles
 object PartitionedSync {
 
   /** Partition column added to the stored layout (dropped on read). */
-  val PartCol = "__part"
+  val PartCol = Tables.PartCol
 
   /** `maxTime` is the watermark candidate: max(timeCol) over the
-    * EXACT fresh rows that were merged ([[SyncOps.withPersistedTail]]).
+    * EXACT fresh rows that were merged ([[withPersistedTail]]).
     */
   case class MergeStats(
       freshRows: Long,
       affectedPartitions: Seq[String],
-      partitionsBefore: Long,
       emptiedPartitions: Seq[String],
       maxTime: Option[String])
 
@@ -62,14 +58,18 @@ object PartitionedSync {
     * stale versions could never be located — fail at write time, inside
     * the same job, at zero extra passes.
     */
-  private def bucketOrFail(bucket: Column): Column = {
+  private def bucketOrFail(bucket: Column, path: String): Column = {
     val b = bucket.cast("string")
     when(b.isNull, raise_error(lit(
-      "PartitionedSync: bucket expression evaluated to NULL — " +
+      s"PartitionedSync: bucket expression evaluated to NULL for $path — " +
         "filter or default null time values before syncing"))).otherwise(b)
   }
 
-  /** Full (re)write of the target, partitioned by `bucket`.
+  /** Full (re)write of the target, partitioned by `bucket`: staged at
+    * `.<name>.tmp` beside the root and committed by one checked swap of
+    * the root ([[graft.core.DocFiles.replace]]), so the live table stays
+    * readable until the new one is in place. An empty input leaves one
+    * schema-only file at the root instead of partitions.
     *
     * The explicit repartition ON THE PARTITION COLUMN before
     * `partitionBy` does two jobs: it distributes the write (the input's
@@ -81,30 +81,26 @@ object PartitionedSync {
     * collapsing the exchange when the table is byte-light.
     */
   def writeFull(df: DataFrame, bucket: Column, path: String): Unit = {
-    val n = df.sparkSession.sparkContext.defaultParallelism
-    df.withColumn(PartCol, bucketOrFail(bucket))
-      .repartition(n, col(PartCol))
-      .write.partitionBy(PartCol).mode("overwrite").parquet(path)
+    val spark = df.sparkSession
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DocFiles.replace(fs, root) { tmp =>
+      fs.delete(tmp, true) // what a cut-short write left
+      df.withColumn(PartCol, bucketOrFail(bucket, path))
+        .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
+        .write.partitionBy(PartCol).parquet(tmp.toString)
+      if (!hasPartitions(fs, tmp)) df.limit(0).write.mode("append").parquet(tmp.toString)
+    }
+    spark.catalog.refreshByPath(path)
   }
 
-  /** The synced table as a caller sees it (partition column dropped).
-    * A partition that a cut-short [[swapIn]] left parked aside is read
-    * from there, as [[graft.core.DocFiles.read]] reads a document: the
-    * reader holds no lease, so it restores nothing and leaves that to
-    * the next rewrite's [[recover]]. Without such a partition this is
-    * one parquet read of `path`.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val names = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(root).map(_.getPath.getName).toSet
-    val parked = names.toSeq.sorted
-      .filter(n => n.startsWith(s".$PartCol=") && n.endsWith(".old"))
-      .filterNot(n => names(n.drop(1).dropRight(4)))
-    val live = if (parked.isEmpty || names.exists(_.startsWith(s"$PartCol="))) Seq(path) else Nil
-    (live ++ parked.map(new Path(root, _).toString))
-      .map(spark.read.parquet(_).drop(PartCol)).reduce(_ unionByName _)
-  }
+  /** Whether `root` holds partitions, live or parked aside: [[writeFull]] of rows wrote it. */
+  private[sync] def hasPartitions(fs: FileSystem, root: Path): Boolean =
+    fs.listStatus(root).map(_.getPath.getName)
+      .exists(n => n.startsWith(s"$PartCol=") || n.startsWith(s".$PartCol=") && n.endsWith(".old"))
+
+  /** The synced table as a caller sees it: [[graft.core.Tables.read]]. */
+  def read(spark: SparkSession, path: String): DataFrame = Tables.read(spark, path)
 
   /** Merge `fresh` into the partitioned target at `path`, keeping the
     * latest (timeCol, tieBreak) row per key, rewriting only affected
@@ -119,41 +115,65 @@ object PartitionedSync {
     require(fs.exists(root), s"no partitioned target at $path — writeFull first")
     recover(fs, root, PartCol)
 
-    val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket))
-    SyncOps.withPersistedTail(freshP, timeCol) { (freshRows, maxTime) =>
+    val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket, path))
+    withPersistedTail(freshP, timeCol) { (tail, freshRows, maxTime) =>
       if (freshRows == 0)
-        MergeStats(0L, Nil, partitionValues(fs, root, PartCol).size.toLong, Nil, None)
+        MergeStats(0L, Nil, Nil, None)
       else {
         // explicit schema: partition discovery would otherwise INFER the
         // partition column's type from its values (a 'yyyy' bucket reads
         // back as LONG) and the string plumbing below would miscompare —
         // the user-supplied schema pins __part to string and still
         // partition-prunes
-        val target = spark.read.schema(freshP.schema).parquet(path)
+        val target = spark.read.schema(tail.schema).parquet(path)
         // partitions receiving fresh rows ∪ partitions holding stale
         // versions of fresh keys (key+partition columns only — column
         // pruning keeps the payload out of this scan; AQE broadcasts the
         // fresh key set when small)
-        val partsNew = freshP.select(PartCol).distinct()
+        val partsNew = tail.select(PartCol).distinct()
         val partsStale = target
-          .join(freshP.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .join(tail.select(keys.map(col): _*).distinct(), keys, "left_semi")
           .select(PartCol).distinct()
         val affected = partsNew.unionByName(partsStale).distinct()
           .collect().map(_.getString(0)).sorted.toIndexedSeq
-        val before = partitionValues(fs, root, PartCol)
 
         // the repartition-on-PartCol (the writeFull rationale) keeps the
         // staged write one-file-per-bucket
         val slice = target.filter(col(PartCol).isin(affected: _*))
         val merged = SyncOps.upsertKeepLatest(
-          slice.unionByName(freshP), keys, timeCol, tieBreak)
+          slice.unionByName(tail), keys, timeCol, tieBreak)
           .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
         val emptied = swapIn(merged, path, PartCol, affected)
 
-        MergeStats(freshRows, affected, before.size.toLong, emptied, maxTime)
+        MergeStats(freshRows, affected, emptied, maxTime)
       }
     }
   }
+
+  /** Runs `body` over `fresh` persisted, with its row count and
+    * max(timeCol) (None when empty) from ONE action that also
+    * materializes it, so the count, the merged rows and the watermark
+    * candidate describe the same pulled rows: re-aggregating the fresh
+    * PLAN would re-read the live source, and a row committed mid-sync
+    * would raise the watermark without being merged, skipped forever.
+    * The persisted plan carries a marker column with its own number,
+    * dropped for `body`: Spark's cache manager hands one entry to equal
+    * plans and can read an entry another thread is still filling as
+    * empty, and a merge that read its tail as empty would swap in the
+    * fresh rows without the old rows of their partitions.
+    */
+  private def withPersistedTail[T](fresh: DataFrame, timeCol: String)
+                                  (body: (DataFrame, Long, Option[String]) => T): T = {
+    val marked = fresh.withColumn(TailMark, lit(tails.incrementAndGet())).persist()
+    try {
+      val tail = marked.drop(TailMark)
+      val (rows, latest) = Tables.countAndMax(tail, Some(timeCol))
+      body(tail, rows, latest)
+    } finally marked.unpersist(blocking = true)
+  }
+
+  private val TailMark = "__tail"
+  private val tails = new java.util.concurrent.atomic.AtomicLong()
 
   /** Hidden staging directory of [[swapIn]], under the table root:
     * Spark's file listing, [[partitionValues]] and `Compaction.census`

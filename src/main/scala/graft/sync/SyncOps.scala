@@ -78,25 +78,6 @@ object SyncOps {
                        timeCol: String, tieBreak: String): DataFrame =
     upsertKeepLatest(target.unionByName(fresh), keys, timeCol, tieBreak)
 
-  /** Runs `body` with `fresh` persisted and with its row count and
-    * max(timeCol) as a string (None when empty), both from ONE action
-    * that also materializes it. The merge in `body` then reads the
-    * pulled rows from the persisted copy instead of pulling them from
-    * the source again, so the count, the merged rows and the watermark
-    * candidate describe the same rows. Re-aggregating the fresh PLAN
-    * afterwards would re-read the live source: a row committed mid-sync
-    * would raise the watermark without having been merged and be
-    * skipped by every later incremental pull, silently forever.
-    */
-  private[sync] def withPersistedTail[T](fresh: DataFrame, timeCol: String)
-                          (body: (Long, Option[String]) => T): T = {
-    fresh.persist()
-    try {
-      val head = fresh.agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
-      body(head.getLong(0), Option(head.getString(1)))
-    } finally fresh.unpersist(blocking = true)
-  }
-
   /** Schema EVOLUTION for incremental sync — the drift a long-running
     * sync pipeline meets when the source table changes between runs
     * (a column added, a numeric widened, an old column dropped from

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.DocFiles
+import graft.core.{DocFiles, Tables}
 
 /** Engine-side sync orchestration: one cycle per configured table.
   *
@@ -14,9 +14,13 @@ import graft.core.DocFiles
   * here the pieces already built compose into the full loop:
   *
   *   TableConfig (what to sync) → full or incremental decision from
-  *   the StateStore watermark → SyncOps pull/upsert → parquet target
-  *   (temp + swap, since the incremental plan READS the current
-  *   target) → watermark advance → SyncLogRepo audit record.
+  *   the StateStore watermark → pull → [[PartitionedSync]] target →
+  *   watermark advance → SyncLogRepo audit record.
+  *
+  * Every table has one target layout and one cycle, whose two writes
+  * each commit by a checked swap: a full sync swaps in the whole table
+  * ([[PartitionedSync.writeFull]]), an incremental one each partition
+  * it rewrote ([[PartitionedSync.mergeIncremental]]).
   *
   * `source` abstracts where rows come from (a parquet catalog in
   * tests, `JdbcSync.read` against a database in production) — the
@@ -24,9 +28,9 @@ import graft.core.DocFiles
   * SyncService.
   *
   * Scale: the incremental pull is a pushed watermark predicate; the
-  * upsert is ONE shuffle on the primary key (AQE handles skew); the
-  * target rewrite is the standard batch-upsert-to-immutable-storage
-  * pattern. Nothing driver-side grows with table size.
+  * upsert is ONE shuffle on the primary key (AQE handles skew) over
+  * the affected partitions only. Nothing driver-side grows with table
+  * size.
   */
 class SyncRunner(spark: SparkSession,
                  source: TableConfig => DataFrame,
@@ -39,36 +43,26 @@ class SyncRunner(spark: SparkSession,
   private def fs = new Path(targetDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Whether a live target exists — after putting back one that an
-    * interrupted swap left parked aside, so the cycle stays incremental
-    * instead of silently re-pulling.
-    */
-  private def targetExists(cfg: TableConfig): Boolean =
-    DocFiles.restore(fs, new Path(targetPath(cfg)))
-
   /** Read the current synced target (after at least one sync). */
-  def target(cfg: TableConfig): DataFrame = spark.read.parquet(targetPath(cfg))
+  def target(cfg: TableConfig): DataFrame = PartitionedSync.read(spark, targetPath(cfg))
 
-  /** Temp + swap through [[DocFiles.replace]]: an incremental merge
-    * plan reads the live target, which is parked aside, not deleted,
-    * until the new one is in place.
-    */
-  private def writeTarget(cfg: TableConfig, df: DataFrame): Unit =
-    DocFiles.replace(fs, new Path(targetPath(cfg)))(tmp =>
-      df.write.mode("overwrite").parquet(tmp.toString))
+  /** The bucket of [[syncTable]] and [[testSync]]: a primary-key hash, one per task slot. */
+  private def keyBucket(cfg: TableConfig): Column =
+    pmod(xxhash64(col(cfg.primaryKey)), lit(spark.sparkContext.defaultParallelism))
 
-  /** The stored watermark when the cycle can be incremental: the
-    * table has a time column, a watermark and a live target.
+  /** The stored watermark when the cycle can be incremental: the table
+    * has a time column, a watermark and a partitioned target (a target
+    * an interrupted full write left parked aside is put back first). A
+    * flat target written before the partitioned layout counts as none:
+    * a merge into it would give the fresh rows null partition values
+    * and keep the stale versions of their keys.
     */
   private def incrementalFrom(cfg: TableConfig): Option[String] =
     if (!cfg.hasTimeColumn) None
-    else state.loadWatermark(cfg.targetTable).filter(_ => targetExists(cfg))
-
-  /** Source rows past the watermark — a filter only, no order: the
-    * merge's keep-latest window neither needs nor keeps a pre-sort.
-    */
-  private def freshTail(src: DataFrame, tc: String, wm: String): DataFrame =
-    src.filter(col(tc) > lit(wm).cast(src.schema(tc).dataType))
+    else state.loadWatermark(cfg.targetTable).filter { _ =>
+      val root = new Path(targetPath(cfg))
+      DocFiles.restore(fs, root) && PartitionedSync.hasPartitions(fs, root)
+    }
 
   /** The audit skeleton of every cycle: a "running" record, then
     * "completed" with the row count `body` returns, or "failed" with
@@ -84,60 +78,32 @@ class SyncRunner(spark: SparkSession,
     }
   }
 
-  /** One sync cycle for one table. Full on first run (or without a
-    * time column); incremental past the stored watermark otherwise.
-    * Every run leaves an audit record; failures are logged and
-    * re-thrown.
+  /** One sync cycle for one table, partitioned by a hash of its primary
+    * key. Full on first run (or without a time column); incremental past
+    * the stored watermark otherwise. Every run leaves an audit record;
+    * failures are logged and re-thrown.
     */
-  def syncTable(cfg: TableConfig): SyncLogEntry = {
+  def syncTable(cfg: TableConfig): SyncLogEntry = cycle(cfg, keyBucket(cfg))
+
+  /** The cycle of [[syncTable]], partitioned by `bucket`: a time
+    * bucket such as `date_format(ts, 'yyyy-MM')` keeps a tail's merge to
+    * the recent partitions. The watermark advances only after a
+    * successful write, so the next cycle replays a write a crash cut
+    * short.
+    */
+  def syncTablePartitioned(cfg: TableConfig, bucket: Column): SyncLogEntry = cycle(cfg, bucket)
+
+  private def cycle(cfg: TableConfig, bucket: Column): SyncLogEntry = {
     val wm = incrementalFrom(cfg)
     audited(cfg, if (wm.isDefined) "incremental" else "full") {
       val src = source(cfg)
       wm match {
         case Some(w) =>
           val tc = cfg.timeColumn.get
-          val fresh = freshTail(src, tc, w)
-          SyncOps.withPersistedTail(fresh, tc) { (nFresh, maxTime) =>
-            if (nFresh > 0) {
-              writeTarget(cfg, SyncOps.applyIncremental(
-                target(cfg), fresh, Seq(cfg.primaryKey), tc, cfg.primaryKey))
-              // every fresh row is past the target's rows, so the tail's
-              // max is the merged target's: no rescan of the target
-              maxTime.foreach(state.saveWatermark(cfg.targetTable, _))
-            }
-            nFresh
-          }
-        case None =>
-          writeTarget(cfg, src)
-          if (cfg.hasTimeColumn) advanceWatermark(cfg)
-          target(cfg).count()
-      }
-    }
-  }
-
-  /** [[syncTable]] with a partition-pruned target ([[PartitionedSync]]):
-    * the full sync writes the `bucket`-partitioned layout; incremental
-    * merges rewrite ONLY partitions receiving fresh rows or holding a
-    * stale version of a fresh key — the 100 TB path, where
-    * [[syncTable]]'s whole-table rewrite would dominate every cycle.
-    * Requires a time column (the bucket derives from it). Read the
-    * result via [[PartitionedSync.read]] (the partition column is an
-    * implementation detail). Watermark advances only after a
-    * successful merge, so the next cycle replays a merge a crash cut
-    * short (see [[PartitionedSync]] for its crash semantics).
-    */
-  def syncTablePartitioned(cfg: TableConfig, bucket: Column): SyncLogEntry = {
-    require(cfg.hasTimeColumn,
-      s"partitioned sync needs a time column on ${cfg.targetTable}")
-    val tc = cfg.timeColumn.get
-    val wm = incrementalFrom(cfg)
-    audited(cfg, if (wm.isDefined) "incremental" else "full") {
-      val src = source(cfg)
-      wm match {
-        case Some(w) =>
-          val stats = PartitionedSync.mergeIncremental(spark,
-            targetPath(cfg), freshTail(src, tc, w), Seq(cfg.primaryKey), tc,
-            cfg.primaryKey, bucket)
+          // source rows past the watermark: a filter only, no pre-sort
+          val fresh = src.filter(col(tc) > lit(w).cast(src.schema(tc).dataType))
+          val stats = PartitionedSync.mergeIncremental(spark, targetPath(cfg), fresh,
+            Seq(cfg.primaryKey), tc, cfg.primaryKey, bucket)
           // watermark from the stats' max over the MERGED rows — not a
           // full-target scan (defeats the O(affected) point) and not a
           // re-aggregation of the fresh plan (would re-read the live
@@ -146,8 +112,11 @@ class SyncRunner(spark: SparkSession,
           stats.freshRows
         case None =>
           PartitionedSync.writeFull(src, bucket, targetPath(cfg))
-          advanceWatermark(cfg)
-          target(cfg).count()
+          // count and watermark in one action over the written target,
+          // never the live source, which may have moved on since
+          val (rows, latest) = Tables.countAndMax(target(cfg), cfg.timeColumn.filter(_.nonEmpty))
+          latest.foreach(state.saveWatermark(cfg.targetTable, _))
+          rows
       }
     }
   }
@@ -172,20 +141,10 @@ class SyncRunner(spark: SparkSession,
   def testSync(cfg: TableConfig, rowLimit: Int = 100000): SyncLogEntry = {
     require(rowLimit > 0, s"rowLimit must be positive, got $rowLimit")
     audited(cfg, "test") {
-      writeTarget(cfg, source(cfg).limit(rowLimit))
+      PartitionedSync.writeFull(source(cfg).limit(rowLimit), keyBucket(cfg), targetPath(cfg))
       target(cfg).count()
     }
   }
-
-  /** Watermark = max(timeColumn) over the just-written TARGET, after a
-    * full sync; incremental merges take the max over the persisted
-    * tail instead ([[SyncOps.withPersistedTail]]).
-    */
-  private def advanceWatermark(cfg: TableConfig): Unit =
-    cfg.timeColumn.foreach { tc =>
-      Option(target(cfg).agg(max(col(tc)).cast("string")).head().getString(0))
-        .foreach(state.saveWatermark(cfg.targetTable, _))
-    }
 
   /** One table with the syncAll failure contract: a throw becomes a
     * failed audit record instead of aborting the rest of the pass.

@@ -22,8 +22,14 @@ import org.apache.spark.{SparkContext, TaskContext}
   * thread, which Spark gives the caller's local properties). Spark
   * task threads writing part files are not counted, nor are the
   * output committer's steps (paths under `_temporary`, the `_SUCCESS`
-  * marker): graft writes a parquet dataset to a path no reader follows
-  * until a later, counted step points at it.
+  * marker). The start of a Spark write job does count, once: the
+  * committer's `mkdirs` of `<out>/_temporary/<attempt>`, charged to
+  * `<out>`. A fault there is a process that died after every earlier
+  * step and before the job committed a file, which is how a write that
+  * clears its live output first (`mode("overwrite")`) shows up as a
+  * missing table. Without it the job's own steps are invisible, and
+  * rightly so for graft's writers, which stage a dataset at a path no
+  * reader follows until a later, counted step points at it.
   */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
@@ -37,6 +43,13 @@ class CrashFs extends RawLocalFileSystem {
 
   override def rename(src: Path, dst: Path): Boolean =
     CrashFs.step(src, isRename = true) && super.rename(src, dst)
+
+  override def mkdirs(f: Path): Boolean = mkdirs(f, FsPermission.getDirDefault)
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    if (CrashFs.jobSetup(f)) CrashFs.step(f.getParent.getParent, isRename = false)
+    super.mkdirs(f, permission)
+  }
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
     CrashFs.step(p, isRename = false)
@@ -93,6 +106,9 @@ object CrashFs {
     if (TaskContext.get() != null) None
     else Option(SparkContext.getOrCreate().getLocalProperty(PointKey))
       .flatMap(id => Option(points.get(id)))
+
+  private def jobSetup(p: Path): Boolean =
+    p.getParent != null && p.getParent.getName == "_temporary" && p.getName.forall(_.isDigit)
 
   private def committerStep(p: Path): Boolean =
     p.getName == "_SUCCESS" || p.toUri.getPath.contains("/_temporary")

@@ -290,37 +290,59 @@ class DocFilesSpec extends SparkSpec {
   private def hidden(dir: String): Seq[String] =
     Option(new File(dir).list()).toSeq.flatten.filter(_.startsWith("."))
 
-  test("crash injection: a partitioned sync cycle stays incremental and converges") {
-    // three day buckets; the cycle moves key 1 out of day 1 (whose other
-    // rows stay), moves both keys of day 2 to day 3 (day 2 empties) and
-    // adds key 7 to day 3
-    def at(day: Int, s: Int) = Timestamp.valueOf(f"2024-01-0$day 00:00:$s%02d")
-    val v1 = Seq((1L, at(1, 1), "a"), (2L, at(1, 2), "b"), (3L, at(1, 3), "c"),
-      (4L, at(2, 4), "d"), (5L, at(2, 5), "e"), (6L, at(3, 6), "f"))
-    val v2 = v1.filterNot(r => Set(1L, 4L, 5L)(r._1)) ++
-      Seq((1L, at(3, 31), "a'"), (4L, at(3, 34), "d'"), (5L, at(3, 35), "e'"), (7L, at(3, 37), "g"))
-    val sources = Map("v1" -> v1, "v2" -> v2).map { case (k, v) => k -> v.toDF("id", "ts", "v").coalesce(1) }
-    val bucket = date_format(col("ts"), "yyyy-MM-dd")
-    val cfg = TableConfig("S", "T", "t", "id", timeColumn = Some("ts"))
-    def runner(root: String, version: String) = new SyncRunner(spark,
-      _ => sources(version), s"$root/target",
-      new StateStore(spark, s"$root/state"), new SyncLogRepo(spark, s"$root/log"))
-    def table(root: String) = s"$root/target/t.parquet"
-    val expected = rows(sources("v2"))
-    val (wm1, wm2) = ("2024-01-03 00:00:06", "2024-01-03 00:00:37")
+  // three day buckets; the v2 cycle moves key 1 out of day 1 (whose
+  // other rows stay), moves both keys of day 2 to day 3 (day 2 empties)
+  // and adds key 7 to day 3
+  private def at(day: Int, s: Int) = Timestamp.valueOf(f"2024-01-0$day 00:00:$s%02d")
+  private val daysV1 = Seq((1L, at(1, 1), "a"), (2L, at(1, 2), "b"), (3L, at(1, 3), "c"),
+    (4L, at(2, 4), "d"), (5L, at(2, 5), "e"), (6L, at(3, 6), "f"))
+  private val daysV2 = daysV1.filterNot(r => Set(1L, 4L, 5L)(r._1)) ++
+    Seq((1L, at(3, 31), "a'"), (4L, at(3, 34), "d'"), (5L, at(3, 35), "e'"), (7L, at(3, 37), "g"))
+  private lazy val days = Map("v1" -> daysV1, "v2" -> daysV2)
+    .map { case (k, v) => k -> v.toDF("id", "ts", "v").coalesce(1) }
+  private val dayBucket = date_format(col("ts"), "yyyy-MM-dd")
+  private val dayCfg = TableConfig("S", "T", "t", "id", timeColumn = Some("ts"))
+  private def dayRunner(root: String, version: String) = new SyncRunner(spark,
+    _ => days(version), s"$root/target",
+    new StateStore(spark, s"$root/state"), new SyncLogRepo(spark, s"$root/log"))
+  private def dayTable(root: String) = s"$root/target/t.parquet"
+  private val (dayWm1, dayWm2) = ("2024-01-03 00:00:06", "2024-01-03 00:00:37")
 
+  /** The state after a v2 cycle: the table, its two day partitions, the
+    * watermark, and no staging or aside debris at the root or inside.
+    */
+  private def convergedDays(root: String): Unit = {
+    assert(rows(PartitionedSync.read(spark, dayTable(root))) == rows(days("v2")))
+    assert(hidden(dayTable(root)).isEmpty && hidden(s"$root/target").isEmpty)
+    assert(new File(dayTable(root)).list().count(_.startsWith(PartitionedSync.PartCol)) == 2)
+    assert(new StateStore(spark, s"$root/state").loadWatermark("t").contains(dayWm2))
+  }
+
+  test("crash injection: a partitioned sync cycle stays incremental and converges") {
     val template = tempDir("graft-crash-psync")
-    assert(runner(CrashFs.path(template), "v1").syncTablePartitioned(cfg, bucket).syncType == "full")
+    assert(dayRunner(CrashFs.path(template), "v1").syncTablePartitioned(dayCfg, dayBucket).syncType == "full")
     oneShufflePartition(bothFaults(copyTree(template, _))(
-      r => runner(CrashFs.path(r), "v2").syncTablePartitioned(cfg, bucket): Unit) { (root, threw) =>
+      r => dayRunner(CrashFs.path(r), "v2").syncTablePartitioned(dayCfg, dayBucket): Unit) { (root, threw) =>
         oldOrNew(new StateStore(spark, s"$root/state").loadWatermark("t"),
-          Some(wm1), Some(wm2), threw)
-        val next = runner(CrashFs.path(root), "v2").syncTablePartitioned(cfg, bucket)
+          Some(dayWm1), Some(dayWm2), threw)
+        val next = dayRunner(CrashFs.path(root), "v2").syncTablePartitioned(dayCfg, dayBucket)
         assert(next.syncType == "incremental" && next.status == "completed")
-        assert(rows(PartitionedSync.read(spark, table(root))) == expected)
-        assert(hidden(table(root)).isEmpty)
-        assert(new File(table(root)).list().count(_.startsWith(PartitionedSync.PartCol)) == 2)
-        assert(new StateStore(spark, s"$root/state").loadWatermark("t").contains(wm2))
+        convergedDays(root)
+    })
+  }
+
+  test("crash injection: a full re-sync over a partitioned target leaves the old table or the new one") {
+    // no watermark over a live target: the cycle rewrites the whole table
+    val template = tempDir("graft-crash-resync")
+    assert(dayRunner(CrashFs.path(template), "v1").syncTablePartitioned(dayCfg, dayBucket).syncType == "full")
+    assert(new File(s"$template/state/t.state.json").delete())
+    oneShufflePartition(bothFaults(copyTree(template, _))(
+      r => dayRunner(CrashFs.path(r), "v2").syncTablePartitioned(dayCfg, dayBucket): Unit) { (root, threw) =>
+        oldOrNew(rows(PartitionedSync.read(spark, dayTable(root))),
+          rows(days("v1")), rows(days("v2")), threw)
+        assert(dayRunner(CrashFs.path(root), "v2").syncTablePartitioned(dayCfg, dayBucket)
+          .status == "completed")
+        convergedDays(root)
     })
   }
 

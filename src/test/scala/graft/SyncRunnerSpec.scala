@@ -170,12 +170,86 @@ class SyncRunnerSpec extends SparkSpec {
     val got = PartitionedSync.read(spark, s"$tgtDir/t_part.parquet")
       .select("id", "payload").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
+    // the runner's read is the table as a caller sees it
+    val tgt = runner.target(cfg)
+    assert(!tgt.columns.contains(PartitionedSync.PartCol))
+    assert(tgt.collect().toSet ==
+      PartitionedSync.read(spark, s"$tgtDir/t_part.parquet").collect().toSet)
     assert(state.loadWatermark("t_part").exists(_.startsWith("2024-04-06")))
 
     // nothing new: zero-row incremental, watermark unchanged
     val r3 = runner.syncTablePartitioned(cfg, bucket)
     assert(r3.syncType == "incremental" && r3.totalRows == 0)
     assert(state.loadWatermark("t_part").exists(_.startsWith("2024-04-06")))
+  }
+
+  test("a flat target from before the partitioned layout gets a full re-sync, not a merge") {
+    val srcDir = tempDir("graft-flat-src")
+    val tgtDir = tempDir("graft-flat-tgt")
+    val state = new StateStore(spark, tempDir("graft-flat-st"))
+    val runner = new SyncRunner(spark,
+      cfg => spark.read.parquet(s"$srcDir/${cfg.sourceTable}.parquet"),
+      tgtDir, state, new SyncLogRepo(spark, tempDir("graft-flat-lg")))
+    val cfg = TableConfig("S", "t", "t_sync", "id", timeColumn = Some("updated_at"))
+    // the old layout: plain parquet files at the root, a stored watermark,
+    // and a row (id 99) the source no longer has
+    srcRows(10).union(Seq((99L, Timestamp.valueOf("2024-01-01 00:00:01"), "gone"))
+      .toDF("id", "updated_at", "payload"))
+      .write.parquet(s"$tgtDir/t_sync.parquet")
+    state.saveWatermark("t_sync", "2024-01-01 00:00:10")
+    val src = srcRows(15, bump = Map(3L -> 1))
+    src.write.parquet(s"$srcDir/t.parquet")
+
+    val r = runner.syncTable(cfg)
+    assert(r.syncType == "full" && r.status == "completed" && r.totalRows == 15)
+    val root = new java.io.File(tgtDir, "t_sync.parquet").list().toSeq
+    assert(root.exists(_.startsWith(s"${PartitionedSync.PartCol}=")))
+    assert(!root.exists(_.endsWith(".parquet")))
+    def rows(df: DataFrame) = df.select("id", "payload").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows(runner.target(cfg)) == rows(src))
+    assert(state.loadWatermark("t_sync").contains("2024-01-01 00:00:18"))
+    // the next cycle merges into the partitioned target
+    assert(runner.syncTable(cfg).syncType == "incremental")
+  }
+
+  test("QueryService reads a syncTable target as the source's columns and rows") {
+    val srcDir = tempDir("graft-qs-src")
+    val tgtDir = tempDir("graft-qs-tgt")
+    val runner = new SyncRunner(spark,
+      cfg => spark.read.parquet(s"$srcDir/${cfg.sourceTable}.parquet"),
+      tgtDir, new StateStore(spark, tempDir("graft-qs-st")),
+      new SyncLogRepo(spark, tempDir("graft-qs-lg")))
+    val cfg = TableConfig("S", "t", "t_sync", "id", timeColumn = Some("updated_at"))
+    srcRows(10).write.parquet(s"$srcDir/t.parquet")
+    runner.syncTable(cfg)
+    val src = srcRows(15, bump = Map(3L -> 1))
+    src.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    assert(runner.syncTable(cfg).syncType == "incremental")
+
+    val qs = new graft.api.QueryService(spark, tgtDir)
+    def got() = qs.queryTable("t_sync", orderBy = Seq("id"))
+    val want = src.orderBy("id").collect().toSeq
+    assert(got().columns.toSeq == src.columns.toSeq)
+    assert(got().collect().toSeq == want)
+    assert(qs.rowCount("t_sync") == 15)
+    // a partition that a cut-short swap left parked aside is still read
+    val root = new java.io.File(tgtDir, "t_sync.parquet")
+    val part = root.list().filter(_.startsWith(s"${PartitionedSync.PartCol}=")).min
+    assert(new java.io.File(root, part).renameTo(new java.io.File(root, s".$part.old")))
+    assert(got().collect().toSeq == want)
+  }
+
+  test("an empty source syncs to an empty target that reads back") {
+    val tgtDir = tempDir("graft-empty-tgt")
+    val state = new StateStore(spark, tempDir("graft-empty-st"))
+    val runner = new SyncRunner(spark, _ => srcRows(3).limit(0), tgtDir, state,
+      new SyncLogRepo(spark, tempDir("graft-empty-lg")))
+    val cfg = TableConfig("S", "t", "t_empty", "id", timeColumn = Some("updated_at"))
+    val r = runner.syncTable(cfg)
+    assert(r.syncType == "full" && r.status == "completed" && r.totalRows == 0)
+    assert(runner.target(cfg).columns.toSeq == Seq("id", "updated_at", "payload"))
+    assert(runner.target(cfg).count() == 0)
+    assert(state.loadWatermark("t_empty").isEmpty)
   }
 
   test("testSync: row-limited, watermark untouched, next full sync unaffected") {
