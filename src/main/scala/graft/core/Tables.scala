@@ -56,6 +56,30 @@ object Tables {
     (head.getLong(0), Option(head.getString(1)))
   }
 
+  /** Runs `body` over `df` pinned in Spark's cache, and drops the pin
+    * when `body` returns or throws: the one cache pin of the library,
+    * so no pin outlives the call that made it. The pinned plan carries
+    * a marker column with a number of its own per call, dropped for
+    * `body`. Spark's cache manager hands one entry to equal plans, can
+    * read an entry another thread is still filling as empty, and
+    * `unpersist` drops every entry whose plan matches; the marker keeps
+    * a caller's own `persist` of an equal plan, and a concurrent call,
+    * out of this entry. A plan `body` returns that reads the pin after
+    * the call re-reads its input; materialize such a result inside
+    * (collect, write, eager `localCheckpoint`). `body` must not
+    * `return` from the enclosing method: that return is a thrown
+    * `NonLocalReturnControl`, which a caller that catches `Throwable`
+    * takes for a failure.
+    */
+  def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val marked = df.withColumn(PinMark, lit(pins.incrementAndGet())).persist()
+    try body(marked.drop(PinMark))
+    finally marked.unpersist(blocking = true)
+  }
+
+  private val PinMark = "__pin"
+  private val pins = new java.util.concurrent.atomic.AtomicLong()
+
   private val maxDocIdCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Deduplication family for a training-data corpus: exact, MinHash+LSH,
   * n-gram Jaccard. (SimHash lives in graft.functions.SimHash64.)
   *
@@ -422,104 +424,100 @@ object Dedup {
                        idCol: String = "doc_id"): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1, s"bad threshold $threshold")
     require(maxShingleDf >= 2, s"maxShingleDf must be >= 2: $maxShingleDf")
-    // the persisted copy serves this call's ~5 subplans; the returned
+    // the pinned copy serves this call's ~5 subplans; the returned
     // index rows are the plain O(batch) plan (re-shingles the batch
-    // once at write time, after the persists below are released)
+    // once at write time, after the pins below are released)
     val newIdx = containmentIndex(newDocs, k, textCol, idCol)
-    val newIdxP = newIdx.persist()
-    val newH = newIdxP.select("h").distinct()
-    // store rows matching any batch hash — the only store rows that
-    // can form a candidate with a new doc
-    val storeMatched = index.join(broadcast(newH), Seq("h")).persist()
-    // combined document frequency of every BATCH hash (store + new):
-    // the same df the one-shot inverted index would see at this
-    // corpus state
-    val dfTot = newIdxP.groupBy("h").agg(count(lit(1)).as("__dfn"))
-      .join(storeMatched.groupBy("h").agg(count(lit(1)).as("__dfs")),
-        Seq("h"), "left")
-      .select(col("h"),
-        (col("__dfn") + coalesce(col("__dfs"), lit(0L))).as("__df"))
-      .persist()
-    try {
-      val inCap = dfTot.filter(col("__df") <= maxShingleDf).select("h")
-      // cross candidates (old × new): one row per shared in-cap hash,
-      // counted per pair == the exact shared-in-cap count
-      val crossShared = storeMatched.join(broadcast(inCap), Seq("h"))
-        .select(col("h"), col(idCol).as("__old"))
-        .join(newIdxP.join(broadcast(inCap), Seq("h"))
-          .select(col("h"), col(idCol).as("__new")), Seq("h"))
-        .filter(col("__old") =!= col("__new"))
-        .groupBy(least(col("__old"), col("__new")).as("doc_a"),
-          greatest(col("__old"), col("__new")).as("doc_b"))
-        .agg(count(lit(1)).as("__shared"))
-      // within-batch candidates: the one-shot bucket expansion over
-      // batch rows, in-cap under the COMBINED df
-      val withinShared = newIdxP.join(broadcast(inCap), Seq("h"))
-        .groupBy("h").agg(collect_list(col(idCol)).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .withColumn("ids", array_sort(col("ids")))
-        .select(explode(expr(
-          """flatten(transform(ids, (x, i) ->
-            |  transform(slice(ids, i + 2, size(ids)),
-            |            y -> struct(x AS doc_a, y AS doc_b))))""".stripMargin))
-          .as("p"))
-        .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .agg(count(lit(1)).as("__shared"))
-      // old×old pairs were reported when their batches arrived; the
-      // two candidate families are disjoint (one-new vs both-new)
-      val cand = crossShared.unionByName(withinShared)
-      // per-doc size + over-cap slack, batch-hash scope: for NEW docs
-      // __over is exact; for OLD docs it counts matched hashes only —
-      // still a valid bound, because a hash shared with a new doc IS
-      // a batch hash (the containmentPairs size-bound rationale)
-      val scoped = newIdxP.select(col(idCol), col("h"), col("__n"))
-        .unionByName(storeMatched.select(col(idCol), col("h"), col("__n")))
-      val sizes = scoped
-        .join(broadcast(dfTot.filter(col("__df") > maxShingleDf).select("h")
-          .withColumn("__oc", lit(1L))), Seq("h"), "left")
-        .groupBy(idCol)
-        .agg(max(col("__n")).as("__n"),
-          coalesce(sum(col("__oc")), lit(0L)).as("__over"))
-      val survivors = cand
-        .join(sizes.select(col(idCol).as("doc_a"),
-          col("__n").as("__na"), col("__over").as("__oa")), Seq("doc_a"))
-        .join(sizes.select(col(idCol).as("doc_b"),
-          col("__n").as("__nb"), col("__over").as("__ob")), Seq("doc_b"))
-        .filter((col("__shared") + least(col("__oa"), col("__ob")))
-          .cast("double") / least(col("__na"), col("__nb")) >=
-          threshold - 5e-7)
-      // exact verify on narrow rows — the containmentPairs
-      // count==2-per-(pair,h) two-stage agg, over storeMatched ∪ batch
-      // instead of the FULL index ∪ batch: a (pair, h) group reaches
-      // count == 2 only when h sits on BOTH sides, every pair has a
-      // new side, and a new side's hashes are all batch hashes — so an
-      // old-side row whose h matches no batch hash can only ever form
-      // a count == 1 group, which the filter drops anyway. Scoping the
-      // verify to storeMatched removes the second full scan of the
-      // standing index (in the bench entry, a second full re-shingle
-      // of the corpus; at 100 TB, a second pass over the whole store).
-      val melted = survivors.select(col("doc_a"), col("doc_b"),
-        col("__na"), col("__nb"),
-        explode(array(col("doc_a"), col("doc_b"))).as(idCol))
-      val allRows = storeMatched.select(col(idCol), col("h"))
-        .unionByName(newIdxP.select(col(idCol), col("h")))
-      val pairs = allRows.join(melted, idCol)
-        .groupBy("doc_a", "doc_b", "__na", "__nb", "h")
-        .agg(count(lit(1)).as("__c"))
-        .filter(col("__c") === 2)
-        .groupBy("doc_a", "doc_b", "__na", "__nb")
-        .agg(count(lit(1)).cast("double").as("__common"))
-        .withColumn("c_a_in_b", round(col("__common") / col("__na"), 6))
-        .withColumn("c_b_in_a", round(col("__common") / col("__nb"), 6))
-        .filter(greatest(col("c_a_in_b"), col("c_b_in_a")) >= threshold)
-        .select("doc_a", "doc_b", "c_a_in_b", "c_b_in_a")
-        .orderBy("doc_a", "doc_b")
-        .localCheckpoint() // materialize before the persists release
-      (pairs, newIdx)
-    } finally {
-      dfTot.unpersist(blocking = false)
-      storeMatched.unpersist(blocking = false)
-      newIdxP.unpersist(blocking = false)
+    Tables.persisted(newIdx) { newIdxP =>
+      val newH = newIdxP.select("h").distinct()
+      // store rows matching any batch hash — the only store rows that
+      // can form a candidate with a new doc
+      Tables.persisted(index.join(broadcast(newH), Seq("h"))) { storeMatched =>
+        // combined document frequency of every BATCH hash (store + new):
+        // the same df the one-shot inverted index would see at this
+        // corpus state
+        Tables.persisted(newIdxP.groupBy("h").agg(count(lit(1)).as("__dfn"))
+          .join(storeMatched.groupBy("h").agg(count(lit(1)).as("__dfs")),
+            Seq("h"), "left")
+          .select(col("h"),
+            (col("__dfn") + coalesce(col("__dfs"), lit(0L))).as("__df"))) { dfTot =>
+          val inCap = dfTot.filter(col("__df") <= maxShingleDf).select("h")
+          // cross candidates (old × new): one row per shared in-cap hash,
+          // counted per pair == the exact shared-in-cap count
+          val crossShared = storeMatched.join(broadcast(inCap), Seq("h"))
+            .select(col("h"), col(idCol).as("__old"))
+            .join(newIdxP.join(broadcast(inCap), Seq("h"))
+              .select(col("h"), col(idCol).as("__new")), Seq("h"))
+            .filter(col("__old") =!= col("__new"))
+            .groupBy(least(col("__old"), col("__new")).as("doc_a"),
+              greatest(col("__old"), col("__new")).as("doc_b"))
+            .agg(count(lit(1)).as("__shared"))
+          // within-batch candidates: the one-shot bucket expansion over
+          // batch rows, in-cap under the COMBINED df
+          val withinShared = newIdxP.join(broadcast(inCap), Seq("h"))
+            .groupBy("h").agg(collect_list(col(idCol)).as("ids"))
+            .filter(size(col("ids")) > 1)
+            .withColumn("ids", array_sort(col("ids")))
+            .select(explode(expr(
+              """flatten(transform(ids, (x, i) ->
+                |  transform(slice(ids, i + 2, size(ids)),
+                |            y -> struct(x AS doc_a, y AS doc_b))))""".stripMargin))
+              .as("p"))
+            .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+            .agg(count(lit(1)).as("__shared"))
+          // old×old pairs were reported when their batches arrived; the
+          // two candidate families are disjoint (one-new vs both-new)
+          val cand = crossShared.unionByName(withinShared)
+          // per-doc size + over-cap slack, batch-hash scope: for NEW docs
+          // __over is exact; for OLD docs it counts matched hashes only —
+          // still a valid bound, because a hash shared with a new doc IS
+          // a batch hash (the containmentPairs size-bound rationale)
+          val scoped = newIdxP.select(col(idCol), col("h"), col("__n"))
+            .unionByName(storeMatched.select(col(idCol), col("h"), col("__n")))
+          val sizes = scoped
+            .join(broadcast(dfTot.filter(col("__df") > maxShingleDf).select("h")
+              .withColumn("__oc", lit(1L))), Seq("h"), "left")
+            .groupBy(idCol)
+            .agg(max(col("__n")).as("__n"),
+              coalesce(sum(col("__oc")), lit(0L)).as("__over"))
+          val survivors = cand
+            .join(sizes.select(col(idCol).as("doc_a"),
+              col("__n").as("__na"), col("__over").as("__oa")), Seq("doc_a"))
+            .join(sizes.select(col(idCol).as("doc_b"),
+              col("__n").as("__nb"), col("__over").as("__ob")), Seq("doc_b"))
+            .filter((col("__shared") + least(col("__oa"), col("__ob")))
+              .cast("double") / least(col("__na"), col("__nb")) >=
+              threshold - 5e-7)
+          // exact verify on narrow rows — the containmentPairs
+          // count==2-per-(pair,h) two-stage agg, over storeMatched ∪ batch
+          // instead of the FULL index ∪ batch: a (pair, h) group reaches
+          // count == 2 only when h sits on BOTH sides, every pair has a
+          // new side, and a new side's hashes are all batch hashes — so an
+          // old-side row whose h matches no batch hash can only ever form
+          // a count == 1 group, which the filter drops anyway. Scoping the
+          // verify to storeMatched removes the second full scan of the
+          // standing index (in the bench entry, a second full re-shingle
+          // of the corpus; at 100 TB, a second pass over the whole store).
+          val melted = survivors.select(col("doc_a"), col("doc_b"),
+            col("__na"), col("__nb"),
+            explode(array(col("doc_a"), col("doc_b"))).as(idCol))
+          val allRows = storeMatched.select(col(idCol), col("h"))
+            .unionByName(newIdxP.select(col(idCol), col("h")))
+          val pairs = allRows.join(melted, idCol)
+            .groupBy("doc_a", "doc_b", "__na", "__nb", "h")
+            .agg(count(lit(1)).as("__c"))
+            .filter(col("__c") === 2)
+            .groupBy("doc_a", "doc_b", "__na", "__nb")
+            .agg(count(lit(1)).cast("double").as("__common"))
+            .withColumn("c_a_in_b", round(col("__common") / col("__na"), 6))
+            .withColumn("c_b_in_a", round(col("__common") / col("__nb"), 6))
+            .filter(greatest(col("c_a_in_b"), col("c_b_in_a")) >= threshold)
+            .select("doc_a", "doc_b", "c_a_in_b", "c_b_in_a")
+            .orderBy("doc_a", "doc_b")
+            .localCheckpoint() // materialize before the pins release
+          (pairs, newIdx)
+        }
+      }
     }
   }
 

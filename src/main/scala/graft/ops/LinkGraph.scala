@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.LocalGate
+import graft.core.{LocalGate, Tables}
 import graft.functions.DecimalKernels
 import graft.functions.DecimalKernels.{round6, round9Slow}
 
@@ -97,123 +97,118 @@ object LinkGraph {
         "driver: probeEvery must be 1")
     val seeded = seeds.nonEmpty
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    val nodes0 = e.select(col("src").as("n"))
-      .unionByName(e.select(col("dst").as("n"))).distinct().persist()
-    val n = nodes0.count().toDouble // one node-shaped action, reused below
-    // (tol > 0 with probeEvery > 1 changes WHERE the distributed loop
-    // stops — see the probeEvery scaladoc; the kernel mirrors the
-    // probeEvery = 1 canonical, so that combination stays distributed)
-    if ((probeEvery == 1 || tol == 0.0) &&
-        LocalGate.admitsGraph(n.toLong, e.count())) {
-      val out = pageRankLocal(nodes0, e, iters, damping,
-        redistributeDangling, tol, seeds.map(_.select(col(seedCol).as("n"))))
-      nodes0.unpersist(blocking = false)
-      return out
+    Tables.persisted(e.select(col("src").as("n"))
+        .unionByName(e.select(col("dst").as("n"))).distinct()) { nodes0 =>
+      val n = nodes0.count().toDouble // one node-shaped action, reused below
+      // (tol > 0 with probeEvery > 1 changes WHERE the distributed loop
+      // stops — see the probeEvery scaladoc; the kernel mirrors the
+      // probeEvery = 1 canonical, so that combination stays distributed)
+      if ((probeEvery == 1 || tol == 0.0) &&
+          LocalGate.admitsGraph(n.toLong, e.count()))
+        pageRankLocal(nodes0, e, iters, damping,
+          redistributeDangling, tol, seeds.map(_.select(col(seedCol).as("n"))))
+      else Tables.persisted(e
+          .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("deg")), "src")) { eDeg =>
+        // dangling/seed flags ride the node frame only when a mode needs
+        // them, so the default path's arithmetic (and oracle) is untouched
+        val withOut =
+          if (!redistributeDangling) nodes0
+          else nodes0.join(
+              eDeg.select(col("src").as("n"), lit(true).as("__out")).distinct(),
+              Seq("n"), "left")
+            .select(col("n") +: col("__out") +: Nil: _*)
+            .withColumn("__out", coalesce(col("__out"), lit(false)))
+        val nodes = seeds match {
+          case Some(sd) => withOut.join(
+              broadcast(sd.select(col(seedCol).as("n"), lit(true).as("__seed"))
+                .distinct()), Seq("n"), "left")
+            .withColumn("__seed", coalesce(col("__seed"), lit(false)))
+          case None => withOut
+        }
+        val flagCols =
+          (if (redistributeDangling) Seq(col("__out")) else Nil) ++
+            (if (seeded) Seq(col("__seed")) else Nil)
+        // teleport population: the whole graph, or the seed set
+        val s =
+          if (!seeded) n
+          else nodes.filter(col("__seed")).count().toDouble
+        require(!seeded || s >= 1, "no seed is present in the graph")
+        var ranks: DataFrame = nodes.withColumn("r",
+          if (seeded) when(col("__seed"), round(lit(1.0 / s), 9)).otherwise(lit(0.0))
+          else round(lit(1.0 / n), 9))
+        // current dangling mass (exact decimal sum of 9dp ranks); driver
+        // scalar so the iteration formula takes it as a literal — one
+        // init job in redistribute mode, then it rides the fused action
+        var dang: JBD =
+          if (!redistributeDangling) JBD.ZERO
+          else ranks.agg(coalesce(
+              sum(graft.functions.DecimalOps.dec12(when(!col("__out"), col("r")))),
+              lit(0).cast("decimal(30,12)"))).first().getDecimal(0)
+        // the LocalGate.ShuffleHashNodes pin: on the 1e6-node soak graph
+        // plain pageRank went 23.5 -> 12.6 s median with the per-round
+        // re-broadcast off (the dangling variant's extra flag column had
+        // pushed its stats over the threshold — the r15/r16 "plain slower
+        // than dangling" soak inversion)
+        def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, n.toLong)
+        var it = 0
+        var converged = false
+        while (it < iters && !converged) {
+          val contribs = eDeg
+            .join(nodeSide(ranks.select(col("n").as("__rn"), col("r"))),
+              eDeg("src") === col("__rn"))
+            .select(col("dst").as("__dst"),
+              graft.functions.DecimalOps.dec9(col("r") / col("deg")).as("c"))
+            .groupBy(col("__dst").as("n")).agg(sum("c").as("sc"))
+          // restart mass: uniform over all nodes, or over the seed set
+          val tele =
+            if (seeded) when(col("__seed"), lit((1.0 - damping) / s))
+              .otherwise(lit(0.0))
+            else lit((1.0 - damping) / n)
+          // dangling mass re-enters through the teleport vector
+          val dangTerm: Column =
+            if (!redistributeDangling) lit(0.0)
+            else if (seeded) when(col("__seed"), lit(dang.doubleValue() / s))
+              .otherwise(lit(0.0))
+            else lit(dang.doubleValue() / n)
+          val newRank = round(tele + lit(damping) *
+            (coalesce(col("sc").cast("double"), lit(0.0)) + dangTerm), 9).as("r")
+          val base = nodes.join(nodeSide(contribs), Seq("n"), "left")
+          if ((it + 1) % probeEvery == 0 || it + 1 == iters) {
+            val next = base
+              .join(nodeSide(ranks.select(col("n"), col("r").as("__prev"))),
+                Seq("n"))
+              .select(col("n") +: newRank +: col("__prev") +: flagCols: _*)
+              .localCheckpoint(false)
+            // the probe round's single job: materializes the lazy
+            // checkpoint and measures convergence (plus the next round's
+            // dangling mass); sums coalesce so an EMPTY graph probes to
+            // (0, 0) instead of NULL. The delta sums as an EXACT decimal
+            // (each per-node |r − prev| is a deterministic IEEE double,
+            // dec12-cast) so the total is partition-order-free and the
+            // local kernel reproduces the same stop round for ANY tol —
+            // a double sum would tie the tol > 0 stop to aggregation order
+            val probe = next.agg(
+              coalesce(sum(graft.functions.DecimalOps.dec12(
+                  abs(col("r") - col("__prev")))),
+                lit(0).cast("decimal(30,12)")).as("__delta"),
+              coalesce(
+                sum(graft.functions.DecimalOps.dec12(
+                  when(if (redistributeDangling) !col("__out") else lit(false),
+                    col("r")))),
+                lit(0).cast("decimal(30,12)")).as("__dang")).first()
+            dang = probe.getDecimal(1)
+            converged = probe.getDecimal(0).doubleValue <= tol
+            ranks = next.drop("__prev")
+          } else
+            // chained round: no job, no checkpoint — the next round (and
+            // ultimately the probe round, at most K-1 links away) scans
+            // this plan exactly once
+            ranks = base.select(col("n") +: newRank +: flagCols: _*)
+          it += 1
+        }
+        ranks.select(col("n"), round(col("r"), 6).as("rank"))
+      }
     }
-    val eDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("deg")), "src")
-      .persist()
-    // dangling/seed flags ride the node frame only when a mode needs
-    // them, so the default path's arithmetic (and oracle) is untouched
-    val withOut =
-      if (!redistributeDangling) nodes0
-      else nodes0.join(
-          eDeg.select(col("src").as("n"), lit(true).as("__out")).distinct(),
-          Seq("n"), "left")
-        .select(col("n") +: col("__out") +: Nil: _*)
-        .withColumn("__out", coalesce(col("__out"), lit(false)))
-    val nodes = seeds match {
-      case Some(sd) => withOut.join(
-          broadcast(sd.select(col(seedCol).as("n"), lit(true).as("__seed"))
-            .distinct()), Seq("n"), "left")
-        .withColumn("__seed", coalesce(col("__seed"), lit(false)))
-      case None => withOut
-    }
-    val flagCols =
-      (if (redistributeDangling) Seq(col("__out")) else Nil) ++
-        (if (seeded) Seq(col("__seed")) else Nil)
-    // teleport population: the whole graph, or the seed set
-    val s =
-      if (!seeded) n
-      else nodes.filter(col("__seed")).count().toDouble
-    require(!seeded || s >= 1, "no seed is present in the graph")
-    var ranks: DataFrame = nodes.withColumn("r",
-      if (seeded) when(col("__seed"), round(lit(1.0 / s), 9)).otherwise(lit(0.0))
-      else round(lit(1.0 / n), 9))
-    // current dangling mass (exact decimal sum of 9dp ranks); driver
-    // scalar so the iteration formula takes it as a literal — one
-    // init job in redistribute mode, then it rides the fused action
-    var dang: JBD =
-      if (!redistributeDangling) JBD.ZERO
-      else ranks.agg(coalesce(
-          sum(graft.functions.DecimalOps.dec12(when(!col("__out"), col("r")))),
-          lit(0).cast("decimal(30,12)"))).first().getDecimal(0)
-    // the LocalGate.ShuffleHashNodes pin: on the 1e6-node soak graph
-    // plain pageRank went 23.5 -> 12.6 s median with the per-round
-    // re-broadcast off (the dangling variant's extra flag column had
-    // pushed its stats over the threshold — the r15/r16 "plain slower
-    // than dangling" soak inversion)
-    def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, n.toLong)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val contribs = eDeg
-        .join(nodeSide(ranks.select(col("n").as("__rn"), col("r"))),
-          eDeg("src") === col("__rn"))
-        .select(col("dst").as("__dst"),
-          graft.functions.DecimalOps.dec9(col("r") / col("deg")).as("c"))
-        .groupBy(col("__dst").as("n")).agg(sum("c").as("sc"))
-      // restart mass: uniform over all nodes, or over the seed set
-      val tele =
-        if (seeded) when(col("__seed"), lit((1.0 - damping) / s))
-          .otherwise(lit(0.0))
-        else lit((1.0 - damping) / n)
-      // dangling mass re-enters through the teleport vector
-      val dangTerm: Column =
-        if (!redistributeDangling) lit(0.0)
-        else if (seeded) when(col("__seed"), lit(dang.doubleValue() / s))
-          .otherwise(lit(0.0))
-        else lit(dang.doubleValue() / n)
-      val newRank = round(tele + lit(damping) *
-        (coalesce(col("sc").cast("double"), lit(0.0)) + dangTerm), 9).as("r")
-      val base = nodes.join(nodeSide(contribs), Seq("n"), "left")
-      if ((it + 1) % probeEvery == 0 || it + 1 == iters) {
-        val next = base
-          .join(nodeSide(ranks.select(col("n"), col("r").as("__prev"))),
-            Seq("n"))
-          .select(col("n") +: newRank +: col("__prev") +: flagCols: _*)
-          .localCheckpoint(false)
-        // the probe round's single job: materializes the lazy
-        // checkpoint and measures convergence (plus the next round's
-        // dangling mass); sums coalesce so an EMPTY graph probes to
-        // (0, 0) instead of NULL. The delta sums as an EXACT decimal
-        // (each per-node |r − prev| is a deterministic IEEE double,
-        // dec12-cast) so the total is partition-order-free and the
-        // local kernel reproduces the same stop round for ANY tol —
-        // a double sum would tie the tol > 0 stop to aggregation order
-        val probe = next.agg(
-          coalesce(sum(graft.functions.DecimalOps.dec12(
-              abs(col("r") - col("__prev")))),
-            lit(0).cast("decimal(30,12)")).as("__delta"),
-          coalesce(
-            sum(graft.functions.DecimalOps.dec12(
-              when(if (redistributeDangling) !col("__out") else lit(false),
-                col("r")))),
-            lit(0).cast("decimal(30,12)")).as("__dang")).first()
-        dang = probe.getDecimal(1)
-        converged = probe.getDecimal(0).doubleValue <= tol
-        ranks = next.drop("__prev")
-      } else
-        // chained round: no job, no checkpoint — the next round (and
-        // ultimately the probe round, at most K-1 links away) scans
-        // this plan exactly once
-        ranks = base.select(col("n") +: newRank +: flagCols: _*)
-      it += 1
-    }
-    val out = ranks.select(col("n"), round(col("r"), 6).as("rank"))
-    nodes0.unpersist(blocking = false)
-    eDeg.unpersist(blocking = false)
-    out
   }
 
   /** Driver-side pageRank kernel — [[pageRank]]'s [[LocalGate]]
@@ -312,82 +307,80 @@ object LinkGraph {
                          dstCol: String = "dst", maxDist: Int = 6,
                          exact: Boolean = true, lgK: Int = 12): DataFrame = {
     require(maxDist >= 1, s"maxDist >= 1: $maxDist")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("n"))
-      .unionByName(e.select(col("dst").as("n"))).distinct()
-    // Sketch mode stays distributed: hll_union's binary sketch state
-    // is the engine's own, not worth reimplementing for a fast path.
-    if (exact && LocalGate.admitsGraph(nodes.count(), e.count())) {
-      val out = harmonicLocal(nodes, e, maxDist)
-      e.unpersist(blocking = false)
-      return out
+    Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src") =!= col("dst")).distinct()) { e =>
+      val nodes = e.select(col("src").as("n"))
+        .unionByName(e.select(col("dst").as("n"))).distinct()
+      // Sketch mode stays distributed: hll_union's binary sketch state
+      // is the engine's own, not worth reimplementing for a fast path.
+      if (exact && LocalGate.admitsGraph(nodes.count(), e.count()))
+        harmonicLocal(nodes, e, maxDist)
+      else {
+        var state =
+          if (exact)
+            nodes.select(col("n"), array(col("n")).as("ball"),
+              lit(1L).as("c"), lit(0).cast("decimal(30,12)").as("h"))
+          else
+            nodes.groupBy("n")
+              .agg(expr(s"hll_sketch_agg(n, $lgK)").as("ball"))
+              .select(col("n"), col("ball"),
+                expr("hll_sketch_estimate(ball)").as("c"),
+                lit(0).cast("decimal(30,12)").as("h"))
+        state = state.localCheckpoint() // eager: iteration 1 scans it twice
+        // Iteration hygiene: each round's state is localCheckpoint(false)
+        // — lineage cut, no CacheManager pin to leak — and the round's
+        // SINGLE job is the ball-change aggregation that materializes the
+        // lazy checkpoint. Convergence is BALL EQUALITY, valid in both
+        // modes: unchanged balls mean unchanged counts mean unchanged h,
+        // and the iteration map is a pure function of the state, so an
+        // unchanged round is a proven fixpoint — the loop early-stops
+        // with output identical to running the full maxDist budget.
+        // (Exact balls preserve element order under a no-op merge —
+        // concat keeps the old ball's prefix and array_distinct keeps
+        // first occurrences — and a no-op hll_union reproduces the same
+        // sketch state, so equality is well-defined; a spurious byte
+        // inequality would only forgo the early exit, never change the
+        // answer.)
+        var t = 1
+        var converged = false
+        while (t <= maxDist && !converged) {
+          val nbr = e
+            .join(state.select(col("n").as("src"), col("ball").as("nball")), "src")
+            .groupBy(col("dst").as("n"))
+            .agg(if (exact) array_distinct(flatten(collect_list(col("nball")))).as("inc")
+                 else expr("hll_union_agg(nball)").as("inc"))
+          val term = round(lit(1.0) / t, 9).cast("decimal(30,12)")
+          val merged = state.join(nbr, Seq("n"), "left")
+          val newBall =
+            if (exact) when(col("inc").isNull, col("ball"))
+              .otherwise(array_distinct(concat(col("ball"), col("inc"))))
+            else coalesce(expr("hll_union(ball, inc)"), col("ball"))
+          val next = merged
+            .withColumn("__ball", newBall)
+            .withColumn("__c",
+              if (exact) size(col("__ball")).cast("long")
+              else expr("hll_sketch_estimate(__ball)"))
+            // count casts to DECIMAL(10,0): the product's adjusted scale
+            // stays >= 9, so term x count (<= 9 decimals) is EXACT — a
+            // wider cast would push Spark's precision adjustment below the
+            // term's 9 decimals and silently truncate vs the oracle
+            .select(col("n"), col("__ball").as("ball"), col("__c").as("c"),
+              (col("h") + term * greatest(col("__c") - col("c"), lit(0L))
+                .cast("decimal(10,0)")).as("h"),
+              when(col("__ball") === col("ball"), lit(0L)).otherwise(lit(1L))
+                .as("__g"))
+            .localCheckpoint(false)
+          // coalesce: an empty graph sums to NULL, which must read as 0
+          val changed = next.agg(coalesce(sum(col("__g")), lit(0L)))
+            .first().getLong(0)
+          state = next.drop("__g")
+          converged = changed == 0L
+          t += 1
+        }
+        state.select(col("n"), (col("c") - 1).as("n_reachable"),
+          round(col("h").cast("double"), 6).as("harmonic"))
+      }
     }
-    var state =
-      if (exact)
-        nodes.select(col("n"), array(col("n")).as("ball"),
-          lit(1L).as("c"), lit(0).cast("decimal(30,12)").as("h"))
-      else
-        nodes.groupBy("n")
-          .agg(expr(s"hll_sketch_agg(n, $lgK)").as("ball"))
-          .select(col("n"), col("ball"),
-            expr("hll_sketch_estimate(ball)").as("c"),
-            lit(0).cast("decimal(30,12)").as("h"))
-    state = state.localCheckpoint() // eager: iteration 1 scans it twice
-    // Iteration hygiene: each round's state is localCheckpoint(false)
-    // — lineage cut, no CacheManager pin to leak — and the round's
-    // SINGLE job is the ball-change aggregation that materializes the
-    // lazy checkpoint. Convergence is BALL EQUALITY, valid in both
-    // modes: unchanged balls mean unchanged counts mean unchanged h,
-    // and the iteration map is a pure function of the state, so an
-    // unchanged round is a proven fixpoint — the loop early-stops
-    // with output identical to running the full maxDist budget.
-    // (Exact balls preserve element order under a no-op merge —
-    // concat keeps the old ball's prefix and array_distinct keeps
-    // first occurrences — and a no-op hll_union reproduces the same
-    // sketch state, so equality is well-defined; a spurious byte
-    // inequality would only forgo the early exit, never change the
-    // answer.)
-    var t = 1
-    var converged = false
-    while (t <= maxDist && !converged) {
-      val nbr = e
-        .join(state.select(col("n").as("src"), col("ball").as("nball")), "src")
-        .groupBy(col("dst").as("n"))
-        .agg(if (exact) array_distinct(flatten(collect_list(col("nball")))).as("inc")
-             else expr("hll_union_agg(nball)").as("inc"))
-      val term = round(lit(1.0) / t, 9).cast("decimal(30,12)")
-      val merged = state.join(nbr, Seq("n"), "left")
-      val newBall =
-        if (exact) when(col("inc").isNull, col("ball"))
-          .otherwise(array_distinct(concat(col("ball"), col("inc"))))
-        else coalesce(expr("hll_union(ball, inc)"), col("ball"))
-      val next = merged
-        .withColumn("__ball", newBall)
-        .withColumn("__c",
-          if (exact) size(col("__ball")).cast("long")
-          else expr("hll_sketch_estimate(__ball)"))
-        // count casts to DECIMAL(10,0): the product's adjusted scale
-        // stays >= 9, so term x count (<= 9 decimals) is EXACT — a
-        // wider cast would push Spark's precision adjustment below the
-        // term's 9 decimals and silently truncate vs the oracle
-        .select(col("n"), col("__ball").as("ball"), col("__c").as("c"),
-          (col("h") + term * greatest(col("__c") - col("c"), lit(0L))
-            .cast("decimal(10,0)")).as("h"),
-          when(col("__ball") === col("ball"), lit(0L)).otherwise(lit(1L))
-            .as("__g"))
-        .localCheckpoint(false)
-      // coalesce: an empty graph sums to NULL, which must read as 0
-      val changed = next.agg(coalesce(sum(col("__g")), lit(0L)))
-        .first().getLong(0)
-      state = next.drop("__g")
-      converged = changed == 0L
-      t += 1
-    }
-    val out = state.select(col("n"), (col("c") - 1).as("n_reachable"),
-      round(col("h").cast("double"), 6).as("harmonic"))
-    e.unpersist(blocking = false)
-    out
   }
 
   /** Driver kernel for exact-mode [[harmonicCentrality]] behind the
@@ -462,62 +455,58 @@ object LinkGraph {
            tol: Double = 0.0): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     require(tol >= 0.0, s"tol >= 0: $tol")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("n"))
-      .unionByName(e.select(col("dst").as("n"))).distinct().persist()
-    if (LocalGate.admitsGraph(nodes.count(), e.count())) {
-      val out = hitsLocal(nodes, e, iters, tol)
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      return out
+    Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src") =!= col("dst")).distinct()) { e =>
+      Tables.persisted(e.select(col("src").as("n"))
+          .unionByName(e.select(col("dst").as("n"))).distinct()) { nodes =>
+        if (LocalGate.admitsGraph(nodes.count(), e.count())) hitsLocal(nodes, e, iters, tol)
+        else {
+          // raw phase sums (9dp inputs, exact decimal) -> L1-normalized 9dp
+          def normalize(raw: DataFrame): DataFrame = {
+            val tot = raw.agg(sum(col("r")).cast("double").as("__t"))
+            nodes.join(raw, Seq("n"), "left").crossJoin(tot)
+              .select(col("n"),
+                round(coalesce(col("r").cast("double"), lit(0.0)) / col("__t"), 9)
+                  .as("x"))
+          }
+          // Iteration hygiene: a and h localCheckpoint(false) per round —
+          // without it the final h.join(a) doubles the unpersisted subtree
+          // per iteration (~2^iters evaluations). The round's SINGLE job is
+          // the hub-delta aggregation: it materializes h's lazy checkpoint
+          // (and a's, which h scans). delta == 0 is a proven fixpoint — the
+          // next round's a = f(h) and h = g(a) reproduce themselves — so
+          // tol = 0.0 early-stops with output identical to the full budget.
+          var h = nodes.select(col("n"), lit(1.0).as("x"))
+          var a = h // overwritten on the first iteration (iters >= 1)
+          var it = 0
+          var converged = false
+          while (it < iters && !converged) {
+            a = normalize(e
+              .join(h.select(col("n").as("src"), col("x")), "src")
+              .groupBy(col("dst").as("n"))
+              .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
+              .localCheckpoint(false)
+            val hNext = normalize(e
+              .join(a.select(col("n").as("dst"), col("x")), "dst")
+              .groupBy(col("src").as("n"))
+              .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
+              .join(h.select(col("n"), col("x").as("__prev")), Seq("n"))
+              .localCheckpoint(false)
+            // coalesce: an empty graph sums to NULL, which must read as 0.
+            // Exact decimal sum (pageRank's probe rationale): the tol > 0
+            // stop round is partition-order-free and kernel-reproducible
+            val delta = hNext.agg(coalesce(
+              sum(graft.functions.DecimalOps.dec12(abs(col("x") - col("__prev")))),
+              lit(0).cast("decimal(30,12)"))).first().getDecimal(0).doubleValue
+            h = hNext.drop("__prev")
+            converged = delta <= tol
+            it += 1
+          }
+          h.select(col("n"), round(col("x"), 6).as("hub"))
+            .join(a.select(col("n"), round(col("x"), 6).as("authority")), Seq("n"))
+        }
+      }
     }
-    // raw phase sums (9dp inputs, exact decimal) -> L1-normalized 9dp
-    def normalize(raw: DataFrame): DataFrame = {
-      val tot = raw.agg(sum(col("r")).cast("double").as("__t"))
-      nodes.join(raw, Seq("n"), "left").crossJoin(tot)
-        .select(col("n"),
-          round(coalesce(col("r").cast("double"), lit(0.0)) / col("__t"), 9)
-            .as("x"))
-    }
-    // Iteration hygiene: a and h localCheckpoint(false) per round —
-    // without it the final h.join(a) doubles the unpersisted subtree
-    // per iteration (~2^iters evaluations). The round's SINGLE job is
-    // the hub-delta aggregation: it materializes h's lazy checkpoint
-    // (and a's, which h scans). delta == 0 is a proven fixpoint — the
-    // next round's a = f(h) and h = g(a) reproduce themselves — so
-    // tol = 0.0 early-stops with output identical to the full budget.
-    var h = nodes.select(col("n"), lit(1.0).as("x"))
-    var a = h // overwritten on the first iteration (iters >= 1)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      a = normalize(e
-        .join(h.select(col("n").as("src"), col("x")), "src")
-        .groupBy(col("dst").as("n"))
-        .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
-        .localCheckpoint(false)
-      val hNext = normalize(e
-        .join(a.select(col("n").as("dst"), col("x")), "dst")
-        .groupBy(col("src").as("n"))
-        .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
-        .join(h.select(col("n"), col("x").as("__prev")), Seq("n"))
-        .localCheckpoint(false)
-      // coalesce: an empty graph sums to NULL, which must read as 0.
-      // Exact decimal sum (pageRank's probe rationale): the tol > 0
-      // stop round is partition-order-free and kernel-reproducible
-      val delta = hNext.agg(coalesce(
-        sum(graft.functions.DecimalOps.dec12(abs(col("x") - col("__prev")))),
-        lit(0).cast("decimal(30,12)"))).first().getDecimal(0).doubleValue
-      h = hNext.drop("__prev")
-      converged = delta <= tol
-      it += 1
-    }
-    val out = h.select(col("n"), round(col("x"), 6).as("hub"))
-      .join(a.select(col("n"), round(col("x"), 6).as("authority")), Seq("n"))
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** Driver-side HITS kernel — [[hits]]'s [[LocalGate]] path. The
@@ -580,34 +569,32 @@ object LinkGraph {
     */
   def stats(edges: DataFrame, srcCol: String = "src",
             dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
-    val nodes = e.select(col("src").as("n"))
-      .unionByName(e.select(col("dst").as("n"))).distinct()
-    val ecnt = e.agg(count(lit(1)).as("n_edges"),
-      sum(when(col("src") === col("dst"), 1L).otherwise(0L)).as("n_self_loops"))
-    val ncnt = nodes.agg(count(lit(1)).as("n_nodes"))
-    val dang = nodes
-      .join(e.select(col("src").as("n")).distinct(), Seq("n"), "left_anti")
-      .agg(count(lit(1)).as("n_dangling"))
-    val recip = e.filter(col("src") =!= col("dst"))
-      .join(e.select(col("dst").as("src"), col("src").as("dst")),
-        Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("__recip"))
-    // the answer is ONE row: materialize it eagerly (localCheckpoint)
-    // so the persisted edge frame can be released before returning —
-    // no cache pin outlives the call
-    val out = ecnt.crossJoin(ncnt).crossJoin(dang).crossJoin(recip)
-      .select(col("n_nodes"), col("n_edges"), col("n_self_loops"),
-        col("n_dangling"),
-        round(col("__recip").cast("double") /
-          greatest(col("n_edges") - col("n_self_loops"), lit(1L))
-            .cast("double"), 6).as("reciprocity"),
-        round(col("n_edges").cast("double") /
-          greatest(col("n_nodes"), lit(1L)), 6).as("avg_out_degree"))
-      .localCheckpoint()
-    e.unpersist(blocking = false)
-    out
+    Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .distinct()) { e =>
+      val nodes = e.select(col("src").as("n"))
+        .unionByName(e.select(col("dst").as("n"))).distinct()
+      val ecnt = e.agg(count(lit(1)).as("n_edges"),
+        sum(when(col("src") === col("dst"), 1L).otherwise(0L)).as("n_self_loops"))
+      val ncnt = nodes.agg(count(lit(1)).as("n_nodes"))
+      val dang = nodes
+        .join(e.select(col("src").as("n")).distinct(), Seq("n"), "left_anti")
+        .agg(count(lit(1)).as("n_dangling"))
+      val recip = e.filter(col("src") =!= col("dst"))
+        .join(e.select(col("dst").as("src"), col("src").as("dst")),
+          Seq("src", "dst"), "left_semi")
+        .agg(count(lit(1)).as("__recip"))
+      // the answer is ONE row: materialize it eagerly (localCheckpoint)
+      // so the pinned edge frame can be released before returning
+      ecnt.crossJoin(ncnt).crossJoin(dang).crossJoin(recip)
+        .select(col("n_nodes"), col("n_edges"), col("n_self_loops"),
+          col("n_dangling"),
+          round(col("__recip").cast("double") /
+            greatest(col("n_edges") - col("n_self_loops"), lit(1L))
+              .cast("double"), 6).as("reciprocity"),
+          round(col("n_edges").cast("double") /
+            greatest(col("n_nodes"), lit(1L)), 6).as("avg_out_degree"))
+        .localCheckpoint()
+    }
   }
 
   /** Connected components over the link graph — host/domain clusters
@@ -633,8 +620,9 @@ object LinkGraph {
     val nodes = e.select(col("src").as("n"))
       .unionByName(e.select(col("dst").as("n"))).distinct()
     val w = org.apache.spark.sql.expressions.Window.orderBy("n")
+    // eager: the returned labels read it after the call
     val ids = nodes.select(col("n"), row_number().over(w).cast("long").as("__id"))
-      .persist()
+      .localCheckpoint()
     val pairs = e
       .join(ids.select(col("n").as("src"), col("__id").as("a")), "src")
       .join(ids.select(col("n").as("dst"), col("__id").as("b")), "dst")
@@ -988,73 +976,68 @@ object LinkGraph {
     val scc = stronglyConnectedComponents(edges, srcCol, dstCol, maxIter)
       .localCheckpoint()
     val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = eAll.filter(col("src") =!= col("dst")).distinct().persist()
-    // one node count for the gate and the shuffle-hash pin (the per-hop
-    // visited set and the final tag frames are node-shaped)
-    val nNodes = scc.count()
-    if (LocalGate.admitsGraph(nNodes, e.count())) {
-      val out = bowTieLocal(scc, e)
-      e.unpersist(blocking = false)
-      return out
-    }
-    def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, nNodes)
-    val out = {
-      // the giant SCC: size desc, label asc — a 1-row broadcast
-      val coreLabel = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
-        .orderBy(desc("__sz"), asc("scc")).limit(1).select("scc")
-      val core = scc.join(broadcast(coreLabel), Seq("scc"), "left_semi")
-        .select("n").localCheckpoint()
-      // frontier-expansion reachability: seed ∪ everything reachable
-      // along `forward` edges; visited-set anti-join dedup, one
-      // checkpointed round per hop
-      def reach(seed: DataFrame, forward: Boolean): DataFrame = {
-        var visited = seed.localCheckpoint(false)
-        var frontier = visited
-        var growing = visited.count() > 0
-        while (growing) {
-          val step =
-            if (forward)
-              e.join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
-                .select(col("dst").as("n")).distinct()
-            else
-              e.join(frontier.select(col("n").as("dst")), Seq("dst"), "left_semi")
-                .select(col("src").as("n")).distinct()
-          val fresh = step.join(nodeSide(visited), Seq("n"), "left_anti")
-            .localCheckpoint(false)
-          if (fresh.count() == 0) growing = false
-          else {
-            visited = visited.unionByName(fresh).localCheckpoint(false)
-            visited.count()
-            frontier = fresh
+    Tables.persisted(eAll.filter(col("src") =!= col("dst")).distinct()) { e =>
+      // one node count for the gate and the shuffle-hash pin (the per-hop
+      // visited set and the final tag frames are node-shaped)
+      val nNodes = scc.count()
+      if (LocalGate.admitsGraph(nNodes, e.count())) bowTieLocal(scc, e)
+      else {
+        def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, nNodes)
+        // the giant SCC: size desc, label asc — a 1-row broadcast
+        val coreLabel = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
+          .orderBy(desc("__sz"), asc("scc")).limit(1).select("scc")
+        val core = scc.join(broadcast(coreLabel), Seq("scc"), "left_semi")
+          .select("n").localCheckpoint()
+        // frontier-expansion reachability: seed ∪ everything reachable
+        // along `forward` edges; visited-set anti-join dedup, one
+        // checkpointed round per hop
+        def reach(seed: DataFrame, forward: Boolean): DataFrame = {
+          var visited = seed.localCheckpoint(false)
+          var frontier = visited
+          var growing = visited.count() > 0
+          while (growing) {
+            val step =
+              if (forward)
+                e.join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
+                  .select(col("dst").as("n")).distinct()
+              else
+                e.join(frontier.select(col("n").as("dst")), Seq("dst"), "left_semi")
+                  .select(col("src").as("n")).distinct()
+            val fresh = step.join(nodeSide(visited), Seq("n"), "left_anti")
+              .localCheckpoint(false)
+            if (fresh.count() == 0) growing = false
+            else {
+              visited = visited.unionByName(fresh).localCheckpoint(false)
+              visited.count()
+              frontier = fresh
+            }
           }
+          visited
         }
-        visited
+        val fwdCore = reach(core, forward = true)
+        val bwdCore = reach(core, forward = false)
+        val inSet = bwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
+        val outSet = fwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
+        val inFwd = reach(inSet, forward = true)
+        val outBwd = reach(outSet, forward = false)
+        def tag(df: DataFrame, name: String) =
+          df.select(col("n"), lit(true).as(name))
+        scc.select("n")
+          .join(nodeSide(tag(core, "__core")), Seq("n"), "left")
+          .join(nodeSide(tag(inSet, "__in")), Seq("n"), "left")
+          .join(nodeSide(tag(outSet, "__out")), Seq("n"), "left")
+          .join(nodeSide(tag(inFwd, "__if")), Seq("n"), "left")
+          .join(nodeSide(tag(outBwd, "__ob")), Seq("n"), "left")
+          .select(col("n"),
+            when(col("__core"), "core")
+              .when(col("__in"), "in")
+              .when(col("__out"), "out")
+              .when(col("__if").isNotNull && col("__ob").isNotNull, "tube")
+              .when(col("__if").isNotNull || col("__ob").isNotNull, "tendril")
+              .otherwise("disconnected").as("cls"))
+          .localCheckpoint()
       }
-      val fwdCore = reach(core, forward = true)
-      val bwdCore = reach(core, forward = false)
-      val inSet = bwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
-      val outSet = fwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
-      val inFwd = reach(inSet, forward = true)
-      val outBwd = reach(outSet, forward = false)
-      def tag(df: DataFrame, name: String) =
-        df.select(col("n"), lit(true).as(name))
-      scc.select("n")
-        .join(nodeSide(tag(core, "__core")), Seq("n"), "left")
-        .join(nodeSide(tag(inSet, "__in")), Seq("n"), "left")
-        .join(nodeSide(tag(outSet, "__out")), Seq("n"), "left")
-        .join(nodeSide(tag(inFwd, "__if")), Seq("n"), "left")
-        .join(nodeSide(tag(outBwd, "__ob")), Seq("n"), "left")
-        .select(col("n"),
-          when(col("__core"), "core")
-            .when(col("__in"), "in")
-            .when(col("__out"), "out")
-            .when(col("__if").isNotNull && col("__ob").isNotNull, "tube")
-            .when(col("__if").isNotNull || col("__ob").isNotNull, "tendril")
-            .otherwise("disconnected").as("cls"))
-        .localCheckpoint()
     }
-    e.unpersist(blocking = false)
-    out
   }
 
   /** Driver-side Broder classification over a collected small graph —

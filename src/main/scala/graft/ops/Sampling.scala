@@ -321,7 +321,7 @@ object Sampling {
     * Scale shape: a single-partition global window would serialize
     * the corpus, so this is the classic two-pass distributed prefix
     * sum over ONE distributed range sort: (1) `orderBy` range-sorts
-    * and the sorted frame persists, pinning identical partitions for
+    * and the sorted frame is checkpointed, pinning identical partitions for
     * both passes; (2) per-partition token subtotals collect to the
     * driver — ONE row per partition, bounded by shuffle partitions,
     * never corpus-shaped (the inherent second pass of any prefix
@@ -331,9 +331,10 @@ object Sampling {
     * the sort, and a partition whose start offset already exceeds
     * the budget emits nothing without scanning. Determinism: the
     * (score desc, id) order is total, so the kept set is bit-stable
-    * on any input partitioning. The persisted sort follows the
-    * JsonlCorpus cache-lifecycle convention (LRU-evicted; no handle
-    * survives the call).
+    * on any input partitioning. The sort is materialized once, in this
+    * call, as an eager `localCheckpoint`: no cache entry outlives the
+    * call, and its blocks are freed once the returned frame is no
+    * longer referenced.
     */
   def selectByTokenBudget(docs: DataFrame, budget: Long,
                           tokensCol: String = "n_tokens",
@@ -341,7 +342,9 @@ object Sampling {
                           idCol: String = "doc_id"): DataFrame = {
     require(budget >= 0, s"budget >= 0: $budget")
     import org.apache.spark.sql.{Encoders, Row}
-    val sorted = docs.orderBy(col(scoreCol).desc, col(idCol).asc).persist()
+    // eager: both passes read its fixed partitions, and the returned
+    // selection reads it after the call
+    val sorted = docs.orderBy(col(scoreCol).desc, col(idCol).asc).localCheckpoint()
     val tIdx = sorted.schema.fieldIndex(tokensCol)
     def tok(r: Row): Long = r.get(tIdx) match {
       case null => 0L

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.dedup.{Clusters, Dedup}
 import graft.ops.Sampling
 import graft.streaming.StoreMaintenance
@@ -160,47 +161,46 @@ object Curation {
       .filter(col("__rn") === 1).drop("__rn")
     val seen = StoreMaintenance.history(spark, seenDir, batchId,
       firsts.select("__h").limit(0))
-    val exactSurvivors = firsts.join(seen, Seq("__h"), "left_anti").persist()
-
-    try {
-      if (exactSurvivors.isEmpty) return exactSurvivors
+    Tables.persisted(firsts.join(seen, Seq("__h"), "left_anti")) { exactSurvivors =>
+      if (exactSurvivors.isEmpty) exactSurvivors
         .select(col(idCol), col(textCol)).limit(0)
         .withColumn("pred_lang", lit(null).cast("string"))
         .withColumn("quality", lit(null).cast("double"))
+      else {
+        // 2. near-dup vs index + batch-scoped components over the pairs
+        val index = StoreMaintenance.history(spark, indexDir, batchId,
+          Dedup.minhashIndex(exactSurvivors.limit(0), shingleK, numPerm, textCol, idCol))
+        val (pairs, newIdx) = graft.dedup.Dedup.minhashNearDupsDelta(
+          index, exactSurvivors, shingleK, numPerm, bands, jaccardThreshold,
+          textCol, idCol)
+        // every batch doc whose component contains a smaller id loses;
+        // history ids are smaller by the monotone-ingest convention, so
+        // they anchor their components automatically
+        val nearDeduped = graft.dedup.Clusters.dedupByComponents(
+          exactSurvivors, pairs, idCol)
 
-      // 2. near-dup vs index + batch-scoped components over the pairs
-      val index = StoreMaintenance.history(spark, indexDir, batchId,
-        Dedup.minhashIndex(exactSurvivors.limit(0), shingleK, numPerm, textCol, idCol))
-      val (pairs, newIdx) = graft.dedup.Dedup.minhashNearDupsDelta(
-        index, exactSurvivors, shingleK, numPerm, bands, jaccardThreshold,
-        textCol, idCol)
-      // every batch doc whose component contains a smaller id loses;
-      // history ids are smaller by the monotone-ingest convention, so
-      // they anchor their components automatically
-      val nearDeduped = graft.dedup.Clusters.dedupByComponents(
-        exactSurvivors, pairs, idCol)
+        // 3. history-free gates + deterministic sample
+        val scored = TextAnalysis.langId(
+          TextAnalysis.qualityScore(nearDeduped, textCol), textCol)
+        val gated = applyClassifierGate(scored
+          .filter(col("quality") >= minQuality)
+          .filter(col("pred_lang").isin(keepLangs: _*)),
+          classifier, minClassifierProb, idCol, textCol)
+        val sampled =
+          if (sampleFraction >= 1.0) gated
+          else Sampling.deterministicSample(gated, idCol, sampleFraction)
 
-      // 3. history-free gates + deterministic sample
-      val scored = TextAnalysis.langId(
-        TextAnalysis.qualityScore(nearDeduped, textCol), textCol)
-      val gated = applyClassifierGate(scored
-        .filter(col("quality") >= minQuality)
-        .filter(col("pred_lang").isin(keepLangs: _*)),
-        classifier, minClassifierProb, idCol, textCol)
-      val sampled =
-        if (sampleFraction >= 1.0) gated
-        else Sampling.deterministicSample(gated, idCol, sampleFraction)
-
-      // commit O(batch) store rows; the returned frame is lazy, and
-      // that is SAFE against a crash between commit and consumption:
-      // a replay with the same batchId excludes its own store
-      // partitions, so it recomputes the identical output
-      StoreMaintenance.writeBatch(exactSurvivors.select("__h"), seenDir, batchId)
-      StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
-      sampled
-        .select(col(idCol), col(textCol), col("pred_lang"), col("quality"))
-        .orderBy(idCol)
-    } finally exactSurvivors.unpersist(blocking = true)
+        // commit O(batch) store rows; the returned frame is lazy, and
+        // that is SAFE against a crash between commit and consumption:
+        // a replay with the same batchId excludes its own store
+        // partitions, so it recomputes the identical output
+        StoreMaintenance.writeBatch(exactSurvivors.select("__h"), seenDir, batchId)
+        StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
+        sampled
+          .select(col(idCol), col(textCol), col("pred_lang"), col("quality"))
+          .orderBy(idCol)
+      }
+    }
   }
 
   /** Sequence packing — assemble curated documents into training

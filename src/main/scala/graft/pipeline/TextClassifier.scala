@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Hashed-feature linear quality classifier — the fastText-style
   * learned filter (Joulin et al. 2017, "Bag of Tricks for Efficient
   * Text Classification") that modern curation pipelines (CCNet, DCLM,
@@ -184,12 +186,10 @@ object TextClassifier {
     // the expensive subtree (tokenize + hash + per-doc agg) evaluates
     // once: doc-partitioned and persisted, every iteration's margin agg
     // and residual join sit on this partitioning with no new exchange
-    val feats = hashedFeatures(docsB, dim, textCol, idCol, l1Normalize)
-      .join(labelsB.select(col(idCol), col("label").cast("double").as("__y")),
-        idCol :: Nil)
-      .repartition(col(idCol))
-      .persist()
-    try {
+    Tables.persisted(hashedFeatures(docsB, dim, textCol, idCol, l1Normalize)
+        .join(labelsB.select(col(idCol), col("label").cast("double").as("__y")),
+          idCol :: Nil)
+        .repartition(col(idCol))) { feats =>
       // nDocs rides the first iteration's gradient collect (the bias
       // row carries a doc count) instead of a dedicated
       // distinct().count() pass over the feature stream — that pass
@@ -318,7 +318,7 @@ object TextClassifier {
       Model(dim, bias,
         w.iterator.zipWithIndex.collect { case (v, i) if v != 0.0 => (i, v) }.toMap,
         losses.result(), l1Normalize)
-    } finally { feats.unpersist(blocking = false); () }
+    }
   }
 
   /** Multi-class softmax model — the fastText langid shape (Joulin
@@ -391,12 +391,10 @@ object TextClassifier {
     val spark = docs.sparkSession
     import spark.implicits._
     val (docsB, labelsB) = boundTraining(docs, labels, sampleMax, idCol)
-    val feats = hashedFeatures(docsB, dim, textCol, idCol, l1Normalize)
-      .join(labelsB.select(col(idCol), col("label").cast("int").as("__y")),
-        idCol :: Nil)
-      .repartition(col(idCol))
-      .persist()
-    try {
+    Tables.persisted(hashedFeatures(docsB, dim, textCol, idCol, l1Normalize)
+        .join(labelsB.select(col(idCol), col("label").cast("int").as("__y")),
+          idCol :: Nil)
+        .repartition(col(idCol))) { feats =>
       val w = scala.collection.mutable.Map.empty[(Int, Int), Double]
         .withDefaultValue(0.0)
       val bias = new Array[Double](nClasses)
@@ -493,34 +491,33 @@ object TextClassifier {
         val wdf =
           if (nz.isEmpty) Seq((0, 0, 0.0)).toDF("feat", "cls", "__w").limit(0)
           else nz.toDF("feat", "cls", "__w")
-        val probs = classMargins(feats, wdf, bias.toSeq, idCol, Seq("__y"))
-          .withColumn("__l",
-            -log(greatest(element_at(col("__probs"), col("__y") + 1),
-              lit(1e-15))))
-          .persist()
-        val resid = probs
-          .select(col(idCol), col("__y"),
-            posexplode(col("__probs")).as(Seq("cls", "__p")))
-          .select(col(idCol), col("cls"),
-            (col("__p") - (col("cls") === col("__y")).cast("double"))
-              .as("__r"))
-        // one collect: (feat, cls) gradient rows + feat = -1 bias rows
-        // + a feat = -2 row carrying the loss sum and the doc count
-        val grad = feats.join(resid, idCol :: Nil)
-          .groupBy("feat", "cls")
-          .agg(sum(dec9(col("__r") * col("tf"))).cast("double").as("g"),
-            lit(Double.NaN).as("loss"), lit(0L).as("nd"))
-          .unionByName(resid.groupBy("cls")
-            .agg(sum(dec9(col("__r"))).cast("double").as("g"),
+        val grad = Tables.persisted(classMargins(feats, wdf, bias.toSeq, idCol, Seq("__y"))
+            .withColumn("__l",
+              -log(greatest(element_at(col("__probs"), col("__y") + 1),
+                lit(1e-15))))) { probs =>
+          val resid = probs
+            .select(col(idCol), col("__y"),
+              posexplode(col("__probs")).as(Seq("cls", "__p")))
+            .select(col(idCol), col("cls"),
+              (col("__p") - (col("cls") === col("__y")).cast("double"))
+                .as("__r"))
+          // one collect: (feat, cls) gradient rows + feat = -1 bias rows
+          // + a feat = -2 row carrying the loss sum and the doc count
+          feats.join(resid, idCol :: Nil)
+            .groupBy("feat", "cls")
+            .agg(sum(dec9(col("__r") * col("tf"))).cast("double").as("g"),
               lit(Double.NaN).as("loss"), lit(0L).as("nd"))
-            .select(lit(-1).as("feat"), col("cls"), col("g"),
-              col("loss"), col("nd")))
-          .unionByName(probs.agg(
-            lit(-2).as("feat"), lit(-1).as("cls"), lit(0.0).as("g"),
-            sum(dec9(col("__l"))).cast("double").as("loss"),
-            count(lit(1)).as("nd")))
-          .as[(Int, Int, Double, Double, Long)].collect()
-        probs.unpersist(blocking = false)
+            .unionByName(resid.groupBy("cls")
+              .agg(sum(dec9(col("__r"))).cast("double").as("g"),
+                lit(Double.NaN).as("loss"), lit(0L).as("nd"))
+              .select(lit(-1).as("feat"), col("cls"), col("g"),
+                col("loss"), col("nd")))
+            .unionByName(probs.agg(
+              lit(-2).as("feat"), lit(-1).as("cls"), lit(0.0).as("g"),
+              sum(dec9(col("__l"))).cast("double").as("loss"),
+              count(lit(1)).as("nd")))
+            .as[(Int, Int, Double, Double, Long)].collect()
+        }
         val (_, _, _, lossSum, nd) = grad.find(_._1 == -2).get
         nDocs = nd.toDouble
         require(nDocs > 0, "no labeled documents to train on")
@@ -543,7 +540,7 @@ object TextClassifier {
       }
       SoftmaxModel(dim, nClasses, bias.toSeq,
         w.iterator.filter(_._2 != 0.0).toMap, losses.result(), l1Normalize)
-    } finally { feats.unpersist(blocking = false); () }
+    }
   }
 
   /** Dense-array weight cells a map-side scorer will ship per task:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import Similarity.{dot, toDouble}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
@@ -52,33 +53,32 @@ object Ivf {
   def train(corpus: DataFrame, nlist: Int, iters: Int,
             sampleMax: Int = 10000, idCol: String = "vec_id",
             vecCol: String = "embedding"): Array[Array[Double]] = {
-    val sample = corpus
-      .select(col(idCol).as("id"), normalize(toDouble(col(vecCol))).as("v"))
-      .orderBy(xxhash64(col("id")), col("id"))
-      .limit(sampleMax)
-      .cache()
-    var cents: Array[Array[Double]] = sample.limit(nlist).collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(cents.length == nlist, s"sample smaller than nlist=$nlist")
-    for (_ <- 0 until iters) {
-      val means = sample
-        .withColumn("cid", nearestCentroid(col("v"), cents))
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
-        .collect()
-      val byCid: Map[Int, Array[Row]] = means.groupBy(_.getInt(0))
-      cents = cents.zipWithIndex.map { case (old, i) =>
-        byCid.get(i) match {
-          case Some(rows) =>
-            val m = rows.sortBy(_.getInt(1)).map(_.getDouble(2))
-            val norm = math.sqrt(m.map(x => x * x).sum)
-            if (norm > 0) m.map(_ / norm) else old
-          case None => old
+    Tables.persisted(corpus
+        .select(col(idCol).as("id"), normalize(toDouble(col(vecCol))).as("v"))
+        .orderBy(xxhash64(col("id")), col("id"))
+        .limit(sampleMax)) { sample =>
+      var cents: Array[Array[Double]] = sample.limit(nlist).collect()
+        .map(r => r.getSeq[Double](1).toArray)
+      require(cents.length == nlist, s"sample smaller than nlist=$nlist")
+      for (_ <- 0 until iters) {
+        val means = sample
+          .withColumn("cid", nearestCentroid(col("v"), cents))
+          .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
+          .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
+          .collect()
+        val byCid: Map[Int, Array[Row]] = means.groupBy(_.getInt(0))
+        cents = cents.zipWithIndex.map { case (old, i) =>
+          byCid.get(i) match {
+            case Some(rows) =>
+              val m = rows.sortBy(_.getInt(1)).map(_.getDouble(2))
+              val norm = math.sqrt(m.map(x => x * x).sum)
+              if (norm > 0) m.map(_ / norm) else old
+            case None => old
+          }
         }
       }
+      cents
     }
-    sample.unpersist()
-    cents
   }
 
   /** Two-level (coarse × fine) IVF index: `coarse` routes, `fine` is

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
+import graft.core.Tables
+
 /** JSONL corpus ingest — the arrival format of large text corpora
   * (one JSON document per line: Common-Crawl derivatives, API dumps,
   * curation-pipeline interchange). The reference ingests from a
@@ -41,56 +43,40 @@ object JsonlCorpus {
     * quarantined raw lines). The quarantine frame has one column,
     * `raw_line`. Spark refuses to filter on the corrupt column of an
     * un-materialized JSON scan (SPARK-21610: the pruned re-parse
-    * could not reconstruct it), so the split runs off one cached scan
-    * — the input is read once, not once per branch.
+    * could not reconstruct it), so the split runs off one materialized
+    * scan — the input is read once, not once per branch.
     *
-    * Cache lifecycle: both returned frames share that cached scan, and
-    * it stays cached until LRU eviction (there is no handle to drop it
-    * early — `spark.catalog.clearCache()` is the blunt escape hatch).
-    * Callers that finish with both branches inside one scope should
-    * use [[readWith]], which unpersists deterministically.
+    * Lifecycle: the scan is read eagerly, in this call, into a
+    * `localCheckpoint` that both returned frames read; no cache entry
+    * outlives the call, and the checkpoint's blocks are freed once
+    * neither frame is referenced any more.
     */
   def read(spark: SparkSession, path: String, schema: StructType,
-           multiLine: Boolean = false): (DataFrame, DataFrame) = {
-    val (_, good, quarantine) = readCached(spark, path, schema, multiLine)
-    (good, quarantine)
-  }
+           multiLine: Boolean = false): (DataFrame, DataFrame) =
+    split(scan(spark, path, schema, multiLine).localCheckpoint(), schema)
 
-  /** [[read]] with a deterministic cache lifecycle: `f` runs over the
-    * (typed, quarantine) pair and the backing cached scan is
-    * unpersisted when it returns — the non-leaking form for bounded
-    * scopes ([[toParquet]] is exactly this shape internally). `f` must
-    * consume the frames inside the call: actions after return would
-    * silently re-parse the JSON from scratch.
+  /** The JSONL scan with the corrupt-record column; [[split]] needs it
+    * materialized.
     */
-  def readWith[T](spark: SparkSession, path: String, schema: StructType,
-                  multiLine: Boolean = false)
-                 (f: (DataFrame, DataFrame) => T): T = {
-    val (parsed, good, quarantine) = readCached(spark, path, schema, multiLine)
-    try f(good, quarantine) finally parsed.unpersist(blocking = false)
-  }
-
-  /** The cached scan behind [[read]] — callers that finish with both
-    * branches (e.g. [[toParquet]]) unpersist it deterministically
-    * instead of waiting for cache eviction.
-    */
-  private def readCached(spark: SparkSession, path: String,
-                         schema: StructType, multiLine: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def scan(spark: SparkSession, path: String,
+                   schema: StructType, multiLine: Boolean): DataFrame = {
     require(!schema.fieldNames.contains(CorruptCol),
       s"schema must not contain the reserved column $CorruptCol")
-    val parsed = spark.read
+    spark.read
       .schema(schema.add(CorruptCol, StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .option("multiLine", multiLine)
       .json(path)
-      .cache()
+  }
+
+  /** (typed rows, quarantined raw lines) of a materialized [[scan]]. */
+  private def split(parsed: DataFrame, schema: StructType): (DataFrame, DataFrame) = {
     val good = parsed.filter(col(CorruptCol).isNull)
       .select(schema.fieldNames.map(col).toSeq: _*)
     val quarantine = parsed.filter(col(CorruptCol).isNotNull)
       .select(col(CorruptCol).as("raw_line"))
-    (parsed, good, quarantine)
+    (good, quarantine)
   }
 
   /** Schema inference bounded to `sampleLines` lines — the
@@ -116,14 +102,14 @@ object JsonlCorpus {
     */
   def toParquet(spark: SparkSession, inPath: String, outDir: String,
                 schema: StructType): (Long, Long) = {
-    val (parsed, good, bad) = readCached(spark, inPath, schema, multiLine = false)
-    try {
+    Tables.persisted(scan(spark, inPath, schema, multiLine = false)) { parsed =>
+      val (good, bad) = split(parsed, schema)
       good.write.mode("overwrite").parquet(outDir)
       val nBad = bad.count()
       if (nBad > 0)
         bad.write.mode("overwrite").parquet(s"$outDir/_quarantine")
       (spark.read.parquet(outDir).count(), nBad)
-    } finally parsed.unpersist(blocking = true)
+    }
   }
 
   /** Export a frame as JSONL — the interchange format the next

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Tables
+
 /** The reference's scheduler loop (scheduler/sync_worker.py: poll →
   * incremental_sync → sleep) re-expressed as Structured Streaming:
   * the file source discovers new files, the watermark replaces the
@@ -374,16 +376,18 @@ object IncrementalStream {
     val hashed = batch.withColumn("__h", md5(col(textCol).cast("binary")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__h")).orderBy(col(idCol).asc)
-    val firsts = hashed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    firsts.persist()
-    try {
+    Tables.persisted(hashed.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")) { firsts =>
       val nBatch = firsts.count()
-      if (nBatch == 0) return // an empty batch writes nothing
-      val shape = firsts.select("__h").limit(0)
-      val seen = StoreMaintenance.history(spark, storeDir, batchId, shape)
-      val survivors =
-        if (seen eq shape) firsts // no history yet: nothing to prune
+      if (nBatch > 0) { // an empty batch writes nothing
+        def commit(survivors: DataFrame): Unit =
+          if (survivors.count() > 0) {
+            StoreMaintenance.writeBatch(survivors.drop("__h"), outDir, batchId)
+            StoreMaintenance.writeBatch(survivors.select("__h"), storeDir, batchId)
+          }
+        val shape = firsts.select("__h").limit(0)
+        val seen = StoreMaintenance.history(spark, storeDir, batchId, shape)
+        if (seen eq shape) commit(firsts) // no history yet: nothing to prune
         else {
           // batch-side bloom prunes the history scan: store hashes that
           // can't be in this batch (the vast majority) never reach the
@@ -391,16 +395,10 @@ object IncrementalStream {
           // bloom exactly
           val might = graft.ops.BloomPrune.bloomMight(
             firsts, "__h", col("__h"), expectedKeys = Some(nBatch))
-          firsts.join(seen.filter(might), Seq("__h"), "left_anti")
+          Tables.persisted(firsts.join(seen.filter(might), Seq("__h"), "left_anti"))(commit)
         }
-      survivors.persist()
-      try {
-        if (survivors.count() > 0) {
-          StoreMaintenance.writeBatch(survivors.drop("__h"), outDir, batchId)
-          StoreMaintenance.writeBatch(survivors.select("__h"), storeDir, batchId)
-        }
-      } finally survivors.unpersist(blocking = true)
-    } finally firsts.unpersist(blocking = true)
+      }
+    }
   }
 
   /** Streaming NEAR-dup ingest: per micro-batch, detect every
@@ -434,11 +432,10 @@ object IncrementalStream {
       graft.dedup.Dedup.minhashIndex(batch.limit(0), k, numPerm, textCol, idCol))
     val (pairs, newIdx) = graft.dedup.Dedup.minhashNearDupsDelta(
       index, batch, k, numPerm, bands, threshold, textCol, idCol)
-    pairs.persist()
-    try {
+    Tables.persisted(pairs) { pairs =>
       if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
       StoreMaintenance.writeBatch(newIdx, indexDir, batchId)
-    } finally pairs.unpersist(blocking = true)
+    }
   }
 
   /** Streaming CONTAINMENT ingest: per micro-batch, detect every
@@ -492,12 +489,10 @@ object IncrementalStream {
     val newHashes = graft.mm.Multimodal.dhash(
       batch.as[graft.mm.Multimodal.MediaRow]).toDF()
     val index = StoreMaintenance.history(spark, indexDir, batchId, newHashes.limit(0))
-    val pairs = graft.mm.Multimodal.dhashPairsDelta(index, newHashes, maxHamming)
-    pairs.persist()
-    try {
+    Tables.persisted(graft.mm.Multimodal.dhashPairsDelta(index, newHashes, maxHamming)) { pairs =>
       if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
       StoreMaintenance.writeBatch(newHashes, indexDir, batchId)
-    } finally pairs.unpersist(blocking = true)
+    }
   }
 
   /** One micro-batch of incremental AUDIO near-dup ingest — the
@@ -516,12 +511,10 @@ object IncrementalStream {
     val newFps = graft.mm.Multimodal.audioFingerprint(
       batch.as[graft.mm.Multimodal.MediaRow]).toDF()
     val index = StoreMaintenance.history(spark, indexDir, batchId, newFps.limit(0))
-    val pairs = graft.mm.Multimodal.audioNearDupsDelta(index, newFps, maxHamming)
-    pairs.persist()
-    try {
+    Tables.persisted(graft.mm.Multimodal.audioNearDupsDelta(index, newFps, maxHamming)) { pairs =>
       if (pairs.count() > 0) StoreMaintenance.writeBatch(pairs, pairsDir, batchId)
       StoreMaintenance.writeBatch(newFps, indexDir, batchId)
-    } finally pairs.unpersist(blocking = true)
+    }
   }
 
   /** One ANN-INDEX ingest micro-batch: PQ-encode the batch's vectors
@@ -610,17 +603,16 @@ object IncrementalStream {
                   classifier: Option[graft.pipeline.TextClassifier.Model] = None,
                   minClassifierProb: Double = 0.5,
                   textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val out = graft.pipeline.Curation.curateDelta(
+    val curated = graft.pipeline.Curation.curateDelta(
       batch, batchId, seenDir, indexDir,
       minQuality = minQuality, keepLangs = keepLangs,
       sampleFraction = sampleFraction,
       classifier = classifier, minClassifierProb = minClassifierProb,
       idCol = idCol, textCol = textCol)
     // materialize once; an empty batch writes nothing
-    out.persist()
-    try {
+    Tables.persisted(curated) { out =>
       if (out.count() > 0) StoreMaintenance.writeBatch(out, outDir, batchId)
-    } finally out.unpersist(blocking = true)
+    }
   }
 
   /** Sessionization via the NATIVE `session_window` operator — the

@@ -44,7 +44,7 @@ object PartitionedSync {
   val PartCol = Tables.PartCol
 
   /** `maxTime` is the watermark candidate: max(timeCol) over the
-    * EXACT fresh rows that were merged ([[withPersistedTail]]).
+    * EXACT fresh rows that were merged.
     */
   case class MergeStats(
       freshRows: Long,
@@ -115,8 +115,14 @@ object PartitionedSync {
     require(fs.exists(root), s"no partitioned target at $path — writeFull first")
     recover(fs, root, PartCol)
 
-    val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket, path))
-    withPersistedTail(freshP, timeCol) { (tail, freshRows, maxTime) =>
+    // the tail is pinned for the merge, and its row count and
+    // max(timeCol) come from ONE action that also fills the pin, so the
+    // count, the merged rows and the watermark candidate describe the
+    // same pulled rows: re-aggregating the fresh PLAN would re-read the
+    // live source, and a row committed mid-sync would raise the
+    // watermark without being merged, skipped forever
+    Tables.persisted(fresh.withColumn(PartCol, bucketOrFail(bucket, path))) { tail =>
+      val (freshRows, maxTime) = Tables.countAndMax(tail, Some(timeCol))
       if (freshRows == 0)
         MergeStats(0L, Nil, Nil, None)
       else {
@@ -149,31 +155,6 @@ object PartitionedSync {
       }
     }
   }
-
-  /** Runs `body` over `fresh` persisted, with its row count and
-    * max(timeCol) (None when empty) from ONE action that also
-    * materializes it, so the count, the merged rows and the watermark
-    * candidate describe the same pulled rows: re-aggregating the fresh
-    * PLAN would re-read the live source, and a row committed mid-sync
-    * would raise the watermark without being merged, skipped forever.
-    * The persisted plan carries a marker column with its own number,
-    * dropped for `body`: Spark's cache manager hands one entry to equal
-    * plans and can read an entry another thread is still filling as
-    * empty, and a merge that read its tail as empty would swap in the
-    * fresh rows without the old rows of their partitions.
-    */
-  private def withPersistedTail[T](fresh: DataFrame, timeCol: String)
-                                  (body: (DataFrame, Long, Option[String]) => T): T = {
-    val marked = fresh.withColumn(TailMark, lit(tails.incrementAndGet())).persist()
-    try {
-      val tail = marked.drop(TailMark)
-      val (rows, latest) = Tables.countAndMax(tail, Some(timeCol))
-      body(tail, rows, latest)
-    } finally marked.unpersist(blocking = true)
-  }
-
-  private val TailMark = "__tail"
-  private val tails = new java.util.concurrent.atomic.AtomicLong()
 
   /** Hidden staging directory of [[swapIn]], under the table root:
     * Spark's file listing, [[partitionValues]] and `Compaction.census`

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** The reference's sync-engine surface re-expressed as declarative
   * Spark transforms.
   *
@@ -411,16 +413,15 @@ object SyncOps {
       if (nHead == 0) done = true
       else {
         val boundary = head.getLong(1)
-        val slice = remaining.filter(col(idCol).cast("long") <= boundary)
-          .persist() // sink + count read it; never recompute the scan twice
-        try {
+        // sink + count read the pinned slice; never recompute the scan twice
+        Tables.persisted(remaining.filter(col(idCol).cast("long") <= boundary)) { slice =>
           onSlice(slice)
           total += slice.count()
-          lastId = boundary
-          slices += 1
-          state.savePartialProgress(name, total, lastId)
-          if (nHead < sliceSize) done = true
-        } finally slice.unpersist()
+        }
+        lastId = boundary
+        slices += 1
+        state.savePartialProgress(name, total, lastId)
+        if (nHead < sliceSize) done = true
       }
     }
     state.clearPartialProgress(name)

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Unigram-LM subword tokenizer (Kudo 2018, "Subword Regularization")
   * — the OTHER standard subword algorithm next to [[Bpe]], and the one
   * SentencePiece defaults to: pieces carry independent probabilities,
@@ -177,9 +179,7 @@ object Unigram {
             textCol: String = "text"): Model = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(shrink > 0 && shrink < 1, s"shrink must be in (0,1): $shrink")
-    val wf = Bpe.wordFreq(docs, textCol)
-    wf.persist()
-    try {
+    Tables.persisted(Bpe.wordFreq(docs, textCol)) { wf =>
       // seedPieces already applies the (count desc, piece asc) limit
       // and pins all corpus single characters on top of seedSize
       val seeds = seedPieces(docs, seedSize, maxPieceLen, textCol)
@@ -231,7 +231,7 @@ object Unigram {
         }
       }
       model
-    } finally { wf.unpersist(); () }
+    }
   }
 
   /** Viterbi segmentation of one word: maximize total log-prob; ties

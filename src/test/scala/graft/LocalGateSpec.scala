@@ -1,15 +1,19 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
 import graft.core.LocalGate
 import graft.ops.{LinkGraph, Lttb}
+import graft.pipeline.TextClassifier
 
 /** The driver-local kernel gate: its size rule, and properties that
-  * every gated LinkGraph op and LTTB return the same rows under the
-  * default gate as under the forced-distributed seam.
+  * every gated LinkGraph op, both classifier trainers and LTTB return
+  * the same rows under the default gate as under the forced-distributed
+  * seam, and that the LinkGraph ops and trainers leave the session's
+  * cache as they found it under both.
   */
 class LocalGateSpec extends SparkSpec {
   import spark.implicits._
@@ -43,12 +47,16 @@ class LocalGateSpec extends SparkSpec {
 
   /** One generated input: a small digraph over int ids (rendered as
     * string or long node ids), the op modes to run it under, and the
-    * partition count of the edge frame.
+    * partition count of the edge frame; and a small labeled corpus
+    * (per doc its word ids and a class below `nClasses`) with the
+    * trainers' iteration budget and L2 penalty.
     */
   private case class Case(edges: Seq[(Int, Int)], longIds: Boolean,
                           parts: Int, prIters: Int, redistribute: Boolean,
                           seeded: Boolean, prTol: Double, hitsIters: Int,
-                          hitsTol: Double, maxDist: Int)
+                          hitsTol: Double, maxDist: Int,
+                          docs: Seq[(Seq[Int], Int)], nClasses: Int,
+                          trainIters: Int, l2: Double)
 
   // one or two random clusters of up to eight nodes each (self-loops
   // and parallel edges arise by themselves at this density), an
@@ -68,6 +76,15 @@ class LocalGateSpec extends SparkSpec {
       es.map { case (a, b) => (a + 10 * j, b + 10 * j) }
     } ++ (if (cycle) Seq((40, 41), (41, 40)) else Nil)))
 
+  // 2-16 docs over an 8-word vocabulary (shared words make the
+  // margins interact); iteration 1 runs distributed, the rest locally
+  private val corpusGen: Gen[(Seq[(Seq[Int], Int)], Int)] = for {
+    nClasses <- Gen.choose(2, 3)
+    n <- Gen.choose(2, 16)
+    docs <- Gen.listOfN(n, Gen.zip(
+      Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.choose(0, 7))), Gen.choose(0, nClasses - 1)))
+  } yield (docs, nClasses)
+
   private val caseGen: Gen[Case] = for {
     edges <- edgesGen
     longIds <- Gen.oneOf(false, true)
@@ -79,14 +96,18 @@ class LocalGateSpec extends SparkSpec {
     hitsIters <- Gen.choose(1, 3)
     hitsTol <- Gen.oneOf(0.0, 1e-3, 5e-2)
     maxDist <- Gen.choose(1, 4)
+    (docs, nClasses) <- corpusGen
+    trainIters <- Gen.choose(2, 3)
+    l2 <- Gen.oneOf(0.0, 0.01)
   } yield Case(edges, longIds, parts, prIters, redistribute, seeded, prTol,
-    hitsIters, hitsTol, maxDist)
+    hitsIters, hitsTol, maxDist, docs, nClasses, trainIters, l2)
 
-  /** The five gated ops on `c`, each as its sorted rendered rows
-    * (Row.toString renders doubles exactly, so equal strings are
-    * bit-equal values).
+  /** The five gated LinkGraph ops (`graph`) or the two trainers on `c`,
+    * each as its sorted rendered rows or model (Row.toString renders
+    * doubles exactly, so equal strings are bit-equal values), paired
+    * with the number of cache entries the op left behind.
     */
-  private def runAll(c: Case): Seq[Seq[String]] = {
+  private def runAll(c: Case, graph: Boolean): Seq[(Seq[String], Int)] = {
     // long ids are spaced and signed, string ids break numeric order
     // ("v10" < "v2"), so label order is Spark's, not the generator's
     def long(i: Int): Long = i * 7919L - 40000L
@@ -100,14 +121,34 @@ class LocalGateSpec extends SparkSpec {
       if (!c.seeded || c.edges.isEmpty) None
       else if (c.longIds) Some(seedIds.distinct.map(long).toDF("n"))
       else Some(seedIds.distinct.map(i => s"v$i").toDF("n"))
+    val docs = c.docs.zipWithIndex.map { case ((ws, y), i) =>
+      (i.toLong, (ws.map(w => s"w$w") :+ s"own$i").mkString(" "), y)
+    }.toDF("doc_id", "text", "label").repartition(c.parts)
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-    Seq(
-      rows(LinkGraph.pageRank(edges, iters = c.prIters,
-        redistributeDangling = c.redistribute, tol = c.prTol, seeds = seeds)),
-      rows(LinkGraph.hits(edges, iters = c.hitsIters, tol = c.hitsTol)),
-      rows(LinkGraph.harmonicCentrality(edges, maxDist = c.maxDist)),
-      rows(LinkGraph.stronglyConnectedComponents(edges)),
-      rows(LinkGraph.bowTie(edges)))
+    def weights[K: Ordering](w: Map[K, Double]): String = w.toSeq.sortBy(_._1).toString
+    def counted(run: => Seq[String]): (Seq[String], Int) = {
+      val before = cacheEntries
+      val out = run
+      (out, cacheEntries - before)
+    }
+    if (graph) Seq(
+      counted(rows(LinkGraph.pageRank(edges, iters = c.prIters,
+        redistributeDangling = c.redistribute, tol = c.prTol, seeds = seeds))),
+      counted(rows(LinkGraph.hits(edges, iters = c.hitsIters, tol = c.hitsTol))),
+      counted(rows(LinkGraph.harmonicCentrality(edges, maxDist = c.maxDist))),
+      counted(rows(LinkGraph.stronglyConnectedComponents(edges))),
+      counted(rows(LinkGraph.bowTie(edges))))
+    else Seq(
+      counted {
+        val m = TextClassifier.train(docs, docs.select(col("doc_id"),
+          (col("label") % 2).as("label")), dim = 64, iters = c.trainIters, l2 = c.l2)
+        Seq(m.bias.toString, m.losses.toString, weights(m.weights))
+      },
+      counted {
+        val m = TextClassifier.trainSoftmax(docs, docs.select("doc_id", "label"),
+          dim = 64, nClasses = c.nClasses, iters = c.trainIters, l2 = c.l2)
+        Seq(m.biases.toString, m.losses.toString, weights(m.weights))
+      })
   }
 
   // Four draws keep the property under a minute of tier-1 time on 4
@@ -116,16 +157,19 @@ class LocalGateSpec extends SparkSpec {
   private val Draws = 4
   private val PropertySeed = 14L
 
-  test("property: default gate == forced-distributed for all five gated LinkGraph ops") {
-    val ops = Seq("pageRank", "hits", "harmonicCentrality",
-      "stronglyConnectedComponents", "bowTie")
+  /** Default gate == forced-distributed for `ops` (run by `runAll`
+    * with `graph`), each op leaving the cache as it found it, over the
+    * fixed seed's draws.
+    */
+  private def checkGate(ops: Seq[String], graph: Boolean): Unit = {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Case]
     val prop = Prop.forAllNoShrink(caseGen) { c =>
       seen += c
-      val got = runAll(c)
-      val want = LocalGate.distributed(runAll(c))
-      Prop.all(ops.indices.map(i =>
-        Prop(got(i) == want(i)) :| s"${ops(i)} differs on $c"): _*)
+      val got = runAll(c, graph)
+      val want = LocalGate.distributed(runAll(c, graph))
+      Prop.all(ops.indices.flatMap(i => Seq(
+        Prop(got(i)._1 == want(i)._1) :| s"${ops(i)} differs on $c",
+        Prop(got(i)._2 == 0 && want(i)._2 == 0) :| s"${ops(i)} left a cache entry on $c")): _*)
     }
     val res = Test.check(
       Test.Parameters.default.withMinSuccessfulTests(Draws)
@@ -137,6 +181,16 @@ class LocalGateSpec extends SparkSpec {
     assert(covers(seen.toSeq), seen.mkString("draws:\n", "\n", ""))
   }
 
+  test("property: default gate == forced-distributed for all five gated LinkGraph ops") {
+    checkGate(Seq("pageRank", "hits", "harmonicCentrality",
+      "stronglyConnectedComponents", "bowTie"), graph = true)
+  }
+
+  test("property: default gate == forced-distributed for both trainers, " +
+    "and each leaves the cache as it found it") {
+    checkGate(Seq("train", "trainSoftmax"), graph = false)
+  }
+
   private def covers(cs: Seq[Case]): Boolean = {
     val full = cs.filter(_.edges.nonEmpty)
     cs.exists(_.edges.isEmpty) &&
@@ -146,7 +200,8 @@ class LocalGateSpec extends SparkSpec {
       full.exists(_.edges.contains((40, 41))) &&
       full.exists(_.redistribute) && full.exists(!_.redistribute) &&
       full.exists(_.seeded) && full.exists(!_.seeded) &&
-      full.exists(_.prTol > 0) && full.exists(_.hitsTol > 0)
+      full.exists(_.prTol > 0) && full.exists(_.hitsTol > 0) &&
+      cs.exists(_.nClasses == 3) && cs.exists(_.l2 > 0) && cs.exists(_.trainIters == 3)
   }
 
   /** One generated series for `Lttb.downsample`: per row an optional

@@ -52,4 +52,7 @@ trait SparkSpec extends AnyFunSuite {
 
   /** JVM-exit-swept temp dir (see [[SparkTestSession.tempDir]]). */
   def tempDir(prefix: String): String = SparkTestSession.tempDir(prefix)
+
+  /** Number of entries in the session's cache manager. */
+  def cacheEntries: Int = org.apache.spark.sql.graftbridge.CacheEntries.count(spark)
 }
