@@ -25,8 +25,15 @@ import org.apache.spark.sql.DataFrame
   * [[MaxNodes]] nodes, and at most [[MaxRows]] rows are collected
   * (edges, classifier feature rows, or LTTB input rows). Callers add
   * only their own eligibility conditions (a mode the kernel does not
-  * mirror). Sizes are by-name, so a closed gate starts no size-probe
-  * job.
+  * mirror).
+  *
+  * Probe order: sizes are by-name, so the forced seam and an ineligible
+  * mode probe nothing. pageRank, harmonic and HITS, whose nodes are
+  * their edges' endpoints, count their pinned edges first (the action
+  * that fills the pin) and collect them once past [[admitsEndpoints]],
+  * deriving the nodes on the driver; above [[MaxNodes]] / 2 edges the
+  * node count comes next ([[admitsGraph]]), so a graph over the node
+  * bound is never collected. SCC and bow-tie count nodes first.
   */
 object LocalGate {
 
@@ -64,6 +71,11 @@ object LocalGate {
     */
   def admitsGraph(nodes: => Long, edges: => Long): Boolean =
     within(nodes, MaxNodes) && edges <= MaxRows
+
+  /** A graph of `edges` rows whose nodes are their endpoints (at most
+    * two an edge) may run collected, with no node probe.
+    */
+  def admitsEndpoints(edges: => Long): Boolean = within(edges, MaxNodes / 2)
 
   /** A collected-row kernel may run. */
   def admitsRows(rows: => Long): Boolean = within(rows, MaxRows)

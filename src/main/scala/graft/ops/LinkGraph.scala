@@ -3,6 +3,8 @@ package graft.ops
 import java.math.{BigDecimal => JBD}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -96,18 +98,15 @@ object LinkGraph {
       "redistributeDangling needs the per-round dangling mass on the " +
         "driver: probeEvery must be 1")
     val seeded = seeds.nonEmpty
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    Tables.persisted(e.select(col("src").as("n"))
-        .unionByName(e.select(col("dst").as("n"))).distinct()) { nodes0 =>
-      val n = nodes0.count().toDouble // one node-shaped action, reused below
-      // (tol > 0 with probeEvery > 1 changes WHERE the distributed loop
-      // stops — see the probeEvery scaladoc; the kernel mirrors the
-      // probeEvery = 1 canonical, so that combination stays distributed)
-      if ((probeEvery == 1 || tol == 0.0) &&
-          LocalGate.admitsGraph(n.toLong, e.count()))
-        pageRankLocal(nodes0, e, iters, damping,
-          redistributeDangling, tol, seeds.map(_.select(col(seedCol).as("n"))))
-      else Tables.persisted(e
+    // (tol > 0 with probeEvery > 1 changes WHERE the distributed loop
+    // stops — see the probeEvery scaladoc; the kernel mirrors the
+    // probeEvery = 1 canonical, so that combination stays distributed)
+    val local = pageRankLocal(_: Collected, iters, damping, redistributeDangling, tol,
+      seeds.map(_.select(col(seedCol).as("n"))))
+    endpointGraph(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
+        probeEvery == 1 || tol == 0.0)(local) { (e, nodes0, nodeCount) =>
+      val n = nodeCount.toDouble // one node-shaped action, reused below
+      Tables.persisted(e
           .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("deg")), "src")) { eDeg =>
         // dangling/seed flags ride the node frame only when a mode needs
         // them, so the default path's arithmetic (and oracle) is untouched
@@ -221,18 +220,19 @@ object LinkGraph {
     * |r − prev| dec12-cast), so the tol > 0 early-stop round matches
     * too — not just the tol = 0 default.
     */
-  private def pageRankLocal(nodes0: DataFrame, e: DataFrame, iters: Int,
+  private def pageRankLocal(g: Collected, iters: Int,
                             damping: Double, redistributeDangling: Boolean,
                             tol: Double,
                             seeds: Option[DataFrame]): DataFrame = {
-    val g = new Collected(nodes0.orderBy("n"), e)
     val n = g.n
     val deg = new Array[Int](n)
     g.edges.foreach(p => deg(p._1) += 1)
+    // seeds as node values: the distributed seed join widens both sides,
+    // so a seed the node type cannot hold, or a null one, matches nothing
     val seedFlag: Array[Boolean] = seeds.map { sd =>
       val f = new Array[Boolean](n)
-      sd.distinct().collect().foreach(r =>
-        Option(g.indexOf(r.get(0))).foreach(i => f(i.intValue) = true))
+      sd.select(col("n").try_cast(g.nodeType)).distinct().collect().filter(!_.isNullAt(0))
+        .foreach(r => Option(g.indexOf(r.get(0))).foreach(i => f(i.intValue) = true))
       f
     }.orNull
     val seeded = seedFlag != null
@@ -307,79 +307,74 @@ object LinkGraph {
                          dstCol: String = "dst", maxDist: Int = 6,
                          exact: Boolean = true, lgK: Int = 12): DataFrame = {
     require(maxDist >= 1, s"maxDist >= 1: $maxDist")
-    Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()) { e =>
-      val nodes = e.select(col("src").as("n"))
-        .unionByName(e.select(col("dst").as("n"))).distinct()
-      // Sketch mode stays distributed: hll_union's binary sketch state
-      // is the engine's own, not worth reimplementing for a fast path.
-      if (exact && LocalGate.admitsGraph(nodes.count(), e.count()))
-        harmonicLocal(nodes, e, maxDist)
-      else {
-        var state =
-          if (exact)
-            nodes.select(col("n"), array(col("n")).as("ball"),
-              lit(1L).as("c"), lit(0).cast("decimal(30,12)").as("h"))
-          else
-            nodes.groupBy("n")
-              .agg(expr(s"hll_sketch_agg(n, $lgK)").as("ball"))
-              .select(col("n"), col("ball"),
-                expr("hll_sketch_estimate(ball)").as("c"),
-                lit(0).cast("decimal(30,12)").as("h"))
-        state = state.localCheckpoint() // eager: iteration 1 scans it twice
-        // Iteration hygiene: each round's state is localCheckpoint(false)
-        // — lineage cut, no CacheManager pin to leak — and the round's
-        // SINGLE job is the ball-change aggregation that materializes the
-        // lazy checkpoint. Convergence is BALL EQUALITY, valid in both
-        // modes: unchanged balls mean unchanged counts mean unchanged h,
-        // and the iteration map is a pure function of the state, so an
-        // unchanged round is a proven fixpoint — the loop early-stops
-        // with output identical to running the full maxDist budget.
-        // (Exact balls preserve element order under a no-op merge —
-        // concat keeps the old ball's prefix and array_distinct keeps
-        // first occurrences — and a no-op hll_union reproduces the same
-        // sketch state, so equality is well-defined; a spurious byte
-        // inequality would only forgo the early exit, never change the
-        // answer.)
-        var t = 1
-        var converged = false
-        while (t <= maxDist && !converged) {
-          val nbr = e
-            .join(state.select(col("n").as("src"), col("ball").as("nball")), "src")
-            .groupBy(col("dst").as("n"))
-            .agg(if (exact) array_distinct(flatten(collect_list(col("nball")))).as("inc")
-                 else expr("hll_union_agg(nball)").as("inc"))
-          val term = round(lit(1.0) / t, 9).cast("decimal(30,12)")
-          val merged = state.join(nbr, Seq("n"), "left")
-          val newBall =
-            if (exact) when(col("inc").isNull, col("ball"))
-              .otherwise(array_distinct(concat(col("ball"), col("inc"))))
-            else coalesce(expr("hll_union(ball, inc)"), col("ball"))
-          val next = merged
-            .withColumn("__ball", newBall)
-            .withColumn("__c",
-              if (exact) size(col("__ball")).cast("long")
-              else expr("hll_sketch_estimate(__ball)"))
-            // count casts to DECIMAL(10,0): the product's adjusted scale
-            // stays >= 9, so term x count (<= 9 decimals) is EXACT — a
-            // wider cast would push Spark's precision adjustment below the
-            // term's 9 decimals and silently truncate vs the oracle
-            .select(col("n"), col("__ball").as("ball"), col("__c").as("c"),
-              (col("h") + term * greatest(col("__c") - col("c"), lit(0L))
-                .cast("decimal(10,0)")).as("h"),
-              when(col("__ball") === col("ball"), lit(0L)).otherwise(lit(1L))
-                .as("__g"))
-            .localCheckpoint(false)
-          // coalesce: an empty graph sums to NULL, which must read as 0
-          val changed = next.agg(coalesce(sum(col("__g")), lit(0L)))
-            .first().getLong(0)
-          state = next.drop("__g")
-          converged = changed == 0L
-          t += 1
-        }
-        state.select(col("n"), (col("c") - 1).as("n_reachable"),
-          round(col("h").cast("double"), 6).as("harmonic"))
+    // Sketch mode stays distributed: hll_union's binary sketch state
+    // is the engine's own, not worth reimplementing for a fast path.
+    endpointGraph(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src") =!= col("dst")).distinct(), exact)(
+        harmonicLocal(_, maxDist)) { (e, nodes, _) =>
+      var state =
+        if (exact)
+          nodes.select(col("n"), array(col("n")).as("ball"),
+            lit(1L).as("c"), lit(0).cast("decimal(30,12)").as("h"))
+        else
+          nodes.groupBy("n")
+            .agg(expr(s"hll_sketch_agg(n, $lgK)").as("ball"))
+            .select(col("n"), col("ball"),
+              expr("hll_sketch_estimate(ball)").as("c"),
+              lit(0).cast("decimal(30,12)").as("h"))
+      state = state.localCheckpoint() // eager: iteration 1 scans it twice
+      // Iteration hygiene: each round's state is localCheckpoint(false)
+      // — lineage cut, no CacheManager pin to leak — and the round's
+      // SINGLE job is the ball-change aggregation that materializes the
+      // lazy checkpoint. Convergence is BALL EQUALITY, valid in both
+      // modes: unchanged balls mean unchanged counts mean unchanged h,
+      // and the iteration map is a pure function of the state, so an
+      // unchanged round is a proven fixpoint — the loop early-stops
+      // with output identical to running the full maxDist budget.
+      // (Exact balls preserve element order under a no-op merge —
+      // concat keeps the old ball's prefix and array_distinct keeps
+      // first occurrences — and a no-op hll_union reproduces the same
+      // sketch state, so equality is well-defined; a spurious byte
+      // inequality would only forgo the early exit, never change the
+      // answer.)
+      var t = 1
+      var converged = false
+      while (t <= maxDist && !converged) {
+        val nbr = e
+          .join(state.select(col("n").as("src"), col("ball").as("nball")), "src")
+          .groupBy(col("dst").as("n"))
+          .agg(if (exact) array_distinct(flatten(collect_list(col("nball")))).as("inc")
+               else expr("hll_union_agg(nball)").as("inc"))
+        val term = round(lit(1.0) / t, 9).cast("decimal(30,12)")
+        val merged = state.join(nbr, Seq("n"), "left")
+        val newBall =
+          if (exact) when(col("inc").isNull, col("ball"))
+            .otherwise(array_distinct(concat(col("ball"), col("inc"))))
+          else coalesce(expr("hll_union(ball, inc)"), col("ball"))
+        val next = merged
+          .withColumn("__ball", newBall)
+          .withColumn("__c",
+            if (exact) size(col("__ball")).cast("long")
+            else expr("hll_sketch_estimate(__ball)"))
+          // count casts to DECIMAL(10,0): the product's adjusted scale
+          // stays >= 9, so term x count (<= 9 decimals) is EXACT — a
+          // wider cast would push Spark's precision adjustment below the
+          // term's 9 decimals and silently truncate vs the oracle
+          .select(col("n"), col("__ball").as("ball"), col("__c").as("c"),
+            (col("h") + term * greatest(col("__c") - col("c"), lit(0L))
+              .cast("decimal(10,0)")).as("h"),
+            when(col("__ball") === col("ball"), lit(0L)).otherwise(lit(1L))
+              .as("__g"))
+          .localCheckpoint(false)
+        // coalesce: an empty graph sums to NULL, which must read as 0
+        val changed = next.agg(coalesce(sum(col("__g")), lit(0L)))
+          .first().getLong(0)
+        state = next.drop("__g")
+        converged = changed == 0L
+        t += 1
       }
+      state.select(col("n"), (col("c") - 1).as("n_reachable"),
+        round(col("h").cast("double"), 6).as("harmonic"))
     }
   }
 
@@ -392,9 +387,7 @@ object LinkGraph {
     * and h accumulates exact decimal term×delta products in the same
     * scale.
     */
-  private def harmonicLocal(nodes: DataFrame, e: DataFrame,
-                            maxDist: Int): DataFrame = {
-    val g = new Collected(nodes.orderBy("n"), e)
+  private def harmonicLocal(g: Collected, maxDist: Int): DataFrame = {
     val n = g.n
     // in-neighbor adjacency: B_t(v) merges the balls of every (w, v)
     val (off, from) = g.csr(reverse = true)
@@ -455,57 +448,52 @@ object LinkGraph {
            tol: Double = 0.0): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     require(tol >= 0.0, s"tol >= 0: $tol")
-    Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()) { e =>
-      Tables.persisted(e.select(col("src").as("n"))
-          .unionByName(e.select(col("dst").as("n"))).distinct()) { nodes =>
-        if (LocalGate.admitsGraph(nodes.count(), e.count())) hitsLocal(nodes, e, iters, tol)
-        else {
-          // raw phase sums (9dp inputs, exact decimal) -> L1-normalized 9dp
-          def normalize(raw: DataFrame): DataFrame = {
-            val tot = raw.agg(sum(col("r")).cast("double").as("__t"))
-            nodes.join(raw, Seq("n"), "left").crossJoin(tot)
-              .select(col("n"),
-                round(coalesce(col("r").cast("double"), lit(0.0)) / col("__t"), 9)
-                  .as("x"))
-          }
-          // Iteration hygiene: a and h localCheckpoint(false) per round —
-          // without it the final h.join(a) doubles the unpersisted subtree
-          // per iteration (~2^iters evaluations). The round's SINGLE job is
-          // the hub-delta aggregation: it materializes h's lazy checkpoint
-          // (and a's, which h scans). delta == 0 is a proven fixpoint — the
-          // next round's a = f(h) and h = g(a) reproduce themselves — so
-          // tol = 0.0 early-stops with output identical to the full budget.
-          var h = nodes.select(col("n"), lit(1.0).as("x"))
-          var a = h // overwritten on the first iteration (iters >= 1)
-          var it = 0
-          var converged = false
-          while (it < iters && !converged) {
-            a = normalize(e
-              .join(h.select(col("n").as("src"), col("x")), "src")
-              .groupBy(col("dst").as("n"))
-              .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
-              .localCheckpoint(false)
-            val hNext = normalize(e
-              .join(a.select(col("n").as("dst"), col("x")), "dst")
-              .groupBy(col("src").as("n"))
-              .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
-              .join(h.select(col("n"), col("x").as("__prev")), Seq("n"))
-              .localCheckpoint(false)
-            // coalesce: an empty graph sums to NULL, which must read as 0.
-            // Exact decimal sum (pageRank's probe rationale): the tol > 0
-            // stop round is partition-order-free and kernel-reproducible
-            val delta = hNext.agg(coalesce(
-              sum(graft.functions.DecimalOps.dec12(abs(col("x") - col("__prev")))),
-              lit(0).cast("decimal(30,12)"))).first().getDecimal(0).doubleValue
-            h = hNext.drop("__prev")
-            converged = delta <= tol
-            it += 1
-          }
-          h.select(col("n"), round(col("x"), 6).as("hub"))
-            .join(a.select(col("n"), round(col("x"), 6).as("authority")), Seq("n"))
-        }
+    endpointGraph(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src") =!= col("dst")).distinct(), eligible = true)(
+        hitsLocal(_, iters, tol)) { (e, nodes, _) =>
+      // raw phase sums (9dp inputs, exact decimal) -> L1-normalized 9dp
+      def normalize(raw: DataFrame): DataFrame = {
+        val tot = raw.agg(sum(col("r")).cast("double").as("__t"))
+        nodes.join(raw, Seq("n"), "left").crossJoin(tot)
+          .select(col("n"),
+            round(coalesce(col("r").cast("double"), lit(0.0)) / col("__t"), 9)
+              .as("x"))
       }
+      // Iteration hygiene: a and h localCheckpoint(false) per round —
+      // without it the final h.join(a) doubles the unpersisted subtree
+      // per iteration (~2^iters evaluations). The round's SINGLE job is
+      // the hub-delta aggregation: it materializes h's lazy checkpoint
+      // (and a's, which h scans). delta == 0 is a proven fixpoint — the
+      // next round's a = f(h) and h = g(a) reproduce themselves — so
+      // tol = 0.0 early-stops with output identical to the full budget.
+      var h = nodes.select(col("n"), lit(1.0).as("x"))
+      var a = h // overwritten on the first iteration (iters >= 1)
+      var it = 0
+      var converged = false
+      while (it < iters && !converged) {
+        a = normalize(e
+          .join(h.select(col("n").as("src"), col("x")), "src")
+          .groupBy(col("dst").as("n"))
+          .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
+          .localCheckpoint(false)
+        val hNext = normalize(e
+          .join(a.select(col("n").as("dst"), col("x")), "dst")
+          .groupBy(col("src").as("n"))
+          .agg(sum(graft.functions.DecimalOps.dec9(col("x"))).as("r")))
+          .join(h.select(col("n"), col("x").as("__prev")), Seq("n"))
+          .localCheckpoint(false)
+        // coalesce: an empty graph sums to NULL, which must read as 0.
+        // Exact decimal sum (pageRank's probe rationale): the tol > 0
+        // stop round is partition-order-free and kernel-reproducible
+        val delta = hNext.agg(coalesce(
+          sum(graft.functions.DecimalOps.dec12(abs(col("x") - col("__prev")))),
+          lit(0).cast("decimal(30,12)"))).first().getDecimal(0).doubleValue
+        h = hNext.drop("__prev")
+        converged = delta <= tol
+        it += 1
+      }
+      h.select(col("n"), round(col("x"), 6).as("hub"))
+        .join(a.select(col("n"), round(col("x"), 6).as("authority")), Seq("n"))
     }
   }
 
@@ -517,9 +505,7 @@ object LinkGraph {
     * SQL oracle. The convergence delta is an exact decimal sum in both
     * paths, so the tol > 0 stop round matches as well.
     */
-  private def hitsLocal(nodes: DataFrame, e: DataFrame, iters: Int,
-                        tol: Double): DataFrame = {
-    val g = new Collected(nodes.orderBy("n"), e)
+  private def hitsLocal(g: Collected, iters: Int, tol: Double): DataFrame = {
     val n = g.n
     // one phase: raw(v) = Σ_incident dec12(round9(x(other))), then
     // x'(v) = round9(coalesce(raw)/Σraw) — the normalize() mirror
@@ -571,8 +557,7 @@ object LinkGraph {
             dstCol: String = "dst"): DataFrame = {
     Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .distinct()) { e =>
-      val nodes = e.select(col("src").as("n"))
-        .unionByName(e.select(col("dst").as("n"))).distinct()
+      val nodes = endpoints(e)
       val ecnt = e.agg(count(lit(1)).as("n_edges"),
         sum(when(col("src") === col("dst"), 1L).otherwise(0L)).as("n_self_loops"))
       val ncnt = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -617,8 +602,7 @@ object LinkGraph {
   def components(edges: DataFrame, srcCol: String = "src",
                  dstCol: String = "dst", maxIter: Int = 20): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val nodes = e.select(col("src").as("n"))
-      .unionByName(e.select(col("dst").as("n"))).distinct()
+    val nodes = endpoints(e)
     val w = org.apache.spark.sql.expressions.Window.orderBy("n")
     // eager: the returned labels read it after the call
     val ids = nodes.select(col("n"), row_number().over(w).cast("long").as("__id"))
@@ -789,8 +773,7 @@ object LinkGraph {
     // without one) — drop them from the working edge set, keep the
     // node
     val e0 = eAll.filter(col("src") =!= col("dst")).distinct()
-    val all = eAll.select(col("src").as("n"))
-      .unionByName(eAll.select(col("dst").as("n"))).distinct()
+    val all = endpoints(eAll)
     var active = all.localCheckpoint(false)
     var aEdges = e0.localCheckpoint(false)
     var activeCount = active.count() // materializes both checkpoints below
@@ -798,7 +781,7 @@ object LinkGraph {
     // member, and nodes sort through Spark's own ordering, so
     // string/long label semantics carry verbatim
     if (LocalGate.admitsGraph(activeCount, aEdges.count())) {
-      val g = new Collected(active.orderBy("n"), aEdges)
+      val g = new Collected(aEdges, Some(active.orderBy("n")))
       val (off, tgt) = g.csr(reverse = false)
       val comp = sccLocal(off, tgt)
       return (g.frame(StructField("scc", g.nodeType))(i => Seq(g.nodes(comp(i)))), 0)
@@ -1047,7 +1030,7 @@ object LinkGraph {
     * ordering semantics are engine-identical.
     */
   private def bowTieLocal(scc: DataFrame, e: DataFrame): DataFrame = {
-    val g = new Collected(scc, e)
+    val g = new Collected(e, Some(scc))
     val n = g.n
     val coreL = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
       .orderBy(desc("__sz"), asc("scc")).limit(1)
@@ -1073,7 +1056,8 @@ object LinkGraph {
       }
       vis
     }
-    val core = Array.tabulate(n)(i => g.rows(i).get(1) == coreL)
+    val coreI = g.indexOf(coreL)
+    val core = Array.tabulate(n)(i => g.indexOf(g.rows(i).get(1)) == coreI)
     val fwdCore = reach(core, forward = true)
     val bwdCore = reach(core, forward = false)
     val inSet = Array.tabulate(n)(i => bwdCore(i) && !core(i))
@@ -1091,22 +1075,61 @@ object LinkGraph {
     }
   }
 
-  /** A small graph collected to the driver — the one working form of
-    * the driver-local kernels. `rows` are `nodeFrame`'s rows in its
-    * own order, with the node in column 0 (kernels that label by min
-    * member sort it through Spark's ordering first, so index order ==
-    * label order); `edges` are (src, dst) index pairs of `edgeFrame`.
+  /** The distinct endpoints of edge frame `e`, as column `n`. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n"))).distinct()
+
+  /** [[LocalGate]] in front of a kernel whose nodes are the endpoints of
+    * its edges (pageRank, harmonic, HITS), in the gate's probe order:
+    * `edges` is pinned and counted, and an admitted graph is collected
+    * once. Otherwise `dist` runs on the pinned edges, the pinned node
+    * frame and its count (evaluated at most once).
     */
-  private final class Collected(nodeFrame: DataFrame, edgeFrame: DataFrame) {
-    val rows: Array[Row] = nodeFrame.collect()
+  private def endpointGraph[T](edges: DataFrame, eligible: Boolean)(local: Collected => T)(
+      dist: (DataFrame, DataFrame, => Long) => T): T =
+    Tables.persisted(edges) { e =>
+      lazy val m = e.count()
+      if (eligible && LocalGate.admitsEndpoints(m)) local(new Collected(e))
+      else Tables.persisted(endpoints(e)) { nodes =>
+        lazy val n = nodes.count()
+        if (eligible && LocalGate.admitsGraph(n, m)) local(new Collected(e))
+        else dist(e, nodes, n)
+      }
+    }
+
+  /** A small graph collected to the driver — the one working form of
+    * the driver-local kernels, built from the collected (src, dst) rows
+    * of `e`. The nodes are `nodeFrame`'s rows in its own order, node in
+    * column 0 (SCC and bow-tie sort it first), or else the distinct
+    * endpoints in Spark's `orderBy("n")` order, so index order == label
+    * order. Nodes are keyed by Spark's value equality (binary ids by
+    * content); `edges` are (src, dst) index pairs.
+    */
+  private final class Collected(e: DataFrame, nodeFrame: Option[DataFrame] = None) {
+    val nodeType: DataType = nodeFrame.getOrElse(endpoints(e)).schema.head.dataType
+    // a node's key: its one-column UnsafeRow (byte equality and hash);
+    // every value here comes out of a Spark `distinct`, so floats are
+    // already normalized (-0.0 is 0.0, one NaN)
+    private val key: Any => InternalRow = {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(nodeType)
+      val proj = UnsafeProjection.create(Array(nodeType))
+      v => proj(InternalRow(toCatalyst(v))).copy()
+    }
+    private val ends: Array[InternalRow] =
+      e.select(col("src").cast(nodeType), col("dst").cast(nodeType)).collect()
+        .flatMap(r => Array(key(r.get(0)), key(r.get(1))))
+    val rows: Array[Row] = nodeFrame.fold {
+      val toScala = CatalystTypeConverters.createToScalaConverter(nodeType)
+      ends.distinct.sorted(InterpretedOrdering.forSchema(Seq(nodeType)))
+        .map(k => Row(toScala(k.get(0, nodeType))))
+    }(_.collect())
     val n: Int = rows.length
     val nodes: Array[Any] = rows.map(_.get(0))
-    val nodeType: DataType = nodeFrame.schema.head.dataType
-    private val idx = new java.util.HashMap[Any, Integer](n * 2)
-    nodes.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    def indexOf(v: Any): Integer = idx.get(v)
-    val edges: Array[(Int, Int)] = edgeFrame.collect().map(r =>
-      (idx.get(r.get(0)).intValue, idx.get(r.get(1)).intValue))
+    private val idx = new java.util.HashMap[InternalRow, Integer](n * 2)
+    nodes.zipWithIndex.foreach { case (v, i) => idx.put(key(v), i) }
+    def indexOf(v: Any): Integer = idx.get(key(v))
+    val edges: Array[(Int, Int)] = Array.tabulate(ends.length / 2)(i =>
+      (idx.get(ends(2 * i)).intValue, idx.get(ends(2 * i + 1)).intValue))
 
     /** CSR adjacency (off, tgt): node v's out-neighbors (in-neighbors
       * when `reverse`) are tgt(off(v) until off(v + 1)), in edge order.
@@ -1130,7 +1153,7 @@ object LinkGraph {
       * one row per node from `row(i)`.
       */
     def frame(cols: StructField*)(row: Int => Seq[Any]): DataFrame =
-      nodeFrame.sparkSession.createDataFrame(
+      e.sparkSession.createDataFrame(
         java.util.Arrays.asList(
           Array.tabulate(n)(i => Row.fromSeq(nodes(i) +: row(i))): _*),
         StructType(StructField("n", nodeType) +: cols))

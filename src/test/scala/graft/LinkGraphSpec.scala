@@ -458,6 +458,21 @@ class LinkGraphSpec extends SparkSpec {
     LocalGate.distributed(allEmpty())
   }
 
+  test("double node ids: -0.0 and 0.0 are one node, NaN is one node, local == distributed") {
+    // Spark's distinct and joins normalize floats, and the driver kernels
+    // key the nodes of the distinct edge frame by value, so both paths
+    // see four nodes, not six
+    val edges = Seq((0.0, 1.0), (-0.0, 2.0), (Double.NaN, 1.0), (2.0, Double.NaN),
+      (1.0, -0.0), (Double.NaN, 0.0)).toDF("src", "dst")
+    def all(): Seq[Seq[String]] = Seq(
+      LinkGraph.pageRank(edges, iters = 4),
+      LinkGraph.hits(edges, iters = 3),
+      LinkGraph.harmonicCentrality(edges)).map(_.collect().map(_.toString).sorted.toSeq)
+    val local = all()
+    assert(local.forall(_.size == 4), local)
+    assert(local == LocalGate.distributed(all()))
+  }
+
   test("tol > 0: local kernel stop round == distributed (decimal delta)") {
     // the convergence delta sums as an exact decimal in BOTH paths, so
     // an early-stop landing near the tol boundary picks the SAME round
