@@ -28,12 +28,12 @@ import org.apache.spark.sql.DataFrame
   * mirror).
   *
   * Probe order: sizes are by-name, so the forced seam and an ineligible
-  * mode probe nothing. pageRank, harmonic and HITS, whose nodes are
+  * mode probe nothing. The five LinkGraph kernels, whose nodes are
   * their edges' endpoints, count their pinned edges first (the action
   * that fills the pin) and collect them once past [[admitsEndpoints]],
   * deriving the nodes on the driver; above [[MaxNodes]] / 2 edges the
   * node count comes next ([[admitsGraph]]), so a graph over the node
-  * bound is never collected. SCC and bow-tie count nodes first.
+  * bound is never collected.
   */
 object LocalGate {
 

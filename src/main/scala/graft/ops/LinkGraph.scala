@@ -51,6 +51,9 @@ import graft.functions.DecimalKernels.{round6, round9Slow}
   * matter the iteration count. (localCheckpoint trades re-derivation
   * on executor loss for the lineage cut — the same trade the dedup
   * CC loop makes.)
+  *
+  * Null ids: the five gated kernels drop every edge with a null
+  * endpoint, so null is never a node on either side of the gate.
   */
 object LinkGraph {
 
@@ -680,13 +683,14 @@ object LinkGraph {
                                   maxIter: Int = 100): DataFrame =
     sccWithRounds(edges, srcCol, dstCol, maxIter)._1
 
-  /** Driver-side iterative Tarjan over a forward CSR adjacency — the
-    * small-graph kernel behind [[sccWithRounds]]. Returns per node the
-    * MIN member index of its SCC (callers index nodes in label order,
-    * so min index == min member).
+  /** Driver-side iterative Tarjan over `g` (self-loops included) — the
+    * kernel of [[sccWithRounds]] and [[bowTie]] on [[endpointGraph]]'s
+    * local branch. Returns per node the MIN member index of its SCC
+    * (index order is label order, so min index == min member).
     */
-  private def sccLocal(off: Array[Int], tgt: Array[Int]): Array[Int] = {
-    val n = off.length - 1
+  private def sccLocal(g: Collected): Array[Int] = {
+    val (off, tgt) = g.csr(reverse = false)
+    val n = g.n
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStk = new Array[Boolean](n)
@@ -768,24 +772,25 @@ object LinkGraph {
                                    dstCol: String = "dst",
                                    maxIter: Int = 100): (DataFrame, Int) = {
     require(maxIter >= 1, s"maxIter >= 1: $maxIter")
-    val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // self-loops never change membership ({v} is an SCC with or
-    // without one) — drop them from the working edge set, keep the
-    // node
-    val e0 = eAll.filter(col("src") =!= col("dst")).distinct()
-    val all = endpoints(eAll)
-    var active = all.localCheckpoint(false)
-    var aEdges = e0.localCheckpoint(false)
-    var activeCount = active.count() // materializes both checkpoints below
     // the driver Tarjan keeps the IDENTICAL contract: label = smallest
-    // member, and nodes sort through Spark's own ordering, so
-    // string/long label semantics carry verbatim
-    if (LocalGate.admitsGraph(activeCount, aEdges.count())) {
-      val g = new Collected(aEdges, Some(active.orderBy("n")))
-      val (off, tgt) = g.csr(reverse = false)
-      val comp = sccLocal(off, tgt)
-      return (g.frame(StructField("scc", g.nodeType))(i => Seq(g.nodes(comp(i)))), 0)
-    }
+    // member, nodes in Spark's own order
+    endpointGraph(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
+        eligible = true) { g =>
+      val comp = sccLocal(g)
+      (g.frame(StructField("scc", g.nodeType))(i => Seq(g.nodes(comp(i)))), 0)
+    }(sccPeel(_, _, _, maxIter))
+  }
+
+  /** [[sccWithRounds]] above the gate: the peel over the pinned edges
+    * `e`, their endpoints `nodes` and the node count `n`.
+    */
+  private def sccPeel(e: DataFrame, nodes: DataFrame, n: Long,
+                      maxIter: Int): (DataFrame, Int) = {
+    // self-loops never change membership ({v} is an SCC with or
+    // without one): the working edge set drops them, the nodes keep them
+    var active = nodes.localCheckpoint(false)
+    var aEdges = e.filter(col("src") =!= col("dst")).localCheckpoint(false)
+    var activeCount = n
     // The LocalGate.ShuffleHashNodes pin, measured WORSE here without
     // it (1e6 nodes): every inner coloring/marking round re-broadcast
     // a node-shaped frame — 54→209 s across runs (cpu to 2531 s, gc to
@@ -913,7 +918,7 @@ object LinkGraph {
       s"SCC peeling did not converge in $maxIter outer rounds " +
         s"($activeCount nodes left) — raise maxIter")
     val out =
-      if (done.isEmpty) all.select(col("n"), col("n").as("scc"))
+      if (done.isEmpty) nodes.select(col("n"), col("n").as("scc"))
       else done.reduce(_.unionByName(_))
     (out, outer)
   }
@@ -929,7 +934,8 @@ object LinkGraph {
     * oversized TENDRIL/TUBE mass flags spider-trap farms.
     *
     * Built from [[stronglyConnectedComponents]] (core = the largest
-    * SCC, ties to the lexicographically smallest label) plus four
+    * SCC, ties to the smallest label in Spark's order for the node
+    * type — byte order for string and binary ids) plus four
     * frontier-expansion reachability passes (forward/backward from
     * the core, forward from IN, backward from OUT — the
     * harmonicCentrality ball shape with visited-set dedup). A
@@ -956,85 +962,81 @@ object LinkGraph {
     */
   def bowTie(edges: DataFrame, srcCol: String = "src",
              dstCol: String = "dst", maxIter: Int = 100): DataFrame = {
-    val scc = stronglyConnectedComponents(edges, srcCol, dstCol, maxIter)
-      .localCheckpoint()
-    val eAll = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    Tables.persisted(eAll.filter(col("src") =!= col("dst")).distinct()) { e =>
-      // one node count for the gate and the shuffle-hash pin (the per-hop
-      // visited set and the final tag frames are node-shaped)
-      val nNodes = scc.count()
-      if (LocalGate.admitsGraph(nNodes, e.count())) bowTieLocal(scc, e)
-      else {
-        def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, nNodes)
-        // the giant SCC: size desc, label asc — a 1-row broadcast
-        val coreLabel = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
-          .orderBy(desc("__sz"), asc("scc")).limit(1).select("scc")
-        val core = scc.join(broadcast(coreLabel), Seq("scc"), "left_semi")
-          .select("n").localCheckpoint()
-        // frontier-expansion reachability: seed ∪ everything reachable
-        // along `forward` edges; visited-set anti-join dedup, one
-        // checkpointed round per hop
-        def reach(seed: DataFrame, forward: Boolean): DataFrame = {
-          var visited = seed.localCheckpoint(false)
-          var frontier = visited
-          var growing = visited.count() > 0
-          while (growing) {
-            val step =
-              if (forward)
-                e.join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
-                  .select(col("dst").as("n")).distinct()
-              else
-                e.join(frontier.select(col("n").as("dst")), Seq("dst"), "left_semi")
-                  .select(col("src").as("n")).distinct()
-            val fresh = step.join(nodeSide(visited), Seq("n"), "left_anti")
-              .localCheckpoint(false)
-            if (fresh.count() == 0) growing = false
-            else {
-              visited = visited.unionByName(fresh).localCheckpoint(false)
-              visited.count()
-              frontier = fresh
-            }
+    require(maxIter >= 1, s"maxIter >= 1: $maxIter")
+    endpointGraph(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
+        eligible = true)(bowTieLocal) { (e, nodes, nNodes) =>
+      // the SCC labels are node-shaped and read by the core query and
+      // every reach pass: one eager checkpoint
+      val scc = sccPeel(e, nodes, nNodes, maxIter)._1.localCheckpoint()
+      // the per-hop visited set and the final tag frames are node-shaped
+      def nodeSide(df: DataFrame): DataFrame = LocalGate.nodeSide(df, nNodes)
+      // the giant SCC: size desc, label asc — a 1-row broadcast
+      val coreLabel = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
+        .orderBy(desc("__sz"), asc("scc")).limit(1).select("scc")
+      val core = scc.join(broadcast(coreLabel), Seq("scc"), "left_semi")
+        .select("n").localCheckpoint()
+      // frontier-expansion reachability: seed ∪ everything reachable
+      // along `forward` edges; visited-set anti-join dedup (which also
+      // drops a self-loop's step), one checkpointed round per hop
+      def reach(seed: DataFrame, forward: Boolean): DataFrame = {
+        var visited = seed.localCheckpoint(false)
+        var frontier = visited
+        var growing = visited.count() > 0
+        while (growing) {
+          val step =
+            if (forward)
+              e.join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
+                .select(col("dst").as("n")).distinct()
+            else
+              e.join(frontier.select(col("n").as("dst")), Seq("dst"), "left_semi")
+                .select(col("src").as("n")).distinct()
+          val fresh = step.join(nodeSide(visited), Seq("n"), "left_anti")
+            .localCheckpoint(false)
+          if (fresh.count() == 0) growing = false
+          else {
+            visited = visited.unionByName(fresh).localCheckpoint(false)
+            visited.count()
+            frontier = fresh
           }
-          visited
         }
-        val fwdCore = reach(core, forward = true)
-        val bwdCore = reach(core, forward = false)
-        val inSet = bwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
-        val outSet = fwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
-        val inFwd = reach(inSet, forward = true)
-        val outBwd = reach(outSet, forward = false)
-        def tag(df: DataFrame, name: String) =
-          df.select(col("n"), lit(true).as(name))
-        scc.select("n")
-          .join(nodeSide(tag(core, "__core")), Seq("n"), "left")
-          .join(nodeSide(tag(inSet, "__in")), Seq("n"), "left")
-          .join(nodeSide(tag(outSet, "__out")), Seq("n"), "left")
-          .join(nodeSide(tag(inFwd, "__if")), Seq("n"), "left")
-          .join(nodeSide(tag(outBwd, "__ob")), Seq("n"), "left")
-          .select(col("n"),
-            when(col("__core"), "core")
-              .when(col("__in"), "in")
-              .when(col("__out"), "out")
-              .when(col("__if").isNotNull && col("__ob").isNotNull, "tube")
-              .when(col("__if").isNotNull || col("__ob").isNotNull, "tendril")
-              .otherwise("disconnected").as("cls"))
-          .localCheckpoint()
+        visited
       }
+      val fwdCore = reach(core, forward = true)
+      val bwdCore = reach(core, forward = false)
+      val inSet = bwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
+      val outSet = fwdCore.join(core, Seq("n"), "left_anti").localCheckpoint()
+      val inFwd = reach(inSet, forward = true)
+      val outBwd = reach(outSet, forward = false)
+      def tag(df: DataFrame, name: String) =
+        df.select(col("n"), lit(true).as(name))
+      scc.select("n")
+        .join(nodeSide(tag(core, "__core")), Seq("n"), "left")
+        .join(nodeSide(tag(inSet, "__in")), Seq("n"), "left")
+        .join(nodeSide(tag(outSet, "__out")), Seq("n"), "left")
+        .join(nodeSide(tag(inFwd, "__if")), Seq("n"), "left")
+        .join(nodeSide(tag(outBwd, "__ob")), Seq("n"), "left")
+        .select(col("n"),
+          when(col("__core"), "core")
+            .when(col("__in"), "in")
+            .when(col("__out"), "out")
+            .when(col("__if").isNotNull && col("__ob").isNotNull, "tube")
+            .when(col("__if").isNotNull || col("__ob").isNotNull, "tendril")
+            .otherwise("disconnected").as("cls"))
+        .localCheckpoint()
     }
   }
 
   /** Driver-side Broder classification over a collected small graph —
-    * [[bowTie]]'s [[LocalGate]] path. `scc` carries (n, scc) for
-    * every node; the giant-core tiebreak (size desc, label asc) runs
-    * through the same tiny DataFrame as the distributed path so label
-    * ordering semantics are engine-identical.
+    * [[bowTie]]'s [[LocalGate]] path: Tarjan, then the giant core by
+    * size desc, label asc. Labels are min member indices and index
+    * order is label order, so a size tie goes to the lowest index —
+    * the distributed path's Spark order.
     */
-  private def bowTieLocal(scc: DataFrame, e: DataFrame): DataFrame = {
-    val g = new Collected(e, Some(scc))
+  private def bowTieLocal(g: Collected): DataFrame = {
     val n = g.n
-    val coreL = scc.groupBy("scc").agg(count(lit(1)).as("__sz"))
-      .orderBy(desc("__sz"), asc("scc")).limit(1)
-      .collect()(0).get(0)
+    val comp = sccLocal(g)
+    val sizes = comp.groupMapReduce(identity)(_ => 1)(_ + _)
+    val coreC = sizes.keys.maxBy(c => (sizes(c), -c))
     val fwd = g.csr(reverse = false)
     val bwd = g.csr(reverse = true)
     def reach(seed: Array[Boolean], forward: Boolean): Array[Boolean] = {
@@ -1056,8 +1058,7 @@ object LinkGraph {
       }
       vis
     }
-    val coreI = g.indexOf(coreL)
-    val core = Array.tabulate(n)(i => g.indexOf(g.rows(i).get(1)) == coreI)
+    val core = Array.tabulate(n)(i => comp(i) == coreC)
     val fwdCore = reach(core, forward = true)
     val bwdCore = reach(core, forward = false)
     val inSet = Array.tabulate(n)(i => bwdCore(i) && !core(i))
@@ -1080,14 +1081,15 @@ object LinkGraph {
     e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n"))).distinct()
 
   /** [[LocalGate]] in front of a kernel whose nodes are the endpoints of
-    * its edges (pageRank, harmonic, HITS), in the gate's probe order:
-    * `edges` is pinned and counted, and an admitted graph is collected
-    * once. Otherwise `dist` runs on the pinned edges, the pinned node
-    * frame and its count (evaluated at most once).
+    * its edges (all five gated kernels), in the gate's probe order:
+    * `edges`, less every edge with a null endpoint, is pinned and
+    * counted, and an admitted graph is collected once. Otherwise `dist`
+    * runs on the pinned edges, the pinned node frame and its count
+    * (evaluated at most once).
     */
   private def endpointGraph[T](edges: DataFrame, eligible: Boolean)(local: Collected => T)(
       dist: (DataFrame, DataFrame, => Long) => T): T =
-    Tables.persisted(edges) { e =>
+    Tables.persisted(edges.filter(col("src").isNotNull && col("dst").isNotNull)) { e =>
       lazy val m = e.count()
       if (eligible && LocalGate.admitsEndpoints(m)) local(new Collected(e))
       else Tables.persisted(endpoints(e)) { nodes =>
@@ -1099,14 +1101,13 @@ object LinkGraph {
 
   /** A small graph collected to the driver — the one working form of
     * the driver-local kernels, built from the collected (src, dst) rows
-    * of `e`. The nodes are `nodeFrame`'s rows in its own order, node in
-    * column 0 (SCC and bow-tie sort it first), or else the distinct
-    * endpoints in Spark's `orderBy("n")` order, so index order == label
-    * order. Nodes are keyed by Spark's value equality (binary ids by
-    * content); `edges` are (src, dst) index pairs.
+    * of `e`. The nodes are the distinct endpoints in Spark's
+    * `orderBy("n")` order, so index order == label order. Nodes are
+    * keyed by Spark's value equality (binary ids by content); `edges`
+    * are (src, dst) index pairs.
     */
-  private final class Collected(e: DataFrame, nodeFrame: Option[DataFrame] = None) {
-    val nodeType: DataType = nodeFrame.getOrElse(endpoints(e)).schema.head.dataType
+  private final class Collected(e: DataFrame) {
+    val nodeType: DataType = endpoints(e).schema.head.dataType
     // a node's key: its one-column UnsafeRow (byte equality and hash);
     // every value here comes out of a Spark `distinct`, so floats are
     // already normalized (-0.0 is 0.0, one NaN)
@@ -1118,15 +1119,13 @@ object LinkGraph {
     private val ends: Array[InternalRow] =
       e.select(col("src").cast(nodeType), col("dst").cast(nodeType)).collect()
         .flatMap(r => Array(key(r.get(0)), key(r.get(1))))
-    val rows: Array[Row] = nodeFrame.fold {
-      val toScala = CatalystTypeConverters.createToScalaConverter(nodeType)
+    private val keys: Array[InternalRow] =
       ends.distinct.sorted(InterpretedOrdering.forSchema(Seq(nodeType)))
-        .map(k => Row(toScala(k.get(0, nodeType))))
-    }(_.collect())
-    val n: Int = rows.length
-    val nodes: Array[Any] = rows.map(_.get(0))
+    val n: Int = keys.length
+    val nodes: Array[Any] =
+      keys.map(_.get(0, nodeType)).map(CatalystTypeConverters.createToScalaConverter(nodeType))
     private val idx = new java.util.HashMap[InternalRow, Integer](n * 2)
-    nodes.zipWithIndex.foreach { case (v, i) => idx.put(key(v), i) }
+    keys.zipWithIndex.foreach { case (k, i) => idx.put(k, i) }
     def indexOf(v: Any): Integer = idx.get(key(v))
     val edges: Array[(Int, Int)] = Array.tabulate(ends.length / 2)(i =>
       (idx.get(ends(2 * i)).intValue, idx.get(ends(2 * i + 1)).intValue))

@@ -7,14 +7,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.ListenerBus
 
-import graft.core.Tables
+import graft.core.{LocalGate, Tables}
 import graft.ops.LinkGraph
 
-/** What a gated graph call costs in Spark jobs: pageRank, HITS and
-  * harmonic centrality below the gate count their pinned edge frame,
-  * the action that fills the pin, collect it once and derive the nodes
-  * on the driver, so a call runs no more jobs than filling and counting
-  * that pin plus one collect.
+/** What a gated graph call costs in Spark jobs: pageRank, HITS,
+  * harmonic centrality, SCC and bow-tie below the gate count their
+  * pinned edge frame, the action that fills the pin, collect it once
+  * and derive the nodes on the driver, so a call runs no more jobs than
+  * filling and counting that pin plus one collect.
   */
 class GateJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -69,6 +69,22 @@ class GateJobsSpec extends SparkSpec {
       measure("pageRank", e.distinct())(LinkGraph.pageRank(edges, iters = 5)),
       measure("hits", noLoops(e).distinct())(LinkGraph.hits(edges, iters = 3)),
       measure("harmonicCentrality", noLoops(e).distinct())(LinkGraph.harmonicCentrality(edges)))
+    withinFillPlusOne(got)
+  }
+
+  test("gated stronglyConnectedComponents and bowTie: one edge pin and one collect") {
+    val e = edges.select(col("src"), col("dst"))
+    // the same calls above the gate, results collected: reported, not bounded
+    val (_, scc) = jobs(LocalGate.distributed(LinkGraph.stronglyConnectedComponents(edges).collect()))
+    val (_, bowTie) = jobs(LocalGate.distributed(LinkGraph.bowTie(edges).collect()))
+    info(s"forced-distributed: stronglyConnectedComponents ran $scc jobs, bowTie $bowTie")
+    withinFillPlusOne(Seq(
+      measure("stronglyConnectedComponents", e.distinct())(
+        LinkGraph.stronglyConnectedComponents(edges)),
+      measure("bowTie", e.distinct())(LinkGraph.bowTie(edges))))
+  }
+
+  private def withinFillPlusOne(got: Seq[(String, Int, Int)]): Unit = {
     val report = got.map { case (name, n, fill) =>
       s"$name ran $n jobs; filling and counting its edge pin take $fill"
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.LocalGate
@@ -456,7 +457,34 @@ class LinkGraphSpec extends SparkSpec {
     }
     allEmpty()
     LocalGate.distributed(allEmpty())
+    // self-loops only: their endpoints are nodes for pageRank, SCC and
+    // bow-tie, while hits and harmonic drop every self-loop
+    val loops = Seq(("a", "a"), ("b", "b"), ("a", "a")).toDF("src", "dst")
+    val got = gatedOps(loops)
+    assert(got == LocalGate.distributed(gatedOps(loops)))
+    assert(got(0).size == 2 && got(1).isEmpty && got(2).isEmpty, got)
+    assert(got(3) == Seq("[a,a]", "[b,b]"))
+    assert(got(4) == Seq("[a,core]", "[b,disconnected]"))
   }
+
+  test("null node ids: all five gated ops drop edges with a null endpoint, local == distributed") {
+    val withNulls = Seq[(String, String)](("a", null), (null, "b"), ("b", "a"), ("b", "c"))
+      .toDF("src", "dst")
+    val clean = Seq(("b", "a"), ("b", "c")).toDF("src", "dst")
+    val ops = Seq("pageRank", "hits", "harmonicCentrality", "stronglyConnectedComponents", "bowTie")
+    val want = gatedOps(clean)
+    for ((side, got) <- Seq("gate" -> gatedOps(withNulls),
+        "distributed" -> LocalGate.distributed(gatedOps(withNulls))))
+      ops.indices.foreach(i => assert(got(i) == want(i), s"${ops(i)} under the $side"))
+  }
+
+  /** The five gated ops on `edges`, each as its sorted rows. */
+  private def gatedOps(edges: DataFrame): Seq[Seq[String]] = Seq(
+    LinkGraph.pageRank(edges, iters = 4),
+    LinkGraph.hits(edges, iters = 3),
+    LinkGraph.harmonicCentrality(edges),
+    LinkGraph.stronglyConnectedComponents(edges),
+    LinkGraph.bowTie(edges)).map(_.collect().map(_.toString).sorted.toSeq)
 
   test("double node ids: -0.0 and 0.0 are one node, NaN is one node, local == distributed") {
     // Spark's distinct and joins normalize floats, and the driver kernels
