@@ -41,36 +41,30 @@ class CachedAggService(spark: SparkSession, dir: String,
     * over the whole table; on a hit, `merge(cached, build(tail))`. One
     * action probes the tail's row count and new watermark, and the tail
     * built is bounded by that watermark (rows with a null time stay in
-    * an initial build, as a full recompute counts them). The manager's
-    * statistics count one miss per cold build and one hit per call
-    * served from an existing entry; reading back a commit counts
-    * neither.
+    * an initial build, as a full recompute counts them). The call's one
+    * lookup counts a miss for a cold build and a hit otherwise.
     */
   private def refresh(table: String, key: Option[String], timeCol: String,
                       build: DataFrame => DataFrame,
                       merge: (DataFrame, DataFrame) => DataFrame,
                       read: DataFrame => DataFrame): CachedQueryResult = {
-    val meta = cache.getMetadata(table, key)
+    val hit = cache.lookup(table, key)
     val base = Tables.loadNormalized(spark, dir, table)
     val tsType = base.schema(timeCol).dataType
-    val wm = meta.flatMap(_.lastTimestamp)
-    val fresh = wm.fold(base)(w => base.filter(col(timeCol) > lit(w).cast(tsType)))
+    val fresh = hit.flatMap(_.meta.lastTimestamp)
+      .fold(base)(w => base.filter(col(timeCol) > lit(w).cast(tsType)))
     val (freshCount, newWm) = Tables.countAndMax(fresh, Some(timeCol))
-    val cached = wm.map(_ => cache.getCachedData(table, key)
-      .getOrElse(sys.error(s"cache metadata present but state missing for '$table' ($key)")))
-    if (cached.isEmpty) cache.recordMiss()
-    val prevCount = if (cached.isDefined) meta.get.rowCount else 0L
-    cached match {
-      case Some(state) if freshCount == 0 =>
-        CachedQueryResult(read(state), isIncremental = true, prevCount, 0)
+    val prevCount = hit.fold(0L)(_.meta.rowCount)
+    hit match {
+      case Some(h) if freshCount == 0 =>
+        CachedQueryResult(read(h.entry.data), isIncremental = true, prevCount, 0)
       case _ =>
         val tail = build(fresh.filter(
           coalesce(col(timeCol) <= lit(newWm.orNull).cast(tsType), lit(true))))
-        val state = cached.fold(tail)(merge(_, tail))
+        val state = hit.fold(tail)(h => merge(h.entry.data, tail))
         val n = prevCount + freshCount
-        cache.setCachedData(table, state, CachedQueryMetadata(newWm, n, nowMillis()), key)
-        val back = cache.readBack(table, key).getOrElse(state)
-        CachedQueryResult(read(back), isIncremental = cached.isDefined, n, freshCount)
+        val back = cache.setCachedData(table, state, CachedQueryMetadata(newWm, n, nowMillis()), key)
+        CachedQueryResult(read(back), isIncremental = hit.isDefined, n, freshCount)
     }
   }
 

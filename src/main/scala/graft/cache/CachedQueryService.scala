@@ -50,8 +50,8 @@ case class CachedQueryResult(
   * parquet-backed for durable 100 TB results (a hit is a pruned scan,
   * not a driver-side materialization), memory-backed for dashboard
   * latency. `nowMillis` is injectable for deterministic staleness.
-  * Statistics: an initial load counts one miss, a call served from the
-  * cached entry one hit (as in [[CachedAggService]]).
+  * Statistics: each call is counted once, by its one
+  * [[QueryCacheManager.lookup]] (as in [[CachedAggService]]).
   */
 class CachedQueryService(spark: SparkSession, dir: String,
                          cache: QueryCacheManager,
@@ -60,12 +60,9 @@ class CachedQueryService(spark: SparkSession, dir: String,
   def queryWithCaching(table: String, limit: Int = 10000,
                        timeCol: Option[String] = None,
                        selectedConversions: Option[Map[String, String]] = None): CachedQueryResult = {
-    val meta = cache.getMetadata(table)
-    (timeCol, meta.flatMap(_.lastTimestamp)) match {
-      case (Some(tc), Some(_)) =>
-        incrementalLoad(table, tc, meta.get, selectedConversions)
-      case _ =>
-        initialLoad(table, limit, timeCol, selectedConversions)
+    (timeCol, cache.lookup(table)) match {
+      case (Some(tc), Some(hit)) => incrementalLoad(table, tc, hit, selectedConversions)
+      case _ => initialLoad(table, limit, timeCol, selectedConversions)
     }
   }
 
@@ -79,18 +76,6 @@ class CachedQueryService(spark: SparkSession, dir: String,
   }
 
   def clearCache(table: Option[String] = None): Unit = cache.clearCache(table)
-
-  def getCacheInfo(table: String): Option[CachedQueryMetadata] = cache.getMetadata(table)
-
-  /** Resolve the conversions that WILL be applied. `None` (automatic)
-    * resolves to the inferred per-column map up front, so the SAME map
-    * is recorded in the cache metadata and reapplied verbatim to every
-    * incremental slice — re-inferring on a tail slice could decide
-    * differently and corrupt the cached schema on union.
-    */
-  private def resolveConversions(df: DataFrame,
-                                 sel: Option[Map[String, String]]): Map[String, String] =
-    sel.getOrElse(TypeInference.suggestConversions(df))
 
   private def initialLoad(table: String, limit: Int, timeCol: Option[String],
                           sel: Option[Map[String, String]]): CachedQueryResult = {
@@ -108,20 +93,20 @@ class CachedQueryService(spark: SparkSession, dir: String,
         }
       case None => base.limit(limit)
     }
-    val conversions = resolveConversions(slice, sel)
-    // force: the resolved map is the authoritative schema decision —
-    // both the initial slice and every future tail apply it verbatim
+    // automatic conversions resolve here, once: re-inferring on a tail
+    // could decide differently and corrupt the cached schema on union.
+    // force: this slice and every later tail apply the map verbatim
+    val conversions = sel.getOrElse(TypeInference.suggestConversions(slice))
     val converted = TypeInference.applyConversions(slice, conversions, force = true)
     val (n, wm) = Tables.countAndMax(converted, timeCol)
-    cache.setCachedData(table, converted,
+    val cached = cache.setCachedData(table, converted,
       CachedQueryMetadata(wm, n, nowMillis(), conversions))
-    cache.recordMiss()
-    val cached = cache.readBack(table).getOrElse(converted)
     CachedQueryResult(ordered(cached, timeCol), isIncremental = false, n, n)
   }
 
-  private def incrementalLoad(table: String, tc: String, meta: CachedQueryMetadata,
+  private def incrementalLoad(table: String, tc: String, hit: CacheHit,
                               sel: Option[Map[String, String]]): CachedQueryResult = {
+    val meta = hit.meta
     val base = Tables.loadNormalized(spark, dir, table)
     val tsType = base.schema(tc).dataType
     val wm = meta.lastTimestamp.get
@@ -129,10 +114,8 @@ class CachedQueryService(spark: SparkSession, dir: String,
     // scan; one action counts it and probes the new watermark
     val fresh = base.filter(col(tc) > lit(wm).cast(tsType))
     val (freshCount, newWm) = Tables.countAndMax(fresh, Some(tc))
-    val cached = cache.getCachedData(table)
-      .getOrElse(sys.error(s"cache metadata present but data missing for '$table'"))
     if (freshCount == 0)
-      CachedQueryResult(ordered(cached, Some(tc)), isIncremental = true, meta.rowCount, 0)
+      CachedQueryResult(ordered(hit.entry.data, Some(tc)), isIncremental = true, meta.rowCount, 0)
     else {
       // reapply EXACTLY the conversions recorded at initial load (or the
       // caller's override) — never re-infer on the tail slice
@@ -145,11 +128,10 @@ class CachedQueryService(spark: SparkSession, dir: String,
       // cost tracks the tail, not the (possibly 100 TB) cached total.
       // select() pins the slice to the cached column order (and errors
       // on a missing column) so every slice shares one schema.
-      val aligned = freshConv.select(cached.columns.map(col).toIndexedSeq: _*)
+      val aligned = freshConv.select(hit.entry.data.columns.map(col).toIndexedSeq: _*)
       val n = meta.rowCount + freshCount
-      cache.appendCachedData(table, aligned,
+      val back = cache.appendCachedData(table, hit, aligned,
         CachedQueryMetadata(newWm, n, nowMillis(), conversions))
-      val back = cache.readBack(table).getOrElse(cached.unionByName(freshConv))
       CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, freshCount)
     }
   }

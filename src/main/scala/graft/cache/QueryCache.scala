@@ -29,31 +29,45 @@ import graft.core.DocFiles
   * two COMMIT TOGETHER (one entry document replaced by a checked swap
   * in the parquet provider, one map slot in the memory provider) so a
   * crash can never pair a dataset with a stale watermark.
+  *
+  * A request resolves its entry once, with [[CacheProvider.get]]; each
+  * commit returns the entry it wrote, and `append` extends the entry
+  * the request resolved.
   */
 trait CacheProvider {
-  /** Atomically commit data AND metadata for `key`: readers see the
-    * previous entry or the new one, never a mix. The pairing matters —
-    * cached data committed with a STALE watermark makes the next
-    * incremental refresh re-union rows it already holds (duplicates
-    * served durably from then on).
+  /** The committed entry for `key`, data and metadata resolved
+    * together, or None when no complete entry is there.
     */
-  def putEntry(key: String, df: DataFrame, metaJson: String): Unit
-  /** Append `tail` to the existing entry and commit with `metaJson`
-    * atomically, writing O(tail) data — the refresh path that still
-    * works when the cached result is 100 TB and the tail is 1%. Falls
-    * back to a full `putEntry` when no entry exists. All slices of an
-    * entry share the schema fixed at initial load (the service
-    * reapplies the recorded conversions verbatim to every tail).
+  def get(key: String): Option[CacheEntry]
+  /** Atomically commit data AND metadata for `key` and return the
+    * committed entry: readers see the previous entry or the new one,
+    * never a mix. The pairing matters — cached data committed with a
+    * STALE watermark makes the next incremental refresh re-union rows
+    * it already holds (duplicates served durably from then on).
     */
-  def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit
+  def put(key: String, df: DataFrame, metaJson: String): CacheEntry
+  /** Commit `prev` plus `tail` with `metaJson` atomically, writing
+    * O(tail) data, and return the committed entry — the refresh path
+    * that still works when the cached result is 100 TB and the tail is
+    * 1%. `prev` is the entry the request resolved with [[get]], so the
+    * data, the watermark and the count the commit records come from one
+    * read: a commit that landed for the key in between is replaced,
+    * never extended twice. All slices of an entry share the schema fixed
+    * at initial load (the service reapplies the recorded conversions
+    * verbatim to every tail).
+    */
+  def append(key: String, prev: CacheEntry, tail: DataFrame, metaJson: String): CacheEntry
   /** Metadata-only update for an existing entry (no-op when absent). */
   def putMeta(key: String, json: String): Unit
-  def getData(key: String): Option[DataFrame]
-  def getMeta(key: String): Option[String]
-  /** True iff a COMPLETE entry (data + metadata) is present. */
-  def hasEntry(key: String): Boolean
   def delete(key: String): Unit
   def clear(): Unit
+}
+
+/** One resolved cache entry: the metadata JSON and the data committed
+  * with it. The data frame is built on first read.
+  */
+class CacheEntry(val meta: String, readData: => DataFrame) {
+  lazy val data: DataFrame = readData
 }
 
 /** Durable provider: an entry is immutable parquet slices plus one
@@ -74,19 +88,21 @@ trait CacheProvider {
   * derived data, so the next request rebuilds it, and [[vacuum]]
   * removes the files left behind.
   *
-  * Why slices: an incremental refresh writes ONLY the tail
-  * (`appendEntry`) — at 100 TB cached + 1% tail, rewriting the full
-  * dataset per refresh would dominate the sync. `putEntry` is also the
-  * compactor: any full rewrite collapses the entry back to one slice,
-  * and `appendEntry` self-compacts once the entry holds
+  * A request opens the document and checks each slice's `_SUCCESS`
+  * once, in [[get]]; a commit returns the entry it wrote.
+  *
+  * Why slices: an incremental refresh writes ONLY the tail (`append`)
+  * — at 100 TB cached + 1% tail, rewriting the full dataset per
+  * refresh would dominate the sync. `put` is also the compactor: any
+  * full rewrite collapses the entry back to one slice, and `append`
+  * self-compacts once the entry holds
   * [[ParquetCacheProvider.CompactAt]] slices, so read fan-in stays
   * bounded however many refreshes run (amortized: one O(total) rewrite
   * per `CompactAt` O(tail) appends).
   *
   * Why a recorded schema: `spark.read.parquet` without one runs a
-  * schema-inference job on every read, and a refresh reads its entry
-  * twice. `appendEntry` carries it forward (slices share the entry's
-  * schema).
+  * schema-inference job on every read. `append` carries it forward
+  * (slices share the entry's schema).
   */
 class ParquetCacheProvider(spark: SparkSession, dir: String) extends CacheProvider {
   import ParquetCacheProvider._
@@ -101,79 +117,66 @@ class ParquetCacheProvider(spark: SparkSession, dir: String) extends CacheProvid
   private def parseSlice(name: String): Option[Long] =
     if (name.startsWith("slice-")) name.stripPrefix("slice-").toLongOption else None
 
-  private case class Entry(slices: Seq[String], schema: StructType, meta: String)
-
   /** The committed entry, when its document is there and every slice
     * it names is complete.
     */
-  private def resolve(key: String): Option[Entry] =
+  private def resolve(key: String): Option[Slices] =
     DocFiles.read(fs, entryPath(key)).flatMap { doc =>
       for {
         schema <- DocFiles.str(doc, "schema")
         meta <- DocFiles.str(doc, "meta")
-      } yield Entry(DocFiles.strs(doc, "slices"),
+      } yield new Slices(spark, keyDir(key), DocFiles.strs(doc, "slices"),
         DataType.fromJson(schema).asInstanceOf[StructType], meta)
     }.filter(_.slices.forall(s => fs.exists(new Path(slicePath(key, s), "_SUCCESS"))))
 
-  private def writeEntry(key: String, e: Entry): Unit =
-    DocFiles.write(fs, entryPath(key),
+  private def writeEntry(e: Slices): Unit =
+    DocFiles.write(fs, new Path(e.keyDir, EntryDoc),
       DocFiles.obj("slices" -> e.slices, "schema" -> e.schema.json, "meta" -> e.meta))
 
-  private def nextSlice(key: String): String = {
+  /** Writes `df` as the key's next slice; returns its name. */
+  private def writeSlice(key: String, df: DataFrame): String = {
     val kd = keyDir(key)
     val used = if (!fs.exists(kd)) Nil
       else fs.listStatus(kd).toSeq.flatMap(s => parseSlice(s.getPath.getName))
-    sliceName(used.maxOption.map(_ + 1).getOrElse(0L))
+    val slice = sliceName(used.maxOption.map(_ + 1).getOrElse(0L))
+    df.write.mode("overwrite").parquet(slicePath(key, slice).toString)
+    slice
   }
 
   /** Steps 2 and 3 of a commit: the new document, then the slices it no
     * longer names.
     */
-  private def commit(key: String, e: Entry): Unit = {
-    writeEntry(key, e)
-    fs.listStatus(keyDir(key)).foreach { s =>
+  private def commit(key: String, slices: Seq[String], schema: StructType,
+                     meta: String): CacheEntry = {
+    val e = new Slices(spark, keyDir(key), slices, schema, meta)
+    writeEntry(e)
+    fs.listStatus(e.keyDir).foreach { s =>
       val name = s.getPath.getName
       if (parseSlice(name).isDefined && !e.slices.contains(name)) fs.delete(s.getPath, true)
     }
+    e
   }
 
-  private def read(key: String, e: Entry): DataFrame =
-    spark.read.schema(e.schema).parquet(e.slices.map(slicePath(key, _).toString): _*)
+  override def get(key: String): Option[CacheEntry] = resolve(key)
 
-  override def putEntry(key: String, df: DataFrame, metaJson: String): Unit = {
-    val slice = nextSlice(key)
-    // a full-rewrite plan may READ the current entry (cached ∪ fresh)
-    // — the new slice is fully materialized before any slice the old
-    // document names is dropped
-    df.write.mode("overwrite").parquet(slicePath(key, slice).toString)
-    commit(key, Entry(Seq(slice), df.schema, metaJson))
+  // a full-rewrite plan may READ the current entry (cached ∪ fresh) —
+  // the new slice is fully materialized before any slice the old
+  // document names is dropped
+  override def put(key: String, df: DataFrame, metaJson: String): CacheEntry =
+    commit(key, Seq(writeSlice(key, df)), df.schema, metaJson)
+
+  override def append(key: String, prev: CacheEntry, tail: DataFrame,
+                      metaJson: String): CacheEntry = prev match {
+    case p: Slices if p.keyDir == keyDir(key) && p.slices.size < CompactAt =>
+      commit(key, p.slices :+ writeSlice(key, tail), p.schema, metaJson)
+    case _ => put(key, prev.data.unionByName(tail), metaJson)
   }
-
-  override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
-    resolve(key) match {
-      case None => putEntry(key, tail, metaJson)
-      case Some(e) if e.slices.size >= CompactAt =>
-        putEntry(key, read(key, e).unionByName(tail), metaJson)
-      case Some(e) =>
-        val slice = nextSlice(key)
-        tail.write.mode("overwrite").parquet(slicePath(key, slice).toString)
-        commit(key, e.copy(slices = e.slices :+ slice, meta = metaJson))
-    }
 
   // same slices, new metadata: a crash mid-swap leaves the old or the new
   override def putMeta(key: String, json: String): Unit =
-    resolve(key).foreach(e => writeEntry(key, e.copy(meta = json)))
+    resolve(key).foreach(e => writeEntry(new Slices(spark, e.keyDir, e.slices, e.schema, json)))
 
-  override def getData(key: String): Option[DataFrame] = resolve(key).map(read(key, _))
-
-  override def getMeta(key: String): Option[String] = resolve(key).map(_.meta)
-
-  override def hasEntry(key: String): Boolean = resolve(key).isDefined
-
-  override def delete(key: String): Unit = {
-    val kd = keyDir(key)
-    if (fs.exists(kd)) fs.delete(kd, true)
-  }
+  override def delete(key: String): Unit = fs.delete(keyDir(key), true)
 
   override def clear(): Unit = {
     val d = new Path(dir)
@@ -182,7 +185,7 @@ class ParquetCacheProvider(spark: SparkSession, dir: String) extends CacheProvid
 
   /** Garbage-collect debris across ALL keys: under a key with a
     * complete entry, everything but the entry document and the slices
-    * it names (a slice an `appendEntry` cut short after its tail write
+    * it names (a slice an `append` cut short after its tail write
     * left, a temp copy of the document, files of an earlier on-disk
     * layout); a key dir with no complete entry, whole. Idempotent;
     * committed entries are never touched, so concurrent readers are
@@ -218,55 +221,65 @@ object ParquetCacheProvider {
   /** The entry document's name under each key dir. */
   private val EntryDoc = "entry.json"
 
-  /** Slices an entry holds before `appendEntry` compacts it to one. */
+  /** Slices an entry holds before `append` compacts it to one. */
   val CompactAt = 32
+
+  /** An entry as the document under `keyDir` names it; its data reads
+    * those slices.
+    */
+  private final class Slices(spark: SparkSession, val keyDir: Path, val slices: Seq[String],
+                             val schema: StructType, meta: String)
+    extends CacheEntry(meta,
+      spark.read.schema(schema).parquet(slices.map(new Path(keyDir, _).toString): _*))
 }
 
 /** In-process provider: locally checkpointed plans keyed in a
-  * concurrent map. Every stored entry is a leaf: an eager
-  * `localCheckpoint` materializes it into this application's block
-  * manager, so a hit never re-runs — or re-reads the files of — the
-  * plan it came from (a sync that rewrites a source partition cannot
-  * break a later refresh), and an append's `cached ∪ tail` never
-  * deepens the plan. `putEntry` swaps the (data, meta) pair under the
-  * entry's lock, so in-process readers never observe data paired with
-  * stale metadata; a replaced entry's blocks are freed right away, so
-  * a frame `getData` returned is valid until its entry is replaced or
-  * deleted.
+  * concurrent map; [[get]] is one map lookup. Every stored entry is a
+  * leaf: an eager `localCheckpoint` materializes it into this
+  * application's block manager, so a hit never re-runs — or re-reads
+  * the files of — the plan it came from (a sync that rewrites a source
+  * partition cannot break a later refresh), and an append's
+  * `cached ∪ tail` never deepens the plan. `put` swaps the entry in one
+  * map slot, so in-process readers never observe data paired with stale
+  * metadata; a replaced entry's blocks are freed right away, so the
+  * data of an entry `get` returned is valid until its entry is replaced
+  * or deleted.
   */
 class MemoryCacheProvider extends CacheProvider {
-  private val entries = TrieMap.empty[String, (DataFrame, String)]
+  private val entries = TrieMap.empty[String, CacheEntry]
 
-  override def putEntry(key: String, df: DataFrame, metaJson: String): Unit = {
+  override def get(key: String): Option[CacheEntry] = entries.get(key)
+
+  override def put(key: String, df: DataFrame, metaJson: String): CacheEntry = {
     val cp = df.localCheckpoint(eager = true)
+    val e = new CacheEntry(metaJson, cp)
     // only then drop the previous entry — the new plan may READ it
-    entries.put(key, (cp, metaJson)).foreach(e => release(e._1))
+    entries.put(key, e).foreach(release)
+    e
   }
 
   /** Frees a checkpointed entry's blocks (`unpersist()` is a no-op on a
     * checkpointed frame; its data lives in the checkpointed RDD).
     */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+  private def release(e: CacheEntry): Unit = e.data.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => ()
   }
 
-  /** In-memory append re-checkpoints cached ∪ tail — the union reads
+  /** In-memory append re-checkpoints prev ∪ tail — the union reads
     * the previous entry's blocks, not the source, so the churn is
     * memory-to-memory. O(tail) durable appends are the parquet
     * provider's job.
     */
-  override def appendEntry(key: String, tail: DataFrame, metaJson: String): Unit =
-    putEntry(key, getData(key).map(_.unionByName(tail)).getOrElse(tail), metaJson)
+  override def append(key: String, prev: CacheEntry, tail: DataFrame,
+                      metaJson: String): CacheEntry =
+    put(key, prev.data.unionByName(tail), metaJson)
 
   override def putMeta(key: String, json: String): Unit =
-    entries.updateWith(key)(_.map { case (df, _) => (df, json) })
-  override def getData(key: String): Option[DataFrame] = entries.get(key).map(_._1)
-  override def getMeta(key: String): Option[String] = entries.get(key).map(_._2)
-  override def hasEntry(key: String): Boolean = entries.contains(key)
-  override def delete(key: String): Unit = entries.remove(key).foreach(e => release(e._1))
+    entries.updateWith(key)(_.map(e => new CacheEntry(json, e.data)))
+  override def delete(key: String): Unit = entries.remove(key).foreach(release)
   override def clear(): Unit = {
-    entries.values.foreach(e => release(e._1))
+    entries.values.foreach(release)
     entries.clear()
   }
 }
@@ -296,6 +309,11 @@ object CachedQueryMetadata {
       selectedConversions = DocFiles.strs(json, "selected_conversions")
         .grouped(2).collect { case Seq(k, v) => k -> v }.toMap)
 }
+
+/** A resolved entry with its metadata parsed: what one request reads
+  * and, on a refresh, extends.
+  */
+case class CacheHit(meta: CachedQueryMetadata, entry: CacheEntry)
 
 /** Cache manager: (table, optional cache_key) → data + metadata, with
   * hit/miss statistics and age-based invalidation. `nowMillis` is
@@ -330,41 +348,44 @@ class QueryCacheManager(provider: CacheProvider,
   private def entryKey(table: String, custom: Option[String]) =
     custom.fold(esc(table))(k => s"${esc(table)}_${esc(k)}")
 
-  def getCachedData(table: String, cacheKey: Option[String] = None): Option[DataFrame] = {
-    val r = readBack(table, cacheKey)
-    if (r.isDefined) hits.incrementAndGet() else misses.incrementAndGet()
+  private def resolve(table: String, cacheKey: Option[String]): Option[CacheHit] =
+    provider.get(entryKey(table, cacheKey))
+      .flatMap(e => CachedQueryMetadata.fromJson(e.meta).map(CacheHit(_, e)))
+
+  /** The entry one request refreshes from, resolved once and counted
+    * once: a hit when the entry holds a watermark, a miss otherwise (no
+    * entry, or one built from no timed rows, which the request rebuilds
+    * in full).
+    */
+  def lookup(table: String, cacheKey: Option[String] = None): Option[CacheHit] = {
+    val r = resolve(table, cacheKey).filter(_.meta.lastTimestamp.isDefined)
+    (if (r.isDefined) hits else misses).incrementAndGet()
     r
   }
 
-  /** The entry's data without counting a hit or a miss: a service
-    * reading back what it has just committed.
-    */
-  private[cache] def readBack(table: String, cacheKey: Option[String] = None): Option[DataFrame] =
-    provider.getData(entryKey(table, cacheKey))
-
-  /** Counts a request that found no usable entry and built one cold. */
-  private[cache] def recordMiss(): Unit = misses.incrementAndGet()
-
-  /** Data and metadata commit as ONE atomic entry — see
-    * [[CacheProvider.putEntry]] for why the pairing must be atomic.
+  /** Data and metadata commit as ONE atomic entry, returning its data
+    * — see [[CacheProvider.put]] for why the pairing must be atomic.
     */
   def setCachedData(table: String, df: DataFrame, meta: CachedQueryMetadata,
-                    cacheKey: Option[String] = None): Unit =
-    provider.putEntry(entryKey(table, cacheKey), df, CachedQueryMetadata.toJson(meta))
+                    cacheKey: Option[String] = None): DataFrame =
+    provider.put(entryKey(table, cacheKey), df, CachedQueryMetadata.toJson(meta)).data
 
-  /** Append-commit: only `tail` leaves the cluster — see
-    * [[CacheProvider.appendEntry]] for the O(tail) refresh contract.
+  /** Append-commit onto `prev`, the entry the request looked up,
+    * returning its data: only `tail` leaves the cluster — see
+    * [[CacheProvider.append]] for the O(tail) refresh contract.
     */
-  def appendCachedData(table: String, tail: DataFrame, meta: CachedQueryMetadata,
-                       cacheKey: Option[String] = None): Unit =
-    provider.appendEntry(entryKey(table, cacheKey), tail, CachedQueryMetadata.toJson(meta))
+  def appendCachedData(table: String, prev: CacheHit, tail: DataFrame,
+                       meta: CachedQueryMetadata, cacheKey: Option[String] = None): DataFrame =
+    provider.append(entryKey(table, cacheKey), prev.entry, tail,
+      CachedQueryMetadata.toJson(meta)).data
 
+  /** The entry's metadata, without counting a hit or a miss. */
   def getMetadata(table: String, cacheKey: Option[String] = None): Option[CachedQueryMetadata] =
-    provider.getMeta(entryKey(table, cacheKey)).flatMap(CachedQueryMetadata.fromJson)
+    resolve(table, cacheKey).map(_.meta)
 
   /** True iff a complete entry (data + metadata) is present (reference has_cache). */
   def hasCache(table: String, cacheKey: Option[String] = None): Boolean =
-    provider.hasEntry(entryKey(table, cacheKey))
+    resolve(table, cacheKey).isDefined
 
   /** Clear one (table, key) entry, or everything when `table` is None.
     * Statistics reset either way (reference clear_cache).

@@ -548,7 +548,8 @@ object LinkGraph {
     * reciprocity (fraction of non-loop edges whose reverse exists —
     * link-exchange/mirror-farm graphs run high, editorial link
     * graphs low), and mean out-degree. All exact longs + 6dp
-    * doubles, bit-stable on any partitioning.
+    * doubles, bit-stable on any partitioning. An edge with a null
+    * endpoint is dropped, as the gated kernels drop it.
     *
     * Scale shape: two node/edge-shaped aggregations, one anti-join,
     * and one edge-keyed left-semi self-join (the reciprocity probe —
@@ -559,7 +560,7 @@ object LinkGraph {
   def stats(edges: DataFrame, srcCol: String = "src",
             dstCol: String = "dst"): DataFrame = {
     Tables.persisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .distinct()) { e =>
+        .filter(col("src").isNotNull && col("dst").isNotNull).distinct()) { e =>
       val nodes = endpoints(e)
       val ecnt = e.agg(count(lit(1)).as("n_edges"),
         sum(when(col("src") === col("dst"), 1L).otherwise(0L)).as("n_self_loops"))

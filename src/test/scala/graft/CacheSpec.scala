@@ -1,8 +1,13 @@
 package graft
 
+import java.net.URI
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cache._
@@ -25,7 +30,7 @@ class CacheSpec extends SparkSpec {
     (i.toLong, Timestamp.valueOf(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"),
       i * 1.7 - 3))
     .toDF("id", "ts", "v")
-  private def tsRows(n: Int): org.apache.spark.sql.DataFrame = tsRows(1, n)
+  private def tsRows(n: Int): DataFrame = tsRows(1, n)
 
   private def fsOf(dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -49,19 +54,26 @@ class CacheSpec extends SparkSpec {
   private class SyncMidCommit(inner: CacheProvider, sync: () => Unit) extends CacheProvider {
     private var landed = false
     private def land(): Unit = if (!landed) { landed = true; sync() }
-    def putEntry(key: String, df: org.apache.spark.sql.DataFrame, metaJson: String): Unit = {
-      land(); inner.putEntry(key, df, metaJson)
+    def get(key: String) = inner.get(key)
+    def put(key: String, df: DataFrame, metaJson: String): CacheEntry = {
+      land(); inner.put(key, df, metaJson)
     }
-    def appendEntry(key: String, tail: org.apache.spark.sql.DataFrame, metaJson: String): Unit = {
-      land(); inner.appendEntry(key, tail, metaJson)
+    def append(key: String, prev: CacheEntry, tail: DataFrame, metaJson: String): CacheEntry = {
+      land(); inner.append(key, prev, tail, metaJson)
     }
     def putMeta(key: String, json: String): Unit = inner.putMeta(key, json)
-    def getData(key: String) = inner.getData(key)
-    def getMeta(key: String) = inner.getMeta(key)
-    def hasEntry(key: String) = inner.hasEntry(key)
     def delete(key: String): Unit = inner.delete(key)
     def clear(): Unit = inner.clear()
   }
+
+  /** Metadata of an entry a refresh can extend: one with a watermark. */
+  private def wmMeta(n: Long) = CachedQueryMetadata(Some("wm"), n, 0L)
+
+  private def dataOf(p: CacheProvider, key: String) = p.get(key).map(_.data)
+  private def metaOf(p: CacheProvider, key: String) = p.get(key).map(_.meta)
+  /** Appends `tail` onto the entry `key` resolves to now. */
+  private def appendTo(p: CacheProvider, key: String, tail: DataFrame, meta: String) =
+    p.append(key, p.get(key).get, tail, meta)
 
   test("metadata JSON round-trips, including null watermark and conversions") {
     val full = CachedQueryMetadata(Some("2024-01-01 00:00:10"), 42L, 1700000000000L,
@@ -73,13 +85,16 @@ class CacheSpec extends SparkSpec {
 
   test("memory provider: hit/miss statistics, hasCache needs data AND metadata") {
     val mgr = new QueryCacheManager(new MemoryCacheProvider)
-    assert(mgr.getCachedData("t").isEmpty)            // miss
+    assert(mgr.lookup("t").isEmpty)                    // miss
     assert(!mgr.hasCache("t"))
-    mgr.setCachedData("t", eventsDf(3), CachedQueryMetadata(None, 3L, 0L))
+    mgr.setCachedData("t", eventsDf(3), wmMeta(3L))
     assert(mgr.hasCache("t"))
-    assert(mgr.getCachedData("t").exists(_.count() == 3)) // hit
+    assert(mgr.lookup("t").exists(_.entry.data.count() == 3)) // hit
+    // an entry without a watermark is rebuilt in full: a miss
+    mgr.setCachedData("u", eventsDf(3).limit(0), CachedQueryMetadata(None, 0L, 0L))
+    assert(mgr.hasCache("u") && mgr.lookup("u").isEmpty)
     val (hits, misses, rate) = mgr.statistics
-    assert(hits == 1 && misses == 1 && rate == 0.5)
+    assert(hits == 1 && misses == 2 && rate == 1.0 / 3)
     mgr.clearCache(Some("t"))
     assert(!mgr.hasCache("t"))
     assert(mgr.statistics == ((0L, 0L, 0.0)))          // stats reset on clear
@@ -87,10 +102,10 @@ class CacheSpec extends SparkSpec {
 
   test("cache keys separate tables and custom cache keys") {
     val mgr = new QueryCacheManager(new MemoryCacheProvider)
-    mgr.setCachedData("t", eventsDf(1), CachedQueryMetadata(None, 1L, 0L))
-    mgr.setCachedData("t", eventsDf(2), CachedQueryMetadata(None, 2L, 0L), Some("k2"))
-    assert(mgr.getCachedData("t").exists(_.count() == 1))
-    assert(mgr.getCachedData("t", Some("k2")).exists(_.count() == 2))
+    mgr.setCachedData("t", eventsDf(1), wmMeta(1L))
+    mgr.setCachedData("t", eventsDf(2), wmMeta(2L), Some("k2"))
+    assert(mgr.lookup("t").exists(_.entry.data.count() == 1))
+    assert(mgr.lookup("t", Some("k2")).exists(_.entry.data.count() == 2))
     mgr.clearCache(Some("t"))                          // default key only
     assert(!mgr.hasCache("t") && mgr.hasCache("t", Some("k2")))
   }
@@ -119,10 +134,10 @@ class CacheSpec extends SparkSpec {
 
   test("composed keys are unambiguous: (a, b) never collides with (a_b, none)") {
     val mgr = new QueryCacheManager(new MemoryCacheProvider)
-    mgr.setCachedData("a", eventsDf(1), CachedQueryMetadata(None, 1L, 0L), Some("b"))
-    mgr.setCachedData("a_b", eventsDf(2), CachedQueryMetadata(None, 2L, 0L))
-    assert(mgr.getCachedData("a", Some("b")).exists(_.count() == 1))
-    assert(mgr.getCachedData("a_b").exists(_.count() == 2))
+    mgr.setCachedData("a", eventsDf(1), wmMeta(1L), Some("b"))
+    mgr.setCachedData("a_b", eventsDf(2), wmMeta(2L))
+    assert(mgr.lookup("a", Some("b")).exists(_.entry.data.count() == 1))
+    assert(mgr.lookup("a_b").exists(_.entry.data.count() == 2))
     mgr.clearCache(Some("a_b"))
     assert(mgr.hasCache("a", Some("b")) && !mgr.hasCache("a_b")) // no cross-invalidation
   }
@@ -133,96 +148,100 @@ class CacheSpec extends SparkSpec {
     val mgr = new QueryCacheManager(prov)
     mgr.setCachedData("t", eventsDf(5), CachedQueryMetadata(Some("wm1"), 5L, 0L))
     // refresh: the new plan READS the current entry (cached ∪ fresh)
-    val merged = mgr.getCachedData("t").get.unionByName(eventsDf(7).filter(col("id") > 5))
-    mgr.setCachedData("t", merged, CachedQueryMetadata(Some("wm2"), 7L, 1L))
-    assert(mgr.getCachedData("t").exists(_.count() == 7))
+    val merged = mgr.lookup("t").get.entry.data.unionByName(eventsDf(7).filter(col("id") > 5))
+    // the commit returns its own data, read from the slice it wrote
+    assert(mgr.setCachedData("t", merged, CachedQueryMetadata(Some("wm2"), 7L, 1L)).count() == 7)
+    assert(mgr.lookup("t").exists(_.entry.data.count() == 7))
     assert(mgr.getMetadata("t").flatMap(_.lastTimestamp).contains("wm2"))
     // crash recovery: the live entry document lost mid-swap — its
     // aside copy still resolves, with data and ITS metadata paired
     val keyDir = new java.io.File(cacheDir).listFiles().filter(_.isDirectory).head
     parkEntry(keyDir)
     assert(mgr.hasCache("t"))
-    assert(mgr.getCachedData("t").exists(_.count() == 7))
+    assert(mgr.lookup("t").exists(_.entry.data.count() == 7))
     assert(mgr.getMetadata("t").flatMap(_.lastTimestamp).contains("wm2"))
     // the slice the previous document named was deleted after the swap
     assert(keyDir.listFiles().count(_.getName.startsWith("slice-")) == 1)
   }
 
-  test("parquet provider: appendEntry writes only the tail slice; putEntry compacts") {
+  test("parquet provider: append writes only the tail slice; put compacts") {
     val cacheDir = tempDir("graft-cache-append")
     val prov = new ParquetCacheProvider(spark, cacheDir)
-    prov.putEntry("t", eventsDf(10), """{"m":1}""")
+    prov.put("t", eventsDf(10), """{"m":1}""")
     val keyDir = new java.io.File(cacheDir).listFiles().filter(_.isDirectory).head
     def slices = keyDir.listFiles().filter(_.getName.startsWith("slice-")).sortBy(_.getName)
     assert(slices.length == 1)
     val initialFiles = slices.head.listFiles().map(f => f.getName -> f.lastModified()).toMap
 
-    prov.appendEntry("t", eventsDf(15).filter(col("id") > 10), """{"m":2}""")
+    val appended = appendTo(prov, "t", eventsDf(15).filter(col("id") > 10), """{"m":2}""")
     // the tail landed as a SECOND slice; the initial slice's parquet
     // files were not rewritten — the O(tail) contract
     assert(slices.length == 2)
     assert(slices.head.listFiles().map(f => f.getName -> f.lastModified()).toMap
       == initialFiles)
     assert(spark.read.parquet(slices.last.getPath).count() == 5) // tail only
-    assert(prov.getData("t").exists(_.count() == 15)) // union reads all slices
-    assert(prov.getMeta("t").contains("""{"m":2}"""))
+    // the returned entry is the committed one
+    assert(appended.data.count() == 15 && appended.meta == """{"m":2}""")
+    assert(dataOf(prov, "t").exists(_.count() == 15)) // union reads all slices
+    assert(metaOf(prov, "t").contains("""{"m":2}"""))
     // an appended entry survives losing its live document mid-swap
     // like any committed one
     parkEntry(keyDir)
-    assert(prov.getData("t").exists(_.count() == 15))
+    assert(dataOf(prov, "t").exists(_.count() == 15))
 
     // a full rewrite is the compactor: back to one slice, and the
     // document is live again
-    prov.putEntry("t", prov.getData("t").get.filter(col("id") <= 12), """{"m":3}""")
+    prov.put("t", dataOf(prov, "t").get.filter(col("id") <= 12), """{"m":3}""")
     assert(slices.length == 1)
-    assert(prov.getData("t").exists(_.count() == 12))
+    assert(dataOf(prov, "t").exists(_.count() == 12))
     assert(new java.io.File(keyDir, "entry.json").isFile &&
       !new java.io.File(keyDir, ".entry.json.old").exists())
   }
 
   test("memory provider: append compaction bounds the union-plan depth") {
     val prov = new MemoryCacheProvider
-    prov.putEntry("t", eventsDf(2), "{}")
+    prov.put("t", eventsDf(2), "{}")
     (1 to 5).foreach(i =>
-      prov.appendEntry("t", eventsDf(2 + i).filter(col("id") > 1 + i), s"""{"i":$i}"""))
-    assert(prov.getData("t").exists(_.count() == 7))
-    assert(prov.getMeta("t").contains("""{"i":5}"""))
+      appendTo(prov, "t", eventsDf(2 + i).filter(col("id") > 1 + i), s"""{"i":$i}"""))
+    assert(dataOf(prov, "t").exists(_.count() == 7))
+    assert(metaOf(prov, "t").contains("""{"i":5}"""))
     // localCheckpoint every 2 appends cuts the union chain — the plan
     // never accumulates one Union per refresh
-    val unions = prov.getData("t").get.queryExecution.logical.collect {
+    val unions = dataOf(prov, "t").get.queryExecution.logical.collect {
       case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
     }.size
     assert(unions <= 2)
   }
 
-  test("parquet provider: appendEntry self-compacts at the slice threshold") {
+  test("parquet provider: append self-compacts at the slice threshold") {
     val cacheDir = tempDir("graft-cache-compact")
     val prov = new ParquetCacheProvider(spark, cacheDir)
     val n = ParquetCacheProvider.CompactAt
     // one row per slice: the entry reaches the threshold
-    prov.putEntry("t", eventsDf(1), """{"m":1}""")
+    prov.put("t", eventsDf(1), """{"m":1}""")
     (2 to n).foreach(i =>
-      prov.appendEntry("t", eventsDf(i).filter(col("id") === i), s"""{"m":$i}"""))
+      appendTo(prov, "t", eventsDf(i).filter(col("id") === i), s"""{"m":$i}"""))
     val keyDir = new java.io.File(cacheDir).listFiles().filter(_.isDirectory).head
     def nSlices = keyDir.listFiles().count(_.getName.startsWith("slice-"))
     assert(nSlices == n)
     // one more slice would exceed the threshold → this append compacts
-    prov.appendEntry("t", eventsDf(n + 1).filter(col("id") > n), s"""{"m":${n + 1}}""")
+    val compacted = appendTo(prov, "t", eventsDf(n + 1).filter(col("id") > n), s"""{"m":${n + 1}}""")
     assert(nSlices == 1)
-    assert(prov.getData("t").get.orderBy("id").collect().toSeq == eventsDf(n + 1).collect().toSeq)
-    assert(prov.getMeta("t").contains(s"""{"m":${n + 1}}"""))
+    assert(compacted.data.orderBy("id").collect().toSeq == eventsDf(n + 1).collect().toSeq)
+    assert(dataOf(prov, "t").get.orderBy("id").collect().toSeq == eventsDf(n + 1).collect().toSeq)
+    assert(metaOf(prov, "t").contains(s"""{"m":${n + 1}}"""))
   }
 
   test("parquet provider: vacuum removes a stranded append slice, keeps referenced ones") {
     val cacheDir = tempDir("graft-cache-strand")
     val prov = new ParquetCacheProvider(spark, cacheDir)
-    prov.putEntry("t", eventsDf(3), """{"m":1}""")
-    prov.appendEntry("t", eventsDf(5).filter(col("id") > 3), """{"m":2}""")
-    // an appendEntry interrupted after its tail write strands a slice
+    prov.put("t", eventsDf(3), """{"m":1}""")
+    appendTo(prov, "t", eventsDf(5).filter(col("id") > 3), """{"m":2}""")
+    // an append interrupted after its tail write strands a slice
     // the entry document does not name
     eventsDf(1).write.parquet(s"$cacheDir/t/slice-${"%010d".format(9)}")
     assert(prov.vacuum(graceMillis = 0) == 1)
-    assert(prov.getData("t").exists(_.count() == 5)) // both committed slices intact
+    assert(dataOf(prov, "t").exists(_.count() == 5)) // both committed slices intact
     assert(prov.vacuum(graceMillis = 0) == 0)
   }
 
@@ -409,24 +428,24 @@ class CacheSpec extends SparkSpec {
 
   test("memory provider: a replaced or deleted entry releases its blocks") {
     val prov = new MemoryCacheProvider
-    def rddId(key: String): Int = prov.getData(key).get.queryExecution.logical match {
+    def rddId(key: String): Int = dataOf(prov, key).get.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
       case p => fail(s"entry is not a checkpointed leaf: $p")
     }
     def held(id: Int) = spark.sparkContext.getPersistentRDDs.contains(id)
-    prov.putEntry("t", eventsDf(3), "{}")
+    prov.put("t", eventsDf(3), "{}")
     val first = rddId("t")
     assert(held(first))
-    prov.appendEntry("t", eventsDf(5).filter(col("id") > 3), "{}")
+    appendTo(prov, "t", eventsDf(5).filter(col("id") > 3), "{}")
     val second = rddId("t")
     assert(!held(first) && held(second))
-    assert(prov.getData("t").exists(_.count() == 5))
-    prov.putEntry("t", eventsDf(2), "{}")
+    assert(dataOf(prov, "t").exists(_.count() == 5))
+    prov.put("t", eventsDf(2), "{}")
     val third = rddId("t")
     assert(!held(second) && held(third))
     prov.delete("t")
-    assert(!held(third) && !prov.hasEntry("t"))
-    prov.putEntry("u", eventsDf(1), "{}")
+    assert(!held(third) && prov.get("t").isEmpty)
+    prov.put("u", eventsDf(1), "{}")
     val fourth = rddId("u")
     prov.clear()
     assert(!held(fourth))
@@ -435,7 +454,7 @@ class CacheSpec extends SparkSpec {
   test("parquet provider: the schema is recorded at commit; without one, a miss") {
     val cacheDir = tempDir("graft-cache-schema")
     val prov = new ParquetCacheProvider(spark, cacheDir)
-    prov.putEntry("t", eventsDf(4), """{"m":1}""")
+    prov.put("t", eventsDf(4), """{"m":1}""")
     val doc = new Path(cacheDir, "t/entry.json")
     val fs = fsOf(cacheDir)
     def recorded = DocFiles.read(fs, doc).flatMap(DocFiles.str(_, "schema"))
@@ -444,20 +463,20 @@ class CacheSpec extends SparkSpec {
     assert(recorded.contains(eventsDf(4).schema.json))
     // the pinned read sees what schema inference would
     val inferred = spark.read.parquet(slices.toIndexedSeq: _*).schema
-    assert(prov.getData("t").get.schema == inferred)
+    assert(dataOf(prov, "t").get.schema == inferred)
     // an append carries the recorded schema forward
-    prov.appendEntry("t", eventsDf(6).filter(col("id") > 4), """{"m":2}""")
+    appendTo(prov, "t", eventsDf(6).filter(col("id") > 4), """{"m":2}""")
     assert(recorded.contains(eventsDf(4).schema.json))
-    assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
+    assert(dataOf(prov, "t").get.orderBy("id").collect().toSeq ==
       eventsDf(6).collect().toSeq)
     // a document without a schema is not an entry: a miss, and the
     // next commit replaces it
     DocFiles.write(fs, doc, DocFiles.obj(
       "slices" -> slices.map(p => new java.io.File(p).getName).toSeq, "meta" -> """{"m":2}"""))
-    assert(prov.getData("t").isEmpty && prov.getMeta("t").isEmpty && !prov.hasEntry("t"))
-    prov.appendEntry("t", eventsDf(7), """{"m":3}""")
+    assert(prov.get("t").isEmpty)
+    prov.put("t", eventsDf(7), """{"m":3}""")
     assert(recorded.contains(eventsDf(7).schema.json))
-    assert(prov.getData("t").get.orderBy("id").collect().toSeq ==
+    assert(dataOf(prov, "t").get.orderBy("id").collect().toSeq ==
       eventsDf(7).collect().toSeq)
     assert(slices.length == 1)
   }
@@ -482,7 +501,7 @@ class CacheSpec extends SparkSpec {
     DocFiles.write(fs, new Path(v0, "meta.json"), DocFiles.str(doc, "meta").get)
     DocFiles.write(fs, new Path(keyDir, "CURRENT"), "v-0000000000")
     assert(DocFiles.delete(fs, new Path(keyDir, "entry.json")))
-    assert(!prov.hasEntry(key) && prov.getData(key).isEmpty && prov.getMeta(key).isEmpty)
+    assert(prov.get(key).isEmpty)
 
     // the next refresh rebuilds the entry in full, bit-identical to a
     // recompute
@@ -556,6 +575,111 @@ class CacheSpec extends SparkSpec {
       assert(q3.rowCount == 380 && q3.newRows == 20)
       val ids = q3.df.select("id").as[Long].collect().toSeq
       assert(ids.sorted == (1L to 380L))
+
+      // a second refresh of the same key lands inside this one's
+      // commit: the commit extends the entry this refresh read, so the
+      // entry records and serves each row once, now and on the next call
+      tsRows(381, 410).write.mode("append").parquet(src)
+      val q4 = rowSvc(() => rowSvc(() => ()).queryWithCaching("t", timeCol = Some("ts")))
+        .queryWithCaching("t", timeCol = Some("ts"))
+      val q5 = rowSvc(() => ()).queryWithCaching("t", timeCol = Some("ts"))
+      assert(q4.newRows == 30 && q5.newRows == 0)
+      Seq(q4, q5).foreach { q =>
+        val ids = q.df.select("id").as[Long].collect().toSeq
+        assert(q.rowCount == 410 && q.df.count() == q.rowCount)
+        assert(ids.distinct.size == ids.size)
+      }
     } finally hot.unpersist()
   }
+
+  test("a request opens its entry document once and checks each slice once") {
+    CountFs.register(spark.sparkContext.hadoopConfiguration)
+    val srcDir = tempDir("graft-cache-readsrc")
+    val src = s"$srcDir/t.parquet"
+    tsRows(200).write.mode("overwrite").parquet(src)
+    val (aggDir, rowDir) = (tempDir("graft-cache-readagg"), tempDir("graft-cache-readrows"))
+    def mgr(dir: String) = new QueryCacheManager(new ParquetCacheProvider(spark, CountFs.path(dir)))
+    val aggs = new CachedAggService(spark, srcDir, mgr(aggDir))
+    val rows = new CachedQueryService(spark, srcDir, mgr(rowDir))
+    /** Entry-document opens of one request, and its `_SUCCESS` checks
+      * of each slice its key held before it.
+      */
+    def reads(cacheDir: String)(request: => CachedQueryResult): (Int, Seq[Int]) = {
+      val slices = Option(new java.io.File(cacheDir).listFiles()).toSeq.flatten
+        .flatMap(_.listFiles()).filter(_.getName.startsWith("slice-"))
+      CountFs.reset()
+      request
+      (CountFs.docOpens, slices.map(s => CountFs.successChecks(s.getPath)))
+    }
+    def agg() = reads(aggDir)(aggs.aggregateWithCaching("t", "ts", "1 hour", "v"))
+    def query() = reads(rowDir)(rows.queryWithCaching("t", timeCol = Some("ts"),
+      selectedConversions = Some(Map.empty)))
+    // a miss: the document's live path, aside copy and live path again
+    assert(agg() == ((3, Nil)) && query() == ((3, Nil)))
+    // a hit without a tail, then with one
+    assert(agg() == ((1, Seq(1))) && query() == ((1, Seq(1))))
+    tsRows(201, 230).write.mode("append").parquet(src)
+    assert(agg() == ((1, Seq(1))) && query() == ((1, Seq(1))))
+    tsRows(231, 260).write.mode("append").parquet(src)
+    assert(agg() == ((1, Seq(1))) && query() == ((1, Seq(1, 1))))
+  }
+
+  test("a zero-row target: both services refresh it, then serve the rows that land") {
+    val srcDir = tempDir("graft-cache-empty")
+    val src = s"$srcDir/t.parquet"
+    tsRows(1, 0).write.mode("overwrite").parquet(src)
+    def mgr(name: String) = new QueryCacheManager(new ParquetCacheProvider(spark, tempDir(name)))
+    val aggs = new CachedAggService(spark, srcDir, mgr("graft-cache-emptyagg"))
+    val rows = new CachedQueryService(spark, srcDir, mgr("graft-cache-emptyrows"))
+    def both() = Seq(aggs.aggregateWithCaching("t", "ts", "1 hour", "v"),
+      rows.queryWithCaching("t", timeCol = Some("ts"), selectedConversions = Some(Map.empty)))
+    // built from no rows, then refreshed with still none
+    (1 to 2).foreach(_ => both().foreach(r => assert(r.rowCount == 0 && r.df.count() == 0)))
+    tsRows(1, 50).write.mode("append").parquet(src)
+    val Seq(a, q) = both()
+    assert(a.rowCount == 50 && a.df.collect().map(_.toSeq).toSeq == fullAgg(srcDir))
+    assert(q.rowCount == 50 && q.df.select("id").as[Long].collect().toSeq == (1L to 50L))
+    // the entries now hold a watermark: the next call is a refresh
+    both().foreach(r => assert(r.isIncremental && r.rowCount == 50 && r.newRows == 0))
+  }
+}
+
+/** The local filesystem under the `countfs` scheme, counting the reads a
+  * cache request makes of its entry: opens of an entry document (live
+  * path or aside copy) and existence checks of a `_SUCCESS` marker.
+  */
+class CountFs extends RawLocalFileSystem {
+  override def getUri: URI = CountFs.Uri
+  override def getScheme: String = CountFs.Scheme
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName == "entry.json" || f.getName == ".entry.json.old") CountFs.opened.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+
+  override def exists(f: Path): Boolean = {
+    if (f.getName == "_SUCCESS") CountFs.checked.merge(f.getParent.toUri.getPath, 1, _ + _)
+    super.exists(f)
+  }
+}
+
+object CountFs {
+  val Scheme = "countfs"
+  val Uri: URI = URI.create(s"$Scheme:///")
+
+  def register(conf: Configuration): Unit = {
+    conf.set(s"fs.$Scheme.impl", classOf[CountFs].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+  }
+
+  /** `dir` (an absolute local path) under the `countfs` scheme. */
+  def path(dir: String): String = s"$Scheme://$dir"
+
+  private val opened = new AtomicInteger
+  private val checked = new ConcurrentHashMap[String, Int]
+
+  def reset(): Unit = { opened.set(0); checked.clear() }
+  def docOpens: Int = opened.get
+  /** `_SUCCESS` checks of the slice dir at local path `slice`. */
+  def successChecks(slice: String): Int = checked.getOrDefault(slice, 0)
 }

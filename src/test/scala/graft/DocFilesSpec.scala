@@ -104,10 +104,10 @@ class DocFilesSpec extends SparkSpec {
     data.write.parquet(s"$dir/cache/k/slice-0000000000")
     put(dir, "cache/k/entry.json", entryJson)
     val prov = new ParquetCacheProvider(spark, s"$dir/cache")
-    assert(prov.getMeta("k").contains(metaJson))
-    assert(rows(prov.getData("k").get) == rows(data))
+    assert(prov.get("k").map(_.meta).contains(metaJson))
+    assert(rows(prov.get("k").get.data) == rows(data))
     // the writer produces that document
-    new ParquetCacheProvider(spark, s"$dir/cache2").putEntry("k", data, metaJson)
+    new ParquetCacheProvider(spark, s"$dir/cache2").put("k", data, metaJson)
     assert(text(dir, "cache2/k/entry.json") == entryJson)
 
     // snapshot pointer
@@ -209,12 +209,16 @@ class DocFilesSpec extends SparkSpec {
     val template = tempDir("graft-crash-template")
     def prov(root: String) = new ParquetCacheProvider(spark, CrashFs.path(s"$root/cache"))
     new SnapshotStore(spark, CrashFs.path(s"$template/snap")).commit(old, 1L)
-    prov(template).putEntry("k", old, "m1")
+    prov(template).put("k", old, "m1")
     // key "c" holds as many slices as an entry takes before an append
     // compacts it
     val tails = (1 until ParquetCacheProvider.CompactAt).map(i => Seq((10L + i, s"t$i")).toDF("id", "v"))
-    prov(template).putEntry("c", old, "c1")
-    tails.foreach(prov(template).appendEntry("c", _, "c1"))
+    def append(root: String, key: String, tail: DataFrame, meta: String): Unit = {
+      val p = prov(root)
+      p.append(key, p.get(key).get, tail, meta)
+    }
+    prov(template).put("c", old, "c1")
+    tails.foreach(append(template, "c", _, "c1"))
     assert(new File(s"$template/cache/c").list().count(_.startsWith("slice-")) ==
       ParquetCacheProvider.CompactAt)
     val setup: String => Unit = copyTree(template, _)
@@ -227,9 +231,9 @@ class DocFilesSpec extends SparkSpec {
     }
     def cached(root: String, key: String = "k") = {
       val p = new ParquetCacheProvider(spark, s"$root/cache")
-      (p.getMeta(key), p.getData(key).map(rows))
+      p.get(key).map(e => (e.meta, rows(e.data))).unzip
     }
-    bothFaults(setup)(prov(_).putEntry("k", now, "m2")) { (root, threw) =>
+    bothFaults(setup)(prov(_).put("k", now, "m2")) { (root, threw) =>
       oldOrNew(cached(root), (Some("m1"), Some(rows(old))), (Some("m2"), Some(rows(now))), threw)
     }
     bothFaults(setup)(prov(_).putMeta("k", "m2")) { (root, threw) =>
@@ -237,12 +241,12 @@ class DocFilesSpec extends SparkSpec {
     }
     // a plain append adds a slice; a compacting one rewrites the entry
     // as one slice and deletes the slices it held
-    bothFaults(setup)(prov(_).appendEntry("k", now, "m2")) { (root, threw) =>
+    bothFaults(setup)(append(_, "k", now, "m2")) { (root, threw) =>
       oldOrNew(cached(root), (Some("m1"), Some(rows(old))),
         (Some("m2"), Some((rows(old) ++ rows(now)).sorted)), threw)
     }
     val cOld = (rows(old) ++ tails.flatMap(rows)).sorted
-    bothFaults(setup)(prov(_).appendEntry("c", now, "c2")) { (root, threw) =>
+    bothFaults(setup)(append(_, "c", now, "c2")) { (root, threw) =>
       oldOrNew(cached(root, "c"), (Some("c1"), Some(cOld)),
         (Some("c2"), Some((cOld ++ rows(now)).sorted)), threw)
       if (!threw)

@@ -111,7 +111,7 @@ class MaintenanceSpec extends SparkSpec {
   test("ParquetCacheProvider.vacuum removes stranded versions and empty keys, keeps committed entries") {
     val dir = tempDir("graft-vac-cache")
     val prov = new ParquetCacheProvider(spark, dir)
-    prov.putEntry("k1", Seq((1, "a")).toDF("id", "v"), """{"m":1}""")
+    prov.put("k1", Seq((1, "a")).toDF("id", "v"), """{"m":1}""")
 
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -130,9 +130,8 @@ class MaintenanceSpec extends SparkSpec {
 
     assert(prov.vacuum() == 0) // all of it younger than the grace window
     assert(prov.vacuum(graceMillis = 0) == 4)
-    assert(prov.hasEntry("k1"))
-    assert(prov.getData("k1").get.count() == 1) // committed entry untouched
-    assert(prov.getMeta("k1").contains("""{"m":1}"""))
+    assert(prov.get("k1").exists(_.data.count() == 1)) // committed entry untouched
+    assert(prov.get("k1").map(_.meta).contains("""{"m":1}"""))
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/k1")).map(_.getPath.getName).sorted
       .toSeq == Seq("entry.json", "slice-0000000000"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/orphan")))

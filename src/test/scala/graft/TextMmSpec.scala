@@ -604,6 +604,10 @@ class TextMmSpec extends SparkSpec {
     // partition-invariant
     val r2 = LinkGraph.stats(edges.repartition(7)).collect().head
     assert(r2.toSeq == r.toSeq)
+    // an edge with a null endpoint is dropped, as the gated kernels drop it
+    val withNulls = Seq(("a", null), (null, "b"), ("b", "a"), ("b", "c")).toDF("src", "dst")
+    val rn = LinkGraph.stats(withNulls).collect().head
+    assert(rn.getLong(0) == 3L && rn.getLong(1) == 2L) // nodes a b c; b->a, b->c
   }
 
   test("dedupLines strips corpus-frequent lines, keeps order, drops all-boilerplate docs") {

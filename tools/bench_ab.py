@@ -10,6 +10,14 @@ that fit in the window. A 5 s `operators` window holds 2 or 3 passes, and
 a pass count splits a metric into two clusters, so the summary reports
 the gap within equal unit counts next to the overall one.
 
+Each end-to-end metric is then judged against the `bound` and `better`
+that A's BENCHMARK.json declares for it (the file is only read): WORSE
+when B's median is worse than A's by more than bound x A's median,
+UNRESOLVED when either side's quartile spread is wider than bound x its
+median (unless every B run beats every A run), ok otherwise. The exit
+status is 1 when any metric is WORSE or UNRESOLVED, so a change that
+claims no gain can be checked with one command.
+
     python3 tools/bench_ab.py A_DIR B_DIR [--workload operators]
         [--seeds 1-10] [--seconds 5] [--metric cpu_s.per_unit]
 """
@@ -49,6 +57,19 @@ def quartiles(vs):
     return q[0], q[2]
 
 
+def verdict(a, b, bound, better):
+    """WORSE, UNRESOLVED or ok for one metric's A runs and B runs."""
+    sign = 1 if better == "lower" else -1
+    ma, mb = statistics.median(a), statistics.median(b)
+    if sign * (mb - ma) > bound * abs(ma):
+        return "WORSE"
+    wide = any(q3 - q1 > bound * abs(statistics.median(v))
+               for v, (q1, q3) in ((a, quartiles(a)), (b, quartiles(b))))
+    if wide and not max(sign * x for x in b) < min(sign * x for x in a):
+        return "UNRESOLVED"
+    return "ok"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("a")
@@ -84,12 +105,18 @@ def main():
         if au and bu:
             print(f"  units {u}: A median {statistics.median(au):.3f} over {len(au)} runs, "
                   f"B median {statistics.median(bu):.3f} over {len(bu)} runs")
+    with open(os.path.join(args.a, "BENCHMARK.json")) as fh:
+        rules = {m["name"]: m for m in json.load(fh)["end_to_end"]}
+    failed = 0
     for name in sorted(reports[0][0]["end_to_end"]):
         sides = [[r[k]["end_to_end"][name]["value"] for r in reports] for k in (0, 1)]
         (aq1, aq3), (bq1, bq3) = (quartiles(v) for v in sides)
+        rule = rules.get(name)
+        v = verdict(*sides, rule["bound"], rule["better"]) if rule else "no bound"
+        failed += v in ("WORSE", "UNRESOLVED")
         print(f"{name}: A {statistics.median(sides[0]):.4g} ({aq1:.4g}-{aq3:.4g}), "
-              f"B {statistics.median(sides[1]):.4g} ({bq1:.4g}-{bq3:.4g})")
-    return 0
+              f"B {statistics.median(sides[1]):.4g} ({bq1:.4g}-{bq3:.4g}): {v}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
